@@ -89,6 +89,9 @@ MIN_DOC = -(1 << 63)
 # skew the salting defused. Consumers concatenate a term's runs in run_idx
 # order (runs partition the sorted doc space, so the result stays sorted).
 DEFAULT_MAX_BLOCKS_PER_ROW = 4096
+#: largest fixed-shard hot list branded with an InSet literal; a longer
+#: list takes the broadcast-join path (see build_postings)
+HOT_INSET_MAX_TERMS = 4096
 
 
 def term_blocks_from_rows(run_idxs, blocks_col) -> list:
@@ -414,8 +417,28 @@ def build_postings(
         raise ValueError(
             "target_postings_per_shard needs hot_terms with a df column"
         )
-    if hot_terms is None:
+    hot_list = None
+    if hot_terms is not None and not adaptive:
+        # fixed-shard hot list: the hot vocabulary is small by contract
+        # (skew-heavy stop terms — a few hundred rows even at full scale,
+        # see salt_term_stats). Collecting it once and branding hot rows
+        # with an InSet literal replaces a broadcast-join in EVERY branch
+        # that reads the salted frame (cold, hot, totals — three joins,
+        # three broadcast builds) with a plain scan predicate; the collect
+        # costs the same one evaluation the broadcast build did. A list
+        # over HOT_INSET_MAX_TERMS keeps the join path: the literal's plan
+        # and analysis cost would outgrow the broadcast it saves.
+        probe = hot_terms.select("term").limit(HOT_INSET_MAX_TERMS + 1).collect()
+        if len(probe) <= HOT_INSET_MAX_TERMS:
+            hot_list = [r["term"] for r in probe]
+    if hot_terms is None or hot_list == []:
         salted = term_stats.withColumn("salt", F.lit(0).cast("int"))
+    elif hot_list is not None:
+        salted = term_stats.withColumn(
+            "salt",
+            F.when(F.col("term").isin(hot_list), rid)
+            .otherwise(F.lit(0)).cast("int"),
+        )
     else:
         if adaptive:
             # per-term shard count; 2047 * RUN_STRIDE stays inside int32.
@@ -444,47 +467,17 @@ def build_postings(
             rid = (
                 F.shiftright(u32 * F.col("_shards").cast("long"), 32) + 1
             ).cast("int")
-            salted = (
-                term_stats.join(F.broadcast(hotb), "term", "left")
-                .withColumn(
-                    "salt",
-                    F.when(F.col("_shards").isNotNull(), rid)
-                    .otherwise(F.lit(0)).cast("int"),
-                )
-                .drop("_shards")
-            )
         else:
-            # fixed-shard hot list: the hot vocabulary is small by
-            # contract (skew-heavy stop terms — a few hundred rows even
-            # at full scale, see salt_term_stats). Collecting it once and
-            # branding hot rows with an InSet literal replaces a
-            # broadcast-join in EVERY branch that reads the salted frame
-            # (cold, hot, totals — three joins, three broadcast builds)
-            # with a plain scan predicate; the collect costs the same one
-            # evaluation the broadcast build did. A degenerate caller
-            # with a huge frame keeps the join path (size guard).
-            probe = hot_terms.select("term").limit(100_001).collect()
-            if len(probe) <= 100_000:
-                hot_list = [r["term"] for r in probe]
-                salted = term_stats.withColumn(
-                    "salt",
-                    F.when(F.col("term").isin(hot_list), rid)
-                    .otherwise(F.lit(0)).cast("int")
-                    if hot_list else F.lit(0).cast("int"),
-                )
-            else:
-                hotb = hot_terms.select("term").withColumn(
-                    "_shards", F.lit(1)
-                )
-                salted = (
-                    term_stats.join(F.broadcast(hotb), "term", "left")
-                    .withColumn(
-                        "salt",
-                        F.when(F.col("_shards").isNotNull(), rid)
-                        .otherwise(F.lit(0)).cast("int"),
-                    )
-                    .drop("_shards")
-                )
+            hotb = hot_terms.select("term").withColumn("_shards", F.lit(1))
+        salted = (
+            term_stats.join(F.broadcast(hotb), "term", "left")
+            .withColumn(
+                "salt",
+                F.when(F.col("_shards").isNotNull(), rid)
+                .otherwise(F.lit(0)).cast("int"),
+            )
+            .drop("_shards")
+        )
     cold = salted.filter(F.col("salt") == 0)
     hot = salted.filter(F.col("salt") > 0)
 

@@ -3,7 +3,8 @@
 corpus -> combo analysis + per-doc aggregation (one mapInPandas pass)
        -> doc-stats + corpus stats (N, avgdl)
        -> salted compressed segments -> merged posting table
-all stages checkpointed with lineage (B6), resumable mid-pipeline.
+all stages checkpointed with lineage (B6), resumable mid-pipeline; each
+stage's lineage is observed on its own write job, never re-scanned.
 
 Physical-plan shape (local[N] or a real cluster — identical):
   * 1 Arrow-batched analysis pass over the corpus scan (no shuffle)
@@ -219,17 +220,16 @@ def build_index(
         checksum_cols=["doc_id", "term", "tf"],
     )
 
-    docstats = ckpt.run(
+    # (N, avgdl) come from the manifest: a resumed build runs no job for them
+    ckpt.run(
         "doc_stats",
         fingerprint(base_fp, "doc_stats"),
         lambda: stats.groupBy("doc_id").agg(F.first("dl").alias("dl")),
         checksum_cols=["doc_id", "dl"],
+        observed={"avgdl": F.avg("dl")},
     )
-
-    g = docstats.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(g["n"]), float(g["avgdl"] or 0.0)
+    ds = ckpt.manifest("doc_stats")
+    n_docs, avgdl = int(ds["rows"]), float(ds["avgdl"] or 0.0)
 
     meta = IndexMeta(
         n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
