@@ -28,12 +28,18 @@ observable semantics, the reference's priority-queue merge:
 
 from __future__ import annotations
 
+import functools
+import itertools
 import logging
 from dataclasses import dataclass
 from typing import Callable, Sequence, Union
 
+import numpy as np
+import pandas as pd
+
 from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
     ANALYZER_REGISTRY,
+    FAST_TERM_POS_REGISTRY,
     LANG_DEFAULT,
     LANG_DISPATCH,
     Token,
@@ -174,90 +180,104 @@ def to_pos_increments(tokens: list[Token]) -> list[int]:
     return out
 
 
-def resolve_fast_config(config: ComboConfig):
-    """Build the fast (term, pos)-only evaluator for this config, or None
-    if any sub-analyzer lacks a fast variant (then the full Token path is
-    used). See FAST_TERM_POS_REGISTRY in tokenizers.py — posting builds
-    never need offsets/types/emission order."""
-    from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
-        FAST_TERM_POS_REGISTRY,
-    )
+def _leaf_term_pos(sub: SubAnalyzer) -> Callable | None:
+    """One leaf as ``(text, lang) -> (terms, positions | None)``, None
+    meaning 1..n: its FAST_TERM_POS_REGISTRY variant when it has one,
+    else its Token tokenizer's terms and positions. ``lang`` dispatches
+    per document; unknown names are skipped as in :func:`_resolve`."""
+    if sub == "lang":
+        targets = {n: _leaf_term_pos(n)
+                   for n in {LANG_DEFAULT, *LANG_DISPATCH.values()}}
 
-    evals = []
+        def run_lang(text: str, lang: str | None, _t=targets):
+            return _t[LANG_DISPATCH.get(lang or "", LANG_DEFAULT)](text, lang)
+        return run_lang
+    fast = FAST_TERM_POS_REGISTRY.get(sub) if isinstance(sub, str) else None
+    if fast is not None:
+        return lambda text, lang, _fn=fast: _fn(text)
+    fn = _resolve(sub)
+    if fn is None:
+        return None
+
+    def run_tokens(text: str, lang: str | None, _fn=fn):
+        toks = _fn(text, lang)
+        return [t.term for t in toks], [t.pos for t in toks]
+    return run_tokens
+
+
+_NO_TERMS = (np.empty(0, np.int64), np.empty(0, object), np.empty(0, np.int64))
+
+
+def _leaf_arrays(leaf: Callable, texts: Sequence, langs: Sequence):
+    """A leaf over the batch -> flat (doc_idx, terms, pos); None texts
+    yield nothing (as in :func:`analyze_batch`)."""
+    outs = [leaf(t, lg) if t is not None else ((), None)
+            for t, lg in zip(texts, langs)]
+    lens = np.fromiter((len(terms) for terms, _ in outs), np.int64, len(outs))
+    terms = np.fromiter(
+        itertools.chain.from_iterable(terms for terms, _ in outs), object,
+        int(lens.sum()),
+    )
+    pos = np.concatenate([_NO_TERMS[2]] + [
+        np.arange(1, len(terms) + 1) if p is None else np.asarray(p, np.int64)
+        for terms, p in outs
+    ])
+    return np.repeat(np.arange(len(outs)), lens), terms, pos
+
+
+def run_starts(*cols: np.ndarray) -> np.ndarray:
+    """Mask of the rows of sorted ``cols`` that differ from the row before."""
+    new = np.zeros(len(cols[0]), dtype=bool)
+    new[:1] = True
+    for c in cols:
+        new[1:] |= c[1:] != c[:-1]
+    return new
+
+
+def batch_term_positions(config: ComboConfig) -> Callable:
+    """Resolve ``config`` once -> ``fn(texts, langs)`` giving the batch's
+    merged (term, pos) pairs as ``(doc_idx, term_codes, terms, pos)``:
+    sorted by (doc, term code, pos), ``terms[term_codes]`` the terms, and
+    same-position duplicates dropped when the config dedups. The leaves'
+    arrays are concatenated, factorized once and sorted once; a nested
+    combo is this function applied recursively, with its own dedup.
+
+    Term statistics never need offsets, token types or the merged emission
+    order: tf and the sorted position list are order-free, and
+    same-position dedup is a set test on (doc, term, pos)."""
+    subs = []
     for sub in config.sub_analyzers:
         if isinstance(sub, ComboConfig):
-            nested = resolve_fast_config(sub)
-            if nested is None:
-                return None
-            evals.append(nested)
-        elif isinstance(sub, str):
-            if sub == "lang":
-                def eval_lang(text, lang):
-                    name = LANG_DISPATCH.get(lang or "", LANG_DEFAULT)
-                    fn = FAST_TERM_POS_REGISTRY.get(name)
-                    if fn is None:  # dispatch target without fast variant
-                        toks = ANALYZER_REGISTRY[name](text)
-                        return [(t.term, t.pos) for t in toks]
-                    terms, poses = fn(text)
-                    if poses is None:
-                        return list(zip(terms, range(1, len(terms) + 1)))
-                    return list(zip(terms, poses))
-                evals.append(eval_lang)
-            else:
-                fn = FAST_TERM_POS_REGISTRY.get(sub)
-                if fn is None:
-                    if sub in ANALYZER_REGISTRY:
-                        logger.warning(
-                            "no fast variant for analyzer %r; term_stats "
-                            "falls back to the full token path", sub
-                        )
-                    return None
+            inner = batch_term_positions(sub)
 
-                def eval_leaf(text, lang, _fn=fn):
-                    terms, poses = _fn(text)
-                    if poses is None:
-                        return list(zip(terms, range(1, len(terms) + 1)))
-                    return list(zip(terms, poses))
-                evals.append(eval_leaf)
+            def run_nested(texts, langs, _inner=inner):
+                doc, codes, terms, pos = _inner(texts, langs)
+                return doc, terms[codes], pos
+            subs.append(run_nested)
         else:
-            return None  # raw callable: no fast contract
-
+            leaf = _leaf_term_pos(sub)
+            if leaf is not None:
+                subs.append(functools.partial(_leaf_arrays, leaf))
     dedup = config.deduplication
 
-    def eval_combo(text: str, lang: str | None) -> list[tuple[str, int]]:
-        pairs: list[tuple[str, int]] = []
-        for ev in evals:
-            pairs.extend(ev(text, lang))
+    def run(texts: Sequence, langs: Sequence | None = None):
+        if langs is None:
+            langs = [None] * len(texts)
+        parts = [_NO_TERMS] + [s(texts, langs) for s in subs]
+        doc, terms, pos = (np.concatenate(c) for c in zip(*parts))
+        codes, terms = pd.factorize(terms)
+        # rank the (doc, term) pairs in sorted order, then fold in pos:
+        # ranks stay below the token count and positions below 2**31, so
+        # the key fits int64 for any batch under 2**32 tokens
+        rank = pd.factorize(doc * len(terms) + codes, sort=True)[0]
+        order = np.argsort(rank * (int(pos.max(initial=0)) + 1) + pos)
+        doc, codes, pos = doc[order], codes[order], pos[order]
         if dedup:
-            seen: set[tuple[str, int]] = set()
-            kept = []
-            for p in pairs:
-                if p in seen:
-                    continue
-                seen.add(p)
-                kept.append(p)
-            pairs = kept
-        return pairs
+            keep = run_starts(doc, codes, pos)
+            doc, codes, pos = doc[keep], codes[keep], pos[keep]
+        return doc, codes, terms, pos
 
-    eval_combo._n_subs = len(evals)  # single-analyzer => positions pre-sorted
-    return eval_combo
-
-
-def term_stats_from_pairs(
-    pairs: list[tuple[str, int]], presorted: bool
-) -> tuple[dict[str, tuple[int, list[int]]], int]:
-    """(term, pos) pairs -> term -> (tf, sorted positions), doc length."""
-    by_term: dict[str, list[int]] = {}
-    for term, pos in pairs:
-        lst = by_term.get(term)
-        if lst is None:
-            by_term[term] = [pos]
-        else:
-            lst.append(pos)
-    if not presorted:
-        for lst in by_term.values():
-            lst.sort()
-    return {t: (len(p), p) for t, p in by_term.items()}, len(pairs)
+    return run
 
 
 def term_stats(tokens: list[Token]) -> tuple[dict[str, tuple[int, list[int]]], int]:

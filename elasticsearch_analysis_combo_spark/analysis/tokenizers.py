@@ -1459,8 +1459,9 @@ def resolve_analyzer(name: str) -> TokenizerFn:
 # offsets, token types, or the merged emission *order* (tf and the sorted
 # position list are order-independent; same-position dedup is a set test on
 # (pos, term)). These variants skip regex span tracking and Token object
-# construction; term_stats falls back to the full analyzer automatically
-# when a config uses an analyzer without a fast variant.
+# construction. build_term_stats has one batch pipeline
+# (combo.batch_term_positions): a leaf uses its variant here when it has
+# one, and any other leaf is adapted from its Token output.
 # Each returns (terms: list[str], positions: list[int] | None); None means
 # consecutive 1..n.
 

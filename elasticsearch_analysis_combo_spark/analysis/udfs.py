@@ -12,7 +12,9 @@ Two surfaces:
   ComboAnalyzer.java:207-271 feeding Lucene's IndexWriter): goes straight
   from content to per-(doc, term) aggregated rows via ``mapInPandas`` so the
   posting build ships ONE pre-aggregated shuffle instead of raw tokens
-  (map-side combine done inside the Arrow batch).
+  (map-side combine done inside the Arrow batch). Every config takes the
+  same per-batch numpy pipeline; a leaf without a fast (term, pos)
+  variant is adapted from its Token output.
 """
 
 from __future__ import annotations
@@ -28,8 +30,12 @@ from pyspark.sql import types as T
 from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_batch,
-    term_stats,
+    batch_term_positions,
+    run_starts,
     to_pos_increments,
+)
+from elasticsearch_analysis_combo_spark.operators.codec import (
+    encode_positions_rows,
 )
 
 TOKEN_STRUCT = T.StructType(
@@ -137,11 +143,18 @@ def build_term_stats(
     """content -> (doc_id, term, tf, pos_data, dl), one row per (doc, term).
 
     This replaces explode+groupBy(term, doc): the per-document aggregation is
-    computed inside the Arrow batch (term_stats in combo.py), so no shuffle
-    is needed to obtain tf/positions — the downstream posting build shuffles
-    already-aggregated rows only (SURVEY.md §2 B2, "one shuffle saved").
-    Positions ship pre-packed (see TERM_STATS_SCHEMA) — the stats shuffle
-    moves varint bytes, not int64 arrays."""
+    computed inside the Arrow batch, so no shuffle is needed to obtain
+    tf/positions — the downstream posting build shuffles already-aggregated
+    rows only (SURVEY.md §2 B2, "one shuffle saved").
+
+    One pipeline serves every config, with or without ``lang_col``: the
+    sub-analyzers' (doc, term, pos) arrays come sorted (and deduplicated)
+    from :func:`combo.batch_term_positions`; a boundary scan over
+    (doc, term) then gives the rows, tf, and ``dl`` per doc (``bincount``).
+    A leaf without a fast variant is adapted from its Token output. Rows
+    come out sorted by (doc, term code) within a batch. Positions ship
+    pre-packed (see TERM_STATS_SCHEMA) — the stats shuffle moves varint
+    bytes, not int64 arrays."""
     cols = [doc_id_col, content_col] + ([lang_col] if lang_col else [])
     src = df.select(*cols)
     # small-FILE inputs arrive as 1-2 scan partitions; spread the analysis
@@ -168,136 +181,28 @@ def build_term_stats(
         if n_parts < parallelism:
             src = src.repartition(parallelism)
 
-    has_lang = lang_col is not None
-
-    # fully-vectorized batch aggregation for the single-analyzer, no-dedup,
-    # no-lang case (the posting hot path): tokenization stays per-doc (string
-    # ops), but the per-(doc, term) tf/positions aggregation and row assembly
-    # become one stable sort + boundary scan over the whole Arrow batch —
-    # no per-token dict work, no per-row appends
-    fast_leaf = None
-    if (
-        not has_lang
-        and not config.deduplication
-        and len(config.sub_analyzers) == 1
-        and isinstance(config.sub_analyzers[0], str)
-        and config.sub_analyzers[0] != "lang"
-    ):
-        from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
-            FAST_TERM_POS_REGISTRY,
-        )
-
-        fast_leaf = FAST_TERM_POS_REGISTRY.get(config.sub_analyzers[0])
-
-    def _vectorized_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[doc_id_col].to_numpy()
-        toks = [fast_leaf(t or "") for t in pdf[content_col]]
-        lens = np.fromiter((len(t[0]) for t in toks), np.int64, len(toks))
-        total = int(lens.sum())
-        if total == 0:
-            return pd.DataFrame(
-                {"doc_id": pd.Series([], dtype="int64"),
-                 "term": pd.Series([], dtype=object),
-                 "tf": pd.Series([], dtype="int32"),
-                 "pos_data": pd.Series([], dtype=object),
-                 "dl": pd.Series([], dtype="int32")}
-            )
-        flat = np.empty(total, dtype=object)
-        pos = np.empty(total, dtype=np.int32)
-        off = 0
-        for (terms, poses), length in zip(toks, lens):
-            length = int(length)
-            flat[off:off + length] = terms
-            if poses is None:
-                pos[off:off + length] = np.arange(1, length + 1)
-            else:
-                pos[off:off + length] = poses
-            off += length
-        doc_idx = np.repeat(np.arange(len(ids)), lens)
-        codes, uniq = pd.factorize(flat)
-        key = doc_idx * len(uniq) + codes
-        order = np.argsort(key, kind="stable")  # stable: positions stay sorted
-        k_sorted = key[order]
-        starts = np.nonzero(
-            np.concatenate([[True], k_sorted[1:] != k_sorted[:-1]])
-        )[0]
-        ends = np.append(starts[1:], total)
-        row_first = order[starts]
-        pos_sorted = pos[order]
-        from elasticsearch_analysis_combo_spark.operators.codec import (
-            encode_positions_rows,
-        )
-
-        packed = encode_positions_rows(pos_sorted, ends - starts)
-        return pd.DataFrame(
-            {"doc_id": pd.Series(ids[doc_idx[row_first]], dtype="int64"),
-             "term": pd.Series(flat[row_first], dtype=object),
-             "tf": pd.Series((ends - starts).astype(np.int32), dtype="int32"),
-             "pos_data": pd.Series(packed, dtype=object),
-             "dl": pd.Series(lens[doc_idx[row_first]].astype(np.int32),
-                             dtype="int32")}
-        )
+    term_positions = batch_term_positions(config)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from elasticsearch_analysis_combo_spark.analysis.combo import (
-            resolve_fast_config,
-            term_stats_from_pairs,
-        )
-
-        if fast_leaf is not None:
-            for pdf in batches:
-                yield _vectorized_batch(pdf)
-            return
-
-        fast = resolve_fast_config(config)
-        presorted = fast is not None and fast._n_subs == 1 and not config.deduplication
-
-        def doc_stats_iter(texts, langs):
-            if fast is not None:
-                lang_vals = langs if langs is not None else [None] * len(texts)
-                for text, lg in zip(texts, lang_vals):
-                    yield term_stats_from_pairs(
-                        fast(text or "", lg), presorted
-                    )
-            else:
-                for toks in analyze_batch(texts, config, langs):
-                    yield term_stats(toks)
-
         for pdf in batches:
-            texts = pdf[content_col].tolist()
-            langs = pdf[lang_col].tolist() if has_lang else None
-            ids = pdf[doc_id_col].tolist()
-            out_id, out_term, out_tf, out_pos, out_dl = [], [], [], [], []
-            for doc_id, (stats, dl) in zip(ids, doc_stats_iter(texts, langs)):
-                for term, (tf, positions) in stats.items():
-                    out_id.append(doc_id)
-                    out_term.append(term)
-                    out_tf.append(tf)
-                    out_pos.append(positions)
-                    out_dl.append(dl)
-            from elasticsearch_analysis_combo_spark.operators.codec import (
-                encode_positions_rows,
+            langs = pdf[lang_col].tolist() if lang_col else None
+            doc, codes, terms, pos = term_positions(
+                pdf[content_col].tolist(), langs
             )
-            import itertools
-
-            if out_pos:
-                flat = np.fromiter(
-                    itertools.chain.from_iterable(out_pos), np.int64,
-                    int(sum(out_tf)),
-                )
-                packed = encode_positions_rows(
-                    flat, np.asarray(out_tf, dtype=np.int64)
-                )
-            else:
-                packed = []
+            first = np.flatnonzero(run_starts(doc, codes))
+            tf = np.diff(np.append(first, len(doc)))
+            dl = np.bincount(doc, minlength=len(pdf))
+            row_doc = doc[first]
             yield pd.DataFrame(
-                {"doc_id": pd.Series(out_id, dtype="int64"),
-                 "term": pd.Series(out_term, dtype=object),
-                 "tf": pd.Series(out_tf, dtype="int32"),
+                {"doc_id": pd.Series(
+                    pdf[doc_id_col].to_numpy()[row_doc], dtype="int64"),
+                 "term": pd.Series(terms[codes[first]], dtype=object),
+                 "tf": pd.Series(tf, dtype="int32"),
                  # object dtype keeps Arrow's binary conversion working
                  # even for empty batches
-                 "pos_data": pd.Series(packed, dtype=object),
-                 "dl": pd.Series(out_dl, dtype="int32")}
+                 "pos_data": pd.Series(
+                     encode_positions_rows(pos, tf), dtype=object),
+                 "dl": pd.Series(dl[row_doc], dtype="int32")}
             )
 
     return src.mapInPandas(gen, schema=TERM_STATS_SCHEMA)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,6 +63,16 @@ class IndexMeta:
         return os.path.join(index_dir, sub)
 
 
+def _write_meta(index_dir: str, meta: IndexMeta) -> None:
+    """Replace meta.json atomically (temp file + ``os.replace``): a reader
+    sees the old meta or the new one, never a partial file."""
+    path = os.path.join(index_dir, "meta.json")
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(asdict(meta), f, indent=1)
+    os.replace(tmp, path)
+
+
 def publish_tables(
     spark: SparkSession,
     index_dir: str,
@@ -81,20 +92,15 @@ def publish_tables(
     index_dir is shared storage and the same swap applies (object stores:
     write new prefixes + swap a pointer object)."""
     import shutil
-    import uuid
 
     token = uuid.uuid4().hex[:8]
     new_tables = dict(meta.tables or {})
-    meta_path = os.path.join(index_dir, "meta.json")
     for name, df in tables.items():
         sub = f"{name}-{token}"
         df.write.mode("overwrite").parquet(os.path.join(index_dir, sub))
         new_tables[name] = sub
     meta.tables = new_tables
-    meta_tmp = meta_path + f".tmp-{token}"
-    with open(meta_tmp, "w") as f:
-        json.dump(asdict(meta), f, indent=1)
-    os.replace(meta_tmp, meta_path)
+    _write_meta(index_dir, meta)
     # generation ledger: GC keeps every dir referenced by the newest
     # keep_previous+1 published generations (in-flight readers of those
     # metas finish undisturbed; older readers are assumed gone)
@@ -231,13 +237,6 @@ def build_index(
     ds = ckpt.manifest("doc_stats")
     n_docs, avgdl = int(ds["rows"]), float(ds["avgdl"] or 0.0)
 
-    meta = IndexMeta(
-        n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
-        salt_shards=salt_shards, config=cfg, with_positions=with_positions,
-    )
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(asdict(meta), f, indent=1)
-
     term_df = ckpt.run(
         "term_df",
         fingerprint(base_fp, "term_df"),
@@ -270,6 +269,11 @@ def build_index(
         checksum_cols=["term", "df", "cf"],
     )
 
+    # published last: a crash in any stage leaves no new meta.json
+    _write_meta(index_dir, IndexMeta(
+        n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
+        salt_shards=salt_shards, config=cfg, with_positions=with_positions,
+    ))
     return InvertedIndex(spark, index_dir)
 
 

@@ -5,6 +5,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# the package default driver heap (64g) is sized for a large host; the
+# suite's local session runs within a few GB
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+
 SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
 

@@ -6,6 +6,8 @@
 * a crash between the data swap and the manifest write never leaves a
   manifest over data of another fingerprint: the next build re-runs the
   stage and equals a fresh build; an old-format manifest is a miss;
+* a crash inside the postings stage of a fresh build leaves no meta.json,
+  and the next build resumes and equals a fresh build;
 * a checkpointed stage issues exactly the Spark jobs of a bare
   ``df.write.parquet`` of the same frame (no lineage re-scan passes);
 * a hot-term list over the InSet limit takes the broadcast-join path and
@@ -25,6 +27,7 @@ from elasticsearch_analysis_combo_spark.operators.checkpoint import (
     CheckpointManager,
 )
 from elasticsearch_analysis_combo_spark.operators.postings import build_postings
+from elasticsearch_analysis_combo_spark.plans import index_build as index_build_mod
 from elasticsearch_analysis_combo_spark.plans.index_build import build_index
 from elasticsearch_analysis_combo_spark.sources.corpus import (
     generate_corpus,
@@ -132,6 +135,27 @@ def test_crash_between_swap_and_manifest_reruns_stage(
     assert "doc_stats" in _built(idx)[n_built:]
     fresh = build_index(spark, corpus, CFG, str(tmp_path / "fresh"), **BUILD)
     assert _content(resumed) == _content(fresh)
+
+
+def test_crash_in_postings_leaves_no_meta(spark, corpus, tmp_path, monkeypatch):
+    idx = str(tmp_path / "idx")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash in the postings stage")
+
+    monkeypatch.setattr(index_build_mod, "build_postings", crash)
+    with pytest.raises(RuntimeError, match="crash in the postings stage"):
+        build_index(spark, corpus, CFG, idx, **BUILD)
+    monkeypatch.undo()
+    # meta.json is published only after every stage: none exists
+    assert not os.path.exists(os.path.join(idx, "meta.json"))
+    assert _built(idx) == ["term_stats", "doc_stats", "term_df"]
+
+    resumed = build_index(spark, corpus, CFG, idx, **BUILD)
+    assert _built(idx)[3:] == ["postings"]
+    fresh = build_index(spark, corpus, CFG, str(tmp_path / "fresh"), **BUILD)
+    assert _content(resumed) == _content(fresh)
+    assert _meta(idx) == _meta(str(tmp_path / "fresh"))
 
 
 def test_old_format_manifest_is_a_miss(spark, corpus, tmp_path):

@@ -20,6 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
+from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
+    make_replay_tokenizer,
+)
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
     build_postings,
@@ -112,45 +115,82 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed):
             assert abs(s1 - s2) < 1e-9
 
 
-@pytest.mark.parametrize("analyzer", ["whitespace", "standard", "identifier", "english"])
-def test_vectorized_term_stats_equals_token_path(spark, analyzer):
-    """The batch-vectorized single-analyzer term_stats path must equal the
-    full token path (forced via a dedup'd double-analyzer config, which is
-    semantically identical for analyzers emitting unique positions),
-    including null/empty docs."""
+_REPLAY = make_replay_tokenizer(
+    ["getfoo", "x9", "getfoo", "merge"], [0, 0, 4, 9], [6, 2, 6, 14], [1, 0, 1, 2]
+)
+TERM_STATS_CASES = {
+    # single leaves with a fast (term, pos) variant
+    "whitespace": ComboConfig(["whitespace"]),
+    "standard": ComboConfig(["standard"]),
+    "identifier": ComboConfig(["identifier"]),
+    "english": ComboConfig(["english"]),
+    # single leaves adapted from their Token output
+    "cjk": ComboConfig(["cjk"]),
+    "ngram": ComboConfig(["ngram"]),
+    "repeated": ComboConfig(["standard", "standard"]),
+    "repeated-dedup": ComboConfig(["standard", "standard"], deduplication=True),
+    "north-star": ComboConfig(
+        ["standard", "identifier", "lang"], deduplication=True
+    ),
+    "nested-inner-dedup": ComboConfig(
+        [ComboConfig(["whitespace", "standard"], deduplication=True),
+         "identifier", "standard"]
+    ),
+    "replay": ComboConfig([_REPLAY, "whitespace"]),
+    "unknown-name": ComboConfig(["no_such_analyzer", "identifier"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TERM_STATS_CASES))
+def test_vectorized_term_stats_equals_token_path(spark, case):
+    """build_term_stats equals the independent per-document reference —
+    combo.term_stats over analyze_text, as in tests/oracle.py — in doc_id,
+    term, tf, decoded positions and dl, null and empty docs included."""
     import random as _random
 
-    VOCAB = ["the", "if", "Return", "merge", "getFoo", "a_b", "x9", "schön"]
-    rng = _random.Random(3)
-    rows = [
-        (i, " ".join(rng.choice(VOCAB) for _ in range(rng.randint(0, 30))))
-        for i in range(200)
-    ]
-    rows += [(998, None), (999, "")]
-    df = spark.createDataFrame(rows, "doc_id long, content string")
-
+    from elasticsearch_analysis_combo_spark.analysis.combo import (
+        analyze_text,
+        term_stats,
+    )
     from elasticsearch_analysis_combo_spark.operators.codec import (
         decode_positions_flat,
     )
 
-    def canon(out):
-        return sorted(
-            (
-                r["doc_id"], r["term"], r["tf"],
-                tuple(decode_positions_flat(
-                    bytes(r["pos_data"]), np.array([r["tf"]], dtype=np.int64)
-                ).tolist()),
-                r["dl"],
-            )
-            for r in out.collect()
-        )
+    config = TERM_STATS_CASES[case]
+    VOCAB = ["the", "if", "Return", "merge", "getFoo", "a_b", "x9", "schön",
+             "HTTPServer", "it's", "中文分词"]
+    LANGS = ["java", "en", "zh", "python", None]
+    rng = _random.Random(3)
+    rows = [
+        (i, " ".join(rng.choice(VOCAB) for _ in range(rng.randint(0, 30))),
+         LANGS[i % len(LANGS)])
+        for i in range(200)
+    ]
+    rows += [(997, "中文 getFoo 分词", "zh"), (998, None, "en"), (999, "", None)]
+    df = spark.createDataFrame(rows, "doc_id long, content string, lang string")
+    lang_col = "lang" if "lang" in config.sub_analyzers else None
 
-    fast = canon(build_term_stats(df, ComboConfig([analyzer])))
-    slow = canon(
-        build_term_stats(df, ComboConfig([analyzer, analyzer], deduplication=True))
+    got = sorted(
+        (
+            r["doc_id"], r["term"], r["tf"],
+            tuple(decode_positions_flat(
+                bytes(r["pos_data"]), np.array([r["tf"]], dtype=np.int64)
+            ).tolist()),
+            r["dl"],
+        )
+        for r in build_term_stats(df, config, lang_col=lang_col).collect()
     )
-    assert fast == slow
-    assert len(fast) > 0
+    want = []
+    for doc_id, content, lang in rows:
+        if content is None:
+            continue
+        stats, dl = term_stats(
+            analyze_text(content, config, lang if lang_col else None)
+        )
+        want += [(doc_id, term, tf, tuple(pos), dl)
+                 for term, (tf, pos) in stats.items()]
+    assert got == sorted(want)
+    assert len(got) > 0
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
