@@ -96,9 +96,10 @@ class ComboSearchEngine:
         return config_from_meta(meta_cfg)
 
     #: at or above this many indexed docs, search()/phrase() default to
-    #: the range-partitioned evaluators (one task per (query, doc-range))
-    #: instead of one task per query — a hot-term query over a large index
-    #: must not concentrate its whole posting volume in a single worker.
+    #: the range-partitioned evaluators (one task per (query, doc-range));
+    #: below it the query terms' postings are fetched and scored by the
+    #: caller — a hot-term query over a large index must not concentrate
+    #: its whole posting volume in a single process.
     #: 200k is where measurement flips (BENCH/BASELINE.md "At-scale
     #: validation (round 3)": partitioned WAND 1.79s vs single 2.55s at
     #: 1M docs on a quiet host; partitioned phrase 3.1s vs 16.6s at 200k),
@@ -122,8 +123,9 @@ class ComboSearchEngine:
         doc-range)) — same exact results, the right shape for stop-word
         queries over very large indexes. Default (None) routes
         automatically: partitioned once the index holds at least
-        ``PARTITIONED_THRESHOLD`` docs, single-task below (fat-query
-        throughput wins while per-query posting volume is small)."""
+        ``PARTITIONED_THRESHOLD`` docs; below it the query terms' posting
+        rows are fetched with one Spark job and scored by the caller (the
+        per-request job cost dominates while posting volume is small)."""
         queries = [(0, query)] if isinstance(query, str) else query
         cfg = self._query_config()
         if partitioned is None:

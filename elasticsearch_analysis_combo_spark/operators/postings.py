@@ -104,6 +104,25 @@ def term_blocks_from_rows(run_idxs, blocks_col) -> list:
     return out
 
 
+def fetch_term_blocks(scan: DataFrame) -> dict[str, tuple[float, list]]:
+    """term -> (df, blocks) for the posting rows of ``scan`` (term,
+    run_idx, df, blocks), fetched into the calling process with one Spark
+    job (Arrow ``toPandas``). A term's runs are concatenated in run_idx
+    order, so each list stays doc-sorted; df is the term total every run
+    row repeats."""
+    pdf = scan.select("term", "run_idx", "df", "blocks").toPandas()
+    rows: dict[str, tuple[float, list, list]] = {}
+    for term, ri, df_t, blocks in zip(
+        pdf["term"], pdf["run_idx"], pdf["df"], pdf["blocks"]
+    ):
+        _, run_idxs, blocks_col = rows.setdefault(term, (float(df_t), [], []))
+        run_idxs.append(int(ri))
+        blocks_col.append(blocks)
+    return {
+        term: (df_t, term_blocks_from_rows(run_idxs, blocks_col))
+        for term, (df_t, run_idxs, blocks_col) in rows.items()
+    }
+
 
 
 def _encode_blocks(

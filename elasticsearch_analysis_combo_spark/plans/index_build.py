@@ -25,6 +25,7 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
@@ -155,24 +156,36 @@ def _config_dict(config: ComboConfig) -> dict:
 
 
 class InvertedIndex:
-    """Handle over a built index directory."""
+    """Handle over a built index directory. Each table's parquet schema is
+    read once per handle (keyed by the resolved table dir) and given to
+    later reads, which then skip the footer-inference job."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = IndexMeta.load(index_dir)
+        self._schemas: dict[str, T.StructType] = {}
+
+    def _read(self, name: str) -> DataFrame:
+        path = self.meta.table_dir(self.index_dir, name)
+        schema = self._schemas.get(path)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = df.schema
+        return df
 
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(self.meta.table_dir(self.index_dir, "postings"))
+        return self._read("postings")
 
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.meta.table_dir(self.index_dir, "term_stats"))
+        return self._read("term_stats")
 
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.meta.table_dir(self.index_dir, "doc_stats"))
+        return self._read("doc_stats")
 
     def term_df(self) -> DataFrame:
-        return self.spark.read.parquet(self.meta.table_dir(self.index_dir, "term_df"))
+        return self._read("term_df")
 
 
 def build_index(

@@ -313,14 +313,15 @@ def _phrase_scores_partitioned(
 ) -> DataFrame:
     """Doc-range-partitioned per-field phrase scoring: the positional
     kernel fans out per (query, doc-range)
-    (``phrase_match_partitioned``, row-identical to the single-task
-    evaluator) carrying ``dl`` out, and the Lucene PhraseQuery score
+    (``phrase_match_partitioned``, row-identical to ``phrase_match``)
+    carrying ``dl`` out, and the Lucene PhraseQuery score
     ``idf_sum * satu(n_matches)`` applies as one codegen projection —
     the idf constants come from a slot-count-sized dictionary probe
     (|query terms| rows, never corpus-sized). This is the scale path a
     stop-word phrase needs on a big field: the match set itself is
     still small, but the POSTING rows the kernel intersects are not,
-    and one task per query would hold a whole field's posting lists."""
+    and ``phrase_match`` would hold a whole field's posting lists in
+    the calling process."""
     import math
 
     from elasticsearch_analysis_combo_spark.query.phrase import (

@@ -24,8 +24,10 @@ passes per (slot, window-offset) over the whole candidate batch.
 
 Two physical strategies, mirroring WAND (query/wand.py):
 
-* ``phrase_match`` — one task per query; the phrase's terms' compressed
-  posting rows gather to that task. Fine for selective phrases.
+* ``phrase_match`` — one Spark job per request: the batch's distinct
+  terms' compressed posting rows are fetched once into the calling
+  process, decoded once, and every phrase is matched there. Fine for
+  selective phrases.
 * ``phrase_match_partitioned`` — one task per (query, doc-range): each
   compressed block ships only to the doc-id ranges its [first_doc,
   last_doc] span overlaps, every range intersects positions for its own
@@ -56,6 +58,7 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
 from elasticsearch_analysis_combo_spark.operators.postings import (
     MIN_DOC,
     decode_segment_blocks_flat,
+    fetch_term_blocks,
 )
 
 PHRASE_SCHEMA = T.StructType(
@@ -285,16 +288,20 @@ def _match_phrase(
     return out_docs, out_counts, dls_out
 
 
+def _decode_blocks(blocks: list) -> tuple:
+    """(docs, offs, pos_flat, dls) of one term's doc-sorted block list."""
+    d, t, l, pos_flat = decode_segment_blocks_flat(blocks, True)
+    offs = np.concatenate([[0], np.cumsum(t.astype(np.int64))])
+    return d, offs, pos_flat, l
+
+
 def _decode_rows(rows_by_term: dict[str, dict[int, list]]) -> dict:
     """term -> (docs, offs, pos_flat, dls) from (run_idx -> blocks) maps;
     runs concatenate in run_idx order (stays doc-sorted)."""
-    decoded = {}
-    for term, runs in rows_by_term.items():
-        blocks = [bl for ri in sorted(runs) for bl in runs[ri]]
-        d, t, l, pos_flat = decode_segment_blocks_flat(blocks, True)
-        offs = np.concatenate([[0], np.cumsum(t.astype(np.int64))])
-        decoded[term] = (d, offs, pos_flat, l)
-    return decoded
+    return {
+        term: _decode_blocks([bl for ri in sorted(runs) for bl in runs[ri]])
+        for term, runs in rows_by_term.items()
+    }
 
 
 def phrase_match(
@@ -309,51 +316,15 @@ def phrase_match(
     """(query_id, doc_id, n_matches[, dl][, sloppy_freq]) for every doc
     containing the phrase (within ``slop`` position moves — see module
     docstring). ``with_weights`` (requires ``with_dl``) adds Lucene's
-    sloppyFreq (1/(matchLength+1) per anchor, summed). One task per
-    query; use :func:`phrase_match_partitioned` for stop-word phrases
-    over very large indexes."""
-    if with_weights and not with_dl:
-        raise ValueError("with_weights requires with_dl")
-    schema = (
-        PHRASE_DL_W_SCHEMA if with_weights
-        else PHRASE_DL_SCHEMA if with_dl else PHRASE_SCHEMA
-    )
-    qrows = analyze_phrases(queries, config)
-    if not qrows:
-        return tiny_df(spark, [], schema)
-    qterms = tiny_df(spark,
-        sorted({(qid, t) for qid, _, t in qrows}), "query_id int, term string"
-    )
-    all_terms = sorted({t for _, _, t in qrows})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    joined = plists.join(F.broadcast(qterms), "term")
-    slots_by_q: dict[int, list[tuple[int, str]]] = {}
-    for qid, slot, term in qrows:
+    sloppyFreq (1/(matchLength+1) per anchor, summed). One Spark job: the
+    batch's distinct terms' posting rows are fetched and decoded once, and
+    every phrase is matched in the calling process; returns a
+    LocalTableScan frame. Use :func:`phrase_match_partitioned` for
+    stop-word phrases over very large indexes."""
+    slots_by_q: dict[int, list[tuple[int, object]]] = {}
+    for qid, slot, term in analyze_phrases(queries, config):
         slots_by_q.setdefault(qid, []).append((slot, term))
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        rows_by_term: dict[str, dict[int, list]] = {}
-        for term, ri, blocks in zip(pdf["term"], pdf["run_idx"], pdf["blocks"]):
-            rows_by_term.setdefault(term, {})[int(ri)] = blocks
-        decoded = _decode_rows(rows_by_term)
-        res = _match_phrase(
-            decoded, slots_by_q[qid], slop,
-            want_dl=with_dl, want_weights=with_weights,
-        )
-        docs, counts = res[0], res[1]
-        out = {
-            "query_id": pd.Series(np.full(docs.size, qid), dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "n_matches": pd.Series(counts, dtype="int64"),
-        }
-        if with_dl:
-            out["dl"] = pd.Series(res[2], dtype="int64")
-        if with_weights:
-            out["sloppy_freq"] = pd.Series(res[3], dtype="float64")
-        return pd.DataFrame(out)
-
-    return joined.groupBy("query_id").applyInPandas(run_query, schema)
+    return _slots_eval(spark, postings, slots_by_q, slop, with_dl, with_weights)
 
 
 def phrase_match_docs(
@@ -442,7 +413,7 @@ def range_partitioned_positional_eval(
     narrow, so their volume splits ~evenly across ranges); each task
     decodes, trims boundary blocks to its own closed range, and calls
     ``match_fn(qid, decoded) -> (docs, counts)`` with the same decoded
-    shape as the single-task path. Docs partition across ranges, so the
+    shape as :func:`phrase_match`. Docs partition across ranges, so the
     union of per-range results is the exact global answer. With
     ``want_dl`` the matcher must return ``(docs, counts, dls)`` and the
     output gains a ``dl`` column (docs partition across ranges, so per-doc
@@ -643,40 +614,43 @@ def _slots_eval(
     postings: DataFrame,
     slots_by_q: dict[int, list[tuple[int, object]]],
     slop: int,
+    with_dl: bool = False,
+    with_weights: bool = False,
 ) -> DataFrame:
-    """Shared single-task-per-query evaluator over prepared slot specs
-    (plain terms or expansion groups)."""
-    qterm_rows = sorted(
-        {
-            (qid, t)
-            for qid, slots in slots_by_q.items()
-            for _, spec in slots
-            for t in _group(spec)
-        }
+    """Shared evaluator over prepared slot specs (plain terms or expansion
+    groups), in one Spark job: the distinct terms' posting rows are
+    fetched and decoded once, and every query is matched in the calling
+    process. Returns a LocalTableScan frame."""
+    if with_weights and not with_dl:
+        raise ValueError("with_weights requires with_dl")
+    schema = (
+        PHRASE_DL_W_SCHEMA if with_weights
+        else PHRASE_DL_SCHEMA if with_dl else PHRASE_SCHEMA
     )
-    if not qterm_rows:
-        return tiny_df(spark, [], PHRASE_SCHEMA)
-    qterms = tiny_df(spark, qterm_rows, "query_id int, term string")
-    all_terms = sorted({t for _, t in qterm_rows})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    joined = plists.join(F.broadcast(qterms), "term")
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        rows_by_term: dict[str, dict[int, list]] = {}
-        for term, ri, blocks in zip(pdf["term"], pdf["run_idx"], pdf["blocks"]):
-            rows_by_term.setdefault(term, {})[int(ri)] = blocks
-        decoded = _decode_rows(rows_by_term)
-        docs, counts = _match_phrase(decoded, slots_by_q[qid], slop)
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(np.full(docs.size, qid), dtype="int32"),
-                "doc_id": pd.Series(docs, dtype="int64"),
-                "n_matches": pd.Series(counts, dtype="int64"),
-            }
+    terms = {
+        t for slots in slots_by_q.values() for _, spec in slots
+        for t in _group(spec)
+    }
+    if not terms:
+        return tiny_df(spark, [], schema)
+    fetched = fetch_term_blocks(postings.filter(F.col("term").isin(sorted(terms))))
+    decoded = {term: _decode_blocks(bls) for term, (_, bls) in fetched.items()}
+    cols = [[] for _ in schema.fields]
+    for qid in sorted(slots_by_q):
+        res = _match_phrase(
+            decoded, slots_by_q[qid], slop,
+            want_dl=with_dl, want_weights=with_weights,
         )
-
-    return joined.groupBy("query_id").applyInPandas(run_query, PHRASE_SCHEMA)
+        cols[0].append(np.full(res[0].size, qid))
+        for col, arr in zip(cols[1:], res):
+            col.append(arr)
+    # a pandas frame converts through Arrow into a LocalTableScan
+    return spark.createDataFrame(pd.DataFrame({
+        f.name: pd.Series(np.concatenate(col), dtype=dtype)
+        for f, col, dtype in zip(
+            schema.fields, cols, ["int32", "int64", "int64", "int64", "float64"]
+        )
+    }), schema=schema)
 
 
 def phrase_prefix_match(

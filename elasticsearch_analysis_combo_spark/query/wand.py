@@ -18,10 +18,11 @@ result must equal exhaustive evaluation. Three properties guarantee it:
   and reproducible (the pure-Python oracle sums the same way; the Spark
   exhaustive path is compared at 1e-9).
 
-Distribution: one task per query (groupBy(query_id).applyInPandas). The
-postings shipped to a task are only the query's terms' — compressed blocks,
-so even stop-token-heavy WAND-stress queries move bytes, not raw rows.
-Queries scale out across executors; per-query work is WAND-pruned.
+Distribution: one Spark job per request. The batch's distinct query terms'
+posting rows (compressed blocks, positions pruned from the scan) are
+fetched once into the calling process, and each query is scored there;
+per-query work is WAND-pruned. Past ``PARTITIONED_THRESHOLD`` docs the
+engine uses :func:`wand_topk_partitioned`, one task per (query, doc-range).
 """
 
 from __future__ import annotations
@@ -41,7 +42,10 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
     bm25_impact,
     decode_block,
 )
-from elasticsearch_analysis_combo_spark.operators.postings import MIN_DOC
+from elasticsearch_analysis_combo_spark.operators.postings import (
+    MIN_DOC,
+    fetch_term_blocks,
+)
 from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
 
 TOPK_SCHEMA = T.StructType(
@@ -347,9 +351,9 @@ def wand_topk(
     k: int = 10,
     dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
-    """Distributed block-max WAND over a built index directory. The term
-    filter is pushed into the parquet scan and the posting table is
-    term-sorted, so row-group min/max stats prune I/O."""
+    """Block-max WAND over a built index directory. The term filter is
+    pushed into the parquet scan and the posting table is term-sorted, so
+    row-group min/max stats prune I/O."""
     meta = index.meta
     if config is None:
         config = config_from_meta(meta.config)
@@ -357,6 +361,14 @@ def wand_topk(
         spark, index.postings(), queries, config,
         n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
         dense_max_postings=dense_max_postings,
+    )
+
+
+def posting_scan(postings: DataFrame, terms) -> DataFrame:
+    """The WAND fetch: ``terms``' posting rows, the term filter pushed into
+    the parquet scan and ``pos_data`` pruned from it."""
+    return postings.filter(F.col("term").isin(sorted(terms))).select(
+        "term", "run_idx", "df", _blocks_sans_positions().alias("blocks")
     )
 
 
@@ -373,48 +385,30 @@ def wand_topk_from_postings(
     dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
     """Block-max WAND over any posting DataFrame (materialized table or
-    freshly-built pipeline output): one task per query (dense-dispatched
-    below ``dense_max_postings`` postings — see wand_topk_single)."""
-    qrows = analyze_queries(queries, config)
-    qterms = tiny_df(spark, qrows, "query_id int, term string")
-
-    all_terms = sorted({t for _, t in qrows})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    # WAND never touches positions: strip pos_data from the block structs
-    # BEFORE the shuffle/Arrow boundary (guide §2.3 — an opaque pandas UDF
-    # defeats nested-column pruning, so the projection must be explicit;
-    # roughly halves the bytes shipped per posting block)
-    plists = plists.withColumn("blocks", _blocks_sans_positions())
-    joined = plists.join(F.broadcast(qterms), "term")
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        # a term's posting list may span multiple bounded (term, run_idx)
-        # rows; concatenate runs in run_idx order (stays doc-sorted)
-        by_term_rows: dict[str, list] = {}
-        for term, df_t, ri, blocks in zip(
-            pdf["term"], pdf["df"], pdf["run_idx"], pdf["blocks"]
-        ):
-            by_term_rows.setdefault(term, []).append((int(ri), float(df_t), blocks))
-        by_term = {}
-        for term, rows in by_term_rows.items():
-            rows.sort(key=lambda r: r[0])
-            df_t = rows[0][1]  # term total, repeated on every run row
-            blocks = [bl for _, _, bls in rows for bl in bls]
-            idf = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
-            by_term[term] = (idf, blocks)
-        top = wand_topk_single(by_term, k, avgdl, k1, b,
-                               dense_max_postings=dense_max_postings)
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(top), qid, dtype="int32"),
-                "rank": np.arange(1, len(top) + 1, dtype="int32"),
-                "doc_id": np.array([d for d, _ in top], dtype="int64"),
-                "score": np.array([s for _, s in top], dtype="float64"),
-            }
+    freshly-built pipeline output) in one Spark job: the posting rows of
+    the batch's distinct terms are fetched once (:func:`posting_scan`) and
+    every query is scored in the calling process by
+    :func:`wand_topk_single` (dense-dispatched below
+    ``dense_max_postings`` postings). Returns a LocalTableScan frame."""
+    terms_by_q: dict[int, set[str]] = {}
+    for qid, term in analyze_queries(queries, config):
+        terms_by_q.setdefault(qid, set()).add(term)
+    all_terms = set().union(*terms_by_q.values())
+    fetched = (
+        fetch_term_blocks(posting_scan(postings, all_terms)) if all_terms else {}
+    )
+    by_term = {
+        term: (float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))), blocks)
+        for term, (df_t, blocks) in fetched.items()
+    }
+    rows = []
+    for qid in sorted(terms_by_q):
+        top = wand_topk_single(
+            {t: by_term[t] for t in terms_by_q[qid] if t in by_term},
+            k, avgdl, k1, b, dense_max_postings=dense_max_postings,
         )
-
-    return joined.groupBy("query_id").applyInPandas(run_query, TOPK_SCHEMA)
+        rows.extend((qid, rank, d, s) for rank, (d, s) in enumerate(top, 1))
+    return tiny_df(spark, rows, TOPK_SCHEMA)
 
 
 def wand_topk_partitioned(
@@ -432,8 +426,8 @@ def wand_topk_partitioned(
 ) -> DataFrame:
     """Range-partitioned block-max WAND: one task per (query, doc-range).
 
-    The single-task-per-query evaluator concentrates a stop-word query's
-    whole posting volume in one Python worker; here the doc-id space (docIDs
+    The fetch-and-score evaluator concentrates a stop-word query's whole
+    posting volume in the calling process; here the doc-id space (docIDs
     are xxhash64 — uniform over int64) is split into 2^range_bits equal
     ranges, each task runs exact WAND restricted to its range, and the
     global top-k is a window over the per-range top-ks (exact: every global
@@ -449,12 +443,9 @@ def wand_topk_partitioned(
     shift = 64 - range_bits
     qrows = analyze_queries(queries, config)
     qterms = tiny_df(spark, qrows, "query_id int, term string")
-    all_terms = sorted({t for _, t in qrows})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    # strip positions before the block explode + range fan-out (see
-    # wand_topk_from_postings) — boundary blocks replicate to two ranges,
-    # so the saving compounds
-    plists = plists.withColumn("blocks", _blocks_sans_positions())
+    # positions are pruned before the block explode + range fan-out, where
+    # boundary blocks replicate to two ranges, so the saving compounds
+    plists = posting_scan(postings, {t for _, t in qrows})
 
     def rid(col: str):
         # signed doc -> unsigned order via sign-bit flip, top bits = range

@@ -142,3 +142,28 @@ def test_partial_resume_rebuilds_missing_stage(built, spark):
     assert index3.postings().select("term").distinct().count() == len(
         build_oracle_index(docs, CFG)[0]
     )
+
+
+def test_search_and_phrase_issue_one_job_each(built, spark):
+    """engine.search (one query or a 32-query batch) and engine.phrase each
+    fetch their terms' posting rows with one Spark job and score them in
+    the calling process; collecting the result issues no further job."""
+    from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
+
+    from tests.test_checkpoint_lineage import _jobs
+
+    _, docs, idx_dir, _ = built
+    engine = ComboSearchEngine(spark, CFG, idx_dir)
+    engine.idx.postings()  # the handle reads the table's schema once
+    batch = [(i, " ".join(docs[i][1].split()[:3])) for i in range(32)]
+    out = {}
+    requests = {
+        "search": lambda: engine.search("merge segment").collect(),
+        "batch": lambda: engine.search(batch).collect(),
+        "phrase": lambda: engine.phrase("def the").collect(),
+    }
+    for name, request in requests.items():
+        n = _jobs(spark, f"request-{name}", lambda: out.update({name: request()}))
+        assert n == 1, (name, n)
+    assert out["search"] and out["phrase"]
+    assert {r["query_id"] for r in out["batch"]} == set(range(32))

@@ -135,6 +135,17 @@ def test_partitioned_equals_single_task(spark, stress, slop):
     )
     assert part == single
     assert single  # stress corpus really produces matches
+    # the whole multi-phrase batch with dl and sloppyFreq, row for row
+    weighted = [
+        sorted(tuple(r) for r in match(
+            spark, stress, PHRASES, CFG, slop=slop,
+            with_dl=True, with_weights=True, **kw,
+        ).collect())
+        for match, kw in ((phrase_match, {}),
+                          (phrase_match_partitioned, {"range_bits": 3}))
+    ]
+    assert weighted[0] == weighted[1]
+    assert {(q, d): n for q, d, n, _, _ in weighted[0]} == single
 
 
 def test_partitioned_tiny_corpus_and_slop(spark, tiny_postings):

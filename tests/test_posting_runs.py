@@ -8,7 +8,8 @@ randomized corpus so nearly every term spans multiple rows, then checks:
 * build_postings emits >1 row for long terms, with term-total df/cf repeated
   per run, runs partitioning the doc space in order;
 * WAND over the chunked table is rank- and score-identical to the pure
-  exhaustive oracle;
+  exhaustive oracle, a 32-query batch equals ``bm25_exhaustive_topk``, and
+  a non-materialized merge pipeline gives the written table's top-k;
 * phrase matching over chunked positional postings equals the unchunked
   result.
 """
@@ -30,6 +31,7 @@ from elasticsearch_analysis_combo_spark.operators.postings import (
     decode_segment_blocks,
     merge_segments,
 )
+from elasticsearch_analysis_combo_spark.query.bm25 import bm25_exhaustive_topk
 from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
 from elasticsearch_analysis_combo_spark.query.wand import wand_topk_from_postings
 
@@ -59,8 +61,34 @@ def _stats(spark, docs):
     return build_term_stats(df, CFG)
 
 
+def _topk_by_query(rows) -> dict[int, list]:
+    by_q: dict[int, list] = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], r["score"]))
+    return {q: sorted(v) for q, v in by_q.items()}
+
+
+def _assert_same_topk(have: list, want: list, k: int, what: str) -> None:
+    """Equal ranks, scores within 1e-9, and doc ids rank by rank, except
+    that docs whose scores tie within 1e-9 may come in either order (and a
+    tie straddling rank k may be cut to either member): two evaluators that
+    sum the same floats in another order can move a tie by an ulp."""
+    assert [r for r, _, _ in have] == [r for r, _, _ in want], what
+    for (_, _, s1), (_, _, s2) in zip(have, want):
+        assert abs(s1 - s2) < 1e-9, what
+    i = 0
+    while i < len(want):
+        j = i + 1
+        while j < len(want) and abs(want[j][2] - want[i][2]) <= 1e-9:
+            j += 1
+        if j < len(want) or len(want) < k:
+            assert {d for _, d, _ in have[i:j]} == {d for _, d, _ in want[i:j]}, what
+        i = j
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_wand_over_chunked_rows_matches_exhaustive(spark, seed):
+def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
     rng = random.Random(seed)
     docs = _make_docs(rng, 90)
     stats = _stats(spark, docs).cache()
@@ -113,6 +141,43 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed):
         assert [(r, d) for r, d, _ in have] == [(r, d) for r, d, _ in exp], qtext
         for (_, _, s1), (_, _, s2) in zip(have, exp):
             assert abs(s1 - s2) < 1e-9
+
+    # a 32-query batch over the written table, where queries share terms
+    # and the last has no indexed term, equals exhaustive BM25 per query
+    batch = [
+        (i, " ".join(rng.choice(VOCAB) for _ in range(rng.randint(1, 4))))
+        for i in range(31)
+    ] + [(31, "zzz_missing qqq_missing")]
+    words = [w for _, text in batch for w in text.split()]
+    assert len(set(words)) < len(words)
+    postings.write.parquet(str(tmp_path / "postings"))
+    table = spark.read.parquet(str(tmp_path / "postings"))
+
+    def wand(p):
+        return _topk_by_query(wand_topk_from_postings(
+            spark, p, batch, CFG, n_docs=n_docs, avgdl=avgdl,
+            k1=K1, b=B, k=10,
+        ).collect())
+
+    got = wand(table)
+    term_df = stats.groupBy("term").agg(F.count("*").alias("df"))
+    want = _topk_by_query(bm25_exhaustive_topk(
+        spark, stats, term_df, batch, CFG, n_docs, avgdl, k=10, k1=K1, b=B,
+    ).collect())
+    assert 31 not in got and set(got) == set(want)
+    for qid, qtext in batch:
+        _assert_same_topk(got.get(qid, []), want.get(qid, []), 10, qtext)
+
+    # a non-materialized merge_segments pipeline (the postings input
+    # __spark_entry__.q_bm25_topk_wand passes) gives the table's top-k
+    segs = build_segments(
+        stats, avgdl=avgdl, k1=K1, b=B, block_size=4, salt_shards=3,
+        with_positions=False, max_blocks_per_row=2,
+    )
+    assert wand(merge_segments(
+        segs, avgdl=avgdl, k1=K1, b=B, block_size=4, with_positions=False,
+        max_blocks_per_row=2,
+    )) == got
 
 
 _REPLAY = make_replay_tokenizer(

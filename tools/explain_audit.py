@@ -911,14 +911,15 @@ def main() -> None:
 
     # 47. (r6 opt) WAND sheds positions BEFORE the scan: arrays_zip field
     # extraction keeps nested schema pruning, so pos_data must be absent
-    # from the posting scan's ReadSchema and from the whole plan
-    from elasticsearch_analysis_combo_spark.query.wand import (
-        wand_topk_from_postings,
-    )
+    # from the posting scan's ReadSchema and from the whole plan. The WAND
+    # result is a LocalTableScan, so the check reads the plan of the fetch
+    # scan that wand_topk_from_postings runs.
+    from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
+    from elasticsearch_analysis_combo_spark.query.wand import posting_scan
 
-    p = plan_text(wand_topk_from_postings(
-        spark, idx.postings(), [(0, "spark query")], cfg,
-        n_docs=idx.meta.n_docs, avgdl=idx.meta.avgdl, k=10,
+    p = plan_text(posting_scan(
+        idx.postings(),
+        {t for _, t in analyze_queries([(0, "spark query")], cfg)},
     ))
     ok = "pos_data" not in p and "PushedFilters: [In(term" in p
     print(f"{'OK ' if ok else 'FAIL'} WAND never reads pos_data "
