@@ -1,4 +1,8 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory for this engine.
+
+``get_spark`` only builds the session: it starts no thread and launches no
+Spark job. Python workers are forked by PySpark's stock daemon the first
+time a stage needs them.
 
 Local-mode defaults match the sandbox (local[N], single JVM); on a real
 cluster the same settings apply minus master/driver-memory, submitted via
@@ -8,100 +12,13 @@ cluster the same settings apply minus master/driver-memory, submitted via
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import SparkSession
 
 
-def _prewarm_worker_pools(spark: SparkSession, cores: int) -> None:
-    """Spin up both Python worker pools in the background.
-
-    The first Python stage of a session pays worker-pool creation (~2 s
-    wall on local[32]: daemon launch + N forks + handshakes), and PySpark
-    keeps TWO separate pools — plain-pickle RDD workers and Arrow SQL-UDF
-    workers — so the cost is paid twice, each time inside whatever query
-    happens to run first. Both pools are reused afterwards (worker.reuse
-    default, idle pool unbounded), so creating them at session startup in
-    a daemon thread moves that latency off the first real queries and
-    overlaps it with the caller's own driver-side setup work."""
-
-    def run_sql_side() -> None:
-        # ordered by what a fresh engine needs first: the Arrow SQL pool
-        # (first mapInPandas stage), then the parquet write path
-        # (committer, codec, WriteFiles — the first timed action of an
-        # index build is a parquet write), then exchange + grouped-pandas
-        try:
-            from pyspark.sql import functions as F
-
-            sc = spark.sparkContext
-            sc.setJobDescription("session pre-warm: arrow pool + write path")
-
-            def _identity(batches):
-                for b in batches:
-                    yield b
-
-            spark.range(0, cores, 1, cores).mapInPandas(
-                _identity, schema="id long"
-            ).write.format("noop").mode("overwrite").save()
-
-            import shutil
-            import tempfile
-
-            d = tempfile.mkdtemp(prefix="combo_prewarm_")
-            try:
-                spark.range(0, 64, 1, 4).write.mode("overwrite").parquet(
-                    f"{d}/w"
-                )
-            finally:
-                shutil.rmtree(d, ignore_errors=True)
-
-            def _gidentity(_key, pdf):
-                return pdf
-
-            (spark.range(0, cores * 64, 1, cores)
-             .withColumn("k", F.pmod(F.col("id"), F.lit(cores)))
-             .groupBy("k").applyInPandas(_gidentity, schema="id long, k bigint")
-             .write.format("noop").mode("overwrite").save())
-            # explode + hash-aggregate + window machinery: the shared
-            # execution classes (generators, UnsafeFixedWidthAggregationMap,
-            # WindowExec buffers) JIT-warm here instead of inside the
-            # first real explode-heavy aggregation
-            from pyspark.sql import Window as _W
-
-            (spark.range(0, cores * 2000, 1, cores)
-             .select(F.explode(F.array("id", "id")).alias("x"))
-             .groupBy(F.pmod("x", F.lit(997)).alias("g"))
-             .agg(F.count("*").alias("c"), F.min("x"), F.max("x"))
-             .withColumn(
-                 "r",
-                 F.row_number().over(_W.partitionBy("g").orderBy("c")),
-             )
-             .write.format("noop").mode("overwrite").save())
-            sc.setJobDescription(None)
-        except Exception:  # noqa: BLE001 - warmup must never break a session
-            pass
-
-    def run_rdd_side() -> None:
-        # plain-pickle pool (parallelize/createDataFrame-from-list path);
-        # independent factory from the SQL pool, so warm it concurrently
-        try:
-            sc = spark.sparkContext
-            sc.setJobDescription("session pre-warm: plain worker pool")
-            sc.parallelize(range(cores), cores).count()
-            sc.setJobDescription(None)
-        except Exception:  # noqa: BLE001
-            pass
-
-    threading.Thread(
-        target=run_sql_side, name="combo-spark-prewarm-sql", daemon=True
-    ).start()
-    threading.Thread(
-        target=run_rdd_side, name="combo-spark-prewarm-rdd", daemon=True
-    ).start()
-
-
 def _package_root() -> str:
-    """Directory containing the package (for worker-daemon importability)."""
+    """Directory containing the package. Python workers unpickle UDFs that
+    reference package modules, so it must be on their ``PYTHONPATH``."""
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -113,7 +30,7 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    # make the package importable in the worker daemon regardless of the
+    # make the package importable in the Python workers regardless of the
     # caller's cwd: the JVM (and the python daemon it spawns) inherit this
     # env. Must be set before the gateway launches.
     root = _package_root()
@@ -127,40 +44,19 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # prefer shuffled-hash over sort-merge when the per-partition
-        # build side fits (guide §3.1/§9): skips both sort passes on the
-        # band self-join / model joins. The AQE threshold bounds the
-        # runtime SMJ->SHJ rewrite by per-partition build size — a
-        # per-partition cap, so it holds at any corpus size (partitions
-        # themselves are bounded by AQE's advisory size); env-overridable
-        # for clusters with tighter executor memory.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large `content` strings: cap Arrow batch rows so a batch stays
-        # comfortably in worker memory even at 100TB-scale file sizes
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "8192"))
+        # comfortably in worker memory even at 100TB-scale file sizes. The
+        # value also sets the `term_stats` batch boundaries, and with them
+        # the row order and bytes of the written table
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         # local mode: driver memory is the ONLY execution-memory pool and is
         # split across all concurrent tasks — undersizing it makes wide
         # (local[32]) runs spill in sort stages and anti-scale
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
-        # preloading worker daemon: numpy/pandas/pyarrow + the engine's hot
-        # modules import ONCE in the daemon, before any worker forks —
-        # forked workers inherit them copy-on-write instead of each paying
-        # the ~0.7 s import at first UDF deserialization (guide §4.5; on
-        # local[32] that cold start lands inside the first timed stage)
-        .config("spark.python.daemon.module",
-                "elasticsearch_analysis_combo_spark.daemon")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # once per session instance (getOrCreate may return an existing one)
-    if not getattr(spark, "_combo_prewarmed", False):
-        spark._combo_prewarmed = True
-        _prewarm_worker_pools(spark, cores)
-    return spark
+    return builder.getOrCreate()

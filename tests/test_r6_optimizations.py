@@ -1,16 +1,18 @@
 """Round-6 optimization internals: the changes must be result-invariant.
 
 Covers: tiny_df (LocalTableScan dimension frames) value/schema parity with
-classic createDataFrame, WAND's position-stripped block structs, and the
-ngram_lm_perplexity self-train restructure (doc_tf-derived c2 must score
-identically to an explicitly-passed train corpus, which still uses the
-independent aggregation path).
+classic createDataFrame and its refusal of unsafe casts, WAND's
+position-stripped block structs, and the ngram_lm_perplexity self-train
+restructure (doc_tf-derived c2 must score identically to an
+explicitly-passed train corpus, which still uses the independent
+aggregation path).
 """
 
 import io
 from contextlib import redirect_stdout
 
 import pytest
+from pyspark.errors import PySparkTypeError, PySparkValueError
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.tinydf import tiny_df
@@ -37,6 +39,19 @@ def test_tiny_df_matches_createdataframe(spark, rows, schema):
     b = spark.createDataFrame(rows, schema)
     assert a.schema == b.schema
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+@pytest.mark.parametrize(
+    "rows,schema,error",
+    [
+        ([(2**40,)], "x int", PySparkValueError),
+        ([(1.7,)], "x long", PySparkTypeError),
+    ],
+)
+def test_tiny_df_rejects_unsafe_casts(spark, rows, schema, error):
+    # an overflowing or lossy value must raise, not be silently cast
+    with pytest.raises(error):
+        tiny_df(spark, rows, schema).collect()
 
 
 def test_tiny_df_is_local_table_scan(spark):
