@@ -34,12 +34,14 @@ contains it. Order of operations matches Lucene: a source produces its
 minimal stream first, THEN ``max_gaps`` filters it (a wide minimal
 interval is dropped, never replaced by a wider non-minimal one).
 
-Evaluation shape: same gather as the span family (`_span_eval` — the
-compressed posting rows of the query's terms, positions pre-packed),
-with the whole kernel vectorized ACROSS DOCS in banded-key space (key =
-doc_index * BAND + position): searchsorted chains for ordered leaves,
-per-start covering ends for unordered, same-band checks confining every
-window to one doc, and minimality as ONE global suffix-min scan — the
+Evaluation shape: the span family's evaluator
+(``phrase.positional_eval`` — one fetch of the batch's compressed
+posting rows, each term decoded once, every query matched in the calling
+process), with the whole kernel vectorized ACROSS DOCS in banded-key
+space (key = doc_index * BAND + position): searchsorted chains for
+ordered leaves, per-start covering ends for unordered, same-band checks
+confining every window to one doc, and minimality as ONE global
+suffix-min scan — the
 band bits dominate the key, so a later doc's end key can never falsely
 shadow an earlier doc's interval. No per-doc Python loop anywhere. The
 ``range_bits`` doc-range fan-out is exact (all rules are per-doc).
@@ -58,11 +60,13 @@ from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
-from elasticsearch_analysis_combo_spark.query.phrase import _BAND
+from elasticsearch_analysis_combo_spark.query.phrase import (
+    _BAND,
+    positional_eval,
+)
 from elasticsearch_analysis_combo_spark.query.spans import (
     _docs_counts,
     _keys_in_space,
-    _span_eval,
 )
 
 
@@ -318,7 +322,7 @@ def intervals_match(
         qid: sorted(_rule_terms(rule)) for qid, rule in rules.items()
     }
 
-    def matcher(qid, decoded):
+    def matcher(qid, decoded, _df):
         empty = (np.zeros(0, dtype=np.int64),) * 2
         rule = rules[qid]
         cand = _candidate_docs(rule, decoded)
@@ -332,4 +336,6 @@ def intervals_match(
             return empty
         return _docs_counts(cand, iv[:, 0])
 
-    return _span_eval(spark, postings, qid_terms, matcher, range_bits)
+    return positional_eval(
+        spark, postings, qid_terms, matcher, range_bits=range_bits
+    )

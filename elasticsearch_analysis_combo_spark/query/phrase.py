@@ -24,11 +24,16 @@ passes per (slot, window-offset) over the whole candidate batch.
 
 Two physical strategies, mirroring WAND (query/wand.py):
 
-* ``phrase_match`` — one Spark job per request: the batch's distinct
+* ``positional_eval`` — one Spark job per request: the batch's distinct
   terms' compressed posting rows are fetched once into the calling
-  process, decoded once, and every phrase is matched there. Fine for
-  selective phrases.
-* ``phrase_match_partitioned`` — one task per (query, doc-range): each
+  process, decoded once, and every query is matched there. Every
+  positional query runs on it: ``phrase_match`` and its prefix and
+  shingle variants, the ranked ``phrase_topk``, the span family
+  (query/spans.py) and ``intervals`` (query/intervals.py). Fine for
+  selective terms.
+* ``range_partitioned_positional_eval`` (``phrase_match_partitioned``,
+  and ``positional_eval`` given ``range_bits``) — one task per
+  (query, doc-range): each
   compressed block ships only to the doc-id ranges its [first_doc,
   last_doc] span overlaps, every range intersects positions for its own
   docs, and the union of ranges is the answer (ranges partition the doc
@@ -91,6 +96,9 @@ PHRASE_DL_W_SCHEMA = T.StructType(
 _POS_BIAS = 1 << 30
 _BAND = np.int64(1 << 31)
 
+# pandas dtype of each result column type the positional schemas use
+_DTYPES = {T.IntegerType(): "int32", T.LongType(): "int64", T.DoubleType(): "float64"}
+
 
 def analyze_phrases(
     queries: list[tuple[int, str]], config: ComboConfig
@@ -103,6 +111,16 @@ def analyze_phrases(
         for slot, t in enumerate(toks):
             out.append((qid, slot, t.term))
     return out
+
+
+def _phrase_slots(
+    queries: list[tuple[int, str]], config: ComboConfig
+) -> dict[int, list[tuple[int, object]]]:
+    """query_id -> the analyzed phrase's (slot, term) list."""
+    slots_by_q: dict[int, list[tuple[int, object]]] = {}
+    for qid, slot, term in analyze_phrases(queries, config):
+        slots_by_q.setdefault(qid, []).append((slot, term))
+    return slots_by_q
 
 
 def _slot_keys(docs, offs, pos_flat, common, slot: int) -> np.ndarray:
@@ -295,15 +313,6 @@ def _decode_blocks(blocks: list) -> tuple:
     return d, offs, pos_flat, l
 
 
-def _decode_rows(rows_by_term: dict[str, dict[int, list]]) -> dict:
-    """term -> (docs, offs, pos_flat, dls) from (run_idx -> blocks) maps;
-    runs concatenate in run_idx order (stays doc-sorted)."""
-    return {
-        term: _decode_blocks([bl for ri in sorted(runs) for bl in runs[ri]])
-        for term, runs in rows_by_term.items()
-    }
-
-
 def phrase_match(
     spark: SparkSession,
     postings: DataFrame,
@@ -321,10 +330,10 @@ def phrase_match(
     every phrase is matched in the calling process; returns a
     LocalTableScan frame. Use :func:`phrase_match_partitioned` for
     stop-word phrases over very large indexes."""
-    slots_by_q: dict[int, list[tuple[int, object]]] = {}
-    for qid, slot, term in analyze_phrases(queries, config):
-        slots_by_q.setdefault(qid, []).append((slot, term))
-    return _slots_eval(spark, postings, slots_by_q, slop, with_dl, with_weights)
+    return _slots_eval(
+        spark, postings, _phrase_slots(queries, config), slop, with_dl,
+        with_weights,
+    )
 
 
 def phrase_match_docs(
@@ -517,26 +526,9 @@ def phrase_match_partitioned(
     identical rows to :func:`phrase_match` (see
     :func:`range_partitioned_positional_eval`) — the scale-safe path for
     stop-word phrases whose posting lists would concentrate in one task."""
-    qrows = analyze_phrases(queries, config)
-    if not qrows:
-        return tiny_df(spark,
-            [],
-            PHRASE_DL_W_SCHEMA if with_weights
-            else PHRASE_DL_SCHEMA if with_dl else PHRASE_SCHEMA,
-        )
-    slots_by_q: dict[int, list[tuple[int, str]]] = {}
-    for qid, slot, term in qrows:
-        slots_by_q.setdefault(qid, []).append((slot, term))
-    return range_partitioned_positional_eval(
-        spark, postings,
-        [(qid, t) for qid, _, t in qrows],
-        lambda qid, decoded: _match_phrase(
-            decoded, slots_by_q[qid], slop,
-            want_dl=with_dl, want_weights=with_weights,
-        ),
-        range_bits=range_bits,
-        want_dl=with_dl,
-        want_weights=with_weights,
+    return _slots_eval(
+        spark, postings, _phrase_slots(queries, config), slop, with_dl,
+        with_weights, range_bits,
     )
 
 
@@ -555,11 +547,8 @@ def shingle_phrase_slots(
     evaluates shingle slots unchanged. Raises ValueError for phrases with
     fewer than ``size`` analyzed terms — those can't use the shingle
     index; callers fall back to :func:`phrase_match`."""
-    by_q: dict[int, list[tuple[int, str]]] = {}
-    for qid, slot, term in analyze_phrases(queries, config):
-        by_q.setdefault(qid, []).append((slot, term))
     slots_by_q: dict[int, list[tuple[int, str]]] = {}
-    for qid, st in by_q.items():
+    for qid, st in _phrase_slots(queries, config).items():
         terms = [t for _, t in sorted(st)]
         if len(terms) < size:
             raise ValueError(
@@ -597,16 +586,69 @@ def phrase_match_shingles(
     fix adjacency); ``config`` must be the single gap-free base analyzer
     the shingle index was built over."""
     slots_by_q = shingle_phrase_slots(queries, config, size, sep)
-    if not slots_by_q:
-        return tiny_df(spark, [], PHRASE_SCHEMA)
-    if partitioned:
+    return _slots_eval(
+        spark, shingle_postings, slots_by_q, 0,
+        range_bits=range_bits if partitioned else None,
+    )
+
+
+def positional_scan(postings: DataFrame, terms) -> DataFrame:
+    """The positional fetch: ``terms``' posting rows, the term filter
+    pushed into the parquet scan."""
+    return postings.filter(F.col("term").isin(sorted(terms)))
+
+
+def positional_eval(
+    spark: SparkSession,
+    postings: DataFrame,
+    terms_by_q: dict[int, list[str]],
+    matcher,
+    schema: T.StructType = PHRASE_SCHEMA,
+    range_bits: int | None = None,
+) -> DataFrame:
+    """Shared evaluator of every positional query: phrase, span,
+    intervals and ranked phrase. ``terms_by_q`` maps a query id to the
+    terms its matcher reads; a query without terms yields no rows.
+
+    One Spark job: the batch's distinct terms' posting rows are fetched
+    (:func:`fetch_term_blocks`) and each term is decoded once; then
+    ``matcher(qid, decoded, df)`` runs for every query in qid order in
+    the calling process, with ``decoded``: term -> (docs, offs, pos_flat,
+    dls) and ``df``: term -> document frequency. The matcher returns one
+    array per ``schema`` field after ``query_id``; the result is a
+    LocalTableScan frame. With ``range_bits`` the queries fan out per
+    (query, doc-range) instead, through
+    :func:`range_partitioned_positional_eval` (the scale path, where
+    ``df`` is None)."""
+    terms_by_q = {q: ts for q, ts in terms_by_q.items() if ts}
+    if range_bits is not None:
         return range_partitioned_positional_eval(
-            spark, shingle_postings,
-            [(qid, t) for qid, st in slots_by_q.items() for _, t in st],
-            lambda qid, decoded: _match_phrase(decoded, slots_by_q[qid], 0),
+            spark, postings,
+            [(q, t) for q, ts in terms_by_q.items() for t in ts],
+            lambda qid, decoded: matcher(qid, decoded, None),
             range_bits=range_bits,
+            want_dl="dl" in schema.names,
+            want_weights="sloppy_freq" in schema.names,
         )
-    return _slots_eval(spark, shingle_postings, slots_by_q, 0)
+    terms = {t for ts in terms_by_q.values() for t in ts}
+    if not terms:
+        return tiny_df(spark, [], schema)
+    fetched = fetch_term_blocks(positional_scan(postings, terms))
+    decoded = {term: _decode_blocks(bls) for term, (_, bls) in fetched.items()}
+    df = {term: df_t for term, (df_t, _) in fetched.items()}
+    cols = [[] for _ in schema.fields]
+    for qid in sorted(terms_by_q):
+        res = matcher(qid, decoded, df)
+        cols[0].append(np.full(res[0].size, qid))
+        for col, arr in zip(cols[1:], res):
+            col.append(arr)
+    if not sum(arr.size for arr in cols[0]):
+        return tiny_df(spark, [], schema)
+    # a pandas frame converts through Arrow into a LocalTableScan
+    return spark.createDataFrame(pd.DataFrame({
+        f.name: pd.Series(np.concatenate(col), dtype=_DTYPES[f.dataType])
+        for f, col in zip(schema.fields, cols)
+    }), schema=schema)
 
 
 def _slots_eval(
@@ -616,41 +658,26 @@ def _slots_eval(
     slop: int,
     with_dl: bool = False,
     with_weights: bool = False,
+    range_bits: int | None = None,
 ) -> DataFrame:
-    """Shared evaluator over prepared slot specs (plain terms or expansion
-    groups), in one Spark job: the distinct terms' posting rows are
-    fetched and decoded once, and every query is matched in the calling
-    process. Returns a LocalTableScan frame."""
+    """:func:`positional_eval` over prepared phrase slot specs (plain
+    terms or expansion groups)."""
     if with_weights and not with_dl:
         raise ValueError("with_weights requires with_dl")
-    schema = (
-        PHRASE_DL_W_SCHEMA if with_weights
-        else PHRASE_DL_SCHEMA if with_dl else PHRASE_SCHEMA
-    )
-    terms = {
-        t for slots in slots_by_q.values() for _, spec in slots
-        for t in _group(spec)
-    }
-    if not terms:
-        return tiny_df(spark, [], schema)
-    fetched = fetch_term_blocks(postings.filter(F.col("term").isin(sorted(terms))))
-    decoded = {term: _decode_blocks(bls) for term, (_, bls) in fetched.items()}
-    cols = [[] for _ in schema.fields]
-    for qid in sorted(slots_by_q):
-        res = _match_phrase(
+    return positional_eval(
+        spark, postings,
+        {
+            qid: [t for _, spec in slots for t in _group(spec)]
+            for qid, slots in slots_by_q.items()
+        },
+        lambda qid, decoded, _df: _match_phrase(
             decoded, slots_by_q[qid], slop,
             want_dl=with_dl, want_weights=with_weights,
-        )
-        cols[0].append(np.full(res[0].size, qid))
-        for col, arr in zip(cols[1:], res):
-            col.append(arr)
-    # a pandas frame converts through Arrow into a LocalTableScan
-    return spark.createDataFrame(pd.DataFrame({
-        f.name: pd.Series(np.concatenate(col), dtype=dtype)
-        for f, col, dtype in zip(
-            schema.fields, cols, ["int32", "int64", "int64", "int64", "float64"]
-        )
-    }), schema=schema)
+        ),
+        PHRASE_DL_W_SCHEMA if with_weights
+        else PHRASE_DL_SCHEMA if with_dl else PHRASE_SCHEMA,
+        range_bits,
+    )
 
 
 def phrase_prefix_match(
@@ -706,8 +733,6 @@ def phrase_prefix_match(
         slots = [(i, t) for i, t in enumerate(terms[:-1])]
         slots.append((len(terms) - 1, tuple(exp)))
         slots_by_q[qid] = slots
-    if not slots_by_q:
-        return tiny_df(spark, [], PHRASE_SCHEMA)
     return _slots_eval(spark, postings, slots_by_q, slop)
 
 
@@ -728,7 +753,9 @@ def phrase_topk(
     [sum over slots of idf(term)] * satu(freq), satu(f) =
     f*(k1+1)/(f + k1*(1-b+b*dl/avgdl)), idf the Lucene BM25 idf. freq is
     this engine's n_matches (distinct matching anchors; = exact phrase
-    occurrences at slop 0). Returns (query_id, rank, doc_id, score).
+    occurrences at slop 0). Returns (query_id, rank, doc_id, score), ranked
+    by (-score, doc_id); one Spark job through :func:`positional_eval`,
+    with idf from the fetched df and the top-k cut in the calling process.
 
     ``k=None`` skips the rank cut and returns the FULL scored match set
     (query_id, doc_id, score) — the building block multi_match
@@ -736,77 +763,32 @@ def phrase_topk(
     would lose losing-field contributions when tie_breaker > 0, and the
     phrase match set (docs containing the phrase) is small by
     construction, so shipping it whole is the cheap exact path."""
-    from pyspark.sql import Window
+    slots_by_q = _phrase_slots(queries, config)
 
-    qrows = analyze_phrases(queries, config)
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.IntegerType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    if not qrows:
-        if k is None:
-            return tiny_df(spark,
-                [], "query_id int, doc_id long, score double"
-            )
-        return tiny_df(spark,
-            [], "query_id int, rank int, doc_id long, score double"
-        )
-    qterms = tiny_df(spark,
-        sorted({(qid, t) for qid, _, t in qrows}), "query_id int, term string"
-    )
-    all_terms = sorted({t for _, _, t in qrows})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    joined = plists.join(F.broadcast(qterms), "term")
-    slots_by_q: dict[int, list[tuple[int, str]]] = {}
-    for qid, slot, term in qrows:
-        slots_by_q.setdefault(qid, []).append((slot, term))
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        rows_by_term: dict[str, dict[int, list]] = {}
-        df_by_term: dict[str, float] = {}
-        for term, ri, df_t, blocks in zip(
-            pdf["term"], pdf["run_idx"], pdf["df"], pdf["blocks"]
-        ):
-            rows_by_term.setdefault(term, {})[int(ri)] = blocks
-            df_by_term[term] = float(df_t)
-        decoded = _decode_rows(rows_by_term)
+    def score(qid, decoded, df):
         docs, counts, dls = _match_phrase(
             decoded, slots_by_q[qid], slop, want_dl=True
         )
-        if docs.size == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype="int32"),
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
         idf_sum = 0.0
         for _slot, term in slots_by_q[qid]:
-            df_t = df_by_term.get(term, 0.0)
+            df_t = df.get(term, 0.0)
             idf_sum += float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
         f = counts.astype(np.float64)
         sat = f * (k1 + 1.0) / (
             f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl)
         )
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(np.full(docs.size, qid), dtype="int32"),
-                "doc_id": pd.Series(docs, dtype="int64"),
-                "score": pd.Series(idf_sum * sat, dtype="float64"),
-            }
-        )
+        scores = idf_sum * sat
+        if k is None:
+            return docs, scores
+        top = np.lexsort((docs, -scores))[:k]
+        return np.arange(1, top.size + 1), docs[top], scores[top]
 
-    scored = joined.groupBy("query_id").applyInPandas(run_query, schema)
-    if k is None:
-        return scored
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return positional_eval(
+        spark, postings,
+        {qid: [t for _, t in slots] for qid, slots in slots_by_q.items()},
+        score,
+        T.StructType.fromDDL(
+            "query_id int, doc_id long, score double" if k is None
+            else "query_id int, rank int, doc_id long, score double"
+        ),
     )

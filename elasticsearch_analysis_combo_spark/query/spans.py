@@ -22,31 +22,28 @@ per-doc Python loop:
   positions. (Windows are not required to be minimal; any doc with a
   valid window reports >= 1.)
 
-Physical plan: identical to ``phrase_match`` — compressed posting rows of
-the query's terms gather per query (positions ship pre-packed); use the
-doc-range fan-out pattern for stop-word-grade terms.
+Physical plan: every span query runs on ``phrase.positional_eval``, the
+evaluator ``phrase_match`` uses — one Spark job fetches the batch's
+distinct terms' compressed posting rows, each term is decoded once, and
+every query is matched in the calling process. ``range_bits`` switches to
+the doc-range fan-out for stop-word-grade terms.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from elasticsearch_analysis_combo_spark.tinydf import tiny_df
 
 from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import (
-    PHRASE_SCHEMA,
     _BAND,
     _POS_BIAS,
-    _decode_rows,
     _slot_keys,
-    range_partitioned_positional_eval,
+    positional_eval,
 )
 
 
@@ -258,82 +255,15 @@ def span_near_match(
     in_order: bool = True,
 ) -> DataFrame:
     """(query_id, doc_id, n_matches) for docs where the query's terms
-    co-occur within the slop window (see module docstring). One task per
-    query, compressed blocks only — same gather shape as phrase_match."""
+    co-occur within the slop window (see module docstring); one Spark job
+    through :func:`positional_eval`, like phrase_match."""
     terms_by_q = analyze_span_terms(queries, config)
-    terms_by_q = {q: ts for q, ts in terms_by_q.items() if ts}
-    if not terms_by_q:
-        return tiny_df(spark, [], PHRASE_SCHEMA)
-    qterms = tiny_df(spark,
-        sorted({(qid, t) for qid, ts in terms_by_q.items() for t in ts}),
-        "query_id int, term string",
+    return positional_eval(
+        spark, postings, terms_by_q,
+        lambda qid, decoded, _df: _match_span(
+            decoded, terms_by_q[qid], slop, in_order
+        ),
     )
-    all_terms = sorted({t for ts in terms_by_q.values() for t in ts})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    joined = plists.join(F.broadcast(qterms), "term")
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        rows_by_term: dict[str, dict[int, list]] = {}
-        for term, ri, blocks in zip(pdf["term"], pdf["run_idx"], pdf["blocks"]):
-            rows_by_term.setdefault(term, {})[int(ri)] = blocks
-        decoded = _decode_rows(rows_by_term)
-        docs, counts = _match_span(decoded, terms_by_q[qid], slop, in_order)
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(np.full(docs.size, qid), dtype="int32"),
-                "doc_id": pd.Series(docs, dtype="int64"),
-                "n_matches": pd.Series(counts, dtype="int64"),
-            }
-        )
-
-    return joined.groupBy("query_id").applyInPandas(run_query, PHRASE_SCHEMA)
-
-
-def _span_eval(
-    spark: SparkSession,
-    postings: DataFrame,
-    qid_terms: dict[int, list[str]],
-    matcher,
-    range_bits: int | None = None,
-) -> DataFrame:
-    """Shared evaluation harness for the span family: gather the
-    compressed posting rows of each query's terms (broadcast query dim,
-    positions ship pre-packed), then run ``matcher(qid, decoded)`` per
-    query — or per (query, doc-range) when ``range_bits`` is set (the
-    scale path; all span matchers are per-doc, so doc-range fan-out is
-    exact)."""
-    qid_terms = {q: ts for q, ts in qid_terms.items() if ts}
-    if not qid_terms:
-        return tiny_df(spark, [], PHRASE_SCHEMA)
-    pairs = sorted({(qid, t) for qid, ts in qid_terms.items() for t in ts})
-    if range_bits is not None:
-        return range_partitioned_positional_eval(
-            spark, postings, pairs,
-            lambda qid, decoded: matcher(qid, decoded),
-            range_bits=range_bits,
-        )
-    qterms = tiny_df(spark, pairs, "query_id int, term string")
-    all_terms = sorted({t for ts in qid_terms.values() for t in ts})
-    plists = postings.filter(F.col("term").isin(all_terms))
-    joined = plists.join(F.broadcast(qterms), "term")
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        rows_by_term: dict[str, dict[int, list]] = {}
-        for term, ri, blocks in zip(pdf["term"], pdf["run_idx"], pdf["blocks"]):
-            rows_by_term.setdefault(term, {})[int(ri)] = blocks
-        decoded = _decode_rows(rows_by_term)
-        docs, counts = matcher(qid, decoded)
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(np.full(docs.size, qid), dtype="int32"),
-                "doc_id": pd.Series(docs, dtype="int64"),
-                "n_matches": pd.Series(counts, dtype="int64"),
-            }
-        )
-
-    return joined.groupBy("query_id").applyInPandas(run_query, PHRASE_SCHEMA)
 
 
 def span_or_match(
@@ -347,9 +277,9 @@ def span_or_match(
     clause term; ``n_matches`` = distinct positions holding any clause
     term (the union span set)."""
     terms_by_q = analyze_span_terms(queries, config)
-    return _span_eval(
+    return positional_eval(
         spark, postings, terms_by_q,
-        lambda qid, decoded: _match_span_or(decoded, terms_by_q[qid]),
+        lambda qid, decoded, _df: _match_span_or(decoded, terms_by_q[qid]),
         range_bits=range_bits,
     )
 
@@ -366,9 +296,9 @@ def span_first_match(
     position <= ``end`` — 'term near the start of the field' (stored
     positions are 1-based, so a token at position p has span end p)."""
     terms_by_q = analyze_span_terms(queries, config)
-    return _span_eval(
+    return positional_eval(
         spark, postings, terms_by_q,
-        lambda qid, decoded: _match_span_first(
+        lambda qid, decoded, _df: _match_span_first(
             decoded, terms_by_q[qid], end
         ),
         range_bits=range_bits,
@@ -399,9 +329,9 @@ def span_not_match(
         for qid, _, _ in queries
         if inc_by_q.get(qid)
     }
-    return _span_eval(
+    return positional_eval(
         spark, postings, all_by_q,
-        lambda qid, decoded: _match_span_not(
+        lambda qid, decoded, _df: _match_span_not(
             decoded, inc_by_q[qid], exc_by_q.get(qid, []), pre=pre, post=post
         ),
         range_bits=range_bits,
@@ -422,13 +352,9 @@ def span_near_match_partitioned(
     :func:`span_near_match` (window matching is per-doc, and docs
     partition across ranges)."""
     terms_by_q = analyze_span_terms(queries, config)
-    terms_by_q = {q: ts for q, ts in terms_by_q.items() if ts}
-    if not terms_by_q:
-        return tiny_df(spark, [], PHRASE_SCHEMA)
-    return range_partitioned_positional_eval(
-        spark, postings,
-        [(qid, t) for qid, ts in terms_by_q.items() for t in ts],
-        lambda qid, decoded: _match_span(
+    return positional_eval(
+        spark, postings, terms_by_q,
+        lambda qid, decoded, _df: _match_span(
             decoded, terms_by_q[qid], slop, in_order
         ),
         range_bits=range_bits,
@@ -566,9 +492,9 @@ def span_within_match(
     as the rest of the span family (matching is per-doc, so the
     doc-range partitioned path is exact)."""
     little_by_q, big_by_q, all_by_q = _within_family_terms(queries, config)
-    return _span_eval(
+    return positional_eval(
         spark, postings, all_by_q,
-        lambda qid, decoded: _match_span_within(
+        lambda qid, decoded, _df: _match_span_within(
             decoded, little_by_q[qid], big_by_q[qid], slop
         ),
         range_bits=range_bits,
@@ -588,9 +514,9 @@ def span_containing_match(
     (qid, little_text, big_text) — same clause shapes as
     :func:`span_within_match`, dual output side."""
     little_by_q, big_by_q, all_by_q = _within_family_terms(queries, config)
-    return _span_eval(
+    return positional_eval(
         spark, postings, all_by_q,
-        lambda qid, decoded: _match_span_containing(
+        lambda qid, decoded, _df: _match_span_containing(
             decoded, little_by_q[qid], big_by_q[qid], slop
         ),
         range_bits=range_bits,
@@ -740,7 +666,7 @@ def span_multi_near_match(
                 terms.extend(expansions.get((qid, ci), []))
         qid_terms[qid] = sorted(set(terms))
 
-    def matcher(qid, decoded):
+    def matcher(qid, decoded, _df):
         d2 = dict(decoded)
         names = []
         for ci, (kind, pat) in enumerate(clauses_by_q[qid]):
@@ -754,5 +680,6 @@ def span_multi_near_match(
                 names.append(pseudo)
         return _match_span(d2, names, slop, in_order)
 
-    return _span_eval(spark, postings, qid_terms, matcher,
-                      range_bits=range_bits)
+    return positional_eval(
+        spark, postings, qid_terms, matcher, range_bits=range_bits
+    )

@@ -12,15 +12,17 @@ worker round-trips.
 Routing the same rows through a pandas DataFrame instead makes PySpark's
 Arrow path convert them ON THE DRIVER into a ``LocalTableScan``: zero
 Python workers at evaluation time, broadcast builds read in-memory rows
-directly, and Catalyst can see the values. Conversion errors (exotic
-nested values, disabled Arrow) fall back to the classic path — eagerly,
-since the pandas conversion happens at creation time.
+directly, and Catalyst can see the values. An empty pandas frame would
+still plan as a Python-RDD scan, so no rows go through an empty Arrow
+table, which is a ``LocalTableScan`` too.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _SCHEMA_CACHE: dict[str, T.StructType] = {}
 
@@ -42,15 +44,7 @@ def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
     driver-side row lists (query dims, cursors, lookup tables). ``schema``
     is a DDL string or StructType; ``rows`` any iterable of tuples."""
     rows = rows if isinstance(rows, list) else list(rows)
-    try:
-        import pandas as pd
-
-        st = _as_struct(schema)
-        names = [f.name for f in st.fields]
-        if rows:
-            pdf = pd.DataFrame(rows, columns=names)
-        else:
-            pdf = pd.DataFrame({n: pd.Series([], dtype=object) for n in names})
-        return spark.createDataFrame(pdf, schema=st)
-    except Exception:  # noqa: BLE001 - always fall back to the classic path
-        return spark.createDataFrame(rows, schema)
+    st = _as_struct(schema)
+    if not rows:
+        return spark.createDataFrame(to_arrow_schema(st).empty_table(), schema=st)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=st.names), schema=st)

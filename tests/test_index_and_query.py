@@ -145,9 +145,11 @@ def test_partial_resume_rebuilds_missing_stage(built, spark):
 
 
 def test_search_and_phrase_issue_one_job_each(built, spark):
-    """engine.search (one query or a 32-query batch) and engine.phrase each
-    fetch their terms' posting rows with one Spark job and score them in
-    the calling process; collecting the result issues no further job."""
+    """engine.search (one query or a 32-query batch) and the positional
+    queries (phrase, hit or miss, ranked phrase, span_near, span_or,
+    intervals) each fetch their terms' posting rows with one Spark job and
+    score them in the calling process; collecting the result issues no
+    further job."""
     from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
 
     from tests.test_checkpoint_lineage import _jobs
@@ -161,9 +163,18 @@ def test_search_and_phrase_issue_one_job_each(built, spark):
         "search": lambda: engine.search("merge segment").collect(),
         "batch": lambda: engine.search(batch).collect(),
         "phrase": lambda: engine.phrase("def the").collect(),
+        "phrase-miss": lambda: engine.phrase("def zzz_no_such_term").collect(),
+        "phrase-ranked": lambda: engine.phrase_ranked("def the").collect(),
+        "span-near": lambda: engine.span_near("def the", slop=2).collect(),
+        "span-or": lambda: engine.span_or("merge segment").collect(),
+        "intervals": lambda: engine.intervals(
+            {"match": {"query": "def the", "max_gaps": 2}}
+        ).collect(),
     }
     for name, request in requests.items():
         n = _jobs(spark, f"request-{name}", lambda: out.update({name: request()}))
         assert n == 1, (name, n)
-    assert out["search"] and out["phrase"]
+    assert out["search"] and out["phrase"] and not out["phrase-miss"]
+    assert out["phrase-ranked"] and out["span-near"] and out["span-or"]
+    assert out["intervals"]
     assert {r["query_id"] for r in out["batch"]} == set(range(32))

@@ -247,6 +247,19 @@ def test_phrase_topk_scoring(spark):
     assert abs(got[0] - score(2, 5)) < 1e-9
     assert abs(got[1] - score(1, 8)) < 1e-9
 
+    # equal phrase frequency and equal dl tie on score: ranks follow
+    # doc_id ascending, and a k=1 cut keeps the smaller doc id
+    tied = _postings(spark, [(7, "a b y"), (4, "a b z"), (9, "c c c")])
+    out = phrase_topk(
+        spark, tied, [(0, "a b")], CFG, n_docs=3, avgdl=3.0, k=10
+    ).collect()
+    assert [(r["rank"], r["doc_id"]) for r in out] == [(1, 4), (2, 7)]
+    assert out[0]["score"] == out[1]["score"]
+    top1 = phrase_topk(
+        spark, tied, [(0, "a b")], CFG, n_docs=3, avgdl=3.0, k=1
+    ).collect()
+    assert [(r["rank"], r["doc_id"]) for r in top1] == [(1, 4)]
+
 
 # ------------------------------------------------ sloppyFreq (round 5)
 

@@ -55,9 +55,12 @@ def test_tiny_df_rejects_unsafe_casts(spark, rows, schema, error):
 
 
 def test_tiny_df_is_local_table_scan(spark):
-    p = _plan(tiny_df(spark, [(1, "x")], "query_id int, term string"))
-    assert "LocalTableScan" in p
-    assert "Scan ExistingRDD" not in p
+    # an empty pandas frame would plan as a Python-RDD scan; no rows too
+    # must stay a LocalTableScan
+    for rows in ([(1, "x")], []):
+        p = _plan(tiny_df(spark, rows, "query_id int, term string"))
+        assert "LocalTableScan" in p
+        assert "Scan ExistingRDD" not in p
 
 
 def test_wand_blocks_sans_positions_fields(spark, tmp_path):

@@ -805,8 +805,23 @@ def main() -> None:
     )
 
     # 41. fielded multi_match phrase (round-5i): each field's positional
-    # posting scan is term-PRUNED (In(term,...) pushed into parquet);
-    # the kernel is the Arrow phrase evaluator, never row-Python
+    # posting scan is term-PRUNED (In(term,...) pushed into parquet); the
+    # phrases are scored in the calling process, so the per-field scores
+    # enter the blend as LocalTableScan rows, never row-Python. The check
+    # plans the fetch scan through the same builder positional_eval calls.
+    from elasticsearch_analysis_combo_spark.query.phrase import (
+        analyze_phrases,
+        positional_scan,
+    )
+
+    p = plan_text(positional_scan(
+        idx.postings(),
+        {t for _, _, t in analyze_phrases([(0, "spark query")], cfg)},
+    ))
+    failures += not check(
+        "mm phrase posting scan term-pruned pushdown", p,
+        "PushedFilters: [In(term",
+    )
     pp = multi_match_phrase_topk(
         spark, {"content": idx.postings()},
         {"content": (idx.meta.n_docs, idx.meta.avgdl)},
@@ -814,11 +829,8 @@ def main() -> None:
     )
     p = plan_text(pp)
     failures += not check(
-        "mm phrase posting scan term-pruned pushdown", p, "In(term",
-    )
-    failures += not check(
-        "mm phrase kernel is Arrow grouped-map (no row-Python)", p,
-        "FlatMapGroupsInPandas", forbid="BatchEvalPython",
+        "mm phrase scores are in-process LocalTableScan (no row-Python)", p,
+        "LocalTableScan", forbid="BatchEvalPython",
     )
 
     # 42. geo_line (round-5j): the size cut at the sort extreme must be
