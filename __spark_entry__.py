@@ -190,19 +190,17 @@ def q_bm25_topk(spark, sf_dir):
 
 
 def q_bm25_topk_wand(spark, sf_dir):
-    """Full pipeline in one plan: analysis -> term stats -> salted segments
-    -> log-structured merge -> block-max WAND. Exact: oracle is plain BM25."""
+    """Full pipeline in one plan: analysis -> term stats -> posting build
+    (one shuffle, vectorized block encode) -> block-max WAND. Exact:
+    oracle is plain BM25."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.wand import wand_topk_from_postings
 
     stats = _term_stats(spark, sf_dir).cache()
     n_docs, avgdl = _corpus_stats(stats)
-    segs = build_segments(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                          salt_shards=4, with_positions=False)
-    postings = merge_segments(segs, avgdl=avgdl, k1=K1, b=B, block_size=128,
+    postings = build_postings(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
                               with_positions=False)
     out = wand_topk_from_postings(
         spark, postings, BM25_QUERIES, _ws_config(),
@@ -216,16 +214,13 @@ def q_bm25_topk_wand_partitioned(spark, sf_dir):
     per-range top-k merged globally) — the 100 TB path for stop-word-heavy
     queries. Oracle: plain BM25; must be rank-identical."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.wand import wand_topk_partitioned
 
     stats = _term_stats(spark, sf_dir).cache()
     n_docs, avgdl = _corpus_stats(stats)
-    segs = build_segments(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                          salt_shards=4, with_positions=False)
-    postings = merge_segments(segs, avgdl=avgdl, k1=K1, b=B, block_size=128,
+    postings = build_postings(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
                               with_positions=False)
     out = wand_topk_partitioned(
         spark, postings, BM25_QUERIES, _ws_config(),
@@ -895,8 +890,7 @@ def q_multi_match_best(spark, sf_dir):
     one block-max WAND pass per field — exact (containment proof in
     multifield.py), ships n_fields*k candidates per query."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.multifield import (
         field_corpus_stats,
@@ -908,9 +902,7 @@ def q_multi_match_best(spark, sf_dir):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        segs = build_segments(s, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                              salt_shards=4, with_positions=False)
-        postings[f] = merge_segments(segs, avgdl=avgdl, k1=K1, b=B,
+        postings[f] = build_postings(s, avgdl=avgdl, k1=K1, b=B,
                                      block_size=128, with_positions=False)
     out = multi_match_wand_topk(
         spark, postings, meta, BM25_QUERIES, _ws_config(),
@@ -943,8 +935,7 @@ def q_multi_match_phrase(spark, sf_dir):
     (phrase_topk k=None), so losing-field contributions survive the
     blend. Query 2 matches nothing (empty-set edge)."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.multifield import (
         field_corpus_stats,
@@ -956,9 +947,7 @@ def q_multi_match_phrase(spark, sf_dir):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        segs = build_segments(s, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                              salt_shards=4, with_positions=True)
-        postings[f] = merge_segments(segs, avgdl=avgdl, k1=K1, b=B,
+        postings[f] = build_postings(s, avgdl=avgdl, k1=K1, b=B,
                                      block_size=128, with_positions=True)
     out = multi_match_phrase_topk(
         spark, postings, meta, MM_PHRASES, _ws_config(),
@@ -1172,8 +1161,7 @@ def q_multi_match_phrase_prefix(spark, sf_dir):
     constituent's pruned stats scan; boosted field scores dis-max blend.
     Query 2 matches nothing (fixed term absent)."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.multifield import (
         field_corpus_stats,
@@ -1189,9 +1177,7 @@ def q_multi_match_phrase_prefix(spark, sf_dir):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        segs = build_segments(s, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                              salt_shards=4, with_positions=True)
-        postings[f] = merge_segments(segs, avgdl=avgdl, k1=K1, b=B,
+        postings[f] = build_postings(s, avgdl=avgdl, k1=K1, b=B,
                                      block_size=128, with_positions=True)
     out = multi_match_phrase_prefix_topk(
         spark, postings, tdfs, stats, meta, MM_PP_QUERIES, _ws_config(),
@@ -4209,16 +4195,13 @@ def q_phrase_match(spark, sf_dir):
     """Positional phrase matching over the compressed posting pipeline
     (positions payload end-to-end: analysis -> blocks -> decode)."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
 
     stats = _term_stats(spark, sf_dir)
     n_docs, avgdl = 0, 50.0  # impact metadata irrelevant for phrase matching
-    segs = build_segments(stats, avgdl=avgdl, salt_shards=4, block_size=128,
-                          with_positions=True)
-    postings = merge_segments(segs, avgdl=avgdl, block_size=128,
+    postings = build_postings(stats, avgdl=avgdl, block_size=128,
                               with_positions=True)
     out = phrase_match(spark, postings, PHRASES, _ws_config())
     return out.select(
@@ -4261,14 +4244,11 @@ WITH toks AS (
 
 def _phrase_postings(spark, sf_dir):
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
 
     stats = _term_stats(spark, sf_dir)
-    segs = build_segments(stats, avgdl=50.0, salt_shards=4, block_size=128,
-                          with_positions=True)
-    return merge_segments(segs, avgdl=50.0, block_size=128,
+    return build_postings(stats, avgdl=50.0, block_size=128,
                           with_positions=True)
 
 
@@ -6155,8 +6135,7 @@ def q_phrase_shingle_accel(spark, sf_dir):
         build_term_stats,
     )
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
     from elasticsearch_analysis_combo_spark.query.phrase import (
         phrase_match_shingles,
@@ -6165,9 +6144,7 @@ def q_phrase_shingle_accel(spark, sf_dir):
     d = _docs(spark, sf_dir)
     sh_cfg = ComboConfig([make_word_shingle_tokenizer("whitespace", size=2)])
     stats = build_term_stats(d, sh_cfg, content_col="text")
-    segs = build_segments(stats, avgdl=50.0, salt_shards=4, block_size=128,
-                          with_positions=True)
-    post = merge_segments(segs, avgdl=50.0, block_size=128,
+    post = build_postings(stats, avgdl=50.0, block_size=128,
                           with_positions=True)
     out = phrase_match_shingles(spark, post, PHRASES, _ws_config())
     return out.select(

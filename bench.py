@@ -7,8 +7,8 @@ Prints ONE JSON line:
    "index_files_per_sec": ..., "wand_p50_sec": ..., "n_docs": ...}
 
 Steps:
-  index_build      — combo analysis -> term stats -> salted segments ->
-                     log-structured merge -> posting parquet (full pipeline)
+  index_build      — combo analysis -> term stats -> build_postings ->
+                     posting parquet (full pipeline)
   wand_topk        — block-max WAND BM25 top-10, batch of 10 queries
   exhaustive_topk  — same queries, exhaustive scorer (WAND baseline)
   minhash_lsh      — near-dup candidates over documents
@@ -178,8 +178,8 @@ def main() -> None:
             # mirror build_index's default salting threshold (df >=
             # n_docs/10): salting exists for terms whose posting list
             # overwhelms ONE task — a lower cutoff routes ordinary terms
-            # through the two-phase encode+merge (decode + re-encode) for
-            # no benefit (measured: most of the build wall at 50k docs)
+            # through the hot shards (a second shuffle + totals join) for
+            # no benefit
             frac = 0.05
             thresh = max(4 * 128, n_docs // 10)
             return [

@@ -104,24 +104,6 @@ def delta_decode_segmented(deltas: np.ndarray, lengths: np.ndarray) -> np.ndarra
     return (raw - np.repeat(corr, lens_nz)).astype(np.int64)
 
 
-def gather_segments(
-    flat: np.ndarray, lengths: np.ndarray, order: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Reorder a segmented flat array by segment permutation ``order``
-    without a Python loop: builds gather indices from offsets."""
-    lengths = lengths.astype(np.int64, copy=False)
-    offsets = np.cumsum(lengths) - lengths
-    new_lens = lengths[order]
-    total = int(new_lens.sum())
-    if total == 0:
-        return flat[:0], new_lens
-    new_offsets = np.cumsum(new_lens) - new_lens
-    # index i of output = old_offset[seg(i)] + (i - new_offset[seg(i)])
-    seg_of = np.repeat(np.arange(order.size), new_lens)
-    idx = np.arange(total) - new_offsets[seg_of] + offsets[order][seg_of]
-    return flat[idx], new_lens
-
-
 def encode_block(
     doc_ids: np.ndarray,
     tfs: np.ndarray,

@@ -13,13 +13,13 @@ Groups are contiguous within a partition after the sort; the stream carries
 the (possibly incomplete) trailing group across Arrow batch boundaries, so
 results are exact regardless of ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 
-Cost model per group: one numpy-slice view + one Python call + one appended
-row tuple — no pandas objects. Group boundaries come from numpy change
-detection; output rows accumulate into columnar record batches.
+Cost model: one Python call per chunk with ALL of its group boundaries — no
+per-group dispatch, no pandas objects. Group boundaries come from numpy
+change detection; output rows accumulate into columnar record batches.
 
-This is the engine's workhorse for B4 (segment encode) and B5 (segment
-merge); at scale, per-group dispatch cost is the difference between a
-shuffle-bound job and a Python-bound one.
+This is the engine's workhorse for B4 (posting encode, cold terms and hot
+doc-range shards alike); at scale, per-group dispatch cost is the
+difference between a shuffle-bound job and a Python-bound one.
 """
 
 from __future__ import annotations
@@ -31,8 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-# fn(cols, start, end) -> one output row (tuple) | list of rows | None
-GroupFn = Callable[[dict, int, int], object]
+# fn(cols, starts, ends) -> list of output rows (tuples)
+GroupFn = Callable[[dict, np.ndarray, np.ndarray], list]
 
 
 def _bounds(cols: dict, group_keys: list[str], n: int) -> np.ndarray:
@@ -53,20 +53,15 @@ def grouped_map_sorted(
     schema: T.StructType,
     num_partitions: int | None = None,
     out_batch_rows: int = 1024,
-    batched: bool = False,
 ) -> DataFrame:
-    """Apply ``fn(column_arrays, start, end) -> row tuple(s)`` to every
-    (group_keys) group, rows inside each group sorted by sort_keys.
+    """Call ``fn(column_arrays, starts, ends) -> list of rows`` once per
+    chunk of whole (group_keys) groups, rows inside each group sorted by
+    sort_keys; group g spans rows ``starts[g]:ends[g]``.
 
     Semantically groupBy(group_keys).applyInPandas with per-group sorted
     input, but one shuffle + one streaming pass instead of per-group UDF
-    dispatch.
-
-    ``batched=True`` switches the contract to
-    ``fn(column_arrays, starts, ends) -> list of rows`` called ONCE per
-    chunk with ALL group boundaries — for encoders that vectorize across
-    groups (per-group Python dispatch at vocabulary scale costs ~1ms/group
-    even with numpy bodies; a whole-chunk encoder amortizes it away)."""
+    dispatch (~1ms/group at vocabulary scale even with numpy bodies; an fn
+    that vectorizes across the chunk's groups amortizes it away)."""
     npart = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parted = df.repartition(npart, *group_keys).sortWithinPartitions(
         *(group_keys + sort_keys)
@@ -89,23 +84,9 @@ def grouped_map_sorted(
             cols = {c: chunk[c].to_numpy() for c in chunk.columns}
             starts = _bounds(cols, group_keys, n)
             ends = np.append(starts[1:], n)
-            if batched:
-                r = fn(cols, starts, ends)
-                if r:
-                    rows.extend(r)
-                if len(rows) >= out_batch_rows:
-                    yield from flush()
-                return
-            for s, e in zip(starts, ends):
-                r = fn(cols, int(s), int(e))
-                if r is None:
-                    continue
-                if isinstance(r, list):
-                    rows.extend(r)
-                else:
-                    rows.append(r)
-                if len(rows) >= out_batch_rows:
-                    yield from flush()
+            rows.extend(fn(cols, starts, ends))
+            if len(rows) >= out_batch_rows:
+                yield from flush()
 
         for pdf in batches:
             if carry is not None and len(carry):

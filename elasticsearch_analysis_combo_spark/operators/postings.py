@@ -5,23 +5,25 @@ The reference feeds its merged token stream to Lucene's IndexWriter
 index Spark-first:
 
   corpus --mapInPandas(analysis+per-doc agg)--> (doc_id, term, tf, pos_data, dl)
-         --salted repartition on (term, salt)--> per-shard sorted segments
-         (delta+varint blocks + block-max metadata)
-         --repartition(term) streamed k-way merge--> compacted posting table
+         --repartition(term), cold terms--> final posting rows
+         --repartition(term, doc range), hot terms--> per-range runs,
+           renumbered in doc order + term totals joined on
 
 Skew (north_rule: "salted repartition on term hash to defuse stop-token
 skew"): code corpora have Zipf stop-tokens (``the``, ``if``, ``return``);
 a plain hash-partition on term puts a whole stop-term's postings on one
-task. Hot terms — identified from the term_df stage, a tiny broadcast — are
-salted with hash(doc_id) % S so no task sees more than ~df/S postings of
-any term; cold terms keep salt 0, so vocabulary-sized overhead stays at one
-shard per term. The merge stage then combines each term's sorted shard runs
-(the log-structured compaction the reference's host performs across Lucene
-segments); single-shard terms pass through without re-encoding.
+task. Hot terms — identified from the term_df stage — are salted with
+their doc-id range (:func:`doc_range`), so no task sees more than ~df/S
+postings of any term; cold terms keep salt 0, so vocabulary-sized overhead
+stays at one shard per term. Ranges ascend in doc order, so the segment
+merge the reference's host performs across Lucene segments reduces to a
+run_idx renumbering: no posting is decoded or re-encoded.
 
-Group processing uses grouped_map_sorted (streamed mapInPandas over sorted
-partitions) rather than groupBy().applyInPandas — per-group dispatch cost
-does not survive a vocabulary-sized group count (see operators/grouped.py).
+Both branches encode through one whole-chunk vectorized encoder
+(:func:`encode_posting_rows_batched`) under grouped_map_sorted (streamed
+mapInPandas over sorted partitions) rather than groupBy().applyInPandas —
+per-group dispatch cost does not survive a vocabulary-sized group count
+(see operators/grouped.py).
 
 All heavy lifting is numpy inside Arrow batches; rows crossing shuffles are
 pre-aggregated (one row per (doc, term)), never raw tokens.
@@ -29,8 +31,10 @@ pre-aggregated (one row per (doc, term)), never raw tokens.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,9 +42,7 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
     bm25_impact,
     decode_block,
     decode_positions_flat,
-    delta_encode_segmented,
     encode_block,
-    gather_segments,
     varint_encode_with_sizes,
 )
 from elasticsearch_analysis_combo_spark.operators.grouped import grouped_map_sorted
@@ -56,18 +58,6 @@ BLOCK_STRUCT = T.StructType(
     ]
 )
 
-SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("run_idx", T.IntegerType()),
-        T.StructField("df", T.LongType()),     # run-local doc count
-        T.StructField("cf", T.LongType()),     # run-local sum(tf)
-        T.StructField("max_impact", T.DoubleType()),
-        T.StructField("blocks", T.ArrayType(BLOCK_STRUCT)),
-    ]
-)
-
 POSTING_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType()),
@@ -77,6 +67,15 @@ POSTING_SCHEMA = T.StructType(
         T.StructField("max_impact", T.DoubleType()),  # run-local max
         T.StructField("blocks", T.ArrayType(BLOCK_STRUCT)),
     ]
+)
+
+# a hot term's rows for one doc-range shard (salt): run_idx counts the
+# shard's runs and df/cf are shard totals until build_postings joins the
+# term totals on
+SHARD_SCHEMA = T.StructType(
+    POSTING_SCHEMA.fields[:1]
+    + [T.StructField("salt", T.IntegerType())]
+    + POSTING_SCHEMA.fields[1:]
 )
 
 MIN_DOC = -(1 << 63)
@@ -89,9 +88,26 @@ MIN_DOC = -(1 << 63)
 # skew the salting defused. Consumers concatenate a term's runs in run_idx
 # order (runs partition the sorted doc space, so the result stays sorted).
 DEFAULT_MAX_BLOCKS_PER_ROW = 4096
-#: largest fixed-shard hot list branded with an InSet literal; a longer
+#: largest hot list branded with an InSet literal; a longer
 #: list takes the broadcast-join path (see build_postings)
 HOT_INSET_MAX_TERMS = 4096
+
+
+def doc_range(doc_id: Column, range_bits: int) -> Column:
+    """Doc-range id 0..2^range_bits-1 of a doc-id column: docIDs are
+    xxhash64 (uniform over int64), so the top bits of the sign-flipped id
+    split the doc space into equal ranges that ascend in doc order. The
+    hot-term salt and the range-partitioned evaluators share it."""
+    return F.shiftrightunsigned(
+        doc_id.bitwiseXOR(F.lit(MIN_DOC)), 64 - range_bits
+    ).cast("int")
+
+
+def doc_range_bounds(range_id: int, range_bits: int) -> tuple[int, int]:
+    """Closed [lo, hi] doc-id interval of :func:`doc_range` ``range_id``."""
+    shift = 64 - range_bits
+    lo = (range_id << shift) - (1 << 63)
+    return lo, lo + (1 << shift) - 1
 
 
 def term_blocks_from_rows(run_idxs, blocks_col) -> list:
@@ -134,15 +150,12 @@ def _encode_blocks(
     k1: float,
     b: float,
     block_size: int,
-    pos_rows=None,
 ) -> list[dict]:
-    """Chunk sorted postings into independent compressed blocks.
-    ``pos_flat``: positions flattened doc-major over the whole run
-    (lengths = tfs), sliced per block via cumulative tf offsets — used by
-    the merge path, which re-encodes decoded runs. ``pos_rows``: per-doc
-    PRE-PACKED delta+varint streams (codec.encode_positions_rows); a
-    block's pos_data is then their plain concatenation, bit-identical to
-    the pos_flat encoding (same per-doc delta segmentation)."""
+    """Chunk one term's sorted postings into independent compressed blocks,
+    one term at a time — the reference that encode_posting_rows_batched
+    must match bit for bit. ``pos_flat``: positions flattened doc-major
+    over the whole run (lengths = tfs), sliced per block via cumulative tf
+    offsets."""
     blocks = []
     pos_off = None
     if pos_flat is not None:
@@ -157,8 +170,6 @@ def _encode_blocks(
         # independent blocks: first gap relative to MIN_DOC sentinel so any
         # block decodes without its predecessor (WAND skips blocks)
         data, pos_data = encode_block(d, t, l, p, MIN_DOC)
-        if pos_rows is not None:
-            pos_data = b"".join(pos_rows[off:end])
         blocks.append(
             {
                 "first_doc": int(d[0]),
@@ -182,11 +193,16 @@ def encode_posting_rows_batched(
     block_size: int,
     max_blocks_per_row: int,
     with_positions: bool,
+    group_keys: Sequence[str] = ("term",),
 ) -> list[tuple]:
-    """Encode ALL of a chunk's term groups in one vectorized pass —
+    """Encode ALL of a chunk's groups in one vectorized pass —
     bit-identical to the per-term `_encode_blocks` path, but the delta,
     impact, and varint work runs over the whole chunk at once and per-value
     byte counts slice the single output buffer into per-block ranges.
+
+    Each group emits ``(*group key values, run_idx, df, cf, max_impact,
+    blocks)`` rows: runs of at most ``max_blocks_per_row`` blocks numbered
+    from 0, and the group's doc count and tf sum repeated on every run.
 
     Per-term Python dispatch costs ~1ms/group even with numpy bodies (the
     dominant cost of the cold posting build at vocabulary scale, measured);
@@ -242,8 +258,7 @@ def encode_posting_rows_batched(
     gb_end = np.searchsorted(block_gid, np.arange(G), side="right").tolist()
     cf = np.add.reduceat(tfs, starts).tolist()
     df = group_lens.tolist()
-    terms = cols["term"]
-    starts_l = starts.tolist()
+    keys = list(zip(*(cols[k][starts].tolist() for k in group_keys)))
 
     out: list[tuple] = []
     for g in range(G):
@@ -262,113 +277,14 @@ def encode_posting_rows_batched(
                     ),
                 }
             )
-        term = terms[starts_l[g]]
-        df_t, cf_t = df[g], cf[g]
+        key, df_t, cf_t = keys[g], df[g], cf[g]
         for ri, off in enumerate(range(0, len(blocks_all), max_blocks_per_row)):
             chunk = blocks_all[off:off + max_blocks_per_row]
             out.append(
-                (term, ri, df_t, cf_t,
+                (*key, ri, df_t, cf_t,
                  max(bl["max_impact"] for bl in chunk), chunk)
             )
     return out
-
-
-def salt_term_stats(
-    term_stats: DataFrame,
-    hot_terms: DataFrame | None,
-    salt_shards: int,
-) -> DataFrame:
-    """B3: add the salt column. ``hot_terms`` (term) is broadcast — it holds
-    only skew-heavy terms (stop tokens), typically a few hundred rows even
-    at full scale. None => salt every term (safe default for unknown
-    distributions)."""
-    if salt_shards <= 1:
-        return term_stats.withColumn("salt", F.lit(0).cast("int"))
-    # hot shards live in 1..S so salt==0 identifies the cold (single-shard)
-    # path unambiguously
-    salt = (F.pmod(F.xxhash64("doc_id"), F.lit(salt_shards)) + 1).cast("int")
-    if hot_terms is None:
-        return term_stats.withColumn("salt", salt)
-    hot = hot_terms.select("term").withColumn("_hot", F.lit(True))
-    return (
-        term_stats.join(F.broadcast(hot), "term", "left")
-        .withColumn("salt", F.when(F.col("_hot"), salt).otherwise(F.lit(0)).cast("int"))
-        .drop("_hot")
-    )
-
-
-def build_segments(
-    term_stats: DataFrame,
-    avgdl: float,
-    hot_terms: DataFrame | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    block_size: int = 128,
-    salt_shards: int = 8,
-    with_positions: bool = True,
-    num_partitions: int | None = None,
-    max_blocks_per_row: int = DEFAULT_MAX_BLOCKS_PER_ROW,
-) -> DataFrame:
-    """B3+B4: salted repartition + per-shard sorted compressed segments.
-
-    Input: (doc_id, term, tf, pos_data, dl) from build_term_stats.
-    Output: bounded rows per (term, salt, run_idx) with sorted posting
-    blocks; df/cf on segment rows are run-local counts.
-    """
-    salted = salt_term_stats(term_stats, hot_terms, salt_shards)
-    return _encode_segments(
-        salted, avgdl, k1=k1, b=b, block_size=block_size,
-        with_positions=with_positions, num_partitions=num_partitions,
-        max_blocks_per_row=max_blocks_per_row,
-    )
-
-
-def _encode_segments(
-    salted: DataFrame,
-    avgdl: float,
-    k1: float,
-    b: float,
-    block_size: int,
-    with_positions: bool,
-    num_partitions: int | None,
-    max_blocks_per_row: int,
-) -> DataFrame:
-    """Encode pre-salted stats into per-(term, salt) sorted segment rows."""
-
-    def encode_shard(cols: dict, s: int, e: int) -> list[tuple]:
-        # rows arrive sorted by doc_id (grouped_map_sorted sort key)
-        doc_ids = cols["doc_id"][s:e]
-        tfs = cols["tf"][s:e]
-        dls = cols["dl"][s:e]
-        pos_rows = cols["pos_data"][s:e] if with_positions else None
-        term, salt = cols["term"][s], int(cols["salt"][s])
-        out = []
-        # chunk at the doc level so each run encodes independently
-        docs_per_row = max_blocks_per_row * block_size
-        for ri, off in enumerate(range(0, doc_ids.size, docs_per_row)):
-            end = min(off + docs_per_row, doc_ids.size)
-            blocks = _encode_blocks(
-                doc_ids[off:end], tfs[off:end], dls[off:end], None,
-                avgdl, k1, b, block_size,
-                pos_rows=pos_rows[off:end] if with_positions else None,
-            )
-            out.append((
-                term, salt, ri,
-                end - off,
-                int(tfs[off:end].sum()),
-                max(bl["max_impact"] for bl in blocks),
-                blocks,
-            ))
-        return out
-
-    return grouped_map_sorted(
-        salted,
-        group_keys=["term", "salt"],
-        sort_keys=["doc_id"],
-        fn=encode_shard,
-        schema=SEGMENT_SCHEMA,
-        num_partitions=num_partitions,
-    )
 
 
 def build_postings(
@@ -380,77 +296,74 @@ def build_postings(
     block_size: int = 128,
     salt_shards: int = 8,
     with_positions: bool = True,
-    num_partitions: int | None = None,
     max_blocks_per_row: int = DEFAULT_MAX_BLOCKS_PER_ROW,
-    target_postings_per_shard: int | None = None,
 ) -> DataFrame:
-    """B3-B5 in the minimal number of shuffles.
+    """B3-B5 in the minimal number of shuffles: (doc_id, term, tf,
+    pos_data, dl) stats -> POSTING_SCHEMA rows.
 
-    Cold terms (the overwhelming majority of the vocabulary) are encoded
-    straight to final posting rows in ONE shuffle; only skew-hot terms take
-    the two-phase salted-segment + merge path. At 10^12-doc scale this
-    removes a full shuffle + decode/re-encode of nearly the entire posting
-    table compared to routing everything through the merge. Long lists emit
+    Cold terms — every term not in ``hot_terms`` (all of them when it is
+    None or empty), the overwhelming majority of the vocabulary — are
+    encoded straight to final posting rows in ONE shuffle. Long lists emit
     multiple bounded (term, run_idx) rows — see DEFAULT_MAX_BLOCKS_PER_ROW.
 
-    Hot terms are RANGE-salted: the salt is the doc-id range (docIDs are
-    xxhash64, uniform over int64, so ranges are balanced), which means a
-    term's shard runs are already in global doc order — the final posting
-    rows are the shard runs with run_idx renumbered across shards and the
-    term totals joined on (a broadcast of the hot vocabulary). No decode,
-    no re-encode, and NO single task ever gathers a whole hot term: the
-    log-structured merge degenerates to metadata.
-
-    ``target_postings_per_shard`` (requires ``hot_terms`` to carry a
-    ``df`` column) makes the shard count ADAPTIVE per term:
-    ``clip(ceil(df / target), 1, 2047)`` doc ranges — a df=10^6 term and
-    a df=10^10 term both get ~target-sized shards instead of sharing one
-    fixed ``salt_shards`` (which over-splits the former into tiny runs
-    and under-splits the latter into giant ones). Left None, every hot
-    term uses the fixed ``salt_shards`` ranges (the gate-validated
-    default)."""
-    if hot_terms is None and salt_shards > 1:
-        # everything hash-salted: the classic two-phase path (kept for
-        # segment/merge API users and as the merge test surface)
-        segs = build_segments(
-            term_stats, avgdl, hot_terms=None, k1=k1, b=b,
-            block_size=block_size, salt_shards=salt_shards,
-            with_positions=with_positions, num_partitions=num_partitions,
-            max_blocks_per_row=max_blocks_per_row,
-        )
-        return merge_segments(
-            segs, avgdl, k1=k1, b=b, block_size=block_size,
-            with_positions=with_positions, num_partitions=num_partitions,
-            max_blocks_per_row=max_blocks_per_row,
-        )
-
-    # range salt: top bits of the sign-flipped doc id, 1..2^k (0 = cold)
+    Hot terms are RANGE-salted: the salt is the term's doc-id range
+    (:func:`doc_range` over ``salt_shards`` rounded up to a power of two),
+    so each (term, salt) shard encodes to runs that are already in global
+    doc order — the final posting rows are the shard runs with run_idx
+    renumbered across shards and the term totals joined on (a broadcast of
+    the hot vocabulary). No decode, no re-encode, and NO single task ever
+    gathers a whole hot term: the log-structured merge degenerates to
+    metadata."""
+    # run_idx renumbering across shards: ranges ascend with doc id, so
+    # (salt, local run) order IS doc order; consumers only need monotone
+    # run_idx, so a strided rewrite avoids any per-term gather.
+    # int32 bound: 2^range_bits * RUN_STRIDE must fit — with the default
+    # stride each shard may hold 2^20 runs (2^29 docs at defaults). Both
+    # bounds are guarded loudly: the shard count here, the per-shard run
+    # count per-row below (a shard overflowing its stride would otherwise
+    # silently collide with the next shard's runs and corrupt doc order).
+    RUN_STRIDE = 1 << 20
     range_bits = max(1, (salt_shards - 1).bit_length())
-    rid = (
-        F.shiftrightunsigned(
-            F.col("doc_id").bitwiseXOR(F.lit(MIN_DOC)), 64 - range_bits
-        ) + 1
-    ).cast("int")
-    adaptive = target_postings_per_shard is not None and hot_terms is not None
-    if adaptive and "df" not in hot_terms.columns:
+    if hot_terms is not None and (1 << range_bits) * RUN_STRIDE >= (1 << 31):
         raise ValueError(
-            "target_postings_per_shard needs hot_terms with a df column"
+            f"salt_shards={salt_shards} needs {1 << range_bits} ranges; "
+            f"run_idx renumbering overflows int32 at stride {RUN_STRIDE}"
         )
-    hot_list = None
-    if hot_terms is not None and not adaptive:
-        # fixed-shard hot list: the hot vocabulary is small by contract
-        # (skew-heavy stop terms — a few hundred rows even at full scale,
-        # see salt_term_stats). Collecting it once and branding hot rows
-        # with an InSet literal replaces a broadcast-join in EVERY branch
-        # that reads the salted frame (cold, hot, totals — three joins,
-        # three broadcast builds) with a plain scan predicate; the collect
-        # costs the same one evaluation the broadcast build did. A list
-        # over HOT_INSET_MAX_TERMS keeps the join path: the literal's plan
-        # and analysis cost would outgrow the broadcast it saves.
+
+    def encode(frame: DataFrame, group_keys: list[str], schema) -> DataFrame:
+        def encode_batch(cols: dict, starts, ends) -> list[tuple]:
+            # whole-chunk vectorized encode: the cold path touches the
+            # ENTIRE vocabulary, so per-group dispatch cost (not numpy
+            # work) would dominate — see encode_posting_rows_batched
+            return encode_posting_rows_batched(
+                cols, starts, ends, avgdl, k1, b, block_size,
+                max_blocks_per_row, with_positions, group_keys,
+            )
+
+        return grouped_map_sorted(
+            frame, group_keys=group_keys, sort_keys=["doc_id"],
+            fn=encode_batch, schema=schema,
+        )
+
+    hot_list: list | None = []  # None: over the InSet limit, join instead
+    if hot_terms is not None:
+        # the hot vocabulary is small by contract (skew-heavy stop terms —
+        # a few hundred rows even at full scale). Collecting it once and
+        # branding hot rows with an InSet literal replaces a broadcast-join
+        # in EVERY branch that reads the salted frame (cold, hot, totals —
+        # three joins, three broadcast builds) with a plain scan predicate;
+        # the collect costs the same one evaluation the broadcast build
+        # did. A list over HOT_INSET_MAX_TERMS keeps the join path: the
+        # literal's plan and analysis cost would outgrow the broadcast it
+        # saves.
         probe = hot_terms.select("term").limit(HOT_INSET_MAX_TERMS + 1).collect()
-        if len(probe) <= HOT_INSET_MAX_TERMS:
-            hot_list = [r["term"] for r in probe]
-    if hot_terms is None or hot_list == []:
+        hot_list = (
+            [r["term"] for r in probe]
+            if len(probe) <= HOT_INSET_MAX_TERMS else None
+        )
+    # hot salt: doc range 1..2^range_bits (0 = cold)
+    rid = doc_range(F.col("doc_id"), range_bits) + 1
+    if hot_list == []:
         salted = term_stats.withColumn("salt", F.lit(0).cast("int"))
     elif hot_list is not None:
         salted = term_stats.withColumn(
@@ -459,93 +372,29 @@ def build_postings(
             .otherwise(F.lit(0)).cast("int"),
         )
     else:
-        if adaptive:
-            # per-term shard count; 2047 * RUN_STRIDE stays inside int32.
-            # Clamp BEFORE the int cast: F.ceil yields LongType, and with
-            # ANSI mode on an extreme df/target ratio would fail the cast
-            # instead of clamping (non-ANSI would wrap negative and
-            # silently collapse the term to one shard)
-            hotb = hot_terms.select(
-                "term",
-                F.least(
-                    F.greatest(
-                        F.ceil(
-                            F.col("df") / float(target_postings_per_shard)
-                        ),
-                        F.lit(1).cast("long"),
-                    ),
-                    F.lit(2047).cast("long"),
-                ).cast("int").alias("_shards"),
-            )
-            # uniform doc position (top 32 bits) scaled to the term's
-            # shard count: ranges still ascend with doc id per term, so
-            # the strided run renumbering below stays in global doc order
-            u32 = F.shiftrightunsigned(
-                F.col("doc_id").bitwiseXOR(F.lit(MIN_DOC)), 32
-            )
-            rid = (
-                F.shiftright(u32 * F.col("_shards").cast("long"), 32) + 1
-            ).cast("int")
-        else:
-            hotb = hot_terms.select("term").withColumn("_shards", F.lit(1))
+        hotb = hot_terms.select("term").withColumn("_hot", F.lit(True))
         salted = (
             term_stats.join(F.broadcast(hotb), "term", "left")
             .withColumn(
                 "salt",
-                F.when(F.col("_shards").isNotNull(), rid)
-                .otherwise(F.lit(0)).cast("int"),
+                F.when(F.col("_hot"), rid).otherwise(F.lit(0)).cast("int"),
             )
-            .drop("_shards")
+            .drop("_hot")
         )
-    cold = salted.filter(F.col("salt") == 0)
-    hot = salted.filter(F.col("salt") > 0)
-
-    def encode_terms_batch(cols: dict, starts, ends) -> list[tuple]:
-        # whole-chunk vectorized encode: the cold path touches the ENTIRE
-        # vocabulary, so per-group dispatch cost (not numpy work) would
-        # dominate — see encode_posting_rows_batched
-        return encode_posting_rows_batched(
-            cols, starts, ends, avgdl, k1, b, block_size,
-            max_blocks_per_row, with_positions,
-        )
-
-    cold_postings = grouped_map_sorted(
-        cold,
-        group_keys=["term"],
-        sort_keys=["doc_id"],
-        fn=encode_terms_batch,
-        schema=POSTING_SCHEMA,
-        num_partitions=num_partitions,
-        batched=True,
+    cold_postings = encode(
+        salted.filter(F.col("salt") == 0), ["term"], POSTING_SCHEMA
     )
-    if hot_terms is None:
+    if hot_list == []:
         return cold_postings
 
-    hot_segments = _encode_segments(
-        hot, avgdl, k1=k1, b=b, block_size=block_size,
-        with_positions=with_positions, num_partitions=num_partitions,
-        max_blocks_per_row=max_blocks_per_row,
-    )
+    hot = salted.filter(F.col("salt") > 0)
+    hot_shards = encode(hot, ["term", "salt"], SHARD_SCHEMA)
     # term totals: map-side-combined aggregation over the (already
     # pre-aggregated) hot stats — scalars only; hot vocabulary is small,
     # so the join back is a broadcast
     totals = hot.groupBy("term").agg(
         F.count("*").alias("_df"), F.sum("tf").cast("long").alias("_cf")
     )
-    # run_idx renumbering across shards: ranges ascend with doc id, so
-    # (salt, local run) order IS doc order; consumers only need monotone
-    # run_idx, so a strided rewrite avoids any per-term gather.
-    # int32 bound: salt_shards * RUN_STRIDE must fit — with the default
-    # stride each shard may hold 2^20 runs (2^29 docs at defaults). Both
-    # bounds are guarded loudly: the shard count here, the per-shard run
-    # count per-row below (a shard overflowing its stride would otherwise
-    # silently collide with the next shard's runs and corrupt doc order).
-    RUN_STRIDE = 1 << 20
-    if not adaptive and (1 << range_bits) * RUN_STRIDE >= (1 << 31):
-        raise ValueError(
-            f"salt_shards={salt_shards} needs {1 << range_bits} ranges; "
-            f"run_idx renumbering overflows int32 at stride {RUN_STRIDE}"
-        )
     guarded_run = F.when(
         F.col("run_idx") < RUN_STRIDE, F.col("run_idx")
     ).otherwise(
@@ -555,7 +404,7 @@ def build_postings(
         ))
     )
     hot_postings = (
-        hot_segments.join(F.broadcast(totals), "term")
+        hot_shards.join(F.broadcast(totals), "term")
         .select(
             "term",
             ((F.col("salt").cast("long") - 1) * RUN_STRIDE + guarded_run)
@@ -599,87 +448,3 @@ def decode_segment_blocks(blocks, with_positions: bool = False):
         ps.append(pos_flat[off:off + int(tf)])
         off += int(tf)
     return doc_ids, tfs, dls, ps
-
-
-def merge_segments(
-    segments: DataFrame,
-    avgdl: float,
-    k1: float = 1.2,
-    b: float = 0.75,
-    block_size: int = 128,
-    with_positions: bool = True,
-    num_partitions: int | None = None,
-    max_blocks_per_row: int = DEFAULT_MAX_BLOCKS_PER_ROW,
-) -> DataFrame:
-    """B5: log-structured merge — combine each term's sorted shard runs into
-    compacted posting rows bounded at ``max_blocks_per_row`` blocks each.
-    Single-shard terms (the vocabulary tail) pass their already-sorted
-    blocks through untouched; multi-shard (hot) terms decode, k-way merge
-    (concatenate + argsort over sorted runs), and re-block. Posting rows
-    carry the TERM-total df/cf repeated on every run row."""
-
-    def merge_term(cols: dict, s: int, e: int) -> list[tuple]:
-        term = cols["term"][s]
-        salts = cols["salt"][s:e]
-        if salts[0] == salts[-1]:
-            # fast path: one shard == final posting list. Rows arrive sorted
-            # by run_idx (runs ascend in doc space within a shard), so the
-            # block lists pass through; only df/cf become term totals.
-            df_total = int(cols["df"][s:e].sum())
-            cf_total = int(cols["cf"][s:e].sum())
-            return [
-                (
-                    term, ri, df_total, cf_total,
-                    float(cols["max_impact"][s + ri]),
-                    list(cols["blocks"][s + ri]),
-                )
-                for ri in range(e - s)
-            ]
-        all_d, all_t, all_l, all_p = [], [], [], []
-        for blocks in cols["blocks"][s:e]:
-            if with_positions:
-                d, t, l, p = decode_segment_blocks_flat(blocks, True)
-                all_p.append(p)
-            else:
-                d, t, l = decode_segment_blocks_flat(blocks, False)
-            all_d.append(d)
-            all_t.append(t)
-            all_l.append(l)
-        doc_ids = np.concatenate(all_d)
-        tfs = np.concatenate(all_t)
-        dls = np.concatenate(all_l)
-        order = np.argsort(doc_ids, kind="stable")
-        pos_flat = None
-        if with_positions:
-            pos_flat, _ = gather_segments(
-                np.concatenate(all_p), tfs, order
-            )
-            pos_flat = pos_flat.astype(np.uint64, copy=False)
-        doc_ids, tfs, dls = doc_ids[order], tfs[order], dls[order]
-        df_total, cf_total = int(doc_ids.size), int(tfs.sum())
-        out = []
-        docs_per_row = max_blocks_per_row * block_size
-        if with_positions:
-            tf_cum = np.concatenate([[0], np.cumsum(tfs.astype(np.int64))])
-        for ri, off in enumerate(range(0, doc_ids.size, docs_per_row)):
-            end = min(off + docs_per_row, doc_ids.size)
-            p = pos_flat[tf_cum[off]:tf_cum[end]] if with_positions else None
-            blocks = _encode_blocks(
-                doc_ids[off:end], tfs[off:end], dls[off:end], p,
-                avgdl, k1, b, block_size,
-            )
-            out.append((
-                term, ri, df_total, cf_total,
-                max(bl["max_impact"] for bl in blocks),
-                blocks,
-            ))
-        return out
-
-    return grouped_map_sorted(
-        segments,
-        group_keys=["term"],
-        sort_keys=["salt", "run_idx"],
-        fn=merge_term,
-        schema=POSTING_SCHEMA,
-        num_partitions=num_partitions,
-    )

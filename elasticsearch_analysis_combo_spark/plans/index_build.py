@@ -2,14 +2,15 @@
 
 corpus -> combo analysis + per-doc aggregation (one mapInPandas pass)
        -> doc-stats + corpus stats (N, avgdl)
-       -> salted compressed segments -> merged posting table
+       -> compressed posting table (hot terms range-salted)
 all stages checkpointed with lineage (B6), resumable mid-pipeline; each
 stage's lineage is observed on its own write job, never re-scanned.
 
 Physical-plan shape (local[N] or a real cluster — identical):
   * 1 Arrow-batched analysis pass over the corpus scan (no shuffle)
-  * 1 shuffle to (term, salt) for segment encode — skew-bounded by salt
-  * 1 shuffle to (term) for the log-structured merge (S rows per term max)
+  * 1 shuffle to (term) for the cold-term posting encode
+  * hot terms only: 1 shuffle to (term, doc-range salt) — skew-bounded by
+    salt — whose runs are renumbered in doc order, never merged
   * docstats/termdf are partial-aggregated map-side by Catalyst
 The posting table is written sorted by term (repartitionByRange +
 sortWithinPartitions) so query-time term lookups prune row groups via

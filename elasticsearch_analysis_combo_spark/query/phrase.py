@@ -63,6 +63,8 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
 from elasticsearch_analysis_combo_spark.operators.postings import (
     MIN_DOC,
     decode_segment_blocks_flat,
+    doc_range,
+    doc_range_bounds,
     fetch_term_blocks,
 )
 
@@ -436,7 +438,6 @@ def range_partitioned_positional_eval(
         PHRASE_DL_W_SCHEMA if want_weights
         else PHRASE_DL_SCHEMA if want_dl else PHRASE_SCHEMA
     )
-    shift = 64 - range_bits
     if not qterm_rows:
         return tiny_df(spark, [], schema)
     qterms = tiny_df(spark,
@@ -445,16 +446,10 @@ def range_partitioned_positional_eval(
     all_terms = sorted({t for _, t in qterm_rows})
     plists = postings.filter(F.col("term").isin(all_terms))
 
-    def rid(col: str):
-        # signed doc -> unsigned order via sign-bit flip, top bits = range
-        return F.shiftrightunsigned(
-            F.col(col).bitwiseXOR(F.lit(MIN_DOC)), shift
-        ).cast("int")
-
     bx = (
         plists.select("term", F.explode("blocks").alias("block"))
-        .withColumn("rs", rid("block.first_doc"))
-        .withColumn("re", rid("block.last_doc"))
+        .withColumn("rs", doc_range(F.col("block.first_doc"), range_bits))
+        .withColumn("re", doc_range(F.col("block.last_doc"), range_bits))
         .select(
             "term", "block",
             F.explode(F.sequence("rs", "re")).alias("range_id"),
@@ -465,8 +460,7 @@ def range_partitioned_positional_eval(
     def run_range(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
         range_id = int(pdf["range_id"].iloc[0])
-        lo = (range_id << shift) - (1 << 63)
-        hi_incl = lo + (1 << shift) - 1
+        lo, hi_incl = doc_range_bounds(range_id, range_bits)
         blocks_by_term: dict[str, list] = {}
         for term, block in zip(pdf["term"], pdf["block"]):
             blocks_by_term.setdefault(term, []).append(block)

@@ -44,6 +44,8 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
 )
 from elasticsearch_analysis_combo_spark.operators.postings import (
     MIN_DOC,
+    doc_range,
+    doc_range_bounds,
     fetch_term_blocks,
 )
 from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
@@ -439,24 +441,16 @@ def wand_topk_partitioned(
     term's single wide block replicates to all ranges (tiny, bounded cost).
     Boundary blocks are decoded in both neighbors and trimmed by the
     cursor's doc_range, so each doc is scored exactly once."""
-    n_ranges = 1 << range_bits
-    shift = 64 - range_bits
     qrows = analyze_queries(queries, config)
     qterms = tiny_df(spark, qrows, "query_id int, term string")
     # positions are pruned before the block explode + range fan-out, where
     # boundary blocks replicate to two ranges, so the saving compounds
     plists = posting_scan(postings, {t for _, t in qrows})
 
-    def rid(col: str):
-        # signed doc -> unsigned order via sign-bit flip, top bits = range
-        return F.shiftrightunsigned(
-            F.col(col).bitwiseXOR(F.lit(MIN_DOC)), shift
-        ).cast("int")
-
     bx = (
         plists.select("term", "df", F.explode("blocks").alias("block"))
-        .withColumn("rs", rid("block.first_doc"))
-        .withColumn("re", rid("block.last_doc"))
+        .withColumn("rs", doc_range(F.col("block.first_doc"), range_bits))
+        .withColumn("re", doc_range(F.col("block.last_doc"), range_bits))
         .select(
             "term", "df", "block",
             F.explode(F.sequence("rs", "re")).alias("range_id"),
@@ -467,8 +461,7 @@ def wand_topk_partitioned(
     def run_range(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
         range_id = int(pdf["range_id"].iloc[0])
-        lo = (range_id << shift) - (1 << 63)
-        hi_incl = lo + (1 << shift) - 1
+        lo, hi_incl = doc_range_bounds(range_id, range_bits)
         by_term_rows: dict[str, list] = {}
         for term, df_t, block in zip(pdf["term"], pdf["df"], pdf["block"]):
             by_term_rows.setdefault(term, []).append((float(df_t), block))

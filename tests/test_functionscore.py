@@ -8,8 +8,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.bm25 import bm25_exhaustive_topk
 from elasticsearch_analysis_combo_spark.query.functionscore import (
@@ -115,9 +114,7 @@ def test_missing_meta_rows_keep_base_score(spark, fixture):
 
 def test_rescore_boosts_phrase_docs(spark, fixture):
     corpus, stats, term_df, n, avgdl = fixture
-    segs = build_segments(stats, avgdl=avgdl, salt_shards=2, block_size=16,
-                          with_positions=True)
-    post = merge_segments(segs, avgdl=avgdl, block_size=16,
+    post = build_postings(stats, avgdl=avgdl, block_size=16,
                           with_positions=True)
     out = rescore_phrase_topk(
         spark, post, stats, term_df, [(0, "alpha beta")], CFG, n, avgdl,

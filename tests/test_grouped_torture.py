@@ -12,50 +12,9 @@ from pyspark.sql import types as T
 from elasticsearch_analysis_combo_spark.operators.grouped import grouped_map_sorted
 
 
-def test_grouped_map_tiny_arrow_batches(spark):
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        rng = random.Random(3)
-        rows = []
-        for g in range(400):
-            for _ in range(rng.randint(1, 12)):
-                rows.append((f"g{g:04d}", rng.randint(-5, 5)))
-        df = spark.createDataFrame(rows, "key string, v long")
-
-        schema = T.StructType([
-            T.StructField("key", T.StringType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("vsum", T.LongType()),
-            T.StructField("vfirst", T.LongType()),  # smallest v (sort key)
-        ])
-
-        def fn(cols, s, e):
-            v = cols["v"][s:e]
-            return (cols["key"][s], int(e - s), int(v.sum()), int(v[0]))
-
-        got = {
-            r["key"]: (r["n"], r["vsum"], r["vfirst"])
-            for r in grouped_map_sorted(
-                df, ["key"], ["v"], fn, schema, num_partitions=5
-            ).collect()
-        }
-        exp = {
-            r["key"]: (r["n"], r["vsum"], r["vmin"])
-            for r in df.groupBy("key").agg(
-                F.count("*").alias("n"), F.sum("v").alias("vsum"),
-                F.min("v").alias("vmin"),
-            ).collect()
-        }
-        assert got == exp
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
 def test_grouped_map_batched_mode_tiny_arrow_batches(spark):
-    """batched=True gets fn(cols, starts, ends) once per chunk; group
-    results must still equal a plain groupBy under constant batch-boundary
-    straddling."""
+    """fn(cols, starts, ends) is called once per chunk; group results must
+    still equal a plain groupBy under constant batch-boundary straddling."""
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
     try:
@@ -84,7 +43,7 @@ def test_grouped_map_batched_mode_tiny_arrow_batches(spark):
             r["key"]: (r["n"], r["vsum"], r["vfirst"])
             for r in grouped_map_sorted(
                 df, ["key"], ["v"], fn, schema, num_partitions=5,
-                batched=True, out_batch_rows=3,
+                out_batch_rows=3,
             ).collect()
         }
         exp = {

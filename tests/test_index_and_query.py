@@ -1,7 +1,7 @@
 """End-to-end index build + query tests (SURVEY.md §7 M2-M4):
 
 * distributed posting build == pure-Python oracle postings (B2-B5 roundtrip
-  through salted segments, compression, and the log-structured merge)
+  through build_postings and the block compression)
 * exhaustive Spark BM25 top-k == oracle top-k (rank + score, 1e-9)
 * WAND top-k == exhaustive top-k on every query (B8 invariant)
 * resume-from-checkpoint == fresh run (B6)

@@ -7,8 +7,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.intervals import (
     intervals_match,
@@ -31,9 +30,7 @@ def postings(spark):
     avgdl = stats.select("doc_id", "dl").distinct().agg(
         F.avg("dl")
     ).collect()[0][0]
-    segs = build_segments(stats, avgdl=avgdl, salt_shards=2, block_size=16,
-                          with_positions=True)
-    return merge_segments(segs, avgdl=avgdl, block_size=16,
+    return build_postings(stats, avgdl=avgdl, block_size=16,
                           with_positions=True).cache()
 
 

@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import (
     phrase_match,
@@ -37,16 +36,13 @@ DOCS = [
 ]
 
 
-def _postings(spark, rows, block_size=4, salt_shards=2, max_blocks=None):
+def _postings(spark, rows, block_size=4, max_blocks=None):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
     kw = {}
     if max_blocks is not None:
         kw["max_blocks_per_row"] = max_blocks
-    segs = build_segments(
-        stats, avgdl=4.0, salt_shards=salt_shards, block_size=block_size, **kw
-    )
-    return merge_segments(segs, avgdl=4.0, block_size=block_size, **kw)
+    return build_postings(stats, avgdl=4.0, block_size=block_size, **kw)
 
 
 def _got(out):
@@ -113,9 +109,7 @@ def stress(spark):
         rows.append((i * 7919 + 13, " ".join(words)))
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
-    segs = build_segments(stats, avgdl=15.0, salt_shards=4, block_size=8,
-                          max_blocks_per_row=2)
-    p = merge_segments(segs, avgdl=15.0, block_size=8,
+    p = build_postings(stats, avgdl=15.0, block_size=8,
                        max_blocks_per_row=2).cache()
     p.count()
     return p

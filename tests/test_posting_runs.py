@@ -9,7 +9,8 @@ randomized corpus so nearly every term spans multiple rows, then checks:
   per run, runs partitioning the doc space in order;
 * WAND over the chunked table is rank- and score-identical to the pure
   exhaustive oracle, a 32-query batch equals ``bm25_exhaustive_topk``, and
-  a non-materialized merge pipeline gives the written table's top-k;
+  a non-materialized build_postings pipeline gives the written table's
+  top-k;
 * phrase matching over chunked positional postings equals the unchunked
   result.
 """
@@ -27,9 +28,7 @@ from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
     build_postings,
-    build_segments,
     decode_segment_blocks,
-    merge_segments,
 )
 from elasticsearch_analysis_combo_spark.query.bm25 import bm25_exhaustive_topk
 from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
@@ -99,8 +98,7 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
     n_docs, avgdl = int(row["n"]), float(row["a"])
     postings = build_postings(
         stats, avgdl=avgdl, hot_terms=None, k1=K1, b=B,
-        block_size=4, salt_shards=3, with_positions=False,
-        max_blocks_per_row=2,
+        block_size=4, with_positions=False, max_blocks_per_row=2,
     ).cache()
 
     # the cap must actually bite: hot stop terms span many rows
@@ -168,14 +166,10 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
     for qid, qtext in batch:
         _assert_same_topk(got.get(qid, []), want.get(qid, []), 10, qtext)
 
-    # a non-materialized merge_segments pipeline (the postings input
+    # a non-materialized build_postings pipeline (the postings input
     # __spark_entry__.q_bm25_topk_wand passes) gives the table's top-k
-    segs = build_segments(
-        stats, avgdl=avgdl, k1=K1, b=B, block_size=4, salt_shards=3,
-        with_positions=False, max_blocks_per_row=2,
-    )
-    assert wand(merge_segments(
-        segs, avgdl=avgdl, k1=K1, b=B, block_size=4, with_positions=False,
+    assert wand(build_postings(
+        stats, avgdl=avgdl, k1=K1, b=B, block_size=4, with_positions=False,
         max_blocks_per_row=2,
     )) == got
 
@@ -350,8 +344,7 @@ def test_partitioned_wand_matches_exhaustive(spark, seed, range_bits):
     n_docs, avgdl = int(row["n"]), float(row["a"])
     postings = build_postings(
         stats, avgdl=avgdl, hot_terms=None, k1=K1, b=B,
-        block_size=4, salt_shards=2, with_positions=False,
-        max_blocks_per_row=2,
+        block_size=4, with_positions=False, max_blocks_per_row=2,
     )
     queries = [
         (0, "the if return"),
@@ -376,11 +369,15 @@ def test_partitioned_wand_matches_exhaustive(spark, seed, range_bits):
             assert abs(s1 - s2) < 1e-9
 
 
-def test_range_salted_hot_path_equals_merge(spark):
-    """build_postings with hot terms (range-salted, merge-free finalize)
-    must contain exactly the same postings content as the all-salted
-    segment+merge path: same terms, term totals, and decoded
-    (doc, tf, dl, positions) sequences in global doc order."""
+def test_range_salted_hot_path_matches_term_stats(spark):
+    """build_postings with hot terms (range-salted, runs renumbered across
+    doc-range shards) decodes, term by term, to exactly that term's
+    term_stats rows: df, cf and the doc-ordered (doc, tf, dl, positions)
+    sequence. Every hot term spans several shards, so the renumbering is
+    exercised."""
+    from elasticsearch_analysis_combo_spark.operators.codec import (
+        decode_positions_flat,
+    )
     from elasticsearch_analysis_combo_spark.operators.postings import (
         term_blocks_from_rows,
     )
@@ -388,74 +385,58 @@ def test_range_salted_hot_path_equals_merge(spark):
     rng = random.Random(11)
     docs = _make_docs(rng, 120)
     stats = _stats(spark, docs).cache()
-    row = (
-        stats.select("doc_id", "dl").distinct()
-        .agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
-    )
-    avgdl = float(row["a"])
+    avgdl = stats.select("doc_id", "dl").distinct().agg(F.avg("dl")).first()[0]
     # hot = the stop tokens (df threshold low so the hot path is exercised)
-    term_df = stats.groupBy("term").agg(F.count("*").alias("df"))
-    hot = term_df.filter(F.col("df") >= 30).select("term")
-    assert hot.count() >= 3
+    hot = (
+        stats.groupBy("term").agg(F.count("*").alias("df"))
+        .filter(F.col("df") >= 30).select("term")
+    )
+    hot_terms = {r["term"] for r in hot.collect()}
+    assert len(hot_terms) >= 3
 
-    fast = build_postings(
+    rows = build_postings(
         stats, avgdl=avgdl, hot_terms=hot, block_size=8, salt_shards=4,
         with_positions=True, max_blocks_per_row=2,
     ).collect()
-    segs = build_segments(stats, avgdl=avgdl, salt_shards=4, block_size=8,
-                          with_positions=True, max_blocks_per_row=2)
-    merged = merge_segments(segs, avgdl=avgdl, block_size=8,
-                            with_positions=True, max_blocks_per_row=2).collect()
+    got: dict[str, list] = {}
+    for r in rows:
+        got.setdefault(r["term"], []).append(r)
+    want: dict[str, list] = {}
+    for r in stats.collect():
+        pos = decode_positions_flat(
+            bytes(r["pos_data"]), np.array([r["tf"]], dtype=np.int64)
+        )
+        want.setdefault(r["term"], []).append(
+            (r["doc_id"], r["tf"], r["dl"], tuple(pos.tolist()))
+        )
+    assert got.keys() == want.keys()
+    for term, trows in got.items():
+        exp = sorted(want[term])
+        assert {(r["df"], r["cf"]) for r in trows} == {
+            (len(exp), sum(tf for _, tf, _, _ in exp))
+        }, term
+        blocks = term_blocks_from_rows(
+            [r["run_idx"] for r in trows], [r["blocks"] for r in trows]
+        )
+        d, t, l, p = decode_segment_blocks(blocks, True)
+        assert list(zip(
+            d.tolist(), t.tolist(), l.tolist(),
+            (tuple(int(x) for x in ps) for ps in p),
+        )) == exp, term
+        if term in hot_terms:
+            # shard id = run_idx // RUN_STRIDE (2^20)
+            assert len({r["run_idx"] >> 20 for r in trows}) > 1, term
 
-    def decode_all(rows):
-        by_term: dict[str, list] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
-        out = {}
-        for term, trows in by_term.items():
-            blocks = term_blocks_from_rows(
-                [r["run_idx"] for r in trows], [r["blocks"] for r in trows]
-            )
-            d, t, l, p = decode_segment_blocks(blocks, True)
-            assert (d[1:] > d[:-1]).all(), term  # global doc order
-            out[term] = (
-                trows[0]["df"], trows[0]["cf"],
-                d.tolist(), t.tolist(), l.tolist(),
-                [list(map(int, x)) for x in p],
-            )
-        return out
 
-    a, bb = decode_all(fast), decode_all(merged)
-    assert a.keys() == bb.keys()
-    for term in a:
-        assert a[term] == bb[term], term
-
-    # adaptive per-term shard counts (df-proportional ranges) must decode
-    # to the SAME content in the same global doc order, and shard counts
-    # must actually differ across hot terms of different df
-    adaptive = build_postings(
-        stats, avgdl=avgdl, hot_terms=term_df.filter(F.col("df") >= 30),
-        block_size=8, with_positions=True, max_blocks_per_row=2,
-        target_postings_per_shard=25,
-    ).collect()
-    c = decode_all(adaptive)
-    assert c.keys() == bb.keys()
-    for term in c:
-        assert c[term] == bb[term], term
-    hot_dfs = {
-        r["term"]: r["df"]
-        for r in term_df.filter(F.col("df") >= 30).collect()
-    }
-    runs_per_term: dict[str, set] = {}
-    for r in adaptive:
-        if r["term"] in hot_dfs:
-            runs_per_term.setdefault(r["term"], set()).add(
-                r["run_idx"] >> 20  # shard id from the stride
-            )
-    import math as _m
-
-    for term, shards in runs_per_term.items():
-        assert len(shards) <= min(2047, _m.ceil(hot_dfs[term] / 25))
+def test_hot_run_renumbering_overflow_raises(spark):
+    """Hot shards renumber runs as (range - 1) * 2^20 + run: 4096 ranges
+    reach 2^31, so build_postings refuses salt_shards=4096 when there are
+    hot terms instead of wrapping run_idx; 1024 ranges still fit."""
+    stats = _stats(spark, [(1, "the if"), (2, "the")])
+    hot = stats.select("term").distinct()
+    with pytest.raises(ValueError, match="overflows int32"):
+        build_postings(stats, avgdl=2.0, hot_terms=hot, salt_shards=4096)
+    build_postings(stats, avgdl=2.0, hot_terms=hot, salt_shards=1024)
 
 
 def test_phrase_over_chunked_rows_matches_unchunked(spark):
@@ -464,14 +445,8 @@ def test_phrase_over_chunked_rows_matches_unchunked(spark):
     stats = _stats(spark, docs).cache()
 
     def build(cap):
-        segs = build_segments(
-            stats, avgdl=20.0, salt_shards=3, block_size=4,
-            with_positions=True, max_blocks_per_row=cap,
-        )
-        return merge_segments(
-            segs, avgdl=20.0, block_size=4, with_positions=True,
-            max_blocks_per_row=cap,
-        )
+        return build_postings(stats, avgdl=20.0, block_size=4,
+                              with_positions=True, max_blocks_per_row=cap)
 
     phrases = [(0, "the if"), (1, "merge index token"), (2, "the the")]
     tiny = phrase_match(spark, build(2), phrases, CFG).collect()

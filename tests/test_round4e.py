@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.spans import (
     span_containing_match,
@@ -25,9 +24,7 @@ CFG = ComboConfig(["whitespace"])
 def _postings(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
-    segs = build_segments(stats, avgdl=10.0, salt_shards=2, block_size=16,
-                          with_positions=True)
-    return merge_segments(segs, avgdl=10.0, block_size=16,
+    return build_postings(stats, avgdl=10.0, block_size=16,
                           with_positions=True)
 
 

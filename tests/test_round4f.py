@@ -13,8 +13,7 @@ from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
 )
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import (
     phrase_match,
@@ -78,9 +77,7 @@ DOCS = [
 def _index(spark, rows, cfg):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, cfg)
-    segs = build_segments(stats, avgdl=10.0, salt_shards=2, block_size=16,
-                          with_positions=True)
-    return merge_segments(segs, avgdl=10.0, block_size=16,
+    return build_postings(stats, avgdl=10.0, block_size=16,
                           with_positions=True)
 
 

@@ -299,15 +299,12 @@ def _sm_postings(spark, rows):
         build_term_stats,
     )
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_segments,
-        merge_segments,
+        build_postings,
     )
 
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, ComboConfig(["whitespace"]))
-    segs = build_segments(stats, avgdl=10.0, salt_shards=2, block_size=16,
-                          with_positions=True)
-    post = merge_segments(segs, avgdl=10.0, block_size=16,
+    post = build_postings(stats, avgdl=10.0, block_size=16,
                           with_positions=True)
     term_df = stats.groupBy("term").agg(F.count("*").alias("df"))
     return post, term_df

@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.dsl import compile_dsl, dsl_topk
 from elasticsearch_analysis_combo_spark.query.querystring import (
@@ -41,9 +40,7 @@ def fixture(spark):
     avgdl = stats.select("doc_id", "dl").distinct().agg(
         F.avg("dl")
     ).collect()[0][0]
-    segs = build_segments(stats, avgdl=avgdl, salt_shards=2, block_size=16,
-                          with_positions=True)
-    post = merge_segments(segs, avgdl=avgdl, block_size=16,
+    post = build_postings(stats, avgdl=avgdl, block_size=16,
                           with_positions=True).cache()
     meta = df.select("doc_id", "lang")
     return stats, term_df, post, 6, avgdl, meta

@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.dsl import (
     _parse_function_score,
@@ -37,9 +36,7 @@ K1, B = 1.2, 0.75
 
 
 def _positional_postings(stats, avgdl):
-    segs = build_segments(stats, avgdl=avgdl, salt_shards=2, block_size=16,
-                          with_positions=True)
-    return merge_segments(segs, avgdl=avgdl, block_size=16,
+    return build_postings(stats, avgdl=avgdl, block_size=16,
                           with_positions=True)
 
 

@@ -6,8 +6,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_segments,
-    merge_segments,
+    build_postings,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
 from elasticsearch_analysis_combo_spark.query.spans import (
@@ -21,9 +20,7 @@ CFG = ComboConfig(["whitespace"])
 def _postings(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
-    segs = build_segments(stats, avgdl=10.0, salt_shards=2, block_size=16,
-                          with_positions=True)
-    return merge_segments(segs, avgdl=10.0, block_size=16,
+    return build_postings(stats, avgdl=10.0, block_size=16,
                           with_positions=True)
 
 
@@ -88,9 +85,7 @@ def test_ordered_slop0_equals_phrase_on_distinct_terms(spark):
     positions — identical match set to exact phrase_match."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     stats = build_term_stats(docs, CFG, content_col="text")
-    segs = build_segments(stats, avgdl=50.0, salt_shards=2, block_size=64,
-                          with_positions=True)
-    post = merge_segments(segs, avgdl=50.0, block_size=64,
+    post = build_postings(stats, avgdl=50.0, block_size=64,
                           with_positions=True).cache()
     qs = [(0, "value table"), (1, "fast merge")]
     span = _rows(span_near_match(spark, post, qs, CFG, slop=0, in_order=True))
@@ -103,9 +98,7 @@ def test_partitioned_equals_single_task(spark):
     evaluator, both orders, on a real corpus with stop-word terms."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     stats = build_term_stats(docs, CFG, content_col="text")
-    segs = build_segments(stats, avgdl=50.0, salt_shards=2, block_size=64,
-                          with_positions=True)
-    post = merge_segments(segs, avgdl=50.0, block_size=64,
+    post = build_postings(stats, avgdl=50.0, block_size=64,
                           with_positions=True).cache()
     qs = [(0, "the value"), (1, "fast merge batch")]
     for in_order in (True, False):
