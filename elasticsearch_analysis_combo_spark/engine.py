@@ -1857,16 +1857,14 @@ class ComboSearchEngine:
             content_col=content_col, lang_col=lang_col,
         )
 
-    def compact(self, incremental: bool = True) -> InvertedIndex:
+    def compact(self) -> InvertedIndex:
         """Fold pending deletes/upserts into a new atomically-published
         index generation and re-attach this engine to it."""
         from elasticsearch_analysis_combo_spark.plans.maintenance import (
             compact as _compact,
         )
 
-        self._index = _compact(
-            self.spark, self.index_dir, incremental=incremental
-        )
+        self._index = _compact(self.spark, self.index_dir)
         return self._index
 
     # -- analysis (the _analyze API, EP2) -----------------------------------

@@ -14,10 +14,10 @@ skew"): code corpora have Zipf stop-tokens (``the``, ``if``, ``return``);
 a plain hash-partition on term puts a whole stop-term's postings on one
 task. Hot terms — identified from the term_df stage — are salted with
 their doc-id range (:func:`doc_range`), so no task sees more than ~df/S
-postings of any term; cold terms keep salt 0, so vocabulary-sized overhead
-stays at one shard per term. Ranges ascend in doc order, so the segment
-merge the reference's host performs across Lucene segments reduces to a
-run_idx renumbering: no posting is decoded or re-encoded.
+postings of any term; cold terms carry no salt, so vocabulary-sized
+overhead stays at one shard per term. Ranges ascend in doc order, so the
+segment merge the reference's host performs across Lucene segments
+reduces to a run_idx renumbering: no posting is decoded or re-encoded.
 
 Both branches encode through one whole-chunk vectorized encoder
 (:func:`encode_posting_rows_batched`) under grouped_map_sorted (streamed
@@ -350,7 +350,7 @@ def build_postings(
         # the hot vocabulary is small by contract (skew-heavy stop terms —
         # a few hundred rows even at full scale). Collecting it once and
         # branding hot rows with an InSet literal replaces a broadcast-join
-        # in EVERY branch that reads the salted frame (cold, hot, totals —
+        # in EVERY branch that reads the split stats (cold, hot, totals —
         # three joins, three broadcast builds) with a plain scan predicate;
         # the collect costs the same one evaluation the broadcast build
         # did. A list over HOT_INSET_MAX_TERMS keeps the join path: the
@@ -361,33 +361,21 @@ def build_postings(
             [r["term"] for r in probe]
             if len(probe) <= HOT_INSET_MAX_TERMS else None
         )
-    # hot salt: doc range 1..2^range_bits (0 = cold)
-    rid = doc_range(F.col("doc_id"), range_bits) + 1
+    # hot salt: doc range 1..2^range_bits; cold rows carry no salt
     if hot_list == []:
-        salted = term_stats.withColumn("salt", F.lit(0).cast("int"))
-    elif hot_list is not None:
-        salted = term_stats.withColumn(
-            "salt",
-            F.when(F.col("term").isin(hot_list), rid)
-            .otherwise(F.lit(0)).cast("int"),
-        )
+        return encode(term_stats, ["term"], POSTING_SCHEMA)
+    if hot_list is not None:
+        is_hot = F.col("term").isin(hot_list)
+        cold, hot = term_stats.filter(~is_hot), term_stats.filter(is_hot)
     else:
         hotb = hot_terms.select("term").withColumn("_hot", F.lit(True))
-        salted = (
-            term_stats.join(F.broadcast(hotb), "term", "left")
-            .withColumn(
-                "salt",
-                F.when(F.col("_hot"), rid).otherwise(F.lit(0)).cast("int"),
-            )
-            .drop("_hot")
-        )
-    cold_postings = encode(
-        salted.filter(F.col("salt") == 0), ["term"], POSTING_SCHEMA
+        flagged = term_stats.join(F.broadcast(hotb), "term", "left")
+        cold = flagged.filter(F.col("_hot").isNull()).drop("_hot")
+        hot = flagged.filter(F.col("_hot")).drop("_hot")
+    cold_postings = encode(cold, ["term"], POSTING_SCHEMA)
+    hot = hot.withColumn(
+        "salt", (doc_range(F.col("doc_id"), range_bits) + 1).cast("int")
     )
-    if hot_list == []:
-        return cold_postings
-
-    hot = salted.filter(F.col("salt") > 0)
     hot_shards = encode(hot, ["term", "salt"], SHARD_SCHEMA)
     # term totals: map-side-combined aggregation over the (already
     # pre-aggregated) hot stats — scalars only; hot vocabulary is small,

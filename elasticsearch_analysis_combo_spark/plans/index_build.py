@@ -128,6 +128,13 @@ def publish_tables(
     return InvertedIndex(spark, index_dir)
 
 
+def hot_terms(term_df: DataFrame, n_docs: int, block_size: int) -> DataFrame:
+    """Skew defusal (B3): the terms whose posting list is long enough to
+    hurt a single task get salted; the hot list is tiny by construction."""
+    threshold = max(4 * block_size, n_docs // 10)
+    return term_df.filter(F.col("df") >= threshold).select("term")
+
+
 def _config_dict(config: ComboConfig) -> dict:
     def enc(sub):
         if isinstance(sub, ComboConfig):
@@ -202,7 +209,6 @@ def build_index(
     block_size: int = 128,
     salt_shards: int = 8,
     with_positions: bool = True,
-    hot_df_threshold: int | None = None,
     input_fingerprint: str = "",
 ) -> InvertedIndex:
     """Build (or resume) the full index at ``index_dir``.
@@ -262,11 +268,7 @@ def build_index(
         checksum_cols=["term", "df"],
     )
 
-    # skew defusal (B3): only terms whose posting list is long enough to
-    # hurt a single task get salted; the hot list is a tiny broadcast
-    if hot_df_threshold is None:
-        hot_df_threshold = max(4 * block_size, n_docs // 10)
-    hot_terms = term_df.filter(F.col("df") >= hot_df_threshold).select("term")
+    hot = hot_terms(term_df, n_docs, block_size)
 
     ckpt.run(
         "postings",
@@ -276,7 +278,7 @@ def build_index(
         # are term-clustered and parquet row-group min/max stats prune
         # query-time term lookups — no extra shuffle needed
         lambda: build_postings(
-            stats, avgdl=avgdl, hot_terms=hot_terms, k1=k1, b=b,
+            stats, avgdl=avgdl, hot_terms=hot, k1=k1, b=b,
             block_size=block_size, salt_shards=salt_shards,
             with_positions=with_positions,
         ),

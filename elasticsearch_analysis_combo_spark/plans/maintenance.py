@@ -1,4 +1,5 @@
-"""Batch-index maintenance: document delete / upsert without a full rebuild.
+"""Batch-index maintenance: staged document delete / upsert, folded in by
+one compaction.
 
 The reference delegates index mutation to its Lucene host (deletes are
 tombstones folded in at segment merge; reference
@@ -10,48 +11,38 @@ already has last-writer-wins compaction, streaming/ingest.py):
   cheap, append-only, no data rewritten.
 * :func:`upsert_docs` analyzes replacement/new documents into a pending
   generation (update = delete + add, like Lucene's updateDocument).
-* :func:`compact` folds tombstones + pending generations into a new index
-  generation **incrementally**:
-    - per-doc term stats are filtered/replaced (one anti-join + union);
-    - only AFFECTED terms (terms occurring in deleted or upserted docs)
-      re-encode their posting rows;
-    - unaffected terms keep their compressed bytes as-is — but their block
-      ``max_impact`` headers are recomputed for the new corpus ``avgdl``
-      in a map-only pass (no shuffle), because stale upper bounds computed
-      under the old avgdl could under-estimate and make WAND's pruning
-      unsound;
-    - the result publishes atomically as a new generation via
-      :func:`~..plans.index_build.publish_tables` (meta.json swap; old
-      readers keep a consistent view).
+* :func:`compact` folds tombstones + pending generations into the
+  per-doc term stats (one anti-join + union; the last staged operation
+  per doc wins) and hands the edited stats to :func:`publish_stats`.
+* :func:`publish_stats` turns term stats into a whole index the way
+  :func:`~..plans.index_build.build_index` does — doc stats, corpus
+  ``(n_docs, avgdl)``, term_df, the hot list and one
+  :func:`~..operators.postings.build_postings` pass — and publishes all
+  four tables atomically via :func:`~..plans.index_build.publish_tables`
+  (meta.json swap; old readers keep a consistent view). The streaming
+  path's ``publish_compacted`` publishes through it too.
 
-Query results after compact are identical to a fresh build on the edited
-corpus (pinned by tests/test_maintenance.py); physical run layout of
-previously-hot terms may differ, which consumers never observe.
+Every posting row is re-encoded under the new corpus ``avgdl``, so a
+compacted index holds the same rows as a fresh build over the edited
+corpus, posting bytes included (pinned by tests/test_maintenance.py).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from dataclasses import replace
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.tinydf import tiny_df
 
-from elasticsearch_analysis_combo_spark.operators.codec import (
-    bm25_impact,
-    decode_block,
-)
-from elasticsearch_analysis_combo_spark.operators.postings import (
-    MIN_DOC,
-    build_postings,
-)
+from elasticsearch_analysis_combo_spark.operators.postings import build_postings
 from elasticsearch_analysis_combo_spark.plans.index_build import (
     IndexMeta,
     InvertedIndex,
+    hot_terms,
     publish_tables,
 )
 
@@ -67,8 +58,6 @@ def _alloc_seq(index_dir: str) -> int:
     deletes and upserts, so compact can order them per doc: the LAST staged
     operation wins). Marker files, no Spark job; single staging writer
     assumed (concurrent writers need an external sequencer)."""
-    import uuid
-
     d = os.path.join(_pending_dir(index_dir), "ops")
     os.makedirs(d, exist_ok=True)
     seqs = [int(e.split(".", 1)[0]) for e in os.listdir(d) if "." in e]
@@ -143,62 +132,53 @@ def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def rescore_block_headers(
-    postings: DataFrame, avgdl: float, k1: float, b: float
-) -> DataFrame:
-    """Recompute ``max_impact`` headers (block- and row-level) for a new
-    ``avgdl`` without touching the compressed payloads. Map-only: no
-    shuffle, positions never decoded; the per-block work is one vectorized
-    impact pass over the already-delta-coded (tf, dl) stream."""
-    schema = postings.schema
-
-    def rescore(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            new_blocks, new_max = [], []
-            for blocks in pdf["blocks"]:
-                out, row_max = [], 0.0
-                for bl in blocks:
-                    _d, t, l = decode_block(
-                        bytes(bl["data"]), MIN_DOC, int(bl["n"])
-                    )
-                    mi = float(bm25_impact(t, l, avgdl, k1, b).max())
-                    row_max = max(row_max, mi)
-                    out.append(
-                        {
-                            "first_doc": bl["first_doc"],
-                            "last_doc": bl["last_doc"],
-                            "n": bl["n"],
-                            "max_impact": mi,
-                            "data": bl["data"],
-                            "pos_data": bl["pos_data"],
-                        }
-                    )
-                new_blocks.append(out)
-                new_max.append(row_max)
-            pdf = pdf.copy()
-            pdf["blocks"] = pd.Series(new_blocks, dtype=object, index=pdf.index)
-            pdf["max_impact"] = np.asarray(new_max, dtype=np.float64)
-            yield pdf
-
-    return postings.mapInPandas(rescore, schema)
-
-
-def compact(
-    spark: SparkSession,
-    index_dir: str,
-    hot_df_threshold: int | None = None,
-    incremental: bool = True,
+def publish_stats(
+    spark: SparkSession, index_dir: str, stats: DataFrame, meta: IndexMeta
 ) -> InvertedIndex:
+    """Publish per-doc term ``stats`` as a whole new index generation: the
+    doc_stats, ``(n_docs, avgdl)``, term_df and postings all derive from
+    ``stats`` exactly as :func:`~..plans.index_build.build_index` derives
+    them, and the four tables publish atomically through
+    :func:`~..plans.index_build.publish_tables`. ``meta`` supplies the
+    build parameters, analyzer config and current table map; its
+    ``n_docs``/``avgdl`` are replaced by the figures of ``stats``."""
+    # read by four derived tables and written itself; persist (recomputable
+    # lineage, so an executor loss re-derives rather than failing)
+    stats = stats.persist()
+    try:
+        doc_stats = stats.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+        g = doc_stats.agg(
+            F.count("*").alias("n"), F.avg("dl").alias("a")
+        ).collect()[0]
+        n_docs, avgdl = int(g["n"]), float(g["a"] or 0.0)
+        term_df = stats.groupBy("term").agg(
+            F.count("*").alias("df"), F.sum("tf").alias("cf")
+        )
+        postings = build_postings(
+            stats, avgdl=avgdl,
+            hot_terms=hot_terms(term_df, n_docs, meta.block_size),
+            k1=meta.k1, b=meta.b, block_size=meta.block_size,
+            salt_shards=meta.salt_shards, with_positions=meta.with_positions,
+        )
+        return publish_tables(
+            spark, index_dir,
+            {
+                "postings": postings,
+                "term_stats": stats,
+                "doc_stats": doc_stats,
+                "term_df": term_df,
+            },
+            replace(meta, n_docs=n_docs, avgdl=avgdl),
+        )
+    finally:
+        stats.unpersist()
+
+
+def compact(spark: SparkSession, index_dir: str) -> InvertedIndex:
     """Fold pending tombstones + upserts into a new index generation and
-    publish it atomically. ``incremental=False`` forces a full posting
-    rebuild (useful as the oracle for the incremental path). Returns the
-    fresh :class:`InvertedIndex`; no-op (returns the current handle) when
-    nothing is pending."""
+    publish it atomically. Returns the fresh :class:`InvertedIndex`; no-op
+    (returns the current handle) when nothing is pending."""
     idx = InvertedIndex(spark, index_dir)
-    meta = idx.meta
     pend = _pending_dir(index_dir)
     tomb = _read_optional(spark, os.path.join(pend, "tombstones"))
     ups = _read_optional(spark, os.path.join(pend, "upserts"))
@@ -227,83 +207,19 @@ def compact(
 
     old_stats = idx.term_stats()
     # every touched doc's OLD rows go away...
-    dead_ids = ops.select("doc_id")
+    new_stats = old_stats.join(ops.select("doc_id"), "doc_id", "left_anti")
     # ...and only docs whose last op is an upsert re-add their new rows.
     # An upserted doc whose content analyzed to zero tokens has a winner
     # row but no stats rows — it is correctly blanked, not resurrected.
-    winners = ops.filter(
-        F.col("_g").isNotNull()
-        & (F.col("_t").isNull() | (F.col("_g") > F.col("_t")))
-    ).select("doc_id", F.col("_g").alias("gen"))
-    up_stats = None
     if ups is not None:
+        winners = ops.filter(
+            F.col("_g").isNotNull()
+            & (F.col("_t").isNull() | (F.col("_g") > F.col("_t")))
+        ).select("doc_id", F.col("_g").alias("gen"))
         up_stats = ups.join(winners, ["doc_id", "gen"]).drop("gen")
-
-    # terms whose posting rows must re-encode: any term of a removed or
-    # replaced doc's old rows, plus every term of the replacement docs
-    affected = (
-        old_stats.join(dead_ids, "doc_id", "left_semi").select("term").distinct()
-    )
-    if up_stats is not None:
-        affected = affected.unionByName(up_stats.select("term").distinct()).distinct()
-
-    new_stats = old_stats.join(dead_ids, "doc_id", "left_anti")
-    if up_stats is not None:
         new_stats = new_stats.unionByName(up_stats.select(*old_stats.columns))
-    # reused by four consumers below; persist (recomputable lineage, so an
-    # executor loss re-derives rather than failing the compaction)
-    new_stats = new_stats.persist()
-    affected = affected.persist()
 
-    doc_stats = new_stats.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    g = doc_stats.agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
-    n_docs, avgdl = int(g["n"]), float(g["a"] or 0.0)
-    term_df = new_stats.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    )
-    if hot_df_threshold is None:
-        hot_df_threshold = max(4 * meta.block_size, n_docs // 10)
-
-    if incremental:
-        aff_stats = new_stats.join(affected, "term", "left_semi")
-        hot_aff = (
-            term_df.filter(F.col("df") >= hot_df_threshold)
-            .join(affected, "term", "left_semi")
-            .select("term")
-        )
-        rebuilt = build_postings(
-            aff_stats, avgdl=avgdl, hot_terms=hot_aff, k1=meta.k1, b=meta.b,
-            block_size=meta.block_size, salt_shards=meta.salt_shards,
-            with_positions=meta.with_positions,
-        )
-        untouched = idx.postings().join(affected, "term", "left_anti")
-        postings = rescore_block_headers(
-            untouched, avgdl, meta.k1, meta.b
-        ).unionByName(rebuilt)
-    else:
-        hot = term_df.filter(F.col("df") >= hot_df_threshold).select("term")
-        postings = build_postings(
-            new_stats, avgdl=avgdl, hot_terms=hot, k1=meta.k1, b=meta.b,
-            block_size=meta.block_size, salt_shards=meta.salt_shards,
-            with_positions=meta.with_positions,
-        )
-
-    new_meta = IndexMeta(
-        n_docs=n_docs, avgdl=avgdl, k1=meta.k1, b=meta.b,
-        block_size=meta.block_size, salt_shards=meta.salt_shards,
-        config=meta.config, with_positions=meta.with_positions,
-        tables=meta.tables,
-    )
-    out = publish_tables(
-        spark, index_dir,
-        {
-            "postings": postings,
-            "term_stats": new_stats,
-            "doc_stats": doc_stats,
-            "term_df": term_df,
-        },
-        new_meta,
-    )
+    out = publish_stats(spark, index_dir, new_stats, idx.meta)
     # the build-time checkpoint manifests describe the PRE-edit corpus;
     # invalidate them so a later build_index over the same inputs re-runs
     # instead of resuming outputs that no longer match the served index
@@ -316,6 +232,5 @@ def compact(
     # edits, never losing them)
     if os.path.isdir(pend):
         os.replace(pend, pend + f".applied-{uuid.uuid4().hex[:8]}")
-    for df in (new_stats, affected, ops):
-        df.unpersist()
+    ops.unpersist()
     return out

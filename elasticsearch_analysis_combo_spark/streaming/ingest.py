@@ -4,10 +4,12 @@ The reference has no streaming operators (ES indexing is request/response,
 SURVEY.md §1.4); this module is the engine's optional resumable-ingest
 convenience (SURVEY.md §7): new corpus files landing in a directory are
 analyzed exactly once (Spark's file-source checkpoint keeps the offset log),
-each micro-batch appends a *generation* of per-doc term stats, and a
-compaction job folds all generations into the same compressed posting
-layout the batch pipeline produces — the log-structured-merge story (B5)
-applied across time instead of across salt shards.
+each micro-batch appends a *generation* of per-doc term stats, and
+:func:`publish_compacted` folds all generations (last writer wins per doc)
+into a whole index — postings, term_stats, doc_stats and term_df, built
+and published by the same code the batch index's compaction uses — the
+log-structured-merge story (B5) applied across time instead of across
+salt shards.
 
 Exactly-once: the term-stats append and the offset commit are tied by
 foreachBatch's epoch id (re-delivered batches overwrite their own epoch
@@ -16,12 +18,19 @@ partition rather than double-appending).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
-from elasticsearch_analysis_combo_spark.operators.postings import build_postings
+from elasticsearch_analysis_combo_spark.plans.index_build import (
+    IndexMeta,
+    InvertedIndex,
+    _config_dict,
+)
+from elasticsearch_analysis_combo_spark.plans.maintenance import publish_stats
 
 
 def stream_corpus(
@@ -72,50 +81,6 @@ def start_incremental_ingest(
     return writer.start()
 
 
-def compact_generations(
-    spark: SparkSession,
-    index_dir: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-    block_size: int = 128,
-    salt_shards: int = 8,
-    with_positions: bool = True,
-    hot_df_threshold: int | None = None,
-):
-    """Fold every ingested generation into one compressed posting table
-    (same layout/semantics as the batch build). Returns
-    (postings_df, n_docs, avgdl).
-
-    Last-writer-wins across generations: a doc re-ingested in a later gen
-    (an updated file) REPLACES all of its earlier term rows — only the
-    max-gen rows per doc_id survive, so df/cf are never inflated by
-    superseded versions. (foreachBatch's epoch overwrite already guards
-    same-epoch replays; this guards cross-epoch updates.)"""
-    from pyspark.sql import Window
-
-    stats = spark.read.parquet(f"{index_dir}/gen_stats")
-    w = Window.partitionBy("doc_id")
-    stats = (
-        stats.withColumn("_max_gen", F.max("gen").over(w))
-        .filter(F.col("gen") == F.col("_max_gen"))
-        .drop("_max_gen")
-    )
-    docstats = stats.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    g = docstats.agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
-    n_docs, avgdl = int(g["n"]), float(g["a"] or 0.0)
-    term_df = stats.groupBy("term").agg(F.count("*").alias("df"))
-    thresh = hot_df_threshold if hot_df_threshold is not None else max(
-        4 * block_size, n_docs // 10
-    )
-    hot = term_df.filter(F.col("df") >= thresh).select("term")
-    postings = build_postings(
-        stats.drop("gen"), avgdl=avgdl, hot_terms=hot, k1=k1, b=b,
-        block_size=block_size, salt_shards=salt_shards,
-        with_positions=with_positions,
-    )
-    return postings, n_docs, avgdl
-
-
 def publish_compacted(
     spark: SparkSession,
     config: ComboConfig,
@@ -125,37 +90,35 @@ def publish_compacted(
     block_size: int = 128,
     salt_shards: int = 8,
     with_positions: bool = True,
-    hot_df_threshold: int | None = None,
-):
-    """Compact all generations and ATOMICALLY publish the result as a
-    servable index at ``index_dir`` (the same layout build_index produces,
-    queried through the same InvertedIndex handle). The posting table is
-    written to a fresh versioned dir (``postings-<token>``) and the publish
-    is a single meta.json swap — readers holding the old InvertedIndex
-    keep reading their own generation's still-present dir for their whole
-    lifetime (no window where the posting path is missing), and a new
-    InvertedIndex(index_dir) serves the compacted data. The
-    two-generations-old dir is garbage-collected. Returns the fresh
-    InvertedIndex handle."""
-    import os
+) -> InvertedIndex:
+    """Fold every ingested generation into one servable index at
+    ``index_dir`` and publish it atomically: the same four tables
+    build_index produces (postings, term_stats, doc_stats, term_df),
+    queried and maintained through the same InvertedIndex handle and
+    engine. Each table is written to a fresh versioned dir and the publish
+    is a single meta.json swap (:func:`~..plans.maintenance.publish_stats`),
+    so readers holding the old handle keep their own generation. Returns
+    the fresh InvertedIndex handle.
 
-    from elasticsearch_analysis_combo_spark.plans.index_build import (
-        IndexMeta,
-        _config_dict,
-        publish_tables,
-    )
-
-    postings, n_docs, avgdl = compact_generations(
-        spark, index_dir, k1=k1, b=b, block_size=block_size,
-        salt_shards=salt_shards, with_positions=with_positions,
-        hot_df_threshold=hot_df_threshold,
+    Last-writer-wins across generations: a doc re-ingested in a later gen
+    (an updated file) REPLACES all of its earlier term rows — only the
+    max-gen rows per doc_id survive, so df/cf are never inflated by
+    superseded versions. (foreachBatch's epoch overwrite already guards
+    same-epoch replays; this guards cross-epoch updates.)"""
+    stats = spark.read.parquet(os.path.join(index_dir, "gen_stats"))
+    w = Window.partitionBy("doc_id")
+    stats = (
+        stats.withColumn("_max_gen", F.max("gen").over(w))
+        .filter(F.col("gen") == F.col("_max_gen"))
+        .drop("_max_gen", "gen")
     )
     old_tables = None
     if os.path.exists(os.path.join(index_dir, "meta.json")):
         old_tables = IndexMeta.load(index_dir).tables
+    # n_docs/avgdl are placeholders: publish_stats derives them from stats
     meta = IndexMeta(
-        n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
+        n_docs=0, avgdl=0.0, k1=k1, b=b, block_size=block_size,
         salt_shards=salt_shards, config=_config_dict(config),
         with_positions=with_positions, tables=old_tables,
     )
-    return publish_tables(spark, index_dir, {"postings": postings}, meta)
+    return publish_stats(spark, index_dir, stats, meta)

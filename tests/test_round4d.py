@@ -144,7 +144,7 @@ def test_delete_by_query_and_get_docs(spark, tmp_path):
     # conjunctive: only doc 0 holds BOTH alpha and beta
     n = eng.delete_by_query("alpha beta")
     assert n == 1
-    eng.compact(incremental=False)
+    eng.compact()
     hits = eng.search("alpha", k=10).collect()
     assert {r["doc_id"] for r in hits} == {1}
     # no-term query deletes nothing

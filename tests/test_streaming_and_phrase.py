@@ -15,7 +15,7 @@ from elasticsearch_analysis_combo_spark.sources.corpus import (
     ingest,
 )
 from elasticsearch_analysis_combo_spark.streaming.ingest import (
-    compact_generations,
+    publish_compacted,
     start_incremental_ingest,
     stream_corpus,
 )
@@ -46,13 +46,13 @@ def test_incremental_ingest_equals_batch(spark, tmp_path):
     q2 = start_incremental_ingest(stream2, CFG, idx_dir)
     q2.awaitTermination(120)
 
-    postings, n_docs, avgdl = compact_generations(spark, idx_dir, salt_shards=4)
+    idx = publish_compacted(spark, CFG, idx_dir, salt_shards=4)
     docs = [(r["doc_id"], r["content"], r["lang"])
             for r in full.select("doc_id", "content", "lang").collect()]
     exp_postings, exp_dl, exp_n, exp_avgdl = build_oracle_index(docs, CFG)
-    assert n_docs == exp_n
-    assert abs(avgdl - exp_avgdl) < 1e-9
-    got = {(r["term"], r["df"], r["cf"]) for r in postings.collect()}
+    assert idx.meta.n_docs == exp_n
+    assert abs(idx.meta.avgdl - exp_avgdl) < 1e-9
+    got = {(r["term"], r["df"], r["cf"]) for r in idx.postings().collect()}
     exp = {
         (t, len(pl), sum(tf for tf, _ in pl.values()))
         for t, pl in exp_postings.items()
@@ -81,14 +81,14 @@ def test_reingested_doc_last_writer_wins(spark, tmp_path):
     q2 = start_incremental_ingest(stream_corpus(spark, f"{drop_dir}/*", schema), CFG, idx_dir)
     q2.awaitTermination(120)
 
-    postings, n_docs, avgdl = compact_generations(spark, idx_dir, salt_shards=4)
+    idx = publish_compacted(spark, CFG, idx_dir, salt_shards=4)
     final = full.filter("pmod(doc_id, 2) = 1").unionByName(updated)
     docs = [(r["doc_id"], r["content"], r["lang"])
             for r in final.select("doc_id", "content", "lang").collect()]
     exp_postings, _, exp_n, exp_avgdl = build_oracle_index(docs, CFG)
-    assert n_docs == exp_n                      # no doc counted twice
-    assert abs(avgdl - exp_avgdl) < 1e-9
-    got = {(r["term"], r["df"], r["cf"]) for r in postings.collect()}
+    assert idx.meta.n_docs == exp_n             # no doc counted twice
+    assert abs(idx.meta.avgdl - exp_avgdl) < 1e-9
+    got = {(r["term"], r["df"], r["cf"]) for r in idx.postings().collect()}
     exp = {(t, len(pl), sum(tf for tf, _ in pl.values()))
            for t, pl in exp_postings.items()}
     assert got == exp
@@ -99,7 +99,6 @@ def test_publish_compacted_serves_wand(spark, tmp_path):
     equals WAND over a batch-built index of the same docs."""
     from elasticsearch_analysis_combo_spark.plans.index_build import build_index
     from elasticsearch_analysis_combo_spark.query.wand import wand_topk
-    from elasticsearch_analysis_combo_spark.streaming.ingest import publish_compacted
 
     drop_dir = str(tmp_path / "drop")
     inc_dir = str(tmp_path / "inc_idx")
@@ -121,6 +120,52 @@ def test_publish_compacted_serves_wand(spark, tmp_path):
     assert sorted(map(key, a)) == sorted(map(key, bq))
     for ra, rb in zip(sorted(a, key=key), sorted(bq, key=key)):
         assert abs(ra["score"] - rb["score"]) < 1e-9
+
+
+def test_publish_compacted_is_a_whole_index(spark, tmp_path):
+    """A streamed index carries every table build_index writes, so the
+    dictionary, doc stats, prefix phrases and batch maintenance all work
+    on it, with the same contents as a batch build of the same docs."""
+    from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
+    from elasticsearch_analysis_combo_spark.plans.index_build import build_index
+
+    drop_dir = str(tmp_path / "drop")
+    inc_dir = str(tmp_path / "inc_idx")
+    corpus = ingest(generate_corpus(spark, 40)).cache()
+    corpus.write.mode("overwrite").parquet(f"{drop_dir}/b1")
+    q = start_incremental_ingest(
+        stream_corpus(spark, f"{drop_dir}/*", corpus.schema), CFG, inc_dir
+    )
+    q.awaitTermination(120)
+    inc = publish_compacted(spark, CFG, inc_dir, salt_shards=4)
+    batch = build_index(spark, corpus, CFG, str(tmp_path / "batch_idx"),
+                        salt_shards=4)
+
+    def rows(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert rows(inc.term_df(), ["term", "df", "cf"]) == rows(
+        batch.term_df(), ["term", "df", "cf"])
+    assert rows(inc.doc_stats(), ["doc_id", "dl"]) == rows(
+        batch.doc_stats(), ["doc_id", "dl"])
+    assert rows(inc.term_stats(), ["doc_id", "term", "tf"]) == rows(
+        batch.term_stats(), ["doc_id", "term", "tf"])
+
+    eng = ComboSearchEngine(spark, CFG, inc_dir, salt_shards=4)
+    words = corpus.first()["content"].split()
+    prefix = f"{words[0]} {words[1][:2]}"
+    hits = rows(eng.phrase_prefix(prefix), ["query_id", "doc_id"])
+    assert hits
+    assert hits == rows(
+        ComboSearchEngine(spark, CFG, batch.index_dir).phrase_prefix(prefix),
+        ["query_id", "doc_id"],
+    )
+
+    victim = corpus.first()["doc_id"]
+    eng.delete([victim])
+    after = eng.compact()
+    assert after.meta.n_docs == inc.meta.n_docs - 1
+    assert victim not in {r["doc_id"] for r in after.doc_stats().collect()}
 
 
 def test_changed_corpus_rebuilds_not_resumes(spark, tmp_path):

@@ -81,21 +81,6 @@ def main() -> None:
     p = plan_text(stats)
     failures += not check("analysis input pruning", p, "doc_id", forbid="content_sha256")
 
-    # 4. maintenance header rescore: map-only over the posting scan — an
-    # Exchange here would mean the "no shuffle" claim in maintenance.py is
-    # broken (at 100 TB that shuffle would move the whole posting table)
-    from elasticsearch_analysis_combo_spark.plans.maintenance import (
-        rescore_block_headers,
-    )
-
-    rescored = rescore_block_headers(
-        idx.postings(), idx.meta.avgdl * 0.9, idx.meta.k1, idx.meta.b
-    )
-    p = plan_text(rescored)
-    failures += not check(
-        "maintenance rescore is map-only", p, "MapInPandas", forbid="Exchange"
-    )
-
     # 5. partitioned phrase/WAND block fan-out: the term filter still
     # pushes into the posting scan before blocks explode to doc ranges
     from elasticsearch_analysis_combo_spark.query.phrase import (
