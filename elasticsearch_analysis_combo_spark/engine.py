@@ -97,9 +97,10 @@ class ComboSearchEngine:
 
     #: at or above this many indexed docs, search()/phrase() default to
     #: the range-partitioned evaluators (one task per (query, doc-range));
-    #: below it the query terms' postings are fetched and scored by the
-    #: caller — a hot-term query over a large index must not concentrate
-    #: its whole posting volume in a single process.
+    #: below it the query terms' postings are read from the published
+    #: parquet with pyarrow and scored by the caller, with no Spark job —
+    #: a hot-term query over a large index must not concentrate its whole
+    #: posting volume in a single process.
     #: 200k is where measurement flips (BENCH/BASELINE.md "At-scale
     #: validation (round 3)": partitioned WAND 1.79s vs single 2.55s at
     #: 1M docs on a quiet host; partitioned phrase 3.1s vs 16.6s at 200k),
@@ -124,8 +125,9 @@ class ComboSearchEngine:
         queries over very large indexes. Default (None) routes
         automatically: partitioned once the index holds at least
         ``PARTITIONED_THRESHOLD`` docs; below it the query terms' posting
-        rows are fetched with one Spark job and scored by the caller (the
-        per-request job cost dominates while posting volume is small)."""
+        rows are read from the published parquet with pyarrow and scored
+        by the caller, with no Spark job (a job's fixed cost would
+        dominate while posting volume is small)."""
         queries = [(0, query)] if isinstance(query, str) else query
         cfg = self._query_config()
         if partitioned is None:
@@ -664,9 +666,7 @@ class ComboSearchEngine:
                 self.spark, self.idx.postings(), queries, cfg,
                 slop=slop, range_bits=range_bits,
             )
-        return phrase_match(
-            self.spark, self.idx.postings(), queries, cfg, slop=slop
-        )
+        return phrase_match(self.spark, self.idx, queries, cfg, slop=slop)
 
     def span_near(
         self,
@@ -696,7 +696,7 @@ class ComboSearchEngine:
                 range_bits=range_bits,
             )
         return span_near_match(
-            self.spark, self.idx.postings(), queries, self._query_config(),
+            self.spark, self.idx, queries, self._query_config(),
             slop=slop, in_order=in_order,
         )
 
@@ -716,7 +716,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return span_or_match(
-            self.spark, self.idx.postings(), queries, self._query_config(),
+            self.spark, self.idx, queries, self._query_config(),
             range_bits=range_bits if partitioned else None,
         )
 
@@ -738,7 +738,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return span_first_match(
-            self.spark, self.idx.postings(), queries, self._query_config(),
+            self.spark, self.idx, queries, self._query_config(),
             end=end, range_bits=range_bits if partitioned else None,
         )
 
@@ -760,7 +760,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return span_not_match(
-            self.spark, self.idx.postings(), [(0, include, exclude)],
+            self.spark, self.idx, [(0, include, exclude)],
             self._query_config(), pre=pre, post=post,
             range_bits=range_bits if partitioned else None,
         )
@@ -824,7 +824,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return span_within_match(
-            self.spark, self.idx.postings(), [(0, little, big)],
+            self.spark, self.idx, [(0, little, big)],
             self._query_config(), slop=slop,
             range_bits=range_bits if partitioned else None,
         )
@@ -847,7 +847,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return span_containing_match(
-            self.spark, self.idx.postings(), [(0, little, big)],
+            self.spark, self.idx, [(0, little, big)],
             self._query_config(), slop=slop,
             range_bits=range_bits if partitioned else None,
         )
@@ -873,7 +873,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return intervals_match(
-            self.spark, self.idx.postings(), queries, self._query_config(),
+            self.spark, self.idx, queries, self._query_config(),
             range_bits=range_bits if partitioned else None,
             max_expansions=max_expansions,
         )
@@ -1428,7 +1428,7 @@ class ComboSearchEngine:
 
         queries = [(0, query)] if isinstance(query, str) else query
         return phrase_prefix_match(
-            self.spark, self.idx.postings(), self.idx.term_df(), queries,
+            self.spark, self.idx, self.idx, queries,
             self._query_config(), slop=slop, max_expansions=max_expansions,
         )
 
@@ -1445,7 +1445,7 @@ class ComboSearchEngine:
         queries = [(0, query)] if isinstance(query, str) else query
         meta = self.idx.meta
         return phrase_topk(
-            self.spark, self.idx.postings(), queries, self._query_config(),
+            self.spark, self.idx, queries, self._query_config(),
             n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b,
             k=k, slop=slop,
         )

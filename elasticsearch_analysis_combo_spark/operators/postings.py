@@ -120,25 +120,32 @@ def term_blocks_from_rows(run_idxs, blocks_col) -> list:
     return out
 
 
+def concat_term_runs(
+    terms, run_idxs, dfs, blocks
+) -> dict[str, tuple[float, list]]:
+    """term -> (df, blocks) over posting rows given column-wise, in any
+    row order. A term's runs are concatenated in run_idx order, so each
+    list stays doc-sorted; df is the term total every run row repeats.
+    Both posting fetches (:func:`fetch_term_blocks` and
+    ``InvertedIndex.term_blocks``) end here."""
+    rows: dict[str, tuple[float, list, list]] = {}
+    for term, ri, df_t, bl in zip(terms, run_idxs, dfs, blocks):
+        _, term_runs, term_blocks = rows.setdefault(term, (float(df_t), [], []))
+        term_runs.append(int(ri))
+        term_blocks.append(bl)
+    return {
+        term: (df_t, term_blocks_from_rows(term_runs, term_blocks))
+        for term, (df_t, term_runs, term_blocks) in rows.items()
+    }
+
+
 def fetch_term_blocks(scan: DataFrame) -> dict[str, tuple[float, list]]:
     """term -> (df, blocks) for the posting rows of ``scan`` (term,
     run_idx, df, blocks), fetched into the calling process with one Spark
-    job (Arrow ``toPandas``). A term's runs are concatenated in run_idx
-    order, so each list stays doc-sorted; df is the term total every run
-    row repeats."""
+    job (Arrow ``toPandas``): the fetch for a posting DataFrame that is
+    not a published index (see :func:`concat_term_runs`)."""
     pdf = scan.select("term", "run_idx", "df", "blocks").toPandas()
-    rows: dict[str, tuple[float, list, list]] = {}
-    for term, ri, df_t, blocks in zip(
-        pdf["term"], pdf["run_idx"], pdf["df"], pdf["blocks"]
-    ):
-        _, run_idxs, blocks_col = rows.setdefault(term, (float(df_t), [], []))
-        run_idxs.append(int(ri))
-        blocks_col.append(blocks)
-    return {
-        term: (df_t, term_blocks_from_rows(run_idxs, blocks_col))
-        for term, (df_t, run_idxs, blocks_col) in rows.items()
-    }
-
+    return concat_term_runs(pdf["term"], pdf["run_idx"], pdf["df"], pdf["blocks"])
 
 
 def _encode_blocks(

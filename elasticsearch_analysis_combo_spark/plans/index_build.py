@@ -12,18 +12,26 @@ Physical-plan shape (local[N] or a real cluster — identical):
   * hot terms only: 1 shuffle to (term, doc-range salt) — skew-bounded by
     salt — whose runs are renumbered in doc order, never merged
   * docstats/termdf are partial-aggregated map-side by Catalyst
-The posting table is written sorted by term (repartitionByRange +
-sortWithinPartitions) so query-time term lookups prune row groups via
-parquet min/max statistics.
+The posting table is hash-partitioned by term and sorted by term within
+each partition, so every part file is term-sorted. Row-group min/max
+statistics prune a term lookup only where a file holds several row
+groups: a small index's part files are one row group each, spanning
+nearly the whole vocabulary, so a lookup reads every file.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import uuid
 from dataclasses import asdict, dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,7 +42,10 @@ from elasticsearch_analysis_combo_spark.operators.checkpoint import (
     CheckpointManager,
     fingerprint,
 )
-from elasticsearch_analysis_combo_spark.operators.postings import build_postings
+from elasticsearch_analysis_combo_spark.operators.postings import (
+    build_postings,
+    concat_term_runs,
+)
 
 
 @dataclass
@@ -163,16 +174,41 @@ def _config_dict(config: ComboConfig) -> dict:
     return out
 
 
+def term_filter(terms) -> pc.Expression:
+    """``term == t1 or term == t2 ...``: the posting lookup's predicate.
+    pyarrow (16.1) prunes row groups by their term min/max statistics for
+    this OR form, but keeps every row group for ``is_in``."""
+    return functools.reduce(
+        operator.or_, (pc.field("term") == t for t in sorted(terms))
+    )
+
+
+def posting_read_columns(positions: bool) -> list[str]:
+    """The parquet columns of a posting lookup: the row keys, the block
+    headers and the doc/tf/dl stream, plus ``pos_data`` only for a
+    positional read."""
+    leaves = ["first_doc", "last_doc", "n", "max_impact", "data"]
+    if positions:
+        leaves.append("pos_data")
+    return ["term", "run_idx", "df"] + [
+        f"blocks.list.element.{leaf}" for leaf in leaves
+    ]
+
+
 class InvertedIndex:
     """Handle over a built index directory. Each table's parquet schema is
     read once per handle (keyed by the resolved table dir) and given to
-    later reads, which then skip the footer-inference job."""
+    later reads, which then skip the footer-inference job. The handle
+    reads the generation its ``meta.json`` named when it was opened, also
+    after a later publish."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = IndexMeta.load(index_dir)
         self._schemas: dict[str, T.StructType] = {}
+        self._posting_files: list | None = None
+        self._vocabulary: list[str] | None = None
 
     def _read(self, name: str) -> DataFrame:
         path = self.meta.table_dir(self.index_dir, name)
@@ -182,6 +218,11 @@ class InvertedIndex:
         df = self.spark.read.parquet(path)
         self._schemas[path] = df.schema
         return df
+
+    def _dataset(self, name: str) -> pads.Dataset:
+        return pads.dataset(
+            self.meta.table_dir(self.index_dir, name), format="parquet"
+        )
 
     def postings(self) -> DataFrame:
         return self._read("postings")
@@ -194,6 +235,45 @@ class InvertedIndex:
 
     def term_df(self) -> DataFrame:
         return self._read("term_df")
+
+    def term_blocks(
+        self, terms, positions: bool = False
+    ) -> dict[str, tuple[float, list]]:
+        """term -> (df, doc-sorted blocks) for ``terms``' posting rows,
+        read in this process with pyarrow: no Spark job. Row groups whose
+        term min/max cannot hold a query term are skipped, and only the
+        leaves of :func:`posting_read_columns` are read, so a scoring read
+        (``positions=False``) never touches ``pos_data``. Unknown terms
+        are absent from the result."""
+        if not terms:
+            return {}
+        if self._posting_files is None:
+            self._posting_files = list(self._dataset("postings").get_fragments())
+        where = term_filter(terms)
+        columns = posting_read_columns(positions)
+        tables = []
+        for part in self._posting_files:
+            groups = [rg.id for rg in part.subset(where).row_groups]
+            if groups:
+                with pq.ParquetFile(part.path, metadata=part.metadata) as f:
+                    tables.append(f.read_row_groups(
+                        groups, columns=columns, use_threads=False
+                    ).filter(where))
+        if not tables:
+            return {}
+        rows = pa.concat_tables(tables)
+        return concat_term_runs(*(
+            rows.column(c).to_pylist() for c in ("term", "run_idx", "df", "blocks")
+        ))
+
+    def vocabulary(self) -> list[str]:
+        """Every dictionary term, sorted by code point (which is Spark's
+        binary string order), read from ``term_df`` once per handle with
+        pyarrow."""
+        if self._vocabulary is None:
+            terms = self._dataset("term_df").to_table(columns=["term"])
+            self._vocabulary = sorted(terms.column("term").to_pylist())
+        return self._vocabulary
 
 
 def build_index(
@@ -273,10 +353,10 @@ def build_index(
     ckpt.run(
         "postings",
         fingerprint(base_fp, "postings"),
-        # build_postings output is already term-hash-partitioned and sorted
-        # by term within partitions (grouped_map_sorted), so written files
-        # are term-clustered and parquet row-group min/max stats prune
-        # query-time term lookups — no extra shuffle needed
+        # build_postings output is term-hash-partitioned and sorted by
+        # term within partitions (grouped_map_sorted), so each written
+        # file is term-sorted with no extra shuffle; row-group min/max
+        # stats prune a lookup only in files of several row groups
         lambda: build_postings(
             stats, avgdl=avgdl, hot_terms=hot, k1=k1, b=b,
             block_size=block_size, salt_shards=salt_shards,

@@ -36,8 +36,9 @@ interval is dropped, never replaced by a wider non-minimal one).
 
 Evaluation shape: the span family's evaluator
 (``phrase.positional_eval`` — one fetch of the batch's compressed
-posting rows, each term decoded once, every query matched in the calling
-process), with the whole kernel vectorized ACROSS DOCS in banded-key
+posting rows, in process for a published index, each term decoded once,
+every query matched in the calling process), with the whole kernel
+vectorized ACROSS DOCS in banded-key
 space (key = doc_index * BAND + position): searchsorted chains for
 ordered leaves, per-start covering ends for unordered, same-band checks
 confining every window to one doc, and minimality as ONE global
@@ -60,8 +61,10 @@ from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.phrase import (
     _BAND,
+    posting_frame,
     positional_eval,
 )
 from elasticsearch_analysis_combo_spark.query.spans import (
@@ -270,7 +273,7 @@ def _candidate_docs(rule: dict, decoded: dict) -> np.ndarray:
 
 def intervals_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, dict]],
     config: ComboConfig,
     range_bits: int | None = None,
@@ -296,7 +299,9 @@ def intervals_match(
             _wildcard_regex,
         )
 
-        term_dict = postings.groupBy("term").agg(F.max("df").alias("df"))
+        term_dict = posting_frame(postings).groupBy("term").agg(
+            F.max("df").alias("df")
+        )
         parts = []
         for li, leaf in enumerate(multis):
             if leaf["mkind"] == "prefix":

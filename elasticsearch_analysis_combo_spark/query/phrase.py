@@ -24,13 +24,14 @@ passes per (slot, window-offset) over the whole candidate batch.
 
 Two physical strategies, mirroring WAND (query/wand.py):
 
-* ``positional_eval`` — one Spark job per request: the batch's distinct
-  terms' compressed posting rows are fetched once into the calling
-  process, decoded once, and every query is matched there. Every
-  positional query runs on it: ``phrase_match`` and its prefix and
-  shingle variants, the ranked ``phrase_topk``, the span family
-  (query/spans.py) and ``intervals`` (query/intervals.py). Fine for
-  selective terms.
+* ``positional_eval`` — the batch's distinct terms' compressed posting
+  rows are fetched once into the calling process, decoded once, and
+  every query is matched there. A published index is read with pyarrow
+  (no Spark job); any other posting DataFrame is fetched with one Spark
+  job. Every positional query runs on it: ``phrase_match`` and its
+  prefix and shingle variants, the ranked ``phrase_topk``, the span
+  family (query/spans.py) and ``intervals`` (query/intervals.py). Fine
+  for selective terms.
 * ``range_partitioned_positional_eval`` (``phrase_match_partitioned``,
   and ``positional_eval`` given ``range_bits``) — one task per
   (query, doc-range): each
@@ -43,6 +44,11 @@ Two physical strategies, mirroring WAND (query/wand.py):
 """
 
 from __future__ import annotations
+
+import functools
+import operator
+from bisect import bisect_left
+from itertools import takewhile
 
 import numpy as np
 import pandas as pd
@@ -67,6 +73,7 @@ from elasticsearch_analysis_combo_spark.operators.postings import (
     doc_range_bounds,
     fetch_term_blocks,
 )
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 
 PHRASE_SCHEMA = T.StructType(
     [
@@ -317,7 +324,7 @@ def _decode_blocks(blocks: list) -> tuple:
 
 def phrase_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -327,11 +334,12 @@ def phrase_match(
     """(query_id, doc_id, n_matches[, dl][, sloppy_freq]) for every doc
     containing the phrase (within ``slop`` position moves — see module
     docstring). ``with_weights`` (requires ``with_dl``) adds Lucene's
-    sloppyFreq (1/(matchLength+1) per anchor, summed). One Spark job: the
-    batch's distinct terms' posting rows are fetched and decoded once, and
-    every phrase is matched in the calling process; returns a
-    LocalTableScan frame. Use :func:`phrase_match_partitioned` for
-    stop-word phrases over very large indexes."""
+    sloppyFreq (1/(matchLength+1) per anchor, summed). The batch's
+    distinct terms' posting rows are fetched and decoded once and every
+    phrase is matched in the calling process (:func:`positional_eval`:
+    no Spark job for a published index); returns a LocalTableScan frame.
+    Use :func:`phrase_match_partitioned` for stop-word phrases over very
+    large indexes."""
     return _slots_eval(
         spark, postings, _phrase_slots(queries, config), slop, with_dl,
         with_weights,
@@ -586,6 +594,14 @@ def phrase_match_shingles(
     )
 
 
+def posting_frame(postings: InvertedIndex | DataFrame) -> DataFrame:
+    """The posting table as a DataFrame, for the evaluators that scan it
+    with Spark."""
+    if isinstance(postings, InvertedIndex):
+        return postings.postings()
+    return postings
+
+
 def positional_scan(postings: DataFrame, terms) -> DataFrame:
     """The positional fetch: ``terms``' posting rows, the term filter
     pushed into the parquet scan."""
@@ -594,7 +610,7 @@ def positional_scan(postings: DataFrame, terms) -> DataFrame:
 
 def positional_eval(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     terms_by_q: dict[int, list[str]],
     matcher,
     schema: T.StructType = PHRASE_SCHEMA,
@@ -604,20 +620,23 @@ def positional_eval(
     intervals and ranked phrase. ``terms_by_q`` maps a query id to the
     terms its matcher reads; a query without terms yields no rows.
 
-    One Spark job: the batch's distinct terms' posting rows are fetched
-    (:func:`fetch_term_blocks`) and each term is decoded once; then
-    ``matcher(qid, decoded, df)`` runs for every query in qid order in
-    the calling process, with ``decoded``: term -> (docs, offs, pos_flat,
-    dls) and ``df``: term -> document frequency. The matcher returns one
-    array per ``schema`` field after ``query_id``; the result is a
-    LocalTableScan frame. With ``range_bits`` the queries fan out per
-    (query, doc-range) instead, through
-    :func:`range_partitioned_positional_eval` (the scale path, where
-    ``df`` is None)."""
+    The batch's distinct terms' posting rows are fetched once and each
+    term is decoded once: an :class:`InvertedIndex` is read in process
+    with pyarrow (``InvertedIndex.term_blocks``, no Spark job), a posting
+    DataFrame through :func:`positional_scan` and
+    :func:`fetch_term_blocks` (one Spark job). Then ``matcher(qid,
+    decoded, df)`` runs for every query in qid order in the calling
+    process, with ``decoded``: term -> (docs, offs, pos_flat, dls) and
+    ``df``: term -> document frequency. The matcher returns one array per
+    ``schema`` field after ``query_id``; the result is a LocalTableScan
+    frame. With ``range_bits`` the queries fan out per (query, doc-range)
+    instead, through :func:`range_partitioned_positional_eval` (the scale
+    path, which scans the posting table with Spark and where ``df`` is
+    None)."""
     terms_by_q = {q: ts for q, ts in terms_by_q.items() if ts}
     if range_bits is not None:
         return range_partitioned_positional_eval(
-            spark, postings,
+            spark, posting_frame(postings),
             [(q, t) for q, ts in terms_by_q.items() for t in ts],
             lambda qid, decoded: matcher(qid, decoded, None),
             range_bits=range_bits,
@@ -627,7 +646,10 @@ def positional_eval(
     terms = {t for ts in terms_by_q.values() for t in ts}
     if not terms:
         return tiny_df(spark, [], schema)
-    fetched = fetch_term_blocks(positional_scan(postings, terms))
+    if isinstance(postings, InvertedIndex):
+        fetched = postings.term_blocks(terms, positions=True)
+    else:
+        fetched = fetch_term_blocks(positional_scan(postings, terms))
     decoded = {term: _decode_blocks(bls) for term, (_, bls) in fetched.items()}
     df = {term: df_t for term, (df_t, _) in fetched.items()}
     cols = [[] for _ in schema.fields]
@@ -647,7 +669,7 @@ def positional_eval(
 
 def _slots_eval(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     slots_by_q: dict[int, list[tuple[int, object]]],
     slop: int,
     with_dl: bool = False,
@@ -674,10 +696,23 @@ def _slots_eval(
     )
 
 
+def prefix_expansions(
+    sorted_terms: list[str], prefix: str, max_expansions: int
+) -> list[str]:
+    """The first ``max_expansions`` of ``sorted_terms`` (code-point
+    order) that start with ``prefix``: those terms are contiguous from the
+    prefix's insertion point."""
+    i = bisect_left(sorted_terms, prefix)
+    return list(takewhile(
+        lambda t: t.startswith(prefix),
+        sorted_terms[i:i + max(max_expansions, 0)],
+    ))
+
+
 def phrase_prefix_match(
     spark: SparkSession,
-    postings: DataFrame,
-    term_df: DataFrame,
+    postings: InvertedIndex | DataFrame,
+    term_df: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -686,42 +721,32 @@ def phrase_prefix_match(
     """ES ``match_phrase_prefix``: the phrase's LAST term matches as a
     prefix, expanded to at most ``max_expansions`` vocabulary terms (in
     dictionary order, as ES caps its expansion — deterministic here:
-    alphabetical). A doc matches when any expansion completes the phrase;
-    ``n_matches`` counts distinct first-slot anchors valid for at least one
-    expansion. The expansion runs over the term DICTIONARY (vocabulary-,
-    not posting-, sized; the startswith filter pushes into the scan) and
-    the posting fetch ships only the expanded terms' rows."""
-    from pyspark.sql import Window
-
+    code-point order, which is Spark's binary string order). A doc matches
+    when any expansion completes the phrase; ``n_matches`` counts distinct
+    first-slot anchors valid for at least one expansion. The expansion
+    runs over the term DICTIONARY (:func:`prefix_expansions`): an
+    :class:`InvertedIndex` supplies its sorted vocabulary, read once per
+    handle; a ``term_df`` DataFrame supplies only the terms matching some
+    prefix, with one collect (the startswith filters push into the scan).
+    The posting fetch reads only the expanded terms' rows."""
     qrows = analyze_phrases(queries, config)
     if not qrows:
         return tiny_df(spark, [], PHRASE_SCHEMA)
     terms_by_q: dict[int, list[str]] = {}
     for qid, slot, term in sorted(qrows):
         terms_by_q.setdefault(qid, []).append(term)
-    # ALL queries' expansions in ONE dictionary job (per-query collects
-    # would serialize a vocabulary scan per prefix); the startswith filter
-    # still pushes into the scan per branch
-    exp_union = None
-    for qid, terms in terms_by_q.items():
-        part = (
-            term_df.filter(F.col("term").startswith(terms[-1]))
-            .select(F.lit(qid).alias("query_id"), "term")
-        )
-        exp_union = part if exp_union is None else exp_union.unionByName(part)
-    w = Window.partitionBy("query_id").orderBy("term")
-    exp_rows = (
-        exp_union.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_expansions)
-        .select("query_id", "term")
-        .collect()
-    )
-    exp_by_q: dict[int, list[str]] = {}
-    for r in exp_rows:
-        exp_by_q.setdefault(r["query_id"], []).append(r["term"])
+    prefixes = sorted({terms[-1] for terms in terms_by_q.values()})
+    if isinstance(term_df, InvertedIndex):
+        vocab = term_df.vocabulary()
+    else:
+        vocab = sorted({
+            r["term"] for r in term_df.filter(functools.reduce(
+                operator.or_, (F.col("term").startswith(p) for p in prefixes)
+            )).select("term").collect()
+        })
     slots_by_q: dict[int, list[tuple[int, object]]] = {}
     for qid, terms in terms_by_q.items():
-        exp = sorted(exp_by_q.get(qid, []))
+        exp = prefix_expansions(vocab, terms[-1], max_expansions)
         if not exp:
             continue
         slots = [(i, t) for i, t in enumerate(terms[:-1])]
@@ -732,7 +757,7 @@ def phrase_prefix_match(
 
 def phrase_topk(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,
@@ -748,8 +773,9 @@ def phrase_topk(
     f*(k1+1)/(f + k1*(1-b+b*dl/avgdl)), idf the Lucene BM25 idf. freq is
     this engine's n_matches (distinct matching anchors; = exact phrase
     occurrences at slop 0). Returns (query_id, rank, doc_id, score), ranked
-    by (-score, doc_id); one Spark job through :func:`positional_eval`,
-    with idf from the fetched df and the top-k cut in the calling process.
+    by (-score, doc_id); evaluated by :func:`positional_eval` (no Spark
+    job for a published index), with idf from the fetched df and the
+    top-k cut in the calling process.
 
     ``k=None`` skips the rank cut and returns the FULL scored match set
     (query_id, doc_id, score) — the building block multi_match

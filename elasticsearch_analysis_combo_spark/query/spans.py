@@ -23,10 +23,11 @@ per-doc Python loop:
   valid window reports >= 1.)
 
 Physical plan: every span query runs on ``phrase.positional_eval``, the
-evaluator ``phrase_match`` uses — one Spark job fetches the batch's
-distinct terms' compressed posting rows, each term is decoded once, and
-every query is matched in the calling process. ``range_bits`` switches to
-the doc-range fan-out for stop-word-grade terms.
+evaluator ``phrase_match`` uses — the batch's distinct terms' compressed
+posting rows are fetched once (in process with pyarrow for a published
+index, with one Spark job for a posting DataFrame), each term is decoded
+once, and every query is matched in the calling process. ``range_bits``
+switches to the doc-range fan-out for stop-word-grade terms.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.phrase import (
     _BAND,
     _POS_BIAS,
@@ -248,15 +250,15 @@ def analyze_span_terms(
 
 def span_near_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
     in_order: bool = True,
 ) -> DataFrame:
     """(query_id, doc_id, n_matches) for docs where the query's terms
-    co-occur within the slop window (see module docstring); one Spark job
-    through :func:`positional_eval`, like phrase_match."""
+    co-occur within the slop window (see module docstring), evaluated by
+    :func:`positional_eval`, like phrase_match."""
     terms_by_q = analyze_span_terms(queries, config)
     return positional_eval(
         spark, postings, terms_by_q,
@@ -268,7 +270,7 @@ def span_near_match(
 
 def span_or_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     range_bits: int | None = None,
@@ -286,7 +288,7 @@ def span_or_match(
 
 def span_first_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     end: int,
@@ -307,7 +309,7 @@ def span_first_match(
 
 def span_not_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str, str]],
     config: ComboConfig,
     pre: int = 0,
@@ -340,7 +342,7 @@ def span_not_match(
 
 def span_near_match_partitioned(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -479,7 +481,7 @@ def _within_family_terms(
 
 def span_within_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -503,7 +505,7 @@ def span_within_match(
 
 def span_containing_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str, str]],
     config: ComboConfig,
     slop: int = 0,

@@ -18,11 +18,13 @@ result must equal exhaustive evaluation. Three properties guarantee it:
   and reproducible (the pure-Python oracle sums the same way; the Spark
   exhaustive path is compared at 1e-9).
 
-Distribution: one Spark job per request. The batch's distinct query terms'
-posting rows (compressed blocks, positions pruned from the scan) are
-fetched once into the calling process, and each query is scored there;
-per-query work is WAND-pruned. Past ``PARTITIONED_THRESHOLD`` docs the
-engine uses :func:`wand_topk_partitioned`, one task per (query, doc-range).
+Distribution: the batch's distinct query terms' posting rows (compressed
+blocks, positions left unread) are fetched once into the calling process,
+and each query is scored there; per-query work is WAND-pruned. A
+published index is read with pyarrow (``InvertedIndex.term_blocks``), so
+the request runs no Spark job; any other posting DataFrame is fetched
+with one. Past ``PARTITIONED_THRESHOLD`` docs the engine uses
+:func:`wand_topk_partitioned`, one task per (query, doc-range).
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ from elasticsearch_analysis_combo_spark.operators.postings import (
     doc_range_bounds,
     fetch_term_blocks,
 )
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
 
 TOPK_SCHEMA = T.StructType(
@@ -347,20 +350,19 @@ def config_from_meta(meta_config: dict) -> ComboConfig:
 
 def wand_topk(
     spark: SparkSession,
-    index,
+    index: InvertedIndex,
     queries: list[tuple[int, str]],
     config: ComboConfig | None = None,
     k: int = 10,
     dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
-    """Block-max WAND over a built index directory. The term filter is
-    pushed into the parquet scan and the posting table is term-sorted, so
-    row-group min/max stats prune I/O."""
+    """Block-max WAND over a built index, its posting rows read in process
+    from the handle's generation (no Spark job)."""
     meta = index.meta
     if config is None:
         config = config_from_meta(meta.config)
     return wand_topk_from_postings(
-        spark, index.postings(), queries, config,
+        spark, index, queries, config,
         n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
         dense_max_postings=dense_max_postings,
     )
@@ -376,7 +378,7 @@ def posting_scan(postings: DataFrame, terms) -> DataFrame:
 
 def wand_topk_from_postings(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,
@@ -386,19 +388,24 @@ def wand_topk_from_postings(
     k: int = 10,
     dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
-    """Block-max WAND over any posting DataFrame (materialized table or
-    freshly-built pipeline output) in one Spark job: the posting rows of
-    the batch's distinct terms are fetched once (:func:`posting_scan`) and
-    every query is scored in the calling process by
-    :func:`wand_topk_single` (dense-dispatched below
-    ``dense_max_postings`` postings). Returns a LocalTableScan frame."""
+    """Block-max WAND over a published index or any posting DataFrame
+    (materialized table or freshly-built pipeline output): the posting
+    rows of the batch's distinct terms are fetched once and every query is
+    scored in the calling process by :func:`wand_topk_single`
+    (dense-dispatched below ``dense_max_postings`` postings). An
+    :class:`InvertedIndex` is read with pyarrow and runs no Spark job; a
+    DataFrame is fetched through :func:`posting_scan` with one. Returns a
+    LocalTableScan frame."""
     terms_by_q: dict[int, set[str]] = {}
     for qid, term in analyze_queries(queries, config):
         terms_by_q.setdefault(qid, set()).add(term)
     all_terms = set().union(*terms_by_q.values())
-    fetched = (
-        fetch_term_blocks(posting_scan(postings, all_terms)) if all_terms else {}
-    )
+    if isinstance(postings, InvertedIndex):
+        fetched = postings.term_blocks(all_terms)
+    elif all_terms:
+        fetched = fetch_term_blocks(posting_scan(postings, all_terms))
+    else:
+        fetched = {}
     by_term = {
         term: (float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))), blocks)
         for term, (df_t, blocks) in fetched.items()

@@ -144,37 +144,161 @@ def test_partial_resume_rebuilds_missing_stage(built, spark):
     )
 
 
-def test_search_and_phrase_issue_one_job_each(built, spark):
+def test_search_and_phrase_issue_no_job(built, spark):
     """engine.search (one query or a 32-query batch) and the positional
-    queries (phrase, hit or miss, ranked phrase, span_near, span_or,
-    intervals) each fetch their terms' posting rows with one Spark job and
-    score them in the calling process; collecting the result issues no
-    further job."""
+    queries (phrase, hit or miss, ranked phrase, phrase prefix, span_near,
+    span_or, intervals) read their terms' posting rows from the published
+    parquet with pyarrow and score them in the calling process: no
+    request issues a Spark job, collecting included. Each answer equals
+    the same evaluator fed the posting DataFrame (the Spark fetch), in
+    rank, doc id and exact score."""
     from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
+    from elasticsearch_analysis_combo_spark.query.intervals import (
+        intervals_match,
+    )
+    from elasticsearch_analysis_combo_spark.query.phrase import (
+        phrase_match,
+        phrase_prefix_match,
+        phrase_topk,
+    )
+    from elasticsearch_analysis_combo_spark.query.spans import (
+        span_near_match,
+        span_or_match,
+    )
+    from elasticsearch_analysis_combo_spark.query.wand import (
+        config_from_meta,
+        wand_topk_from_postings,
+    )
 
     from tests.test_checkpoint_lineage import _jobs
 
     _, docs, idx_dir, _ = built
     engine = ComboSearchEngine(spark, CFG, idx_dir)
-    engine.idx.postings()  # the handle reads the table's schema once
     batch = [(i, " ".join(docs[i][1].split()[:3])) for i in range(32)]
+    rule = {"match": {"query": "def the", "max_gaps": 2}}
+    requests = {
+        "search": lambda: engine.search("merge segment"),
+        "batch": lambda: engine.search(batch),
+        "phrase": lambda: engine.phrase("def the"),
+        "phrase-miss": lambda: engine.phrase("def zzz_no_such_term"),
+        "phrase-ranked": lambda: engine.phrase_ranked("def the"),
+        "phrase-prefix": lambda: engine.phrase_prefix("def th"),
+        "span-near": lambda: engine.span_near("def the", slop=2),
+        "span-or": lambda: engine.span_or("merge segment"),
+        "intervals": lambda: engine.intervals(rule),
+    }
+    out = {}
+    for name, request in requests.items():
+        n = _jobs(spark, f"request-{name}",
+                  lambda: out.update({name: request().collect()}))
+        assert n == 0, (name, n)
+    assert out["search"] and out["phrase"] and not out["phrase-miss"]
+    assert out["phrase-ranked"] and out["phrase-prefix"]
+    assert out["span-near"] and out["span-or"] and out["intervals"]
+    assert {r["query_id"] for r in out["batch"]} == set(range(32))
+
+    idx = engine.idx
+    cfg, meta, plists = config_from_meta(idx.meta.config), idx.meta, idx.postings()
+    bm25 = dict(n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b)
+    via_spark = {
+        "search": wand_topk_from_postings(
+            spark, plists, [(0, "merge segment")], cfg, k=10, **bm25),
+        "batch": wand_topk_from_postings(
+            spark, plists, batch, cfg, k=10, **bm25),
+        "phrase": phrase_match(spark, plists, [(0, "def the")], cfg),
+        "phrase-miss": phrase_match(
+            spark, plists, [(0, "def zzz_no_such_term")], cfg),
+        "phrase-ranked": phrase_topk(
+            spark, plists, [(0, "def the")], cfg, k=10, **bm25),
+        "phrase-prefix": phrase_prefix_match(
+            spark, plists, idx.term_df(), [(0, "def th")], cfg),
+        "span-near": span_near_match(
+            spark, plists, [(0, "def the")], cfg, slop=2),
+        "span-or": span_or_match(spark, plists, [(0, "merge segment")], cfg),
+        "intervals": intervals_match(spark, plists, [(0, rule)], cfg),
+    }
+    for name, frame in via_spark.items():
+        assert [tuple(r) for r in out[name]] == [
+            tuple(r) for r in frame.collect()
+        ], name
+
+
+def test_unknown_terms_answer_empty_without_a_job(built, spark):
+    """A query whose terms are all unknown reads no posting row and
+    returns an empty frame, with no Spark job."""
+    from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
+
+    from tests.test_checkpoint_lineage import _jobs
+
+    _, _, idx_dir, _ = built
+    engine = ComboSearchEngine(spark, CFG, idx_dir)
+    unknown = "zzzqqq xyzzyabsent"
+    assert engine.idx.term_blocks(set(unknown.split())) == {}
     out = {}
     requests = {
-        "search": lambda: engine.search("merge segment").collect(),
-        "batch": lambda: engine.search(batch).collect(),
-        "phrase": lambda: engine.phrase("def the").collect(),
-        "phrase-miss": lambda: engine.phrase("def zzz_no_such_term").collect(),
-        "phrase-ranked": lambda: engine.phrase_ranked("def the").collect(),
-        "span-near": lambda: engine.span_near("def the", slop=2).collect(),
-        "span-or": lambda: engine.span_or("merge segment").collect(),
-        "intervals": lambda: engine.intervals(
-            {"match": {"query": "def the", "max_gaps": 2}}
-        ).collect(),
+        "search": lambda: engine.search(unknown),
+        "phrase": lambda: engine.phrase(unknown),
+        "span-or": lambda: engine.span_or(unknown),
+        "phrase-prefix": lambda: engine.phrase_prefix("def xyzzyabsent"),
     }
     for name, request in requests.items():
-        n = _jobs(spark, f"request-{name}", lambda: out.update({name: request()}))
-        assert n == 1, (name, n)
-    assert out["search"] and out["phrase"] and not out["phrase-miss"]
-    assert out["phrase-ranked"] and out["span-near"] and out["span-or"]
-    assert out["intervals"]
-    assert {r["query_id"] for r in out["batch"]} == set(range(32))
+        n = _jobs(spark, f"unknown-{name}",
+                  lambda: out.update({name: request().collect()}))
+        assert n == 0, (name, n)
+        assert out[name] == [], name
+
+
+def test_posting_lookup_prunes_row_groups(spark, tmp_path):
+    """On a term-sorted posting file of many row groups, the handle's
+    term filter keeps exactly the row groups whose [min, max] term range
+    covers a query term, and the handle's read returns those terms'
+    rows."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from elasticsearch_analysis_combo_spark.plans.index_build import (
+        IndexMeta,
+        InvertedIndex,
+        _write_meta,
+        term_filter,
+    )
+
+    terms = [f"t{i:04d}" for i in range(400)]
+    block = {"first_doc": 1, "last_doc": 1, "n": 1, "max_impact": 0.5,
+             "data": b"\x01", "pos_data": b"\x02"}
+    blocks = pa.array([[block]] * 400, pa.list_(pa.struct([
+        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+        ("n", pa.int32()), ("max_impact", pa.float64()),
+        ("data", pa.binary()), ("pos_data", pa.binary()),
+    ])))
+    table = pa.table({
+        "term": terms, "run_idx": pa.array([0] * 400, pa.int32()),
+        "df": list(range(1, 401)), "cf": [1] * 400,
+        "max_impact": [0.5] * 400, "blocks": blocks,
+    })
+    (tmp_path / "postings").mkdir()
+    pq.write_table(table, tmp_path / "postings" / "part-0.parquet",
+                   row_group_size=10)
+    _write_meta(str(tmp_path), IndexMeta(
+        n_docs=1, avgdl=1.0, k1=1.2, b=0.75, block_size=128, salt_shards=8,
+        config={}, with_positions=True,
+    ))
+
+    query = ["t0005", "t0123", "t0399", "t9999"]
+    (part,) = pads.dataset(str(tmp_path / "postings")).get_fragments()
+    kept = [g.row_groups[0].id
+            for g in part.split_by_row_group(term_filter(query))]
+    md = part.metadata
+    assert md.num_row_groups == 40
+    covering = [
+        rg for rg in range(md.num_row_groups)
+        if any(md.row_group(rg).column(0).statistics.min <= t
+               <= md.row_group(rg).column(0).statistics.max for t in query)
+    ]
+    assert kept == covering == [0, 12, 39]
+
+    got = InvertedIndex(spark, str(tmp_path)).term_blocks(query)
+    assert sorted(got) == ["t0005", "t0123", "t0399"]
+    assert got["t0123"] == (124.0, [{k: v for k, v in block.items()
+                                     if k != "pos_data"}])

@@ -130,6 +130,38 @@ def test_upsert_and_delete_compact(spark, tmp_path):
     assert [r["doc_id"] for r in hits] == [999_999_001]
 
 
+def test_handle_reads_its_own_generation(spark, tmp_path):
+    """The in-process posting read follows the generation a handle's
+    meta.json named when it was opened: handles opened before a compact
+    (read before it or first read after it) keep answering from the old
+    generation, and a handle opened after it sees an upserted marker
+    term."""
+    from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
+
+    rows = _corpus(seed=11, n=30)
+    read_before = _build(spark, rows, tmp_path / "live")
+    old_hits = _topk(spark, read_before)
+    old_phrase = phrase_match(
+        spark, read_before, [(0, "the quick")], CFG).collect()
+    first_read_after = InvertedIndex(spark, read_before.index_dir)
+    marker = "zebracrossing"
+    upsert_docs(spark, read_before.index_dir, spark.createDataFrame(
+        [(rows[0][0], f"{marker} quick fox")], "doc_id long, content string"))
+    opened_after = compact(spark, read_before.index_dir)
+
+    for old in (read_before, first_read_after):
+        assert _topk(spark, old) == old_hits
+        assert phrase_match(
+            spark, old, [(0, "the quick")], CFG).collect() == old_phrase
+        assert old.term_blocks([marker]) == {}
+        assert wand_topk(spark, old, [(0, marker)], CFG).collect() == []
+    hits = wand_topk(spark, opened_after, [(0, marker)], CFG, k=5).collect()
+    assert [r["doc_id"] for r in hits] == [rows[0][0]]
+    assert phrase_match(
+        spark, opened_after, [(0, f"{marker} quick")], CFG,
+    ).select("doc_id").collect()[0]["doc_id"] == rows[0][0]
+
+
 def test_compact_noop_without_pending(spark, tmp_path):
     rows = _corpus(seed=9, n=20)
     idx = _build(spark, rows, tmp_path / "live")

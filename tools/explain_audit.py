@@ -909,19 +909,31 @@ def main() -> None:
 
     # 47. (r6 opt) WAND sheds positions BEFORE the scan: arrays_zip field
     # extraction keeps nested schema pruning, so pos_data must be absent
-    # from the posting scan's ReadSchema and from the whole plan. The WAND
-    # result is a LocalTableScan, so the check reads the plan of the fetch
-    # scan that wand_topk_from_postings runs.
+    # from the posting scan's ReadSchema and from the whole plan. The check
+    # reads the plan of the fetch scan that the partitioned WAND and
+    # wand_topk_from_postings over a posting DataFrame run.
+    from elasticsearch_analysis_combo_spark.plans.index_build import (
+        posting_read_columns,
+    )
     from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
     from elasticsearch_analysis_combo_spark.query.wand import posting_scan
 
-    p = plan_text(posting_scan(
-        idx.postings(),
-        {t for _, t in analyze_queries([(0, "spark query")], cfg)},
-    ))
+    wand_terms = {t for _, t in analyze_queries([(0, "spark query")], cfg)}
+    p = plan_text(posting_scan(idx.postings(), wand_terms))
     ok = "pos_data" not in p and "PushedFilters: [In(term" in p
     print(f"{'OK ' if ok else 'FAIL'} WAND never reads pos_data "
           f"(nested-pruned scan) + term pushdown")
+    failures += not ok
+    # the unpartitioned WAND reads a published index in process
+    # (InvertedIndex.term_blocks): its parquet read names no pos_data leaf
+    read = idx.term_blocks(wand_terms)
+    ok = (
+        bool(read)
+        and not any("pos_data" in c for c in posting_read_columns(False))
+        and all("pos_data" not in bl for _, bls in read.values() for bl in bls)
+    )
+    print(f"{'OK ' if ok else 'FAIL'} handle WAND read requests no "
+          f"pos_data leaf")
     failures += not ok
 
     # 48. (r6 opt) tiny query dims are LocalTableScan, not Python-RDD
