@@ -194,14 +194,14 @@ def q_bm25_topk_wand(spark, sf_dir):
     (one shuffle, vectorized block encode) -> block-max WAND. Exact:
     oracle is plain BM25."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.wand import wand_topk_from_postings
 
     stats = _term_stats(spark, sf_dir).cache()
     n_docs, avgdl = _corpus_stats(stats)
-    postings = build_postings(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                              with_positions=False)
+    postings = posting_frame(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
+                             with_positions=False)
     out = wand_topk_from_postings(
         spark, postings, BM25_QUERIES, _ws_config(),
         n_docs=n_docs, avgdl=avgdl, k1=K1, b=B, k=TOPK,
@@ -214,14 +214,14 @@ def q_bm25_topk_wand_partitioned(spark, sf_dir):
     per-range top-k merged globally) — the 100 TB path for stop-word-heavy
     queries. Oracle: plain BM25; must be rank-identical."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.wand import wand_topk_partitioned
 
     stats = _term_stats(spark, sf_dir).cache()
     n_docs, avgdl = _corpus_stats(stats)
-    postings = build_postings(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
-                              with_positions=False)
+    postings = posting_frame(stats, avgdl=avgdl, k1=K1, b=B, block_size=128,
+                             with_positions=False)
     out = wand_topk_partitioned(
         spark, postings, BM25_QUERIES, _ws_config(),
         n_docs=n_docs, avgdl=avgdl, k1=K1, b=B, k=TOPK, range_bits=3,
@@ -890,7 +890,7 @@ def q_multi_match_best(spark, sf_dir):
     one block-max WAND pass per field — exact (containment proof in
     multifield.py), ships n_fields*k candidates per query."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.multifield import (
         field_corpus_stats,
@@ -902,8 +902,8 @@ def q_multi_match_best(spark, sf_dir):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        postings[f] = build_postings(s, avgdl=avgdl, k1=K1, b=B,
-                                     block_size=128, with_positions=False)
+        postings[f] = posting_frame(s, avgdl=avgdl, k1=K1, b=B,
+                                    block_size=128, with_positions=False)
     out = multi_match_wand_topk(
         spark, postings, meta, BM25_QUERIES, _ws_config(),
         boosts=MM_BOOSTS, k=TOPK, k1=K1, b=B,
@@ -935,7 +935,7 @@ def q_multi_match_phrase(spark, sf_dir):
     (phrase_topk k=None), so losing-field contributions survive the
     blend. Query 2 matches nothing (empty-set edge)."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.multifield import (
         field_corpus_stats,
@@ -947,8 +947,8 @@ def q_multi_match_phrase(spark, sf_dir):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        postings[f] = build_postings(s, avgdl=avgdl, k1=K1, b=B,
-                                     block_size=128, with_positions=True)
+        postings[f] = posting_frame(s, avgdl=avgdl, k1=K1, b=B,
+                                    block_size=128, with_positions=True)
     out = multi_match_phrase_topk(
         spark, postings, meta, MM_PHRASES, _ws_config(),
         boosts=MM_BOOSTS, tie_breaker=MM_TIE_BREAKER, k=TOPK,
@@ -1161,7 +1161,7 @@ def q_multi_match_phrase_prefix(spark, sf_dir):
     constituent's pruned stats scan; boosted field scores dis-max blend.
     Query 2 matches nothing (fixed term absent)."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.multifield import (
         field_corpus_stats,
@@ -1177,8 +1177,8 @@ def q_multi_match_phrase_prefix(spark, sf_dir):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        postings[f] = build_postings(s, avgdl=avgdl, k1=K1, b=B,
-                                     block_size=128, with_positions=True)
+        postings[f] = posting_frame(s, avgdl=avgdl, k1=K1, b=B,
+                                    block_size=128, with_positions=True)
     out = multi_match_phrase_prefix_topk(
         spark, postings, tdfs, stats, meta, MM_PP_QUERIES, _ws_config(),
         boosts=MM_BOOSTS, tie_breaker=MM_TIE_BREAKER, k=TOPK,
@@ -4195,14 +4195,14 @@ def q_phrase_match(spark, sf_dir):
     """Positional phrase matching over the compressed posting pipeline
     (positions payload end-to-end: analysis -> blocks -> decode)."""
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
 
     stats = _term_stats(spark, sf_dir)
     n_docs, avgdl = 0, 50.0  # impact metadata irrelevant for phrase matching
-    postings = build_postings(stats, avgdl=avgdl, block_size=128,
-                              with_positions=True)
+    postings = posting_frame(stats, avgdl=avgdl, block_size=128,
+                             with_positions=True)
     out = phrase_match(spark, postings, PHRASES, _ws_config())
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
@@ -4244,12 +4244,12 @@ WITH toks AS (
 
 def _phrase_postings(spark, sf_dir):
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
 
     stats = _term_stats(spark, sf_dir)
-    return build_postings(stats, avgdl=50.0, block_size=128,
-                          with_positions=True)
+    return posting_frame(stats, avgdl=50.0, block_size=128,
+                         with_positions=True)
 
 
 def q_phrase_partitioned(spark, sf_dir):
@@ -6135,7 +6135,7 @@ def q_phrase_shingle_accel(spark, sf_dir):
         build_term_stats,
     )
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
     from elasticsearch_analysis_combo_spark.query.phrase import (
         phrase_match_shingles,
@@ -6144,8 +6144,8 @@ def q_phrase_shingle_accel(spark, sf_dir):
     d = _docs(spark, sf_dir)
     sh_cfg = ComboConfig([make_word_shingle_tokenizer("whitespace", size=2)])
     stats = build_term_stats(d, sh_cfg, content_col="text")
-    post = build_postings(stats, avgdl=50.0, block_size=128,
-                          with_positions=True)
+    post = posting_frame(stats, avgdl=50.0, block_size=128,
+                         with_positions=True)
     out = phrase_match_shingles(spark, post, PHRASES, _ws_config())
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),

@@ -37,7 +37,9 @@ from elasticsearch_analysis_combo_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_candidates,
 )
 from elasticsearch_analysis_combo_spark.operators.postings import (  # noqa: E402
+    PostingFrame,
     build_postings,
+    doc_table,
 )
 from elasticsearch_analysis_combo_spark.operators.similarity import (  # noqa: E402
     brute_force_cosine_topk,
@@ -168,11 +170,8 @@ def main() -> None:
         from concurrent.futures import ThreadPoolExecutor
 
         def _docstats():
-            g = (
-                stats.select("doc_id", "dl").distinct()
-                .agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
-            )
-            return int(g["n"]), float(g["a"])
+            docs = doc_table(stats)
+            return docs, float(docs.dl.sum()) / max(docs.dl.size, 1)
 
         def _hot():
             # mirror build_index's default salting threshold (df >=
@@ -192,15 +191,16 @@ def main() -> None:
 
         with ThreadPoolExecutor(2) as ex:
             f1, f2 = ex.submit(_docstats), ex.submit(_hot)
-            (n_idx, avgdl), hot_list = f1.result(), f2.result()
+            (docs, avgdl), hot_list = f1.result(), f2.result()
+        n_idx = int(docs.doc_ids.size)
         hot = spark.createDataFrame([(t,) for t in hot_list] or [("",)], "term string")
-        postings = build_postings(stats, avgdl=avgdl, hot_terms=hot, salt_shards=8,
-                                  with_positions=True)
+        postings = build_postings(stats, docs, avgdl=avgdl, hot_terms=hot,
+                                  salt_shards=8, with_positions=True)
         # already term-clustered+sorted per partition (grouped_map_sorted)
         postings.write.mode("overwrite").parquet(f"{out_dir}/postings")
         build_times.append(time.time() - t0)
     timings["index_build"] = min(build_times)
-    postings = spark.read.parquet(f"{out_dir}/postings")
+    postings = PostingFrame(spark.read.parquet(f"{out_dir}/postings"), docs)
 
     # --- WAND batch + per-batch repeats for a stable p50 ---
     wand_times = []

@@ -28,7 +28,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig  # noqa: E402
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats  # noqa: E402
-from elasticsearch_analysis_combo_spark.operators.postings import build_postings  # noqa: E402
+from elasticsearch_analysis_combo_spark.operators.postings import (  # noqa: E402
+    PostingFrame,
+    build_postings,
+    doc_table,
+)
 from elasticsearch_analysis_combo_spark.session import get_spark  # noqa: E402
 from elasticsearch_analysis_combo_spark.sources.corpus import documents_as_corpus  # noqa: E402
 
@@ -107,10 +111,8 @@ def main() -> None:
         from concurrent.futures import ThreadPoolExecutor
 
         def _docstats():
-            g = (stats.select("doc_id", "dl").distinct()
-                 .agg(F.count("*").alias("n"), F.avg("dl").alias("a"))
-                 .collect()[0])
-            return int(g["n"]), float(g["a"])
+            docs = doc_table(stats)
+            return docs, float(docs.dl.sum()) / max(docs.dl.size, 1)
 
         def _hot():
             frac = 0.05
@@ -122,10 +124,11 @@ def main() -> None:
 
         with ThreadPoolExecutor(2) as ex:
             f1, f2 = ex.submit(_docstats), ex.submit(_hot)
-            (n_idx, avgdl), hot_list = f1.result(), f2.result()
+            (docs, avgdl), hot_list = f1.result(), f2.result()
+        n_idx = int(docs.doc_ids.size)
         hot = spark.createDataFrame([(t,) for t in hot_list] or [("",)],
                                     "term string")
-        postings_df = build_postings(stats, avgdl=avgdl, hot_terms=hot,
+        postings_df = build_postings(stats, docs, avgdl=avgdl, hot_terms=hot,
                                      salt_shards=8, with_positions=True)
         postings_df.write.mode("overwrite").parquet(f"{d}/postings")
         build_reps.append(time.time() - t0)
@@ -142,21 +145,21 @@ def main() -> None:
         stats = build_term_stats(corpus, CFG, content_col="content")
         stats.write.mode("overwrite").parquet(f"{d}/term_stats")
         stats = spark.read.parquet(f"{d}/term_stats")
-        g = (stats.select("doc_id", "dl").distinct()
-             .agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0])
-        n_idx, avgdl = int(g["n"]), float(g["a"])
+        docs = doc_table(stats)
+        n_idx = int(docs.doc_ids.size)
+        avgdl = float(docs.dl.sum()) / max(n_idx, 1)
         hot_list = [r["term"] for r in stats.sample(0.05, seed=42)
                     .groupBy("term").agg(F.count("*").alias("df"))
                     .filter(F.col("df") >= max(4, int(max(512, n_docs // 10) * 0.05)))
                     .collect()]
         hot = spark.createDataFrame([(t,) for t in hot_list] or [("",)],
                                     "term string")
-        build_postings(stats, avgdl=avgdl, hot_terms=hot, salt_shards=8,
+        build_postings(stats, docs, avgdl=avgdl, hot_terms=hot, salt_shards=8,
                        with_positions=True).write.mode("overwrite").parquet(
             f"{d}/postings")
         out_dir = d
     stats = spark.read.parquet(f"{out_dir}/term_stats")
-    postings = spark.read.parquet(f"{out_dir}/postings")
+    postings = PostingFrame(spark.read.parquet(f"{out_dir}/postings"), docs)
     term_df = stats.groupBy("term").agg(F.count("*").alias("df"))
 
     from elasticsearch_analysis_combo_spark.query.wand import (

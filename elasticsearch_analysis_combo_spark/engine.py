@@ -139,7 +139,7 @@ class ComboSearchEngine:
 
             meta = self.idx.meta
             hits = wand_topk_partitioned(
-                self.spark, self.idx.postings(), queries, cfg,
+                self.spark, self.idx, queries, cfg,
                 n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b,
                 k=k, range_bits=range_bits,
             )
@@ -253,7 +253,7 @@ class ComboSearchEngine:
 
         idx = self.idx
         return retriever_search(
-            self.spark, idx.term_stats(), idx.term_df(), idx.postings(),
+            self.spark, idx.term_stats(), idx.term_df(), idx,
             tree, self._query_config(), idx.meta.n_docs, idx.meta.avgdl,
             emb=emb, doc_meta=doc_meta, k=k, k1=idx.meta.k1,
             b=idx.meta.b, knn_mode=knn_mode,
@@ -277,7 +277,7 @@ class ComboSearchEngine:
 
         idx = self.idx
         return hybrid_search(
-            self.spark, idx.term_stats(), idx.term_df(), idx.postings(),
+            self.spark, idx.term_stats(), idx.term_df(), idx,
             body, self._query_config(), idx.meta.n_docs, idx.meta.avgdl,
             emb, doc_meta=doc_meta, k=k, k1=idx.meta.k1, b=idx.meta.b,
             knn_mode=knn_mode,
@@ -305,7 +305,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return simple_query_string_topk(
-            self.spark, idx.term_stats(), idx.term_df(), idx.postings(),
+            self.spark, idx.term_stats(), idx.term_df(), idx,
             [(0, query)], self._query_config(), idx.meta.n_docs,
             idx.meta.avgdl, default_operator=default_operator, k=k,
             k1=idx.meta.k1, b=idx.meta.b,
@@ -472,7 +472,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return rescore_phrase_topk(
-            self.spark, idx.postings(), idx.term_stats(), idx.term_df(),
+            self.spark, idx, idx.term_stats(), idx.term_df(),
             [(0, query)], self._query_config(), idx.meta.n_docs,
             idx.meta.avgdl, window_size=window_size,
             rescore_weight=rescore_weight, slop=slop, k=k,
@@ -663,7 +663,7 @@ class ComboSearchEngine:
             )
 
             return phrase_match_partitioned(
-                self.spark, self.idx.postings(), queries, cfg,
+                self.spark, self.idx, queries, cfg,
                 slop=slop, range_bits=range_bits,
             )
         return phrase_match(self.spark, self.idx, queries, cfg, slop=slop)
@@ -691,7 +691,7 @@ class ComboSearchEngine:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         if partitioned:
             return span_near_match_partitioned(
-                self.spark, self.idx.postings(), queries,
+                self.spark, self.idx, queries,
                 self._query_config(), slop=slop, in_order=in_order,
                 range_bits=range_bits,
             )
@@ -800,7 +800,7 @@ class ComboSearchEngine:
         if partitioned is None:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         return span_multi_near_match(
-            self.spark, self.idx.postings(), self.idx.term_df(),
+            self.spark, self.idx, self.idx.term_df(),
             {0: resolved}, slop=slop, in_order=in_order,
             max_expansions=max_expansions,
             range_bits=range_bits if partitioned else None,
@@ -923,7 +923,7 @@ class ComboSearchEngine:
             partitioned = self.idx.meta.n_docs >= self.PARTITIONED_THRESHOLD
         idx = self.idx
         return dsl_topk(
-            self.spark, idx.term_stats(), idx.term_df(), idx.postings(),
+            self.spark, idx.term_stats(), idx.term_df(), idx,
             queries, self._query_config(), idx.meta.n_docs, idx.meta.avgdl,
             doc_meta=doc_meta, k=k, k1=idx.meta.k1, b=idx.meta.b,
             partitioned_phrases=partitioned,
@@ -2029,7 +2029,7 @@ class MultiFieldSearchEngine:
                 k1=self.k1, b=self.b, field_meta=meta,
             )
         if kind == "best_fields" and tie_breaker == 0.0:
-            postings = {f: e.idx.postings() for f, e in engines.items()}
+            postings = {f: e.idx for f, e in engines.items()}
             meta = {
                 f: (e.idx.meta.n_docs, e.idx.meta.avgdl)
                 for f, e in engines.items()
@@ -2091,7 +2091,7 @@ class MultiFieldSearchEngine:
             raise ValueError("no fields indexed: call index() first")
         engines = {f: self._engine(f) for f in use}
         cfgs = {f: e._query_config() for f, e in engines.items()}
-        postings = {f: e.idx.postings() for f, e in engines.items()}
+        postings = {f: e.idx for f, e in engines.items()}
         meta = {
             f: (e.idx.meta.n_docs, e.idx.meta.avgdl)
             for f, e in engines.items()
@@ -2137,7 +2137,7 @@ class MultiFieldSearchEngine:
         cfgs = {f: e._query_config() for f, e in engines.items()}
         return multi_match_phrase_prefix_topk(
             self.spark,
-            {f: e.idx.postings() for f, e in engines.items()},
+            {f: e.idx for f, e in engines.items()},
             {f: e.idx.term_df() for f, e in engines.items()},
             {f: e.idx.term_stats() for f, e in engines.items()},
             {

@@ -12,20 +12,30 @@ direction:
 * decode: terminator scan (`byte < 0x80`), segmented accumulate with one
   masked pass per byte position.
 
-Block layout (one posting block, default 128 docs):
-  ``data``     — varint stream of interleaved (doc_gap, tf, dl) triples;
-                 first gap is relative to ``prev_last_doc`` handed in by the
-                 caller (blocks are independent given their header).
+Block layout (one posting block, default 128 docs). Docs are numbered
+by their ORDINAL: a generation's docs sorted by doc_id get 0..N-1, as
+Lucene numbers a segment's docs. Document length is not in the block: it
+is a per-doc norms column (``doc_stats.dl``, gathered by ordinal at query
+time), as Lucene keeps norms beside its postings.
+  ``data``     — varint stream of interleaved (ordinal_gap, tf) pairs; the
+                 first gap counts from ordinal 0, so every block decodes
+                 without its predecessor (WAND skips blocks).
   ``pos_data`` — varint stream of within-doc position deltas (first absolute),
                  doc-concatenated; per-doc counts are the decoded tfs.
-  header       — first_doc, last_doc, n, max_impact (BM25 tf-saturation
-                 upper bound; idf is a per-term constant applied at query
-                 time, so block-max pruning stays exact).
+  header       — first_doc, last_doc (ordinals), n, max_impact (BM25
+                 tf-saturation upper bound over the block's exact dl; idf
+                 is a per-term constant applied at query time, so
+                 block-max pruning stays exact).
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+#: the block layout above, recorded in every published ``meta.json`` and
+#: salted into the posting checkpoint fingerprint: an index or checkpoint
+#: of another layout is refused or rebuilt, never decoded
+POSTING_FORMAT = "ordinal-gaps-1"
 
 
 def varint_encode_with_sizes(vals: np.ndarray) -> tuple[bytes, np.ndarray]:
@@ -105,28 +115,18 @@ def delta_decode_segmented(deltas: np.ndarray, lengths: np.ndarray) -> np.ndarra
 
 
 def encode_block(
-    doc_ids: np.ndarray,
+    ords: np.ndarray,
     tfs: np.ndarray,
-    dls: np.ndarray,
     pos_flat: np.ndarray | None,
-    prev_last_doc: int,
 ) -> tuple[bytes, bytes]:
-    """Encode one block of postings (sorted by doc_id ascending).
-
-    doc_ids may be negative (xxhash64 docIDs are signed); they are biased to
-    unsigned space order-preservingly (XOR sign bit). ``pos_flat`` is the
-    block's positions flattened doc-major (lengths = tfs). Returns
-    (data, pos_data)."""
-    gaps = np.empty(doc_ids.size, dtype=np.uint64)
-    u = doc_ids.astype(np.int64).astype(np.uint64) ^ np.uint64(1 << 63)
-    prev = np.uint64(np.int64(prev_last_doc)) ^ np.uint64(1 << 63)
-    gaps[0] = u[0] - prev
-    gaps[1:] = u[1:] - u[:-1]
-    triples = np.empty(doc_ids.size * 3, dtype=np.uint64)
-    triples[0::3] = gaps
-    triples[1::3] = tfs.astype(np.uint64)
-    triples[2::3] = dls.astype(np.uint64)
-    data = varint_encode(triples)
+    """Encode one block of postings: ascending doc ordinals and their tfs.
+    ``pos_flat`` is the block's positions flattened doc-major (lengths =
+    tfs). Returns (data, pos_data)."""
+    ords = np.asarray(ords, dtype=np.int64)
+    pairs = np.empty(2 * ords.size, dtype=np.uint64)
+    pairs[0::2] = np.diff(ords, prepend=0).astype(np.uint64)
+    pairs[1::2] = tfs.astype(np.uint64)
+    data = varint_encode(pairs)
     pos_data = b""
     if pos_flat is not None and pos_flat.size:
         tfs64 = tfs.astype(np.int64, copy=False)
@@ -136,19 +136,12 @@ def encode_block(
     return data, pos_data
 
 
-def decode_block(
-    data: bytes, prev_last_doc: int, n: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode (doc_ids, tfs, dls) from one block's data stream."""
-    triples = varint_decode(data)
-    assert triples.size == 3 * n, f"block decode: {triples.size} != 3*{n}"
-    gaps = triples[0::3]
-    tfs = triples[1::3].astype(np.int64)
-    dls = triples[2::3].astype(np.int64)
-    prev = np.uint64(np.int64(prev_last_doc)) ^ np.uint64(1 << 63)
-    u = np.cumsum(gaps, dtype=np.uint64) + prev
-    doc_ids = (u ^ np.uint64(1 << 63)).astype(np.int64)
-    return doc_ids, tfs, dls
+def decode_block(data: bytes, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Decode (ordinals, tfs) from one block's data stream."""
+    pairs = varint_decode(data)
+    assert pairs.size == 2 * n, f"block decode: {pairs.size} != 2*{n}"
+    ords = np.cumsum(pairs[0::2], dtype=np.uint64).astype(np.int64)
+    return ords, pairs[1::2].astype(np.int64)
 
 
 def encode_positions_rows(flat: np.ndarray, lens: np.ndarray) -> list[bytes]:

@@ -9,15 +9,25 @@ index Spark-first:
          --repartition(term, doc range), hot terms--> per-range runs,
            renumbered in doc order + term totals joined on
 
+Doc ordinals: each generation numbers its docs 0..N-1 in doc_id order
+(:func:`doc_table`, read from the generation's doc_stats), as Lucene
+numbers a segment's docs. Blocks code ordinal gaps and tfs; a doc's
+length lives once in the doc table (the per-doc norms), not on every
+posting. The encoder maps doc_id -> ordinal with ``np.searchsorted``
+over the doc table's sorted doc ids, inside the encode pass itself: no
+join, no extra shuffle. Readers gather ``doc_ids[ordinal]`` and
+``dl[ordinal]`` back through the same table.
+
 Skew (north_rule: "salted repartition on term hash to defuse stop-token
 skew"): code corpora have Zipf stop-tokens (``the``, ``if``, ``return``);
 a plain hash-partition on term puts a whole stop-term's postings on one
 task. Hot terms — identified from the term_df stage — are salted with
-their doc-id range (:func:`doc_range`), so no task sees more than ~df/S
-postings of any term; cold terms carry no salt, so vocabulary-sized
-overhead stays at one shard per term. Ranges ascend in doc order, so the
-segment merge the reference's host performs across Lucene segments
-reduces to a run_idx renumbering: no posting is decoded or re-encoded.
+their doc range (:func:`doc_range` over :func:`range_starts`: equal
+ordinal shares), so no task sees more than ~df/S postings of any term;
+cold terms carry no salt, so vocabulary-sized overhead stays at one shard
+per term. Ranges ascend in doc order, so the segment merge the
+reference's host performs across Lucene segments reduces to a run_idx
+renumbering: no posting is decoded or re-encoded.
 
 Both branches encode through one whole-chunk vectorized encoder
 (:func:`encode_posting_rows_batched`) under grouped_map_sorted (streamed
@@ -32,8 +42,11 @@ pre-aggregated (one row per (doc, term)), never raw tokens.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,8 +91,6 @@ SHARD_SCHEMA = T.StructType(
     + POSTING_SCHEMA.fields[1:]
 )
 
-MIN_DOC = -(1 << 63)
-
 # Rows are bounded: a term's posting list is emitted as ceil(n_blocks /
 # max_blocks_per_row) rows keyed (term, run_idx), runs ascending in doc_id.
 # At block_size=128 the default caps a row at ~512k docs (a few MB
@@ -93,21 +104,98 @@ DEFAULT_MAX_BLOCKS_PER_ROW = 4096
 HOT_INSET_MAX_TERMS = 4096
 
 
-def doc_range(doc_id: Column, range_bits: int) -> Column:
-    """Doc-range id 0..2^range_bits-1 of a doc-id column: docIDs are
-    xxhash64 (uniform over int64), so the top bits of the sign-flipped id
-    split the doc space into equal ranges that ascend in doc order. The
-    hot-term salt and the range-partitioned evaluators share it."""
-    return F.shiftrightunsigned(
-        doc_id.bitwiseXOR(F.lit(MIN_DOC)), 64 - range_bits
-    ).cast("int")
+class DocTable(NamedTuple):
+    """A generation's docs in doc_id order: ordinal ``i`` is doc
+    ``doc_ids[i]``, of length ``dl[i]`` (the per-doc norms that posting
+    blocks leave out). Both arrays are int64."""
+
+    doc_ids: np.ndarray
+    dl: np.ndarray
 
 
-def doc_range_bounds(range_id: int, range_bits: int) -> tuple[int, int]:
-    """Closed [lo, hi] doc-id interval of :func:`doc_range` ``range_id``."""
-    shift = 64 - range_bits
-    lo = (range_id << shift) - (1 << 63)
-    return lo, lo + (1 << shift) - 1
+def doc_table(doc_stats: pa.Table | DataFrame) -> DocTable:
+    """The :class:`DocTable` of ``(doc_id, dl)`` rows, sorted by doc_id:
+    a doc's ordinal is its index. A pyarrow table is read as is (no Spark
+    job); a DataFrame is collected with one Spark job over its distinct
+    ``(doc_id, dl)`` rows, so a term_stats frame serves as well as a
+    doc_stats one. A doc id with two rows (or two lengths) raises
+    ValueError."""
+    if isinstance(doc_stats, DataFrame):
+        doc_stats = doc_stats.select("doc_id", "dl").distinct().toArrow()
+    ids = doc_stats.column("doc_id").to_numpy().astype(np.int64, copy=False)
+    dl = doc_stats.column("dl").to_numpy().astype(np.int64, copy=False)
+    order = np.argsort(ids, kind="stable")
+    ids, dl = ids[order], dl[order]
+    dup = ids[1:] == ids[:-1]
+    if dup.any():
+        raise ValueError(
+            f"doc_stats holds doc_id {int(ids[1:][dup][0])} more than once"
+        )
+    return DocTable(ids, dl)
+
+
+def doc_ordinals(doc_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Ordinals of ``ids`` in the sorted ``doc_ids`` of a doc table; an id
+    the table lacks raises ValueError."""
+    ords = np.searchsorted(doc_ids, ids)
+    hit = np.minimum(ords, max(doc_ids.size - 1, 0))
+    if ids.size and (ords.max() >= doc_ids.size or (doc_ids[hit] != ids).any()):
+        raise ValueError("a posting's doc_id is missing from the doc table")
+    return ords
+
+
+def range_starts(range_bits: int, n_docs: int) -> np.ndarray:
+    """The doc-range mapping: range ``r`` of ``2^range_bits`` holds the
+    ordinals ``[starts[r], starts[r + 1])``, an equal share of 0..N-1 in
+    doc_id order (a range is empty only when N < 2^range_bits). The
+    hot-term salt and the range-partitioned evaluators both use it."""
+    r = np.arange((1 << range_bits) + 1, dtype=np.int64)
+    return -(-r * n_docs // (1 << range_bits))
+
+
+def doc_range(key: Column, bounds) -> Column:
+    """Range id of ``key``: how many of the ascending ``bounds`` are <=
+    ``key``, as a balanced CASE tree (log2 depth). With ``bounds =
+    range_starts(...)[1:-1]`` it ranges an ordinal column (block headers);
+    with the doc ids at those ordinals it ranges a doc_id column the same
+    way (the hot-term salt)."""
+    def count(lo: int, hi: int) -> Column:
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(key < F.lit(int(bounds[mid])), count(lo, mid)).otherwise(
+            count(mid + 1, hi)
+        )
+
+    return count(0, len(bounds))
+
+
+def blocks_sans_positions() -> Column:
+    """``blocks`` with the (unused-by-WAND) per-block position stream
+    dropped — scoring needs only headers + the ordinal/tf stream.
+
+    Built with arrays_zip over per-field array extractions rather than a
+    transform lambda: GetArrayStructFields is visible to nested schema
+    pruning, so ``pos_data`` disappears from the parquet ReadSchema too —
+    positions are never read off disk, not just dropped pre-shuffle
+    (verified in plans/r06/wand_topk_after.txt)."""
+    return F.arrays_zip(
+        F.col("blocks.first_doc").alias("first_doc"),
+        F.col("blocks.last_doc").alias("last_doc"),
+        F.col("blocks.n").alias("n"),
+        F.col("blocks.max_impact").alias("max_impact"),
+        F.col("blocks.data").alias("data"),
+    )
+
+
+def posting_scan(postings: DataFrame, terms, positions: bool = False) -> DataFrame:
+    """``terms``' posting rows (term, run_idx, df, blocks), the term filter
+    pushed into the parquet scan. Without ``positions`` the blocks drop
+    ``pos_data``, which then leaves the scan's ReadSchema."""
+    blocks = F.col("blocks") if positions else blocks_sans_positions()
+    return postings.filter(F.col("term").isin(sorted(terms))).select(
+        "term", "run_idx", "df", blocks.alias("blocks")
+    )
 
 
 def term_blocks_from_rows(run_idxs, blocks_col) -> list:
@@ -126,7 +214,7 @@ def concat_term_runs(
     """term -> (df, blocks) over posting rows given column-wise, in any
     row order. A term's runs are concatenated in run_idx order, so each
     list stays doc-sorted; df is the term total every run row repeats.
-    Both posting fetches (:func:`fetch_term_blocks` and
+    Both posting fetches (``PostingFrame.term_blocks`` and
     ``InvertedIndex.term_blocks``) end here."""
     rows: dict[str, tuple[float, list, list]] = {}
     for term, ri, df_t, bl in zip(terms, run_idxs, dfs, blocks):
@@ -139,17 +227,48 @@ def concat_term_runs(
     }
 
 
-def fetch_term_blocks(scan: DataFrame) -> dict[str, tuple[float, list]]:
-    """term -> (df, blocks) for the posting rows of ``scan`` (term,
-    run_idx, df, blocks), fetched into the calling process with one Spark
-    job (Arrow ``toPandas``): the fetch for a posting DataFrame that is
-    not a published index (see :func:`concat_term_runs`)."""
-    pdf = scan.select("term", "run_idx", "df", "blocks").toPandas()
-    return concat_term_runs(pdf["term"], pdf["run_idx"], pdf["df"], pdf["blocks"])
+@dataclass(frozen=True)
+class PostingFrame:
+    """A posting DataFrame that is not a published index, with the doc
+    table its block ordinals index: the query evaluators take it where
+    they take an ``InvertedIndex`` (same ``postings``, ``docs`` and
+    ``term_blocks`` methods). Build the table with :func:`doc_table` over
+    the stats the postings came from."""
+
+    frame: DataFrame
+    table: DocTable
+
+    def postings(self) -> DataFrame:
+        return self.frame
+
+    def docs(self) -> DocTable:
+        return self.table
+
+    def term_blocks(
+        self, terms, positions: bool = False
+    ) -> dict[str, tuple[float, list]]:
+        """term -> (df, doc-sorted blocks) for ``terms``' posting rows,
+        fetched into the calling process with one Spark job (Arrow
+        ``toPandas`` of :func:`posting_scan`)."""
+        if not terms:
+            return {}
+        pdf = posting_scan(self.frame, terms, positions).toPandas()
+        return concat_term_runs(
+            pdf["term"], pdf["run_idx"], pdf["df"], pdf["blocks"]
+        )
+
+
+def posting_frame(term_stats: DataFrame, avgdl: float, **kw) -> PostingFrame:
+    """:func:`build_postings` over ``term_stats`` (keyword options as
+    there) with the doc table of the same stats, collected with one Spark
+    job: the posting input of a query over stats that were never
+    published."""
+    docs = doc_table(term_stats)
+    return PostingFrame(build_postings(term_stats, docs, avgdl, **kw), docs)
 
 
 def _encode_blocks(
-    doc_ids: np.ndarray,
+    ords: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
     pos_flat: np.ndarray | None,
@@ -158,25 +277,24 @@ def _encode_blocks(
     b: float,
     block_size: int,
 ) -> list[dict]:
-    """Chunk one term's sorted postings into independent compressed blocks,
-    one term at a time — the reference that encode_posting_rows_batched
-    must match bit for bit. ``pos_flat``: positions flattened doc-major
-    over the whole run (lengths = tfs), sliced per block via cumulative tf
-    offsets."""
+    """Chunk one term's postings (ascending doc ordinals) into independent
+    compressed blocks, one term at a time — the reference that
+    encode_posting_rows_batched must match bit for bit. ``dls`` only sets
+    the blocks' ``max_impact``. ``pos_flat``: positions flattened
+    doc-major over the whole run (lengths = tfs), sliced per block via
+    cumulative tf offsets."""
     blocks = []
     pos_off = None
     if pos_flat is not None:
         tfs64 = tfs.astype(np.int64, copy=False)
         pos_off = np.concatenate([[0], np.cumsum(tfs64)])
-    for off in range(0, doc_ids.size, block_size):
-        end = min(off + block_size, doc_ids.size)
-        d, t, l = doc_ids[off:end], tfs[off:end], dls[off:end]
+    for off in range(0, ords.size, block_size):
+        end = min(off + block_size, ords.size)
+        d, t, l = ords[off:end], tfs[off:end], dls[off:end]
         p = None
         if pos_flat is not None:
             p = pos_flat[pos_off[off]:pos_off[end]]
-        # independent blocks: first gap relative to MIN_DOC sentinel so any
-        # block decodes without its predecessor (WAND skips blocks)
-        data, pos_data = encode_block(d, t, l, p, MIN_DOC)
+        data, pos_data = encode_block(d, t, p)
         blocks.append(
             {
                 "first_doc": int(d[0]),
@@ -194,6 +312,7 @@ def encode_posting_rows_batched(
     cols: dict,
     starts: np.ndarray,
     ends: np.ndarray,
+    doc_ids: np.ndarray,
     avgdl: float,
     k1: float,
     b: float,
@@ -210,6 +329,9 @@ def encode_posting_rows_batched(
     Each group emits ``(*group key values, run_idx, df, cf, max_impact,
     blocks)`` rows: runs of at most ``max_blocks_per_row`` blocks numbered
     from 0, and the group's doc count and tf sum repeated on every run.
+    A row's doc id becomes its ordinal by ``np.searchsorted`` over
+    ``doc_ids``, the doc table's sorted ids; its exact ``dl`` sets the
+    blocks' ``max_impact`` and is then dropped (the doc table keeps it).
 
     Per-term Python dispatch costs ~1ms/group even with numpy bodies (the
     dominant cost of the cold posting build at vocabulary scale, measured);
@@ -217,7 +339,7 @@ def encode_posting_rows_batched(
     n = int(cols["doc_id"].size)
     if n == 0:
         return []
-    doc_ids = cols["doc_id"].astype(np.int64, copy=False)
+    ords = doc_ordinals(doc_ids, cols["doc_id"].astype(np.int64, copy=False))
     tfs = cols["tf"].astype(np.int64, copy=False)
     dls = cols["dl"].astype(np.int64, copy=False)
     G = int(starts.size)
@@ -231,25 +353,23 @@ def encode_posting_rows_batched(
     block_end_rows = np.append(block_start_rows[1:], n)
     block_lens_arr = block_end_rows - block_start_rows
 
-    # doc-gap deltas with per-block reset; the MIN_DOC sentinel biases to 0,
-    # so a block-start gap is just the biased docID (same as encode_block)
-    u = doc_ids.astype(np.uint64) ^ np.uint64(1 << 63)
-    gaps = u.copy()
-    gaps[1:] -= u[:-1]
-    gaps[block_start_rows] = u[block_start_rows]
-    triples = np.empty(3 * n, dtype=np.uint64)
-    triples[0::3] = gaps
-    triples[1::3] = tfs.astype(np.uint64)
-    triples[2::3] = dls.astype(np.uint64)
-    buf, nbytes = varint_encode_with_sizes(triples)
+    # ordinal gaps with per-block reset: a block's first gap counts from
+    # ordinal 0 (same as encode_block)
+    gaps = ords.copy()
+    gaps[1:] -= ords[:-1]
+    gaps[block_start_rows] = ords[block_start_rows]
+    pairs = np.empty(2 * n, dtype=np.uint64)
+    pairs[0::2] = gaps
+    pairs[1::2] = tfs
+    buf, nbytes = varint_encode_with_sizes(pairs)
     byte_off = np.concatenate([[0], np.cumsum(nbytes)])
-    data_starts = byte_off[3 * block_start_rows].tolist()
-    data_ends = byte_off[3 * block_end_rows].tolist()
+    data_starts = byte_off[2 * block_start_rows].tolist()
+    data_ends = byte_off[2 * block_end_rows].tolist()
 
     impacts = bm25_impact(tfs, dls, avgdl, k1, b)
     blk_max = np.maximum.reduceat(impacts, block_start_rows).tolist()
-    first_docs = doc_ids[block_start_rows].tolist()
-    last_docs = doc_ids[block_end_rows - 1].tolist()
+    first_docs = ords[block_start_rows].tolist()
+    last_docs = ords[block_end_rows - 1].tolist()
     block_lens = block_lens_arr.tolist()
 
     if with_positions:
@@ -296,6 +416,7 @@ def encode_posting_rows_batched(
 
 def build_postings(
     term_stats: DataFrame,
+    docs: DocTable,
     avgdl: float,
     hot_terms: DataFrame | None = None,
     k1: float = 1.2,
@@ -306,15 +427,19 @@ def build_postings(
     max_blocks_per_row: int = DEFAULT_MAX_BLOCKS_PER_ROW,
 ) -> DataFrame:
     """B3-B5 in the minimal number of shuffles: (doc_id, term, tf,
-    pos_data, dl) stats -> POSTING_SCHEMA rows.
+    pos_data, dl) stats -> POSTING_SCHEMA rows, docs numbered by their
+    ordinal in ``docs`` (:func:`doc_table` of the same stats). The doc
+    table's sorted ids ride in the encode closure; no join maps them.
 
     Cold terms — every term not in ``hot_terms`` (all of them when it is
     None or empty), the overwhelming majority of the vocabulary — are
     encoded straight to final posting rows in ONE shuffle. Long lists emit
     multiple bounded (term, run_idx) rows — see DEFAULT_MAX_BLOCKS_PER_ROW.
 
-    Hot terms are RANGE-salted: the salt is the term's doc-id range
-    (:func:`doc_range` over ``salt_shards`` rounded up to a power of two),
+    Hot terms are RANGE-salted: the salt is the doc's range (:func:`doc_range`
+    over :func:`range_starts` of ``salt_shards`` rounded up to a power of
+    two, bounds taken as doc ids so no ordinal is needed before the
+    shuffle),
     so each (term, salt) shard encodes to runs that are already in global
     doc order — the final posting rows are the shard runs with run_idx
     renumbered across shards and the term totals joined on (a broadcast of
@@ -337,13 +462,15 @@ def build_postings(
             f"run_idx renumbering overflows int32 at stride {RUN_STRIDE}"
         )
 
+    doc_ids = docs.doc_ids
+
     def encode(frame: DataFrame, group_keys: list[str], schema) -> DataFrame:
         def encode_batch(cols: dict, starts, ends) -> list[tuple]:
             # whole-chunk vectorized encode: the cold path touches the
             # ENTIRE vocabulary, so per-group dispatch cost (not numpy
             # work) would dominate — see encode_posting_rows_batched
             return encode_posting_rows_batched(
-                cols, starts, ends, avgdl, k1, b, block_size,
+                cols, starts, ends, doc_ids, avgdl, k1, b, block_size,
                 max_blocks_per_row, with_positions, group_keys,
             )
 
@@ -380,9 +507,10 @@ def build_postings(
         cold = flagged.filter(F.col("_hot").isNull()).drop("_hot")
         hot = flagged.filter(F.col("_hot")).drop("_hot")
     cold_postings = encode(cold, ["term"], POSTING_SCHEMA)
-    hot = hot.withColumn(
-        "salt", (doc_range(F.col("doc_id"), range_bits) + 1).cast("int")
-    )
+    starts = range_starts(range_bits, doc_ids.size)[1:-1]
+    hot = hot.withColumn("salt", doc_range(
+        F.col("doc_id"), doc_ids[starts[starts < doc_ids.size]]
+    ) + 1)
     hot_shards = encode(hot, ["term", "salt"], SHARD_SCHEMA)
     # term totals: map-side-combined aggregation over the (already
     # pre-aggregated) hot stats — scalars only; hot vocabulary is small,
@@ -413,30 +541,32 @@ def build_postings(
     return cold_postings.unionByName(hot_postings)
 
 
-def decode_segment_blocks_flat(blocks, with_positions: bool = False):
-    """Decode a row's block list -> (doc_ids, tfs, dls[, pos_flat])."""
-    ds, ts, ls, ps = [], [], [], []
+def decode_segment_blocks_flat(
+    blocks, docs: DocTable, with_positions: bool = False
+):
+    """Decode a doc-sorted block list -> (doc_ids, tfs, dls[, pos_flat]),
+    the ordinals gathered through ``docs``."""
+    os_, ts, ps = [], [], []
     for bl in blocks:
-        d, t, l = decode_block(bytes(bl["data"]), MIN_DOC, int(bl["n"]))
-        ds.append(d)
+        o, t = decode_block(bytes(bl["data"]), int(bl["n"]))
+        os_.append(o)
         ts.append(t)
-        ls.append(l)
         if with_positions:
             ps.append(decode_positions_flat(bytes(bl["pos_data"]), t))
-    doc_ids = np.concatenate(ds) if ds else np.zeros(0, dtype=np.int64)
+    ords = np.concatenate(os_) if os_ else np.zeros(0, dtype=np.int64)
     tfs = np.concatenate(ts) if ts else np.zeros(0, dtype=np.int64)
-    dls = np.concatenate(ls) if ls else np.zeros(0, dtype=np.int64)
+    out = (docs.doc_ids[ords], tfs, docs.dl[ords])
     if with_positions:
         pos_flat = np.concatenate(ps) if ps else np.zeros(0, dtype=np.int64)
-        return doc_ids, tfs, dls, pos_flat
-    return doc_ids, tfs, dls
+        return (*out, pos_flat)
+    return out
 
 
-def decode_segment_blocks(blocks, with_positions: bool = False):
+def decode_segment_blocks(blocks, docs: DocTable, with_positions: bool = False):
     """Per-doc list view of decode_segment_blocks_flat (tests/API)."""
     if not with_positions:
-        return decode_segment_blocks_flat(blocks, False)
-    doc_ids, tfs, dls, pos_flat = decode_segment_blocks_flat(blocks, True)
+        return decode_segment_blocks_flat(blocks, docs)
+    doc_ids, tfs, dls, pos_flat = decode_segment_blocks_flat(blocks, docs, True)
     ps = []
     off = 0
     for tf in tfs:

@@ -6,6 +6,12 @@ corpus -> combo analysis + per-doc aggregation (one mapInPandas pass)
 all stages checkpointed with lineage (B6), resumable mid-pipeline; each
 stage's lineage is observed on its own write job, never re-scanned.
 
+The doc_stats table doubles as the generation's doc table: sorted by
+doc_id, a doc's index is its ordinal, the number posting blocks code, and
+its ``dl`` is the per-doc norm that scoring gathers. The build reads it
+back with pyarrow right after writing it (no Spark job) and hands it to
+the posting encoder; an :class:`InvertedIndex` loads it once per handle.
+
 Physical-plan shape (local[N] or a real cluster — identical):
   * 1 Arrow-batched analysis pass over the corpus scan (no shuffle)
   * 1 shuffle to (term) for the cold-term posting encode
@@ -42,9 +48,12 @@ from elasticsearch_analysis_combo_spark.operators.checkpoint import (
     CheckpointManager,
     fingerprint,
 )
+from elasticsearch_analysis_combo_spark.operators.codec import POSTING_FORMAT
 from elasticsearch_analysis_combo_spark.operators.postings import (
+    DocTable,
     build_postings,
     concat_term_runs,
+    doc_table,
 )
 
 
@@ -65,6 +74,9 @@ class IndexMeta:
     #: a pure meta.json swap — readers holding the old meta keep valid
     #: paths for their whole lifetime.
     tables: dict | None = None
+    #: ``codec.POSTING_FORMAT`` of the posting blocks; None (absent) is the
+    #: hash-gap layout of indexes published before doc ordinals
+    posting_format: str | None = None
 
     @staticmethod
     def load(index_dir: str) -> "IndexMeta":
@@ -185,7 +197,7 @@ def term_filter(terms) -> pc.Expression:
 
 def posting_read_columns(positions: bool) -> list[str]:
     """The parquet columns of a posting lookup: the row keys, the block
-    headers and the doc/tf/dl stream, plus ``pos_data`` only for a
+    headers and the ordinal/tf stream, plus ``pos_data`` only for a
     positional read."""
     leaves = ["first_doc", "last_doc", "n", "max_impact", "data"]
     if positions:
@@ -200,14 +212,23 @@ class InvertedIndex:
     read once per handle (keyed by the resolved table dir) and given to
     later reads, which then skip the footer-inference job. The handle
     reads the generation its ``meta.json`` named when it was opened, also
-    after a later publish."""
+    after a later publish. An index whose posting blocks are not in
+    ``codec.POSTING_FORMAT`` is refused: rebuild it."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = IndexMeta.load(index_dir)
+        if self.meta.posting_format != POSTING_FORMAT:
+            raise ValueError(
+                f"{index_dir}: posting format "
+                f"{self.meta.posting_format or 'hash-gap (unversioned)'} is "
+                f"not {POSTING_FORMAT}; rebuild the index with build_index"
+            )
         self._schemas: dict[str, T.StructType] = {}
         self._posting_files: list | None = None
+        self._docs: DocTable | None = None
+        self._term_dfs: list[tuple[str, int]] | None = None
         self._vocabulary: list[str] | None = None
 
     def _read(self, name: str) -> DataFrame:
@@ -266,13 +287,30 @@ class InvertedIndex:
             rows.column(c).to_pylist() for c in ("term", "run_idx", "df", "blocks")
         ))
 
+    def docs(self) -> DocTable:
+        """The generation's doc table (ordinal -> doc_id, dl), read from
+        ``doc_stats`` once per handle with pyarrow."""
+        if self._docs is None:
+            self._docs = doc_table(
+                self._dataset("doc_stats").to_table(columns=["doc_id", "dl"])
+            )
+        return self._docs
+
+    def term_dfs(self) -> list[tuple[str, int]]:
+        """Every dictionary ``(term, df)``, sorted by term code point
+        (which is Spark's binary string order), read from ``term_df`` once
+        per handle with pyarrow."""
+        if self._term_dfs is None:
+            rows = self._dataset("term_df").to_table(columns=["term", "df"])
+            self._term_dfs = sorted(zip(
+                rows.column("term").to_pylist(), rows.column("df").to_pylist()
+            ))
+        return self._term_dfs
+
     def vocabulary(self) -> list[str]:
-        """Every dictionary term, sorted by code point (which is Spark's
-        binary string order), read from ``term_df`` once per handle with
-        pyarrow."""
+        """Every dictionary term, in :meth:`term_dfs` order."""
         if self._vocabulary is None:
-            terms = self._dataset("term_df").to_table(columns=["term"])
-            self._vocabulary = sorted(terms.column("term").to_pylist())
+            self._vocabulary = [t for t, _ in self.term_dfs()]
         return self._vocabulary
 
 
@@ -336,6 +374,9 @@ def build_index(
     )
     ds = ckpt.manifest("doc_stats")
     n_docs, avgdl = int(ds["rows"]), float(ds["avgdl"] or 0.0)
+    docs = doc_table(pads.dataset(
+        os.path.join(index_dir, "doc_stats"), format="parquet"
+    ).to_table(columns=["doc_id", "dl"]))
 
     term_df = ckpt.run(
         "term_df",
@@ -352,13 +393,14 @@ def build_index(
 
     ckpt.run(
         "postings",
-        fingerprint(base_fp, "postings"),
+        # the format salt: a checkpoint of another block layout re-runs
+        fingerprint(base_fp, "postings", POSTING_FORMAT),
         # build_postings output is term-hash-partitioned and sorted by
         # term within partitions (grouped_map_sorted), so each written
         # file is term-sorted with no extra shuffle; row-group min/max
         # stats prune a lookup only in files of several row groups
         lambda: build_postings(
-            stats, avgdl=avgdl, hot_terms=hot, k1=k1, b=b,
+            stats, docs, avgdl=avgdl, hot_terms=hot, k1=k1, b=b,
             block_size=block_size, salt_shards=salt_shards,
             with_positions=with_positions,
         ),
@@ -369,6 +411,7 @@ def build_index(
     _write_meta(index_dir, IndexMeta(
         n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
         salt_shards=salt_shards, config=cfg, with_positions=with_positions,
+        posting_format=POSTING_FORMAT,
     ))
     return InvertedIndex(spark, index_dir)
 

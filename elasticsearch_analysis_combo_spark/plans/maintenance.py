@@ -22,9 +22,10 @@ already has last-writer-wins compaction, streaming/ingest.py):
   (meta.json swap; old readers keep a consistent view). The streaming
   path's ``publish_compacted`` publishes through it too.
 
-Every posting row is re-encoded under the new corpus ``avgdl``, so a
-compacted index holds the same rows as a fresh build over the edited
-corpus, posting bytes included (pinned by tests/test_maintenance.py).
+Every posting row is re-encoded under the new corpus ``avgdl`` and the
+new generation's doc ordinals, so a compacted index holds the same rows as
+a fresh build over the edited corpus, posting bytes included (pinned by
+tests/test_maintenance.py).
 """
 
 from __future__ import annotations
@@ -38,7 +39,11 @@ from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.tinydf import tiny_df
 
-from elasticsearch_analysis_combo_spark.operators.postings import build_postings
+from elasticsearch_analysis_combo_spark.operators.codec import POSTING_FORMAT
+from elasticsearch_analysis_combo_spark.operators.postings import (
+    build_postings,
+    doc_table,
+)
 from elasticsearch_analysis_combo_spark.plans.index_build import (
     IndexMeta,
     InvertedIndex,
@@ -141,21 +146,24 @@ def publish_stats(
     them, and the four tables publish atomically through
     :func:`~..plans.index_build.publish_tables`. ``meta`` supplies the
     build parameters, analyzer config and current table map; its
-    ``n_docs``/``avgdl`` are replaced by the figures of ``stats``."""
+    ``n_docs``/``avgdl`` are replaced by the figures of ``stats``. The
+    doc table (one collect of the doc stats) renumbers the generation's
+    docs and gives ``(n_docs, avgdl)``."""
     # read by four derived tables and written itself; persist (recomputable
     # lineage, so an executor loss re-derives rather than failing)
     stats = stats.persist()
     try:
         doc_stats = stats.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-        g = doc_stats.agg(
-            F.count("*").alias("n"), F.avg("dl").alias("a")
-        ).collect()[0]
-        n_docs, avgdl = int(g["n"]), float(g["a"] or 0.0)
+        docs = doc_table(doc_stats)
+        n_docs = int(docs.doc_ids.size)
+        # an exact integer sum over the count: the value Spark's avg gives
+        # build_index for the same docs
+        avgdl = float(docs.dl.sum()) / n_docs if n_docs else 0.0
         term_df = stats.groupBy("term").agg(
             F.count("*").alias("df"), F.sum("tf").alias("cf")
         )
         postings = build_postings(
-            stats, avgdl=avgdl,
+            stats, docs, avgdl=avgdl,
             hot_terms=hot_terms(term_df, n_docs, meta.block_size),
             k1=meta.k1, b=meta.b, block_size=meta.block_size,
             salt_shards=meta.salt_shards, with_positions=meta.with_positions,
@@ -168,7 +176,8 @@ def publish_stats(
                 "doc_stats": doc_stats,
                 "term_df": term_df,
             },
-            replace(meta, n_docs=n_docs, avgdl=avgdl),
+            replace(meta, n_docs=n_docs, avgdl=avgdl,
+                    posting_format=POSTING_FORMAT),
         )
     finally:
         stats.unpersist()

@@ -116,6 +116,8 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.tinydf import tiny_df
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
+from elasticsearch_analysis_combo_spark.operators.postings import PostingFrame
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.boolean import _rank_topk
 from elasticsearch_analysis_combo_spark.query.querystring import (
     Clause,
@@ -1026,7 +1028,7 @@ def hybrid_search(
     spark: SparkSession,
     term_stats: DataFrame,
     term_df: DataFrame,
-    postings: DataFrame | None,
+    postings: InvertedIndex | PostingFrame | None,
     body: dict,
     config: ComboConfig,
     n_docs: int,
@@ -1454,7 +1456,7 @@ def _apply_score_functions(
 
 def _eval_span_specs(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | PostingFrame,
     term_stats: DataFrame,
     term_df: DataFrame,
     specs: dict[int, dict],
@@ -1691,7 +1693,7 @@ def dsl_topk(
     spark: SparkSession,
     term_stats: DataFrame,
     term_df: DataFrame,
-    postings: DataFrame | None,
+    postings: InvertedIndex | PostingFrame | None,
     queries: list[tuple[int, dict]],
     config: ComboConfig,
     n_docs: int,
@@ -2433,7 +2435,7 @@ def retriever_search(
     spark: SparkSession,
     term_stats: DataFrame,
     term_df: DataFrame,
-    postings: DataFrame | None,
+    postings: InvertedIndex | PostingFrame | None,
     retriever: dict,
     config: ComboConfig,
     n_docs: int,

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
+from elasticsearch_analysis_combo_spark.operators.postings import PostingFrame
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.bm25 import (
     bm25_scored,
     rank_topk_rounded,
@@ -211,7 +213,7 @@ def distance_feature_topk(
 
 def rescore_phrase_topk(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | PostingFrame,
     term_stats: DataFrame,
     term_df: DataFrame,
     queries: list[tuple[int, str]],

@@ -21,11 +21,11 @@ Supported rule tree (the documented subset; all raise on anything else):
   interval children the two orders can diverge on pathological inputs).
 * ``{"prefix": {"prefix": p}}`` / ``{"wildcard": {"pattern": w}}`` —
   Lucene's multi-term interval sources: the dictionary expansion
-  (DISTRIBUTED over the posting term dictionary, row_number-capped at
-  ``max_expansions`` in ES's top_terms order df desc / term asc — the
-  same scale-safe shape as span_multi) acts as one single-position
-  disjunction source; each matched term occurrence is a width-1
-  minimal interval, composable under any_of/all_of like any leaf.
+  (:func:`top_terms_expansions` over the term dictionary's ``(term,
+  df)`` pairs, capped at ``max_expansions`` in ES's top_terms order df
+  desc / term asc) acts as one single-position disjunction source; each
+  matched term occurrence is a width-1 minimal interval, composable
+  under any_of/all_of like any leaf.
 
 Minimality (no returned interval contains another) is what separates
 this from ``span_near``: positions ``a=[1,2], b=[3]`` give span_near
@@ -54,22 +54,30 @@ intervals surface.
 
 from __future__ import annotations
 
+import functools
+import operator
+import re
+from bisect import bisect_left
+from itertools import takewhile
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
+from elasticsearch_analysis_combo_spark.operators.postings import PostingFrame
 from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.phrase import (
     _BAND,
-    posting_frame,
     positional_eval,
 )
 from elasticsearch_analysis_combo_spark.query.spans import (
     _docs_counts,
     _keys_in_space,
+    _wildcard_regex,
 )
 
 
@@ -129,6 +137,50 @@ def _multi_leaves(rule: dict, acc: list) -> list:
         for c in rule["children"]:
             _multi_leaves(c, acc)
     return acc
+
+
+def top_terms_expansions(
+    term_dfs: list[tuple[str, int]], leaf: dict, max_expansions: int
+) -> list[str]:
+    """A prefix / wildcard leaf's expansion over the code-point-sorted
+    ``(term, df)`` pairs of a term dictionary: the first
+    ``max_expansions`` matching terms in ES's top_terms order (df desc,
+    term asc), returned sorted. Matches share the pattern's literal
+    prefix, so they are contiguous from its insertion point."""
+    pat = leaf["pat"]
+    if leaf["mkind"] == "prefix":
+        lit, rx = pat, None
+    else:
+        lit, rx = re.split(r"[*?]", pat, maxsplit=1)[0], re.compile(
+            _wildcard_regex(pat)
+        )
+    hits = [
+        (t, df) for t, df in takewhile(
+            lambda p: p[0].startswith(lit),
+            term_dfs[bisect_left(term_dfs, (lit,)):],
+        )
+        if rx is None or rx.match(t)
+    ]
+    top = sorted(hits, key=lambda p: (-p[1], p[0]))[:max(max_expansions, 0)]
+    return sorted(t for t, _ in top)
+
+
+def _multi_term_dfs(
+    postings: InvertedIndex | PostingFrame, leaves: list[dict]
+) -> list[tuple[str, int]]:
+    """The sorted ``(term, df)`` pairs the multi-term ``leaves`` expand
+    over: a handle's whole dictionary (``term_df``, read with pyarrow
+    once per handle), or the posting rows of a ``PostingFrame`` that
+    match some leaf, with one collect (no shuffle)."""
+    if isinstance(postings, InvertedIndex):
+        return postings.term_dfs()
+    cond = functools.reduce(operator.or_, (
+        F.col("term").startswith(leaf["pat"]) if leaf["mkind"] == "prefix"
+        else F.col("term").rlike(_wildcard_regex(leaf["pat"]))
+        for leaf in leaves
+    ))
+    rows = postings.postings().filter(cond).select("term", "df").collect()
+    return sorted({(r["term"], int(r["df"])) for r in rows})
 
 
 _EMPTY_IV = np.zeros((0, 2), dtype=np.int64)
@@ -273,7 +325,7 @@ def _candidate_docs(rule: dict, decoded: dict) -> np.ndarray:
 
 def intervals_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, dict]],
     config: ComboConfig,
     range_bits: int | None = None,
@@ -282,47 +334,19 @@ def intervals_match(
     """(query_id, doc_id, n_matches) where ``n_matches`` counts the
     rule tree's minimal intervals in the doc. Same evaluation harness
     (and doc-range fan-out scale path) as the span family. prefix /
-    wildcard sources expand DISTRIBUTED over the posting term
-    dictionary (term-level df rides on every posting row), capped at
-    ``max_expansions`` per leaf in ES's top_terms order."""
+    wildcard sources expand over the term dictionary
+    (:func:`top_terms_expansions`), capped at ``max_expansions`` per leaf
+    in ES's top_terms order: a handle runs no Spark job for it."""
     rules = {qid: _analyzed(rule, config) for qid, rule in queries}
     multis: list = []
     for rule in rules.values():
         _multi_leaves(rule, multis)
     if multis:
-        from functools import reduce
-
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from elasticsearch_analysis_combo_spark.query.spans import (
-            _wildcard_regex,
-        )
-
-        term_dict = posting_frame(postings).groupBy("term").agg(
-            F.max("df").alias("df")
-        )
-        parts = []
-        for li, leaf in enumerate(multis):
-            if leaf["mkind"] == "prefix":
-                cond = F.col("term").startswith(leaf["pat"])
-            else:
-                cond = F.col("term").rlike(_wildcard_regex(leaf["pat"]))
-            parts.append(
-                term_dict.filter(cond).select(
-                    F.lit(li).alias("li"), "term", "df"
-                )
-            )
-        u = reduce(lambda a, b: a.unionByName(b), parts)
-        w = Window.partitionBy("li").orderBy(F.desc("df"), F.asc("term"))
-        for r in (
-            u.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= int(max_expansions))
-            .select("li", "term").collect()
-        ):
-            multis[r["li"]]["terms"].append(r["term"])
+        term_dfs = _multi_term_dfs(postings, multis)
         for leaf in multis:
-            leaf["terms"] = sorted(set(leaf["terms"]))
+            leaf["terms"] = top_terms_expansions(
+                term_dfs, leaf, max_expansions
+            )
     qid_terms = {
         qid: sorted(_rule_terms(rule)) for qid, rule in rules.items()
     }

@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.tinydf import tiny_df
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
+from elasticsearch_analysis_combo_spark.operators.postings import PostingFrame
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries, idf_expr
 
 
@@ -301,7 +303,7 @@ def multi_match_cross_fields_topk(
 
 def _phrase_scores_partitioned(
     spark: SparkSession,
-    plists: DataFrame,
+    plists: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,
@@ -341,7 +343,7 @@ def _phrase_scores_partitioned(
     all_terms = sorted({t for _, _, t in qrows})
     dfs = {
         r["term"]: float(r["df"])
-        for r in plists.filter(F.col("term").isin(all_terms))
+        for r in plists.postings().filter(F.col("term").isin(all_terms))
         .select("term", "df").distinct().collect()
     }
     idf: dict[int, float] = {}
@@ -367,7 +369,7 @@ def _phrase_scores_partitioned(
 
 def multi_match_phrase_topk(
     spark: SparkSession,
-    field_postings: dict[str, DataFrame],
+    field_postings: dict[str, InvertedIndex | PostingFrame],
     field_meta: dict[str, tuple[int, float]],
     queries: list[tuple[int, str]],
     config: ComboConfig | dict[str, ComboConfig],
@@ -447,7 +449,7 @@ def multi_match_phrase_topk(
 
 def multi_match_phrase_prefix_topk(
     spark: SparkSession,
-    field_postings: dict[str, DataFrame],
+    field_postings: dict[str, InvertedIndex | PostingFrame],
     field_term_df: dict[str, DataFrame],
     field_stats: dict[str, DataFrame],
     field_meta: dict[str, tuple[int, float]],
@@ -716,7 +718,7 @@ def combined_fields_topk(
 
 def multi_match_wand_topk(
     spark: SparkSession,
-    field_postings: dict[str, DataFrame],
+    field_postings: dict[str, InvertedIndex | PostingFrame],
     field_meta: dict[str, tuple[int, float]],
     queries: list[tuple[int, str]],
     config: ComboConfig | dict[str, ComboConfig],

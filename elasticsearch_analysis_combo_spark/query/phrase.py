@@ -27,15 +27,15 @@ Two physical strategies, mirroring WAND (query/wand.py):
 * ``positional_eval`` — the batch's distinct terms' compressed posting
   rows are fetched once into the calling process, decoded once, and
   every query is matched there. A published index is read with pyarrow
-  (no Spark job); any other posting DataFrame is fetched with one Spark
-  job. Every positional query runs on it: ``phrase_match`` and its
-  prefix and shingle variants, the ranked ``phrase_topk``, the span
-  family (query/spans.py) and ``intervals`` (query/intervals.py). Fine
-  for selective terms.
+  (no Spark job); a ``PostingFrame`` is fetched with one Spark job.
+  Every positional query runs on it: ``phrase_match`` and its prefix
+  and shingle variants, the ranked ``phrase_topk``, the span family
+  (query/spans.py) and ``intervals`` (query/intervals.py). Fine for
+  selective terms.
 * ``range_partitioned_positional_eval`` (``phrase_match_partitioned``,
   and ``positional_eval`` given ``range_bits``) — one task per
   (query, doc-range): each
-  compressed block ships only to the doc-id ranges its [first_doc,
+  compressed block ships only to the doc-ordinal ranges its [first_doc,
   last_doc] span overlaps, every range intersects positions for its own
   docs, and the union of ranges is the answer (ranges partition the doc
   space, so no global dedup is needed). This is the scale-safe path for
@@ -67,11 +67,11 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
     decode_positions_flat,
 )
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    MIN_DOC,
+    DocTable,
+    PostingFrame,
     decode_segment_blocks_flat,
     doc_range,
-    doc_range_bounds,
-    fetch_term_blocks,
+    range_starts,
 )
 from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 
@@ -315,16 +315,16 @@ def _match_phrase(
     return out_docs, out_counts, dls_out
 
 
-def _decode_blocks(blocks: list) -> tuple:
+def _decode_blocks(blocks: list, docs: DocTable) -> tuple:
     """(docs, offs, pos_flat, dls) of one term's doc-sorted block list."""
-    d, t, l, pos_flat = decode_segment_blocks_flat(blocks, True)
+    d, t, l, pos_flat = decode_segment_blocks_flat(blocks, docs, True)
     offs = np.concatenate([[0], np.cumsum(t.astype(np.int64))])
     return d, offs, pos_flat, l
 
 
 def phrase_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -417,7 +417,7 @@ def phrase_match_docs(
 
 def range_partitioned_positional_eval(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | PostingFrame,
     qterm_rows: list[tuple[int, str]],
     match_fn,
     range_bits: int = 4,
@@ -426,11 +426,12 @@ def range_partitioned_positional_eval(
 ) -> DataFrame:
     """Shared doc-range fan-out for positional matchers (phrase, span).
 
-    The doc-id space (docIDs are xxhash64 — uniform over int64) splits into
-    2^range_bits equal ranges; each compressed block ships only to the
+    The doc ordinals split into 2^range_bits equal ranges
+    (``postings.range_starts``); each compressed block ships only to the
     ranges its [first_doc, last_doc] span overlaps (hot terms' blocks are
     narrow, so their volume splits ~evenly across ranges); each task
-    decodes, trims boundary blocks to its own closed range, and calls
+    decodes, trims boundary blocks to its own closed range, gathers doc
+    ids and lengths through the doc table it carries, and calls
     ``match_fn(qid, decoded) -> (docs, counts)`` with the same decoded
     shape as :func:`phrase_match`. Docs partition across ranges, so the
     union of per-range results is the exact global answer. With
@@ -452,12 +453,14 @@ def range_partitioned_positional_eval(
         sorted(set(qterm_rows)), "query_id int, term string"
     )
     all_terms = sorted({t for _, t in qterm_rows})
-    plists = postings.filter(F.col("term").isin(all_terms))
+    plists = postings.postings().filter(F.col("term").isin(all_terms))
+    table = postings.docs()
+    starts = range_starts(range_bits, table.doc_ids.size)
 
     bx = (
         plists.select("term", F.explode("blocks").alias("block"))
-        .withColumn("rs", doc_range(F.col("block.first_doc"), range_bits))
-        .withColumn("re", doc_range(F.col("block.last_doc"), range_bits))
+        .withColumn("rs", doc_range(F.col("block.first_doc"), starts[1:-1]))
+        .withColumn("re", doc_range(F.col("block.last_doc"), starts[1:-1]))
         .select(
             "term", "block",
             F.explode(F.sequence("rs", "re")).alias("range_id"),
@@ -468,7 +471,7 @@ def range_partitioned_positional_eval(
     def run_range(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
         range_id = int(pdf["range_id"].iloc[0])
-        lo, hi_incl = doc_range_bounds(range_id, range_bits)
+        lo, hi_incl = int(starts[range_id]), int(starts[range_id + 1]) - 1
         blocks_by_term: dict[str, list] = {}
         for term, block in zip(pdf["term"], pdf["block"]):
             blocks_by_term.setdefault(term, []).append(block)
@@ -477,25 +480,26 @@ def range_partitioned_positional_eval(
             # posting runs partition the doc space in order, so sorting
             # blocks by first_doc reconstructs global doc order
             blocks.sort(key=lambda b_: b_["first_doc"])
-            ds, ts, ps, ls = [], [], [], []
+            ds, ts, ps = [], [], []
             for bl in blocks:
-                d, t, l = decode_block(bytes(bl["data"]), MIN_DOC, int(bl["n"]))
+                d, t = decode_block(bytes(bl["data"]), int(bl["n"]))
                 p = decode_positions_flat(bytes(bl["pos_data"]), t)
                 mask = (d >= lo) & (d <= hi_incl)
                 if not mask.all():
                     p = p[np.repeat(mask, t)]
-                    d, t, l = d[mask], t[mask], l[mask]
+                    d, t = d[mask], t[mask]
                 if d.size:
                     ds.append(d)
                     ts.append(t)
                     ps.append(p)
-                    ls.append(l)
             if not ds:
                 continue
             d = np.concatenate(ds)
             t = np.concatenate(ts)
             offs = np.concatenate([[0], np.cumsum(t.astype(np.int64))])
-            decoded[term] = (d, offs, np.concatenate(ps), np.concatenate(ls))
+            decoded[term] = (
+                table.doc_ids[d], offs, np.concatenate(ps), table.dl[d]
+            )
         res = match_fn(qid, decoded)
         docs, counts = res[0], res[1]
         out = {
@@ -516,7 +520,7 @@ def range_partitioned_positional_eval(
 
 def phrase_match_partitioned(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -567,7 +571,7 @@ def shingle_phrase_slots(
 
 def phrase_match_shingles(
     spark: SparkSession,
-    shingle_postings: DataFrame,
+    shingle_postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     size: int = 2,
@@ -594,23 +598,9 @@ def phrase_match_shingles(
     )
 
 
-def posting_frame(postings: InvertedIndex | DataFrame) -> DataFrame:
-    """The posting table as a DataFrame, for the evaluators that scan it
-    with Spark."""
-    if isinstance(postings, InvertedIndex):
-        return postings.postings()
-    return postings
-
-
-def positional_scan(postings: DataFrame, terms) -> DataFrame:
-    """The positional fetch: ``terms``' posting rows, the term filter
-    pushed into the parquet scan."""
-    return postings.filter(F.col("term").isin(sorted(terms)))
-
-
 def positional_eval(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     terms_by_q: dict[int, list[str]],
     matcher,
     schema: T.StructType = PHRASE_SCHEMA,
@@ -621,10 +611,10 @@ def positional_eval(
     terms its matcher reads; a query without terms yields no rows.
 
     The batch's distinct terms' posting rows are fetched once and each
-    term is decoded once: an :class:`InvertedIndex` is read in process
-    with pyarrow (``InvertedIndex.term_blocks``, no Spark job), a posting
-    DataFrame through :func:`positional_scan` and
-    :func:`fetch_term_blocks` (one Spark job). Then ``matcher(qid,
+    term is decoded once, doc ids and lengths gathered through the doc
+    table (``postings.docs()``): an :class:`InvertedIndex` is read in
+    process with pyarrow (``InvertedIndex.term_blocks``, no Spark job), a
+    ``PostingFrame`` with one Spark job. Then ``matcher(qid,
     decoded, df)`` runs for every query in qid order in the calling
     process, with ``decoded``: term -> (docs, offs, pos_flat, dls) and
     ``df``: term -> document frequency. The matcher returns one array per
@@ -636,7 +626,7 @@ def positional_eval(
     terms_by_q = {q: ts for q, ts in terms_by_q.items() if ts}
     if range_bits is not None:
         return range_partitioned_positional_eval(
-            spark, posting_frame(postings),
+            spark, postings,
             [(q, t) for q, ts in terms_by_q.items() for t in ts],
             lambda qid, decoded: matcher(qid, decoded, None),
             range_bits=range_bits,
@@ -646,11 +636,11 @@ def positional_eval(
     terms = {t for ts in terms_by_q.values() for t in ts}
     if not terms:
         return tiny_df(spark, [], schema)
-    if isinstance(postings, InvertedIndex):
-        fetched = postings.term_blocks(terms, positions=True)
-    else:
-        fetched = fetch_term_blocks(positional_scan(postings, terms))
-    decoded = {term: _decode_blocks(bls) for term, (_, bls) in fetched.items()}
+    fetched = postings.term_blocks(terms, positions=True)
+    docs = postings.docs()
+    decoded = {
+        term: _decode_blocks(bls, docs) for term, (_, bls) in fetched.items()
+    }
     df = {term: df_t for term, (df_t, _) in fetched.items()}
     cols = [[] for _ in schema.fields]
     for qid in sorted(terms_by_q):
@@ -669,7 +659,7 @@ def positional_eval(
 
 def _slots_eval(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     slots_by_q: dict[int, list[tuple[int, object]]],
     slop: int,
     with_dl: bool = False,
@@ -711,7 +701,7 @@ def prefix_expansions(
 
 def phrase_prefix_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     term_df: InvertedIndex | DataFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
@@ -757,7 +747,7 @@ def phrase_prefix_match(
 
 def phrase_topk(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,

@@ -68,6 +68,8 @@ from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
+from elasticsearch_analysis_combo_spark.operators.postings import PostingFrame
+from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.bm25 import idf_expr
 from elasticsearch_analysis_combo_spark.query.boolean import _rank_topk
 
@@ -233,7 +235,7 @@ def simple_query_string_topk(
     spark: SparkSession,
     term_stats: DataFrame,
     term_df: DataFrame,
-    postings: DataFrame | None,
+    postings: InvertedIndex | PostingFrame | None,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,
@@ -265,7 +267,7 @@ def evaluate_parsed(
     spark: SparkSession,
     term_stats: DataFrame,
     term_df: DataFrame,
-    postings: DataFrame | None,
+    postings: InvertedIndex | PostingFrame | None,
     parsed: dict[int, ParsedQuery],
     config: ComboConfig,
     n_docs: int,

@@ -25,7 +25,7 @@ per-doc Python loop:
 Physical plan: every span query runs on ``phrase.positional_eval``, the
 evaluator ``phrase_match`` uses — the batch's distinct terms' compressed
 posting rows are fetched once (in process with pyarrow for a published
-index, with one Spark job for a posting DataFrame), each term is decoded
+index, with one Spark job for a ``PostingFrame``), each term is decoded
 once, and every query is matched in the calling process. ``range_bits``
 switches to the doc-range fan-out for stop-word-grade terms.
 """
@@ -40,6 +40,7 @@ from elasticsearch_analysis_combo_spark.analysis.combo import (
     ComboConfig,
     analyze_text,
 )
+from elasticsearch_analysis_combo_spark.operators.postings import PostingFrame
 from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.phrase import (
     _BAND,
@@ -250,7 +251,7 @@ def analyze_span_terms(
 
 def span_near_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -270,7 +271,7 @@ def span_near_match(
 
 def span_or_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     range_bits: int | None = None,
@@ -288,7 +289,7 @@ def span_or_match(
 
 def span_first_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     end: int,
@@ -309,7 +310,7 @@ def span_first_match(
 
 def span_not_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str, str]],
     config: ComboConfig,
     pre: int = 0,
@@ -342,7 +343,7 @@ def span_not_match(
 
 def span_near_match_partitioned(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -481,7 +482,7 @@ def _within_family_terms(
 
 def span_within_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -505,7 +506,7 @@ def span_within_match(
 
 def span_containing_match(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str, str]],
     config: ComboConfig,
     slop: int = 0,
@@ -585,7 +586,7 @@ def _wildcard_regex(pattern: str) -> str:
 
 def span_multi_near_match(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | PostingFrame,
     term_df: DataFrame,
     clauses_by_q: dict[int, list[tuple[str, object]]],
     slop: int = 0,

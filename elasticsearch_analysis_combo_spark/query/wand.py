@@ -12,18 +12,23 @@ result must equal exhaustive evaluation. Three properties guarantee it:
   ``<=`` only when skipping docs whose *total* score is bounded — the deep
   pointer is capped at ``next_cursor.cur - 1`` so no doc with contributions
   outside the pivot prefix is ever skipped (the classic unsound-skip bug);
-* candidates enter a heap ordered by (score, -doc_id), so ties resolve as
-  (score desc, doc_id asc), identical to the exhaustive path's window sort;
+* candidates enter a heap ordered by (score, -ordinal), so ties resolve as
+  (score desc, doc_id asc), identical to the exhaustive path's window sort
+  (ordinals number the docs in doc_id order);
 * per-doc scores sum cursor contributions in ascending term order, fixed
   and reproducible (the pure-Python oracle sums the same way; the Spark
   exhaustive path is compared at 1e-9).
+
+Cursors walk doc ordinals (the block headers and gaps code them); each
+posting's ``dl`` is gathered from the doc table's norms by ordinal, and
+the winners' ordinals map back to doc ids at the end.
 
 Distribution: the batch's distinct query terms' posting rows (compressed
 blocks, positions left unread) are fetched once into the calling process,
 and each query is scored there; per-query work is WAND-pruned. A
 published index is read with pyarrow (``InvertedIndex.term_blocks``), so
-the request runs no Spark job; any other posting DataFrame is fetched
-with one. Past ``PARTITIONED_THRESHOLD`` docs the engine uses
+the request runs no Spark job; a ``PostingFrame`` is fetched with one.
+Past ``PARTITIONED_THRESHOLD`` docs the engine uses
 :func:`wand_topk_partitioned`, one task per (query, doc-range).
 """
 
@@ -45,10 +50,11 @@ from elasticsearch_analysis_combo_spark.operators.codec import (
     decode_block,
 )
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    MIN_DOC,
+    DocTable,
+    PostingFrame,
     doc_range,
-    doc_range_bounds,
-    fetch_term_blocks,
+    posting_scan,
+    range_starts,
 )
 from elasticsearch_analysis_combo_spark.plans.index_build import InvertedIndex
 from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
@@ -66,26 +72,28 @@ MAX_DOC = (1 << 63) - 1
 
 
 class _PostingCursor:
-    """Lazy block-decoding cursor over one term's posting blocks.
+    """Lazy block-decoding cursor over one term's posting blocks, in doc
+    ordinal space; ``norms`` is the doc table's dl by ordinal.
 
-    ``doc_range=(lo, hi_incl)`` restricts the cursor to docs inside the
-    closed interval — used by the range-partitioned evaluator, where a
+    ``doc_range=(lo, hi_incl)`` restricts the cursor to ordinals inside
+    the closed interval — used by the range-partitioned evaluator, where a
     boundary block is shipped to both adjacent ranges and each task must
     emit its own range's docs exactly once. Trimming happens at decode
     time; block headers stay untouched, so header-based bounds remain
     (sound) over-estimates."""
 
-    __slots__ = ("term", "idf", "blocks", "ub", "avgdl", "k1", "b",
+    __slots__ = ("term", "idf", "blocks", "ub", "norms", "avgdl", "k1", "b",
                  "bi", "i", "docs", "impacts", "cur", "lo", "hi")
 
     def __init__(self, term: str, idf: float, blocks: list,
-                 avgdl: float, k1: float, b: float,
+                 norms: np.ndarray, avgdl: float, k1: float, b: float,
                  doc_range: tuple[int, int] | None = None):
         self.term = term
         self.idf = idf
         self.blocks = blocks
+        self.norms = norms
         self.avgdl, self.k1, self.b = avgdl, k1, b
-        self.lo, self.hi = doc_range if doc_range else (MIN_DOC, MAX_DOC)
+        self.lo, self.hi = doc_range if doc_range else (0, MAX_DOC)
         self.ub = idf * max(bl["max_impact"] for bl in blocks)
         self.bi = -1
         self._load_block(0)
@@ -95,17 +103,17 @@ class _PostingCursor:
         # last block of a range's list overlap the boundary)
         while bi < len(self.blocks):
             bl = self.blocks[bi]
-            d, t, l = decode_block(bytes(bl["data"]), MIN_DOC, int(bl["n"]))
+            d, t = decode_block(bytes(bl["data"]), int(bl["n"]))
             if self.lo > int(d[0]) or self.hi < int(d[-1]):
                 s = int(np.searchsorted(d, self.lo, side="left"))
                 e = int(np.searchsorted(d, self.hi, side="right"))
-                d, t, l = d[s:e], t[s:e], l[s:e]
+                d, t = d[s:e], t[s:e]
             if d.size:
                 self.bi = bi
                 self.i = 0
                 self.docs = d
                 self.impacts = self.idf * bm25_impact(
-                    t, l, self.avgdl, self.k1, self.b
+                    t, self.norms[d], self.avgdl, self.k1, self.b
                 )
                 self.cur = int(d[0])
                 return
@@ -177,41 +185,43 @@ def _dense_topk(
     avgdl: float,
     k1: float,
     b: float,
+    norms: np.ndarray,
     doc_range: tuple[int, int] | None = None,
 ) -> list[tuple[int, float]]:
     """Exact vectorized evaluation: decode every block, accumulate per-doc
     scores in ascending-term order — the SAME summation order as the
     cursor path, so scores are bit-identical to WAND's — and take the
-    (score desc, doc_id asc) top-k."""
-    lo, hi = doc_range if doc_range else (MIN_DOC, MAX_DOC)
+    (score desc, ordinal asc) top-k as (ordinal, score)."""
+    lo, hi = doc_range if doc_range else (0, MAX_DOC)
     decoded = []
     all_docs = []
     for term in sorted(postings_by_term):
         idf, blocks = postings_by_term[term]
-        ds, tfs, dls = [], [], []
+        ds, tfs = [], []
         for bl in blocks:
             if int(bl["last_doc"]) < lo or int(bl["first_doc"]) > hi:
                 continue
-            d, t, l = decode_block(bytes(bl["data"]), MIN_DOC, int(bl["n"]))
+            d, t = decode_block(bytes(bl["data"]), int(bl["n"]))
             if lo > int(d[0]) or hi < int(d[-1]):
                 s = int(np.searchsorted(d, lo, side="left"))
                 e = int(np.searchsorted(d, hi, side="right"))
-                d, t, l = d[s:e], t[s:e], l[s:e]
+                d, t = d[s:e], t[s:e]
             if d.size:
                 ds.append(d)
                 tfs.append(t)
-                dls.append(l)
         if not ds:
             continue
         d = np.concatenate(ds)
-        decoded.append((idf, d, np.concatenate(tfs), np.concatenate(dls)))
+        decoded.append((idf, d, np.concatenate(tfs)))
         all_docs.append(d)
     if not all_docs:
         return []
     docs_u = np.unique(np.concatenate(all_docs))
     acc = np.zeros(docs_u.size, dtype=np.float64)
-    for idf, d, t, l in decoded:
-        acc[np.searchsorted(docs_u, d)] += idf * bm25_impact(t, l, avgdl, k1, b)
+    for idf, d, t in decoded:
+        acc[np.searchsorted(docs_u, d)] += idf * bm25_impact(
+            t, norms[d], avgdl, k1, b
+        )
     order = np.lexsort((docs_u, -acc))[:k]
     return [(int(docs_u[i]), float(acc[i])) for i in order]
 
@@ -222,18 +232,20 @@ def wand_topk_single(
     avgdl: float,
     k1: float,
     b: float,
+    docs: DocTable,
     doc_range: tuple[int, int] | None = None,
     dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> list[tuple[int, float]]:
     """Top-k for one query (or one (query, doc-range) task): block-max
     WAND with a dense-evaluation dispatch.
 
-    postings_by_term: term -> (idf, blocks). Returns [(doc_id, score)]
-    sorted by (score desc, doc_id asc), length <= k. ``doc_range``
-    restricts evaluation to docs in the closed interval (range-partitioned
-    evaluation: per-range results are exact, so the global top-k is the
-    top-k of the per-range unions). Tasks whose total posting count is at
-    most ``dense_max_postings`` run the vectorized exact evaluator
+    postings_by_term: term -> (idf, blocks), the blocks coded over the
+    ordinals of ``docs``. Returns [(doc_id, score)] sorted by (score desc,
+    doc_id asc), length <= k. ``doc_range`` restricts evaluation to the
+    ordinals in the closed interval (range-partitioned evaluation:
+    per-range results are exact, so the global top-k is the top-k of the
+    per-range unions). Tasks whose total posting count is at most
+    ``dense_max_postings`` run the vectorized exact evaluator
     (bit-identical scores, same tie order); pass 0 to force the cursor
     path."""
     est = sum(
@@ -242,9 +254,11 @@ def wand_topk_single(
         for bl in blocks
     )
     if est <= dense_max_postings:
-        return _dense_topk(postings_by_term, k, avgdl, k1, b, doc_range)
+        top = _dense_topk(postings_by_term, k, avgdl, k1, b, docs.dl,
+                          doc_range)
+        return [(int(docs.doc_ids[o]), s) for o, s in top]
     cursors = [
-        _PostingCursor(term, idf, blocks, avgdl, k1, b, doc_range)
+        _PostingCursor(term, idf, blocks, docs.dl, avgdl, k1, b, doc_range)
         for term, (idf, blocks) in sorted(postings_by_term.items())
         if blocks
     ]
@@ -315,25 +329,7 @@ def wand_topk_single(
                 if c.cur < pivot_doc:
                     c.seek(pivot_doc)
     out = sorted(heap, key=lambda e: (-e[0], -e[1]))
-    return [(-d, s) for s, d in out]
-
-
-def _blocks_sans_positions():
-    """``blocks`` with the (unused-by-WAND) per-block position stream
-    dropped — scoring needs only headers + the doc/tf/dl stream.
-
-    Built with arrays_zip over per-field array extractions rather than a
-    transform lambda: GetArrayStructFields is visible to nested schema
-    pruning, so ``pos_data`` disappears from the parquet ReadSchema too —
-    positions are never read off disk, not just dropped pre-shuffle
-    (verified in plans/r06/wand_topk_after.txt)."""
-    return F.arrays_zip(
-        F.col("blocks.first_doc").alias("first_doc"),
-        F.col("blocks.last_doc").alias("last_doc"),
-        F.col("blocks.n").alias("n"),
-        F.col("blocks.max_impact").alias("max_impact"),
-        F.col("blocks.data").alias("data"),
-    )
+    return [(int(docs.doc_ids[-o]), s) for s, o in out]
 
 
 def config_from_meta(meta_config: dict) -> ComboConfig:
@@ -368,17 +364,9 @@ def wand_topk(
     )
 
 
-def posting_scan(postings: DataFrame, terms) -> DataFrame:
-    """The WAND fetch: ``terms``' posting rows, the term filter pushed into
-    the parquet scan and ``pos_data`` pruned from it."""
-    return postings.filter(F.col("term").isin(sorted(terms))).select(
-        "term", "run_idx", "df", _blocks_sans_positions().alias("blocks")
-    )
-
-
 def wand_topk_from_postings(
     spark: SparkSession,
-    postings: InvertedIndex | DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,
@@ -388,33 +376,32 @@ def wand_topk_from_postings(
     k: int = 10,
     dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
-    """Block-max WAND over a published index or any posting DataFrame
-    (materialized table or freshly-built pipeline output): the posting
-    rows of the batch's distinct terms are fetched once and every query is
-    scored in the calling process by :func:`wand_topk_single`
-    (dense-dispatched below ``dense_max_postings`` postings). An
-    :class:`InvertedIndex` is read with pyarrow and runs no Spark job; a
-    DataFrame is fetched through :func:`posting_scan` with one. Returns a
-    LocalTableScan frame."""
+    """Block-max WAND over a published index or a ``PostingFrame``
+    (materialized table or freshly-built pipeline output, with its doc
+    table): the posting rows of the batch's distinct terms are fetched
+    once and every query is scored in the calling process by
+    :func:`wand_topk_single` (dense-dispatched below
+    ``dense_max_postings`` postings). An :class:`InvertedIndex` is read
+    with pyarrow and runs no Spark job; a ``PostingFrame`` is fetched with
+    one. Returns a LocalTableScan frame."""
     terms_by_q: dict[int, set[str]] = {}
     for qid, term in analyze_queries(queries, config):
         terms_by_q.setdefault(qid, set()).add(term)
     all_terms = set().union(*terms_by_q.values())
-    if isinstance(postings, InvertedIndex):
-        fetched = postings.term_blocks(all_terms)
-    elif all_terms:
-        fetched = fetch_term_blocks(posting_scan(postings, all_terms))
-    else:
-        fetched = {}
+    fetched = postings.term_blocks(all_terms)
+    docs = postings.docs()
     by_term = {
         term: (float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))), blocks)
         for term, (df_t, blocks) in fetched.items()
     }
     rows = []
     for qid in sorted(terms_by_q):
+        q_terms = {t: by_term[t] for t in terms_by_q[qid] if t in by_term}
+        if not q_terms:
+            continue
         top = wand_topk_single(
-            {t: by_term[t] for t in terms_by_q[qid] if t in by_term},
-            k, avgdl, k1, b, dense_max_postings=dense_max_postings,
+            q_terms, k, avgdl, k1, b, docs,
+            dense_max_postings=dense_max_postings,
         )
         rows.extend((qid, rank, d, s) for rank, (d, s) in enumerate(top, 1))
     return tiny_df(spark, rows, TOPK_SCHEMA)
@@ -422,7 +409,7 @@ def wand_topk_from_postings(
 
 def wand_topk_partitioned(
     spark: SparkSession,
-    postings: DataFrame,
+    postings: InvertedIndex | PostingFrame,
     queries: list[tuple[int, str]],
     config: ComboConfig,
     n_docs: int,
@@ -436,11 +423,11 @@ def wand_topk_partitioned(
     """Range-partitioned block-max WAND: one task per (query, doc-range).
 
     The fetch-and-score evaluator concentrates a stop-word query's whole
-    posting volume in the calling process; here the doc-id space (docIDs
-    are xxhash64 — uniform over int64) is split into 2^range_bits equal
-    ranges, each task runs exact WAND restricted to its range, and the
-    global top-k is a window over the per-range top-ks (exact: every global
-    winner is a local winner in its own range).
+    posting volume in the calling process; here the doc ordinals are split
+    into 2^range_bits equal ranges (``postings.range_starts``), each task
+    runs exact WAND restricted to its range, and the global top-k is a
+    window over the per-range top-ks (exact: every global winner is a
+    local winner in its own range). Each task carries the doc table.
 
     Shipping is block-granular: each compressed block goes to exactly the
     ranges its [first_doc, last_doc] span overlaps — hot terms' blocks are
@@ -452,12 +439,14 @@ def wand_topk_partitioned(
     qterms = tiny_df(spark, qrows, "query_id int, term string")
     # positions are pruned before the block explode + range fan-out, where
     # boundary blocks replicate to two ranges, so the saving compounds
-    plists = posting_scan(postings, {t for _, t in qrows})
+    plists = posting_scan(postings.postings(), {t for _, t in qrows})
+    docs = postings.docs()
+    starts = range_starts(range_bits, docs.doc_ids.size)
 
     bx = (
         plists.select("term", "df", F.explode("blocks").alias("block"))
-        .withColumn("rs", doc_range(F.col("block.first_doc"), range_bits))
-        .withColumn("re", doc_range(F.col("block.last_doc"), range_bits))
+        .withColumn("rs", doc_range(F.col("block.first_doc"), starts[1:-1]))
+        .withColumn("re", doc_range(F.col("block.last_doc"), starts[1:-1]))
         .select(
             "term", "df", "block",
             F.explode(F.sequence("rs", "re")).alias("range_id"),
@@ -468,7 +457,7 @@ def wand_topk_partitioned(
     def run_range(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
         range_id = int(pdf["range_id"].iloc[0])
-        lo, hi_incl = doc_range_bounds(range_id, range_bits)
+        lo, hi_incl = int(starts[range_id]), int(starts[range_id + 1]) - 1
         by_term_rows: dict[str, list] = {}
         for term, df_t, block in zip(pdf["term"], pdf["df"], pdf["block"]):
             by_term_rows.setdefault(term, []).append((float(df_t), block))
@@ -478,7 +467,8 @@ def wand_topk_partitioned(
             blocks = sorted((bl for _, bl in rows), key=lambda b_: b_["first_doc"])
             idf = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
             by_term[term] = (idf, blocks)
-        top = wand_topk_single(by_term, k, avgdl, k1, b, doc_range=(lo, hi_incl),
+        top = wand_topk_single(by_term, k, avgdl, k1, b, docs,
+                               doc_range=(lo, hi_incl),
                                dense_max_postings=dense_max_postings)
         return pd.DataFrame(
             {

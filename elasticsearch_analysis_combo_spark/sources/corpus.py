@@ -131,7 +131,9 @@ def ingest(
     """
     guarded = corpus.withColumn("_sha_ok", F.sha2(F.col("content"), 256) == F.col(expected_sha_col))
     if strict:
-        bad = guarded.filter(~F.col("_sha_ok")).limit(1).count()
+        # one aggregate checks every row in one pass; a limit(1) probe
+        # widens its scan job by job when no row fails
+        bad = guarded.agg(F.count_if(~F.col("_sha_ok"))).collect()[0][0]
         if bad:
             raise ShaGuardError("content sha256 mismatch on ingest")
         checked = guarded

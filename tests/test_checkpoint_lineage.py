@@ -26,7 +26,10 @@ from elasticsearch_analysis_combo_spark.operators import postings as postings_mo
 from elasticsearch_analysis_combo_spark.operators.checkpoint import (
     CheckpointManager,
 )
-from elasticsearch_analysis_combo_spark.operators.postings import build_postings
+from elasticsearch_analysis_combo_spark.operators.postings import (
+    build_postings,
+    doc_table,
+)
 from elasticsearch_analysis_combo_spark.plans import index_build as index_build_mod
 from elasticsearch_analysis_combo_spark.plans.index_build import build_index
 from elasticsearch_analysis_combo_spark.sources.corpus import (
@@ -158,6 +161,25 @@ def test_crash_in_postings_leaves_no_meta(spark, corpus, tmp_path, monkeypatch):
     assert _meta(idx) == _meta(str(tmp_path / "fresh"))
 
 
+def test_posting_format_salts_the_postings_fingerprint(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A postings checkpoint written under another block layout is a miss:
+    the rebuild re-runs the postings stage only (the other stages'
+    outputs do not depend on the layout) and records the layout in
+    meta.json."""
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus, CFG, idx, **BUILD)
+    assert _meta(idx)["posting_format"] == index_build_mod.POSTING_FORMAT
+    n_built = len(_built(idx))
+    build_index(spark, corpus, CFG, idx, **BUILD)
+    assert len(_built(idx)) == n_built
+    monkeypatch.setattr(index_build_mod, "POSTING_FORMAT", "another-layout")
+    build_index(spark, corpus, CFG, idx, **BUILD)
+    assert _built(idx)[n_built:] == ["postings"]
+    assert _meta(idx)["posting_format"] == "another-layout"
+
+
 def test_old_format_manifest_is_a_miss(spark, corpus, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(spark, corpus, CFG, idx, **BUILD)
@@ -225,9 +247,10 @@ def test_hot_list_over_inset_limit_takes_join_path(spark, monkeypatch):
     hot = stats.groupBy("term").agg(F.count("*").alias("df")).select("term")
     assert hot.count() == n_terms
     avgdl = stats.select("doc_id", "dl").distinct().agg(F.avg("dl")).first()[0]
+    docs_t = doc_table(stats)
 
     def build():
-        return build_postings(stats, avgdl=avgdl, hot_terms=hot,
+        return build_postings(stats, docs_t, avgdl=avgdl, hot_terms=hot,
                               block_size=8, salt_shards=4)
 
     def rows(df):

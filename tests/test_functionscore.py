@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.bm25 import bm25_exhaustive_topk
 from elasticsearch_analysis_combo_spark.query.functionscore import (
@@ -114,8 +114,8 @@ def test_missing_meta_rows_keep_base_score(spark, fixture):
 
 def test_rescore_boosts_phrase_docs(spark, fixture):
     corpus, stats, term_df, n, avgdl = fixture
-    post = build_postings(stats, avgdl=avgdl, block_size=16,
-                          with_positions=True)
+    post = posting_frame(stats, avgdl=avgdl, block_size=16,
+                         with_positions=True)
     out = rescore_phrase_topk(
         spark, post, stats, term_df, [(0, "alpha beta")], CFG, n, avgdl,
         window_size=10, rescore_weight=10.0, k=4,

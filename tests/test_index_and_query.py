@@ -14,7 +14,9 @@ import pytest
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.operators.postings import (
+    PostingFrame,
     decode_segment_blocks,
+    range_starts,
     term_blocks_from_rows,
 )
 from elasticsearch_analysis_combo_spark.plans.index_build import build_index
@@ -70,7 +72,9 @@ def test_postings_match_oracle(built):
         blocks = term_blocks_from_rows(
             [r["run_idx"] for r in trows], [r["blocks"] for r in trows]
         )
-        doc_ids, tfs, dls, pos = decode_segment_blocks(blocks, True)
+        doc_ids, tfs, dls, pos = decode_segment_blocks(
+            blocks, index.docs(), True
+        )
         # sorted ascending, unique (comparison, not np.diff — int64 gaps
         # between hash docIDs overflow subtraction)
         assert (doc_ids[1:] > doc_ids[:-1]).all()
@@ -79,6 +83,93 @@ def test_postings_match_oracle(built):
         # dl consistency
         for d, l in zip(doc_ids, dls):
             assert doc_len[int(d)] == int(l)
+
+
+def test_decoded_postings_equal_term_stats(built):
+    """Every decoded (term, doc_id, tf, positions) posting, with dl looked
+    up through the doc table's norms, equals the term_stats row for row;
+    block headers hold ascending ordinals of the 0..N-1 numbering, whose
+    doc table is the doc_stats table sorted by doc_id."""
+    from elasticsearch_analysis_combo_spark.operators.codec import (
+        decode_positions_flat,
+    )
+
+    index, *_ = built
+    docs = index.docs()
+    assert docs.doc_ids.size == index.meta.n_docs
+    assert (docs.doc_ids[1:] > docs.doc_ids[:-1]).all()
+    assert sorted(zip(docs.doc_ids.tolist(), docs.dl.tolist())) == sorted(
+        (r["doc_id"], r["dl"]) for r in index.doc_stats().collect()
+    )
+    want = sorted(
+        (r["term"], r["doc_id"], r["tf"], tuple(decode_positions_flat(
+            bytes(r["pos_data"]), np.array([r["tf"]], dtype=np.int64)
+        ).tolist()), r["dl"])
+        for r in index.term_stats().collect()
+    )
+    by_term: dict[str, list] = {}
+    for row in index.postings().collect():
+        by_term.setdefault(row["term"], []).append(row)
+    got = []
+    for term, trows in by_term.items():
+        blocks = term_blocks_from_rows(
+            [r["run_idx"] for r in trows], [r["blocks"] for r in trows]
+        )
+        heads = [(bl["first_doc"], bl["last_doc"]) for bl in blocks]
+        assert heads[0][0] >= 0 and heads[-1][1] < docs.doc_ids.size, term
+        assert all(f <= la < g for (f, la), (g, _) in zip(heads, heads[1:]))
+        d, t, dl, pos = decode_segment_blocks(blocks, docs, True)
+        got += [(term, int(a), int(b), tuple(map(int, p)), int(c))
+                for a, b, p, c in zip(d, t, pos, dl)]
+    assert sorted(got) == want
+
+
+@pytest.mark.parametrize("range_bits", [1, 3, 5])
+def test_partitioned_equals_unpartitioned(built, spark, range_bits):
+    """WAND, phrase and ranked-phrase fanned out over 2^range_bits ordinal
+    ranges equal the in-process answers over the same handle, in rank,
+    doc id and score; the ordinal ranges are balanced to within one doc."""
+    from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
+
+    _, _, idx_dir, _ = built
+    engine = ComboSearchEngine(spark, CFG, idx_dir)
+    sizes = np.diff(range_starts(range_bits, engine.idx.meta.n_docs))
+    assert sizes.max() - sizes.min() <= 1
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    for query in ("merge segment", "the if return", "cache"):
+        one = rows(engine.search(query, k=10, partitioned=False))
+        fan = rows(engine.search(query, k=10, partitioned=True,
+                                 range_bits=range_bits))
+        assert [r[:3] for r in one] == [r[:3] for r in fan], query
+        assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(one, fan))
+    for phrase in ("def the", "return the", "zzz_no_such_term the"):
+        assert rows(engine.phrase(phrase, partitioned=False)) == rows(
+            engine.phrase(phrase, partitioned=True, range_bits=range_bits)
+        ), phrase
+
+
+def test_index_of_another_posting_format_is_refused(built, tmp_path):
+    """An index published before doc ordinals (its meta.json records no
+    posting format) cannot be opened: the handle raises instead of
+    decoding hash gaps as ordinals."""
+    import json
+
+    from elasticsearch_analysis_combo_spark.plans.index_build import (
+        InvertedIndex,
+    )
+
+    index, _, idx_dir, _ = built
+    with open(f"{idx_dir}/meta.json") as f:
+        meta = json.load(f)
+    assert meta["posting_format"] == "ordinal-gaps-1"
+    del meta["posting_format"]
+    with open(tmp_path / "meta.json", "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="posting format .* rebuild"):
+        InvertedIndex(index.spark, str(tmp_path))
 
 
 def test_exhaustive_matches_oracle(built, spark):
@@ -176,6 +267,11 @@ def test_search_and_phrase_issue_no_job(built, spark):
     engine = ComboSearchEngine(spark, CFG, idx_dir)
     batch = [(i, " ".join(docs[i][1].split()[:3])) for i in range(32)]
     rule = {"match": {"query": "def the", "max_gaps": 2}}
+    # prefix + wildcard leaves expand over the handle's term_df, read
+    # with pyarrow
+    multi = {"all_of": {"ordered": True, "max_gaps": 4, "intervals": [
+        {"prefix": {"prefix": "th"}}, {"wildcard": {"pattern": "s?g*t"}},
+    ]}}
     requests = {
         "search": lambda: engine.search("merge segment"),
         "batch": lambda: engine.search(batch),
@@ -186,6 +282,7 @@ def test_search_and_phrase_issue_no_job(built, spark):
         "span-near": lambda: engine.span_near("def the", slop=2),
         "span-or": lambda: engine.span_or("merge segment"),
         "intervals": lambda: engine.intervals(rule),
+        "intervals-multi": lambda: engine.intervals(multi),
     }
     out = {}
     for name, request in requests.items():
@@ -195,10 +292,12 @@ def test_search_and_phrase_issue_no_job(built, spark):
     assert out["search"] and out["phrase"] and not out["phrase-miss"]
     assert out["phrase-ranked"] and out["phrase-prefix"]
     assert out["span-near"] and out["span-or"] and out["intervals"]
+    assert out["intervals-multi"]
     assert {r["query_id"] for r in out["batch"]} == set(range(32))
 
     idx = engine.idx
-    cfg, meta, plists = config_from_meta(idx.meta.config), idx.meta, idx.postings()
+    cfg, meta = config_from_meta(idx.meta.config), idx.meta
+    plists = PostingFrame(idx.postings(), idx.docs())
     bm25 = dict(n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b)
     via_spark = {
         "search": wand_topk_from_postings(
@@ -216,6 +315,7 @@ def test_search_and_phrase_issue_no_job(built, spark):
             spark, plists, [(0, "def the")], cfg, slop=2),
         "span-or": span_or_match(spark, plists, [(0, "merge segment")], cfg),
         "intervals": intervals_match(spark, plists, [(0, rule)], cfg),
+        "intervals-multi": intervals_match(spark, plists, [(0, multi)], cfg),
     }
     for name, frame in via_spark.items():
         assert [tuple(r) for r in out[name]] == [
@@ -257,6 +357,9 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
+    from elasticsearch_analysis_combo_spark.operators.codec import (
+        POSTING_FORMAT,
+    )
     from elasticsearch_analysis_combo_spark.plans.index_build import (
         IndexMeta,
         InvertedIndex,
@@ -282,7 +385,7 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
                    row_group_size=10)
     _write_meta(str(tmp_path), IndexMeta(
         n_docs=1, avgdl=1.0, k1=1.2, b=0.75, block_size=128, salt_shards=8,
-        config={}, with_positions=True,
+        config={}, with_positions=True, posting_format=POSTING_FORMAT,
     ))
 
     query = ["t0005", "t0123", "t0399", "t9999"]

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.intervals import (
     intervals_match,
@@ -30,8 +30,10 @@ def postings(spark):
     avgdl = stats.select("doc_id", "dl").distinct().agg(
         F.avg("dl")
     ).collect()[0][0]
-    return build_postings(stats, avgdl=avgdl, block_size=16,
-                          with_positions=True).cache()
+    post = posting_frame(stats, avgdl=avgdl, block_size=16,
+                         with_positions=True)
+    post.frame.cache()
+    return post
 
 
 def _run(spark, postings, rule, range_bits=None):

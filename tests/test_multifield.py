@@ -15,7 +15,7 @@ from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.engine import MultiFieldSearchEngine
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.multifield import (
     derive_fields,
@@ -71,8 +71,8 @@ def test_wand_path_equals_exhaustive_best_fields(spark):
     for f, s in stats.items():
         n, avgdl = field_corpus_stats(s)
         meta[f] = (n, avgdl)
-        postings[f] = build_postings(s, avgdl=avgdl, block_size=64,
-                                     with_positions=False)
+        postings[f] = posting_frame(s, avgdl=avgdl, block_size=64,
+                                    with_positions=False)
     wand = multi_match_wand_topk(
         spark, postings, meta, QUERIES, CFG, boosts=BOOSTS, k=10,
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import (
     phrase_match,
@@ -42,7 +42,7 @@ def _postings(spark, rows, block_size=4, max_blocks=None):
     kw = {}
     if max_blocks is not None:
         kw["max_blocks_per_row"] = max_blocks
-    return build_postings(stats, avgdl=4.0, block_size=block_size, **kw)
+    return posting_frame(stats, avgdl=4.0, block_size=block_size, **kw)
 
 
 def _got(out):
@@ -51,8 +51,8 @@ def _got(out):
 
 @pytest.fixture(scope="module")
 def tiny_postings(spark):
-    p = _postings(spark, DOCS).cache()
-    p.count()
+    p = _postings(spark, DOCS)
+    p.frame.cache().count()
     return p
 
 
@@ -109,9 +109,9 @@ def stress(spark):
         rows.append((i * 7919 + 13, " ".join(words)))
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
-    p = build_postings(stats, avgdl=15.0, block_size=8,
-                       max_blocks_per_row=2).cache()
-    p.count()
+    p = posting_frame(stats, avgdl=15.0, block_size=8,
+                      max_blocks_per_row=2)
+    p.frame.cache().count()
     return p
 
 

@@ -6,7 +6,7 @@ Forces a pathological cap (2 blocks/row, 4 docs/block => 8 docs/row) over a
 randomized corpus so nearly every term spans multiple rows, then checks:
 
 * build_postings emits >1 row for long terms, with term-total df/cf repeated
-  per run, runs partitioning the doc space in order;
+  per run, runs partitioning the doc ordinals in order;
 * WAND over the chunked table is rank- and score-identical to the pure
   exhaustive oracle, a 32-query batch equals ``bm25_exhaustive_topk``, and
   a non-materialized build_postings pipeline gives the written table's
@@ -27,8 +27,11 @@ from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
 )
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
+    PostingFrame,
     build_postings,
     decode_segment_blocks,
+    doc_table,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.bm25 import bm25_exhaustive_topk
 from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
@@ -96,8 +99,9 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
         .agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
     )
     n_docs, avgdl = int(row["n"]), float(row["a"])
+    docs_t = doc_table(stats)
     postings = build_postings(
-        stats, avgdl=avgdl, hot_terms=None, k1=K1, b=B,
+        stats, docs_t, avgdl=avgdl, hot_terms=None, k1=K1, b=B,
         block_size=4, with_positions=False, max_blocks_per_row=2,
     ).cache()
 
@@ -114,10 +118,13 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
         assert r["n_df"] == 1
         assert r["n_rows"] == -(-r["df"] // 8)
 
-    # runs partition the sorted doc space without overlap
+    # each run's blocks are in doc order: headers hold ascending ordinals
     for trow in postings.filter(F.col("term") == "the").collect():
-        d, _, _ = decode_segment_blocks(trow["blocks"], False)
+        d, _, _ = decode_segment_blocks(trow["blocks"], docs_t, False)
         assert (d[1:] > d[:-1]).all()
+        heads = [(bl["first_doc"], bl["last_doc"]) for bl in trow["blocks"]]
+        assert all(0 <= f <= la < n_docs for f, la in heads)
+        assert all(a[1] < b[0] for a, b in zip(heads, heads[1:]))
 
     queries = [
         (0, "the if return"),
@@ -126,8 +133,8 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
         (3, "zzz_missing the"),
     ]
     got = wand_topk_from_postings(
-        spark, postings, queries, CFG, n_docs=n_docs, avgdl=avgdl,
-        k1=K1, b=B, k=10,
+        spark, PostingFrame(postings, docs_t), queries, CFG, n_docs=n_docs,
+        avgdl=avgdl, k1=K1, b=B, k=10,
     ).collect()
     by_q = {}
     for r in got:
@@ -153,8 +160,8 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
 
     def wand(p):
         return _topk_by_query(wand_topk_from_postings(
-            spark, p, batch, CFG, n_docs=n_docs, avgdl=avgdl,
-            k1=K1, b=B, k=10,
+            spark, PostingFrame(p, docs_t), batch, CFG, n_docs=n_docs,
+            avgdl=avgdl, k1=K1, b=B, k=10,
         ).collect())
 
     got = wand(table)
@@ -169,8 +176,8 @@ def test_wand_over_chunked_rows_matches_exhaustive(spark, seed, tmp_path):
     # a non-materialized build_postings pipeline (the postings input
     # __spark_entry__.q_bm25_topk_wand passes) gives the table's top-k
     assert wand(build_postings(
-        stats, avgdl=avgdl, k1=K1, b=B, block_size=4, with_positions=False,
-        max_blocks_per_row=2,
+        stats, docs_t, avgdl=avgdl, k1=K1, b=B, block_size=4,
+        with_positions=False, max_blocks_per_row=2,
     )) == got
 
 
@@ -264,17 +271,20 @@ def test_batched_encoder_bit_identical_to_per_term(seed, with_positions):
     )
 
     rng = np.random.default_rng(seed)
-    n, vocab = 5000, 300
-    codes = np.sort(rng.integers(0, vocab, n))
-    doc_ids = rng.integers(-(2**62), 2**62, n)
-    order = np.lexsort((doc_ids, codes))
-    codes, doc_ids = codes[order], doc_ids[order]
-    # dedupe (term, doc) collisions: bump doc until strictly increasing
-    for i in range(1, n):
-        if codes[i] == codes[i - 1] and doc_ids[i] <= doc_ids[i - 1]:
-            doc_ids[i] = doc_ids[i - 1] + 1
+    n_docs, vocab = 700, 300
+    table_ids = np.unique(rng.integers(-(2**62), 2**62, n_docs))
+    table_dl = rng.integers(5, 400, table_ids.size).astype(np.int64)
+    # unique (term, ordinal) rows sorted by term then doc, the encoder's
+    # input order; ordinal 0 and the last ordinal always occur
+    pairs = np.unique(np.stack([
+        np.concatenate([rng.integers(0, vocab, 5000), [0, vocab - 1]]),
+        np.concatenate([rng.integers(0, table_ids.size, 5000),
+                        [0, table_ids.size - 1]]),
+    ], axis=1), axis=0)
+    codes, ords = pairs[:, 0], pairs[:, 1]
+    n = codes.size
+    doc_ids, dls = table_ids[ords], table_dl[ords]
     tfs = rng.integers(1, 5, n).astype(np.int64)
-    dls = rng.integers(5, 400, n).astype(np.int64)
     positions = np.empty(n, dtype=object)
     for i in range(n):
         positions[i] = np.sort(rng.integers(1, 500, int(tfs[i]))).astype(np.int64)
@@ -295,13 +305,14 @@ def test_batched_encoder_bit_identical_to_per_term(seed, with_positions):
     block_size, cap = 7, 3
     avgdl, k1, b = 120.0, 1.2, 0.75
     got = encode_posting_rows_batched(
-        cols, starts, ends, avgdl, k1, b, block_size, cap, with_positions
+        cols, starts, ends, table_ids, avgdl, k1, b, block_size, cap,
+        with_positions,
     )
 
     exp = []
     tf_cum = np.concatenate([[0], np.cumsum(tfs)])
     for s, e in zip(starts, ends):
-        d, t, l = doc_ids[s:e], tfs[s:e], dls[s:e]
+        d, t, l = ords[s:e], tfs[s:e], dls[s:e]
         p = None
         if with_positions:
             p = np.concatenate(list(positions[s:e])).astype(np.uint64)
@@ -342,7 +353,7 @@ def test_partitioned_wand_matches_exhaustive(spark, seed, range_bits):
         .agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
     )
     n_docs, avgdl = int(row["n"]), float(row["a"])
-    postings = build_postings(
+    postings = posting_frame(
         stats, avgdl=avgdl, hot_terms=None, k1=K1, b=B,
         block_size=4, with_positions=False, max_blocks_per_row=2,
     )
@@ -379,6 +390,7 @@ def test_range_salted_hot_path_matches_term_stats(spark):
         decode_positions_flat,
     )
     from elasticsearch_analysis_combo_spark.operators.postings import (
+        range_starts,
         term_blocks_from_rows,
     )
 
@@ -394,9 +406,10 @@ def test_range_salted_hot_path_matches_term_stats(spark):
     hot_terms = {r["term"] for r in hot.collect()}
     assert len(hot_terms) >= 3
 
+    docs_t = doc_table(stats)
     rows = build_postings(
-        stats, avgdl=avgdl, hot_terms=hot, block_size=8, salt_shards=4,
-        with_positions=True, max_blocks_per_row=2,
+        stats, docs_t, avgdl=avgdl, hot_terms=hot, block_size=8,
+        salt_shards=4, with_positions=True, max_blocks_per_row=2,
     ).collect()
     got: dict[str, list] = {}
     for r in rows:
@@ -418,14 +431,21 @@ def test_range_salted_hot_path_matches_term_stats(spark):
         blocks = term_blocks_from_rows(
             [r["run_idx"] for r in trows], [r["blocks"] for r in trows]
         )
-        d, t, l, p = decode_segment_blocks(blocks, True)
+        d, t, l, p = decode_segment_blocks(blocks, docs_t, True)
         assert list(zip(
             d.tolist(), t.tolist(), l.tolist(),
             (tuple(int(x) for x in ps) for ps in p),
         )) == exp, term
         if term in hot_terms:
-            # shard id = run_idx // RUN_STRIDE (2^20)
+            # range id = run_idx // RUN_STRIDE (2^20); each shard's blocks
+            # lie inside its ordinal range
             assert len({r["run_idx"] >> 20 for r in trows}) > 1, term
+            starts = range_starts(2, docs_t.doc_ids.size)
+            for r in trows:
+                rid = r["run_idx"] >> 20
+                for bl in r["blocks"]:
+                    assert starts[rid] <= bl["first_doc"], term
+                    assert bl["last_doc"] < starts[rid + 1], term
 
 
 def test_hot_run_renumbering_overflow_raises(spark):
@@ -434,9 +454,11 @@ def test_hot_run_renumbering_overflow_raises(spark):
     hot terms instead of wrapping run_idx; 1024 ranges still fit."""
     stats = _stats(spark, [(1, "the if"), (2, "the")])
     hot = stats.select("term").distinct()
+    docs_t = doc_table(stats)
     with pytest.raises(ValueError, match="overflows int32"):
-        build_postings(stats, avgdl=2.0, hot_terms=hot, salt_shards=4096)
-    build_postings(stats, avgdl=2.0, hot_terms=hot, salt_shards=1024)
+        build_postings(stats, docs_t, avgdl=2.0, hot_terms=hot,
+                       salt_shards=4096)
+    build_postings(stats, docs_t, avgdl=2.0, hot_terms=hot, salt_shards=1024)
 
 
 def test_phrase_over_chunked_rows_matches_unchunked(spark):
@@ -445,8 +467,8 @@ def test_phrase_over_chunked_rows_matches_unchunked(spark):
     stats = _stats(spark, docs).cache()
 
     def build(cap):
-        return build_postings(stats, avgdl=20.0, block_size=4,
-                              with_positions=True, max_blocks_per_row=cap)
+        return posting_frame(stats, avgdl=20.0, block_size=4,
+                             with_positions=True, max_blocks_per_row=cap)
 
     phrases = [(0, "the if"), (1, "merge index token"), (2, "the the")]
     tiny = phrase_match(spark, build(2), phrases, CFG).collect()

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.querystring import (
     parse_simple_query_string,
@@ -53,8 +53,9 @@ def fixture(spark):
     avgdl = stats.select("doc_id", "dl").distinct().agg(
         F.avg("dl")
     ).collect()[0][0]
-    post = build_postings(stats, avgdl=avgdl, block_size=16,
-                          with_positions=True).cache()
+    post = posting_frame(stats, avgdl=avgdl, block_size=16,
+                         with_positions=True)
+    post.frame.cache()
     return stats, term_df, post, n_docs, avgdl
 
 

@@ -66,19 +66,22 @@ def test_tiny_df_is_local_table_scan(spark):
 def test_wand_blocks_sans_positions_fields(spark, tmp_path):
     from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
     from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
-    from elasticsearch_analysis_combo_spark.operators.postings import build_postings
-    from elasticsearch_analysis_combo_spark.query.wand import _blocks_sans_positions
+    from elasticsearch_analysis_combo_spark.operators.postings import (
+        blocks_sans_positions,
+        build_postings,
+        doc_table,
+    )
     from elasticsearch_analysis_combo_spark.sources.corpus import documents_as_corpus
 
     corpus = documents_as_corpus(spark, "/root/testdata/sf0.001")
     stats = build_term_stats(corpus, ComboConfig(["whitespace"]))
     stats.write.mode("overwrite").parquet(str(tmp_path / "ts"))
     stats = spark.read.parquet(str(tmp_path / "ts"))
-    build_postings(stats, avgdl=100.0, hot_terms=None, salt_shards=1).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "postings"))
+    build_postings(
+        stats, doc_table(stats), avgdl=100.0, hot_terms=None, salt_shards=1
+    ).write.mode("overwrite").parquet(str(tmp_path / "postings"))
     postings = spark.read.parquet(str(tmp_path / "postings"))
-    stripped = postings.withColumn("blocks", _blocks_sans_positions())
+    stripped = postings.withColumn("blocks", blocks_sans_positions())
     # struct loses exactly pos_data; every other field value is unchanged
     full = postings.selectExpr("term", "run_idx", "explode(blocks) b").selectExpr(
         "term", "run_idx", "b.first_doc", "b.last_doc", "b.n", "b.max_impact", "b.data"

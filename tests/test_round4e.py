@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.spans import (
     span_containing_match,
@@ -24,8 +24,8 @@ CFG = ComboConfig(["whitespace"])
 def _postings(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
-    return build_postings(stats, avgdl=10.0, block_size=16,
-                          with_positions=True)
+    return posting_frame(stats, avgdl=10.0, block_size=16,
+                         with_positions=True)
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +39,7 @@ def wpost(spark):
         (5, "c c c"),            # no big terms
     ]
     p = _postings(spark, rows)
-    p.cache().count()
+    p.frame.cache().count()
     return p
 
 

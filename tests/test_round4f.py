@@ -13,7 +13,7 @@ from elasticsearch_analysis_combo_spark.analysis.tokenizers import (
 )
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import (
     phrase_match,
@@ -77,16 +77,16 @@ DOCS = [
 def _index(spark, rows, cfg):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, cfg)
-    return build_postings(stats, avgdl=10.0, block_size=16,
-                          with_positions=True)
+    return posting_frame(stats, avgdl=10.0, block_size=16,
+                         with_positions=True)
 
 
 @pytest.fixture(scope="module")
 def indexes(spark):
     uni = _index(spark, DOCS, BASE)
     sh = _index(spark, DOCS, ComboConfig([SH2]))
-    uni.cache().count()
-    sh.cache().count()
+    uni.frame.cache().count()
+    sh.frame.cache().count()
     return uni, sh
 
 

@@ -299,13 +299,13 @@ def _sm_postings(spark, rows):
         build_term_stats,
     )
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
 
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, ComboConfig(["whitespace"]))
-    post = build_postings(stats, avgdl=10.0, block_size=16,
-                          with_positions=True)
+    post = posting_frame(stats, avgdl=10.0, block_size=16,
+                         with_positions=True)
     term_df = stats.groupBy("term").agg(F.count("*").alias("df"))
     return post, term_df
 
@@ -363,7 +363,7 @@ def test_span_multi_prefix_equals_expanded_span_near(spark):
         (3, "value alone"),
     ]
     post, term_df = _sm_postings(spark, rows)
-    post.cache().count()
+    post.frame.cache().count()
     # prefix val -> {value, valley}: doc 0 and 2 match within slop 2
     out = span_multi_near_match(
         spark, post, term_df,

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.dsl import (
     _parse_function_score,
@@ -36,8 +36,8 @@ K1, B = 1.2, 0.75
 
 
 def _positional_postings(stats, avgdl):
-    return build_postings(stats, avgdl=avgdl, block_size=16,
-                          with_positions=True)
+    return posting_frame(stats, avgdl=avgdl, block_size=16,
+                         with_positions=True)
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +58,9 @@ def fielded(spark):
         stats = build_term_stats(df, CFG, content_col=f).cache()
         stats.count()
         n, avgdl = field_corpus_stats(stats)
-        out[f] = (stats, _positional_postings(stats, avgdl).cache(), n, avgdl)
+        post = _positional_postings(stats, avgdl)
+        post.frame.cache()
+        out[f] = (stats, post, n, avgdl)
     return out
 
 

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
+    posting_frame,
 )
 from elasticsearch_analysis_combo_spark.query.phrase import phrase_match
 from elasticsearch_analysis_combo_spark.query.spans import (
@@ -20,8 +20,8 @@ CFG = ComboConfig(["whitespace"])
 def _postings(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, content string")
     stats = build_term_stats(df, CFG)
-    return build_postings(stats, avgdl=10.0, block_size=16,
-                          with_positions=True)
+    return posting_frame(stats, avgdl=10.0, block_size=16,
+                         with_positions=True)
 
 
 @pytest.fixture(scope="module")
@@ -35,7 +35,7 @@ def post(spark):
         (5, "beta x x alpha"),            # reversed, gap 2
     ]
     p = _postings(spark, rows)
-    p.cache().count()
+    p.frame.cache().count()
     return p
 
 
@@ -85,8 +85,9 @@ def test_ordered_slop0_equals_phrase_on_distinct_terms(spark):
     positions — identical match set to exact phrase_match."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     stats = build_term_stats(docs, CFG, content_col="text")
-    post = build_postings(stats, avgdl=50.0, block_size=64,
-                          with_positions=True).cache()
+    post = posting_frame(stats, avgdl=50.0, block_size=64,
+                         with_positions=True)
+    post.frame.cache()
     qs = [(0, "value table"), (1, "fast merge")]
     span = _rows(span_near_match(spark, post, qs, CFG, slop=0, in_order=True))
     phrase = _rows(phrase_match(spark, post, qs, CFG, slop=0))
@@ -98,8 +99,9 @@ def test_partitioned_equals_single_task(spark):
     evaluator, both orders, on a real corpus with stop-word terms."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     stats = build_term_stats(docs, CFG, content_col="text")
-    post = build_postings(stats, avgdl=50.0, block_size=64,
-                          with_positions=True).cache()
+    post = posting_frame(stats, avgdl=50.0, block_size=64,
+                         with_positions=True)
+    post.frame.cache()
     qs = [(0, "the value"), (1, "fast merge batch")]
     for in_order in (True, False):
         single = _rows(span_near_match(

@@ -242,12 +242,12 @@ def test_phrase_match(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, content string")
     from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
     from elasticsearch_analysis_combo_spark.operators.postings import (
-        build_postings,
+        posting_frame,
     )
 
     cfg = ComboConfig(["whitespace"])
     stats = build_term_stats(docs, cfg)
-    postings = build_postings(stats, avgdl=7.0, block_size=4)
+    postings = posting_frame(stats, avgdl=7.0, block_size=4)
     out = phrase_match(
         spark, postings, [(0, "merge the segment"), (1, "merge segment"), (2, "zzz qqq")], cfg
     ).collect()

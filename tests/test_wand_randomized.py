@@ -12,7 +12,10 @@ import numpy as np
 import pytest
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
-from elasticsearch_analysis_combo_spark.operators.postings import _encode_blocks
+from elasticsearch_analysis_combo_spark.operators.postings import (
+    DocTable,
+    _encode_blocks,
+)
 from elasticsearch_analysis_combo_spark.query.wand import wand_topk_single
 
 from tests.oracle import build_oracle_index, oracle_topk
@@ -40,17 +43,19 @@ def make_corpus(rng: random.Random, n_docs: int):
 
 def encoded_postings(docs, block_size):
     postings, doc_len, n_docs, avgdl = build_oracle_index(docs, CFG)
+    ids = np.array(sorted(doc_len), dtype=np.int64)
+    table = DocTable(ids, np.array([doc_len[d] for d in ids], dtype=np.int64))
     enc = {}
     for term, plist in postings.items():
         items = sorted(plist.items())
-        doc_ids = np.array([d for d, _ in items], dtype=np.int64)
+        ords = np.searchsorted(ids, [d for d, _ in items])
         tfs = np.array([tf for _, (tf, _) in items], dtype=np.int64)
-        dls = np.array([doc_len[d] for d, _ in items], dtype=np.int64)
-        blocks = _encode_blocks(doc_ids, tfs, dls, None, avgdl, K1, B, block_size)
+        blocks = _encode_blocks(ords, tfs, table.dl[ords], None, avgdl, K1, B,
+                                block_size)
         df = len(items)
         idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
         enc[term] = (idf, blocks)
-    return enc, n_docs, avgdl
+    return enc, table, avgdl
 
 
 @pytest.mark.parametrize("seed", range(25))
@@ -58,7 +63,7 @@ def test_wand_random_corpora(seed):
     rng = random.Random(seed)
     docs = make_corpus(rng, rng.randint(2, 120))
     block_size = rng.choice([2, 3, 8, 64])   # tiny blocks stress skipping
-    enc, n_docs, avgdl = encoded_postings(docs, block_size)
+    enc, table, avgdl = encoded_postings(docs, block_size)
     queries = [
         "the if return",                      # all-hot (threshold pressure)
         "merge rare1",                        # mixed df
@@ -74,9 +79,9 @@ def test_wand_random_corpora(seed):
             # dense_max_postings=0 forces the cursor (block-max WAND) path;
             # the default dispatches small tasks to the dense evaluator —
             # both must match the oracle AND each other bit-exactly
-            got = wand_topk_single(by_term, k, avgdl, K1, B,
+            got = wand_topk_single(by_term, k, avgdl, K1, B, table,
                                    dense_max_postings=0)
-            dense = wand_topk_single(by_term, k, avgdl, K1, B)
+            dense = wand_topk_single(by_term, k, avgdl, K1, B, table)
             exp = [(d, s) for _, d, s in oracle_topk(docs, CFG, q, k=k)]
             assert [d for d, _ in got] == [d for d, _ in exp], (seed, q, k)
             for (_, s1), (_, s2) in zip(got, exp):

@@ -88,7 +88,7 @@ def main() -> None:
     )
 
     ph = phrase_match_partitioned(
-        spark, idx.postings(), [(0, "the spark")], cfg, range_bits=3
+        spark, idx, [(0, "the spark")], cfg, range_bits=3
     )
     p = plan_text(ph)
     failures += not check(
@@ -617,7 +617,7 @@ def main() -> None:
     # and the dl leg is a term-PRUNED stats scan (In(term,...) pushed
     # into parquet) — never a full-corpus dl pass
     sq = dsl_topk(
-        spark, idx.term_stats(), idx.term_df(), idx.postings(),
+        spark, idx.term_stats(), idx.term_df(), idx,
         [(0, {"span_near": {"clauses": [
             {"span_term": {"content": "spark"}},
             {"span_term": {"content": "query"}}], "slop": 2}})],
@@ -793,22 +793,24 @@ def main() -> None:
     # posting scan is term-PRUNED (In(term,...) pushed into parquet); the
     # phrases are scored in the calling process, so the per-field scores
     # enter the blend as LocalTableScan rows, never row-Python. The check
-    # plans the fetch scan through the same builder positional_eval calls.
-    from elasticsearch_analysis_combo_spark.query.phrase import (
-        analyze_phrases,
-        positional_scan,
+    # plans the fetch scan through the same builder a PostingFrame's
+    # positional read calls.
+    from elasticsearch_analysis_combo_spark.operators.postings import (
+        posting_scan,
     )
+    from elasticsearch_analysis_combo_spark.query.phrase import analyze_phrases
 
-    p = plan_text(positional_scan(
+    p = plan_text(posting_scan(
         idx.postings(),
         {t for _, _, t in analyze_phrases([(0, "spark query")], cfg)},
+        positions=True,
     ))
     failures += not check(
         "mm phrase posting scan term-pruned pushdown", p,
         "PushedFilters: [In(term",
     )
     pp = multi_match_phrase_topk(
-        spark, {"content": idx.postings()},
+        spark, {"content": idx},
         {"content": (idx.meta.n_docs, idx.meta.avgdl)},
         [(0, "spark query")], cfg, k=10,
     )
@@ -911,12 +913,11 @@ def main() -> None:
     # extraction keeps nested schema pruning, so pos_data must be absent
     # from the posting scan's ReadSchema and from the whole plan. The check
     # reads the plan of the fetch scan that the partitioned WAND and
-    # wand_topk_from_postings over a posting DataFrame run.
+    # wand_topk_from_postings over a PostingFrame run.
     from elasticsearch_analysis_combo_spark.plans.index_build import (
         posting_read_columns,
     )
     from elasticsearch_analysis_combo_spark.query.bm25 import analyze_queries
-    from elasticsearch_analysis_combo_spark.query.wand import posting_scan
 
     wand_terms = {t for _, t in analyze_queries([(0, "spark query")], cfg)}
     p = plan_text(posting_scan(idx.postings(), wand_terms))
