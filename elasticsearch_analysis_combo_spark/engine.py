@@ -127,7 +127,9 @@ class ComboSearchEngine:
         ``PARTITIONED_THRESHOLD`` docs; below it the query terms' posting
         rows are read from the published parquet with pyarrow and scored
         by the caller, with no Spark job (a job's fixed cost would
-        dominate while posting volume is small)."""
+        dominate while posting volume is small), and the hits come back as
+        a driver-held ``tinydf.LocalFrame``: collecting them builds no JVM
+        plan; the ``fetch_from`` join builds it."""
         queries = [(0, query)] if isinstance(query, str) else query
         cfg = self._query_config()
         if partitioned is None:

@@ -105,9 +105,6 @@ PHRASE_DL_W_SCHEMA = T.StructType(
 _POS_BIAS = 1 << 30
 _BAND = np.int64(1 << 31)
 
-# pandas dtype of each result column type the positional schemas use
-_DTYPES = {T.IntegerType(): "int32", T.LongType(): "int64", T.DoubleType(): "float64"}
-
 
 def analyze_phrases(
     queries: list[tuple[int, str]], config: ComboConfig
@@ -337,9 +334,9 @@ def phrase_match(
     sloppyFreq (1/(matchLength+1) per anchor, summed). The batch's
     distinct terms' posting rows are fetched and decoded once and every
     phrase is matched in the calling process (:func:`positional_eval`:
-    no Spark job for a published index); returns a LocalTableScan frame.
-    Use :func:`phrase_match_partitioned` for stop-word phrases over very
-    large indexes."""
+    no Spark job for a published index) and returned as a driver-held
+    ``tinydf.LocalFrame``. Use :func:`phrase_match_partitioned` for
+    stop-word phrases over very large indexes."""
     return _slots_eval(
         spark, postings, _phrase_slots(queries, config), slop, with_dl,
         with_weights,
@@ -618,9 +615,10 @@ def positional_eval(
     decoded, df)`` runs for every query in qid order in the calling
     process, with ``decoded``: term -> (docs, offs, pos_flat, dls) and
     ``df``: term -> document frequency. The matcher returns one array per
-    ``schema`` field after ``query_id``; the result is a LocalTableScan
-    frame. With ``range_bits`` the queries fan out per (query, doc-range)
-    instead, through :func:`range_partitioned_positional_eval` (the scale
+    ``schema`` field after ``query_id``; the columns leave through
+    :func:`tiny_df` as a driver-held ``LocalFrame`` (collecting it builds
+    no JVM plan). With ``range_bits`` the queries fan out per (query,
+    doc-range) instead, through :func:`range_partitioned_positional_eval` (the scale
     path, which scans the posting table with Spark and where ``df`` is
     None)."""
     terms_by_q = {q: ts for q, ts in terms_by_q.items() if ts}
@@ -648,13 +646,10 @@ def positional_eval(
         cols[0].append(np.full(res[0].size, qid))
         for col, arr in zip(cols[1:], res):
             col.append(arr)
-    if not sum(arr.size for arr in cols[0]):
-        return tiny_df(spark, [], schema)
-    # a pandas frame converts through Arrow into a LocalTableScan
-    return spark.createDataFrame(pd.DataFrame({
-        f.name: pd.Series(np.concatenate(col), dtype=_DTYPES[f.dataType])
+    return tiny_df(spark, pd.DataFrame({
+        f.name: np.concatenate(col)
         for f, col in zip(schema.fields, cols)
-    }), schema=schema)
+    }), schema)
 
 
 def _slots_eval(

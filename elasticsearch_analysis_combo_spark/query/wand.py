@@ -383,7 +383,8 @@ def wand_topk_from_postings(
     :func:`wand_topk_single` (dense-dispatched below
     ``dense_max_postings`` postings). An :class:`InvertedIndex` is read
     with pyarrow and runs no Spark job; a ``PostingFrame`` is fetched with
-    one. Returns a LocalTableScan frame."""
+    one. Returns a driver-held ``tinydf.LocalFrame``: collecting it builds
+    no JVM plan."""
     terms_by_q: dict[int, set[str]] = {}
     for qid, term in analyze_queries(queries, config):
         terms_by_q.setdefault(qid, set()).add(term)

@@ -240,9 +240,11 @@ def test_search_and_phrase_issue_no_job(built, spark):
     queries (phrase, hit or miss, ranked phrase, phrase prefix, span_near,
     span_or, intervals) read their terms' posting rows from the published
     parquet with pyarrow and score them in the calling process: no
-    request issues a Spark job, collecting included. Each answer equals
-    the same evaluator fed the posting DataFrame (the Spark fetch), in
-    rank, doc id and exact score."""
+    request issues a Spark job, collecting included, and collecting a
+    result builds no JVM frame (its ``_jdf`` stays unbuilt). Each answer
+    equals the same rows after a JVM round trip, and the same evaluator
+    fed the posting DataFrame (the Spark fetch), in rank, doc id and
+    exact score."""
     from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
     from elasticsearch_analysis_combo_spark.query.intervals import (
         intervals_match,
@@ -284,16 +286,24 @@ def test_search_and_phrase_issue_no_job(built, spark):
         "intervals": lambda: engine.intervals(rule),
         "intervals-multi": lambda: engine.intervals(multi),
     }
-    out = {}
+    out, frames = {}, {}
+
+    def answer(name, request):
+        frames[name] = request()
+        out[name] = frames[name].collect()
+
     for name, request in requests.items():
-        n = _jobs(spark, f"request-{name}",
-                  lambda: out.update({name: request().collect()}))
+        n = _jobs(spark, f"request-{name}", lambda: answer(name, request))
         assert n == 0, (name, n)
+        assert "_jdf" not in frames[name].__dict__, name
     assert out["search"] and out["phrase"] and not out["phrase-miss"]
     assert out["phrase-ranked"] and out["phrase-prefix"]
     assert out["span-near"] and out["span-or"] and out["intervals"]
     assert out["intervals-multi"]
     assert {r["query_id"] for r in out["batch"]} == set(range(32))
+    for name, frame in frames.items():
+        # the answer as the JVM returns it
+        assert frame.select("*").collect() == out[name], name
 
     idx = engine.idx
     cfg, meta = config_from_meta(idx.meta.config), idx.meta
