@@ -6,6 +6,16 @@ corpus -> combo analysis + per-doc aggregation (one mapInPandas pass)
 all stages checkpointed with lineage (B6), resumable mid-pipeline; each
 stage's lineage is observed on its own write job, never re-scanned.
 
+:func:`publish_stats` is the one way term stats become a published
+generation: :func:`build_index`, batch compaction (plans/maintenance.py)
+and the streaming fold (streaming/ingest.py) each hand it their stats as
+the ``term_stats`` stage, and it derives the other three stages and
+publishes. Every stage table is written once, into a dir named by its
+fingerprint; :func:`publish_tables` swaps in a meta.json naming the four
+dirs (B5: a generation is a snapshot, the swap is atomic), so a reader
+sees exactly the old or the new generation, and one holding the old meta
+keeps reading it.
+
 The doc_stats table doubles as the generation's doc table: sorted by
 doc_id, a doc's index is its ordinal, the number posting blocks code, and
 its ``dl`` is the per-doc norm that scoring gathers. The build reads it
@@ -47,6 +57,7 @@ from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.operators.checkpoint import (
     CheckpointManager,
     fingerprint,
+    remove_stage_dirs,
 )
 from elasticsearch_analysis_combo_spark.operators.codec import POSTING_FORMAT
 from elasticsearch_analysis_combo_spark.operators.postings import (
@@ -67,88 +78,66 @@ class IndexMeta:
     salt_shards: int
     config: dict
     with_positions: bool
-    #: logical table name -> subdirectory under index_dir. None (legacy /
-    #: fresh batch build) means each table lives in its bare-named dir.
-    #: Versioned publishers (streaming compaction, delete compaction) point
-    #: entries at generation dirs like "postings-3f9a12e0" so a publish is
-    #: a pure meta.json swap — readers holding the old meta keep valid
-    #: paths for their whole lifetime.
-    tables: dict | None = None
+    #: stage name -> its table dir under index_dir, ``<stage>-<fingerprint>``
+    #: (CheckpointManager writes each once and never rewrites it), so a
+    #: publish is a pure meta.json swap and readers holding an older meta
+    #: keep valid paths for as long as GC keeps its generation
+    tables: dict
     #: ``codec.POSTING_FORMAT`` of the posting blocks; None (absent) is the
     #: hash-gap layout of indexes published before doc ordinals
     posting_format: str | None = None
 
     @staticmethod
     def load(index_dir: str) -> "IndexMeta":
+        """The published meta.json. A meta of another posting format, or
+        one naming no table dirs (written before stage dirs were
+        fingerprinted), is refused: rebuild the index."""
         with open(os.path.join(index_dir, "meta.json")) as f:
-            return IndexMeta(**json.load(f))
+            meta = IndexMeta(**json.load(f))
+        if meta.posting_format != POSTING_FORMAT:
+            raise ValueError(
+                f"{index_dir}: posting format "
+                f"{meta.posting_format or 'hash-gap (unversioned)'} is "
+                f"not {POSTING_FORMAT}; rebuild the index with build_index"
+            )
+        if not meta.tables:
+            raise ValueError(
+                f"{index_dir}: meta.json names no table dirs; rebuild the "
+                "index with build_index"
+            )
+        return meta
 
     def table_dir(self, index_dir: str, name: str) -> str:
-        sub = (self.tables or {}).get(name, name)
-        return os.path.join(index_dir, sub)
+        return os.path.join(index_dir, self.tables[name])
 
 
-def _write_meta(index_dir: str, meta: IndexMeta) -> None:
-    """Replace meta.json atomically (temp file + ``os.replace``): a reader
-    sees the old meta or the new one, never a partial file."""
+#: the stages of a generation, in build order; each is one table
+STAGES = ("term_stats", "doc_stats", "term_df", "postings")
+
+
+def publish_tables(index_dir: str, meta: IndexMeta) -> None:
+    """Publish the generation ``meta`` names: meta.json is replaced
+    atomically (temp file + ``os.replace``), so a reader opens the old
+    generation or the new one, never a mix. Then GC keeps the stage dirs
+    of the new generation and of the one it replaced (readers that opened
+    that one finish undisturbed; older readers are assumed gone) and
+    deletes every other stage dir. Republishing the current generation
+    changes nothing. This is meta.json's only writer. On a real deployment
+    index_dir is shared storage and the same swap applies (object stores:
+    write new prefixes + swap a pointer object)."""
     path = os.path.join(index_dir, "meta.json")
+    keep = set(meta.tables.values())
+    if os.path.exists(path):
+        with open(path) as f:
+            previous = json.load(f).get("tables") or {}
+        if previous == meta.tables:
+            return
+        keep |= set(previous.values())
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(asdict(meta), f, indent=1)
     os.replace(tmp, path)
-
-
-def publish_tables(
-    spark: SparkSession,
-    index_dir: str,
-    tables: dict[str, DataFrame],
-    meta: IndexMeta,
-    keep_previous: int = 1,
-) -> "InvertedIndex":
-    """Atomically publish a new index generation.
-
-    Each DataFrame writes to a fresh ``<name>-<token>`` dir; the new
-    meta.json (pointing at the new dirs) replaces the old one with a single
-    ``os.replace`` — the only mutation existing paths ever see. Readers
-    that loaded an earlier meta keep reading their generation's dirs
-    (still on disk). A ``meta.history.jsonl`` records every published
-    generation's table map; dirs referenced only by generations more than
-    ``keep_previous`` publishes back are deleted. On a real deployment
-    index_dir is shared storage and the same swap applies (object stores:
-    write new prefixes + swap a pointer object)."""
-    import shutil
-
-    token = uuid.uuid4().hex[:8]
-    new_tables = dict(meta.tables or {})
-    for name, df in tables.items():
-        sub = f"{name}-{token}"
-        df.write.mode("overwrite").parquet(os.path.join(index_dir, sub))
-        new_tables[name] = sub
-    meta.tables = new_tables
-    _write_meta(index_dir, meta)
-    # generation ledger: GC keeps every dir referenced by the newest
-    # keep_previous+1 published generations (in-flight readers of those
-    # metas finish undisturbed; older readers are assumed gone)
-    hist_path = os.path.join(index_dir, "meta.history.jsonl")
-    with open(hist_path, "a") as f:
-        f.write(json.dumps(new_tables) + "\n")
-    live = set(new_tables.values()) | set(tables.keys())
-    try:
-        recent = open(hist_path).read().splitlines()[-(keep_previous + 1):]
-        for ln in recent:
-            live |= set(json.loads(ln).values())
-    except Exception:
-        return InvertedIndex(spark, index_dir)  # ledger unreadable: GC nothing
-    for entry in os.listdir(index_dir):
-        base = entry.rsplit("-", 1)[0]
-        if (
-            base in tables
-            and entry not in live
-            and "-" in entry
-            and os.path.isdir(os.path.join(index_dir, entry))
-        ):
-            shutil.rmtree(os.path.join(index_dir, entry), ignore_errors=True)
-    return InvertedIndex(spark, index_dir)
+    remove_stage_dirs(index_dir, STAGES, keep)
 
 
 def hot_terms(term_df: DataFrame, n_docs: int, block_size: int) -> DataFrame:
@@ -212,19 +201,14 @@ class InvertedIndex:
     read once per handle (keyed by the resolved table dir) and given to
     later reads, which then skip the footer-inference job. The handle
     reads the generation its ``meta.json`` named when it was opened, also
-    after a later publish. An index whose posting blocks are not in
-    ``codec.POSTING_FORMAT`` is refused: rebuild it."""
+    after a later publish, for as long as GC keeps that generation (the
+    newest and the previous one). An index :meth:`IndexMeta.load` refuses
+    cannot be opened: rebuild it."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = IndexMeta.load(index_dir)
-        if self.meta.posting_format != POSTING_FORMAT:
-            raise ValueError(
-                f"{index_dir}: posting format "
-                f"{self.meta.posting_format or 'hash-gap (unversioned)'} is "
-                f"not {POSTING_FORMAT}; rebuild the index with build_index"
-            )
         self._schemas: dict[str, T.StructType] = {}
         self._posting_files: list | None = None
         self._docs: DocTable | None = None
@@ -314,57 +298,42 @@ class InvertedIndex:
         return self._vocabulary
 
 
-def build_index(
+def publish_stats(
     spark: SparkSession,
-    corpus: DataFrame,
-    config: ComboConfig,
     index_dir: str,
-    doc_id_col: str = "doc_id",
-    content_col: str = "content",
-    lang_col: str | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    block_size: int = 128,
-    salt_shards: int = 8,
-    with_positions: bool = True,
-    input_fingerprint: str = "",
+    term_stats: DataFrame,
+    fp: str,
+    config: dict,
+    k1: float,
+    b: float,
+    block_size: int,
+    salt_shards: int,
+    with_positions: bool,
 ) -> InvertedIndex:
-    """Build (or resume) the full index at ``index_dir``.
+    """Derive and publish a whole generation from per-doc term stats.
 
-    ``input_fingerprint`` ties checkpoint resume to the CORPUS, not just the
-    config: left empty, a content fingerprint (row count + bit_xor of
-    xxhash64(doc_id, content)) is derived with one extra corpus scan, so
-    rebuilding into an existing index_dir with changed data re-runs the
-    stages instead of silently resuming a stale index. Callers with a cheap
-    external identity (snapshot id, table version) should pass it to skip
-    the scan."""
-    os.makedirs(index_dir, exist_ok=True)
+    ``fp`` identifies ``term_stats`` (with the other arguments it
+    fingerprints every stage, so a rerun resumes and runs no stage twice).
+    The chain: the stats land as the ``term_stats`` stage; ``doc_stats``
+    (the doc table, whose observed manifest gives ``(n_docs, avgdl)``: a
+    resumed run issues no job for them) is read back with pyarrow;
+    ``term_df``; the hot list; one :func:`build_postings` pass. Then
+    :func:`publish_tables` swaps in a meta.json naming the four stage
+    dirs. A crash before the swap leaves the published generation as it
+    was."""
     ckpt = CheckpointManager(spark, index_dir)
-    cfg = _config_dict(config)
-    if not input_fingerprint:
-        r = corpus.agg(
-            F.count("*").alias("n"),
-            F.expr(
-                f"bit_xor(xxhash64(`{doc_id_col}`, `{content_col}`))"
-            ).alias("x"),
-        ).collect()[0]
-        input_fingerprint = f"auto:{r['n']}:{r['x']}"
     # "statsfmt=2": term_stats positions became pre-packed pos_data binary;
     # the salt invalidates checkpoints of the old array-typed stage outputs
-    base_fp = fingerprint(cfg, input_fingerprint, k1, b, block_size,
-                          salt_shards, with_positions, "statsfmt=2")
+    base_fp = fingerprint(config, fp, k1, b, block_size, salt_shards,
+                          with_positions, "statsfmt=2")
 
     stats = ckpt.run(
         "term_stats",
         fingerprint(base_fp, "term_stats"),
-        lambda: build_term_stats(
-            corpus, config, doc_id_col=doc_id_col,
-            content_col=content_col, lang_col=lang_col,
-        ),
+        lambda: term_stats,
         checksum_cols=["doc_id", "term", "tf"],
     )
 
-    # (N, avgdl) come from the manifest: a resumed build runs no job for them
     ckpt.run(
         "doc_stats",
         fingerprint(base_fp, "doc_stats"),
@@ -375,7 +344,7 @@ def build_index(
     ds = ckpt.manifest("doc_stats")
     n_docs, avgdl = int(ds["rows"]), float(ds["avgdl"] or 0.0)
     docs = doc_table(pads.dataset(
-        os.path.join(index_dir, "doc_stats"), format="parquet"
+        ckpt.path("doc_stats"), format="parquet"
     ).to_table(columns=["doc_id", "dl"]))
 
     term_df = ckpt.run(
@@ -407,13 +376,58 @@ def build_index(
         checksum_cols=["term", "df", "cf"],
     )
 
-    # published last: a crash in any stage leaves no new meta.json
-    _write_meta(index_dir, IndexMeta(
+    publish_tables(index_dir, IndexMeta(
         n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
-        salt_shards=salt_shards, config=cfg, with_positions=with_positions,
+        salt_shards=salt_shards, config=config, with_positions=with_positions,
+        tables={s: os.path.basename(ckpt.path(s)) for s in STAGES},
         posting_format=POSTING_FORMAT,
     ))
     return InvertedIndex(spark, index_dir)
+
+
+def build_index(
+    spark: SparkSession,
+    corpus: DataFrame,
+    config: ComboConfig,
+    index_dir: str,
+    doc_id_col: str = "doc_id",
+    content_col: str = "content",
+    lang_col: str | None = None,
+    k1: float = 1.2,
+    b: float = 0.75,
+    block_size: int = 128,
+    salt_shards: int = 8,
+    with_positions: bool = True,
+    input_fingerprint: str = "",
+) -> InvertedIndex:
+    """Build (or resume) the full index at ``index_dir``: the corpus'
+    combo term stats through :func:`publish_stats`.
+
+    ``input_fingerprint`` ties checkpoint resume to the CORPUS, not just the
+    config: left empty, a content fingerprint (row count + bit_xor of
+    xxhash64(doc_id, content)) is derived with one extra corpus scan, so
+    rebuilding into an existing index_dir with changed data re-runs the
+    stages instead of silently resuming a stale index. Callers with a cheap
+    external identity (snapshot id, table version) should pass it to skip
+    the scan."""
+    os.makedirs(index_dir, exist_ok=True)
+    if not input_fingerprint:
+        r = corpus.agg(
+            F.count("*").alias("n"),
+            F.expr(
+                f"bit_xor(xxhash64(`{doc_id_col}`, `{content_col}`))"
+            ).alias("x"),
+        ).collect()[0]
+        input_fingerprint = f"auto:{r['n']}:{r['x']}"
+    stats = build_term_stats(
+        corpus, config, doc_id_col=doc_id_col,
+        content_col=content_col, lang_col=lang_col,
+    )
+    return publish_stats(
+        spark, index_dir, stats, input_fingerprint, _config_dict(config),
+        k1=k1, b=b, block_size=block_size,
+        salt_shards=salt_shards, with_positions=with_positions,
+    )
 
 
 def index_stats(term_stats: DataFrame) -> DataFrame:

@@ -13,14 +13,14 @@ already has last-writer-wins compaction, streaming/ingest.py):
   generation (update = delete + add, like Lucene's updateDocument).
 * :func:`compact` folds tombstones + pending generations into the
   per-doc term stats (one anti-join + union; the last staged operation
-  per doc wins) and hands the edited stats to :func:`publish_stats`.
-* :func:`publish_stats` turns term stats into a whole index the way
-  :func:`~..plans.index_build.build_index` does — doc stats, corpus
-  ``(n_docs, avgdl)``, term_df, the hot list and one
-  :func:`~..operators.postings.build_postings` pass — and publishes all
-  four tables atomically via :func:`~..plans.index_build.publish_tables`
-  (meta.json swap; old readers keep a consistent view). The streaming
-  path's ``publish_compacted`` publishes through it too.
+  per doc wins) and hands the edited stats to
+  :func:`~..plans.index_build.publish_stats` as the new generation's
+  ``term_stats`` stage — the one derive-and-publish path
+  :func:`~..plans.index_build.build_index` and the streaming fold use too.
+  Its stages are fingerprinted by the parent generation's ``term_stats``
+  dir and the pending operations' sequence markers, so a crashed compact
+  resumes, and one rerun after its publish re-applies the (idempotent)
+  edits to the new generation.
 
 Every posting row is re-encoded under the new corpus ``avgdl`` and the
 new generation's doc ordinals, so a compacted index holds the same rows as
@@ -32,23 +32,17 @@ from __future__ import annotations
 
 import os
 import uuid
-from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.tinydf import tiny_df
 
-from elasticsearch_analysis_combo_spark.operators.codec import POSTING_FORMAT
-from elasticsearch_analysis_combo_spark.operators.postings import (
-    build_postings,
-    doc_table,
-)
+from elasticsearch_analysis_combo_spark.operators.checkpoint import fingerprint
 from elasticsearch_analysis_combo_spark.plans.index_build import (
     IndexMeta,
     InvertedIndex,
-    hot_terms,
-    publish_tables,
+    publish_stats,
 )
 
 _TOMBSTONE_SCHEMA = "doc_id long"
@@ -137,56 +131,11 @@ def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def publish_stats(
-    spark: SparkSession, index_dir: str, stats: DataFrame, meta: IndexMeta
-) -> InvertedIndex:
-    """Publish per-doc term ``stats`` as a whole new index generation: the
-    doc_stats, ``(n_docs, avgdl)``, term_df and postings all derive from
-    ``stats`` exactly as :func:`~..plans.index_build.build_index` derives
-    them, and the four tables publish atomically through
-    :func:`~..plans.index_build.publish_tables`. ``meta`` supplies the
-    build parameters, analyzer config and current table map; its
-    ``n_docs``/``avgdl`` are replaced by the figures of ``stats``. The
-    doc table (one collect of the doc stats) renumbers the generation's
-    docs and gives ``(n_docs, avgdl)``."""
-    # read by four derived tables and written itself; persist (recomputable
-    # lineage, so an executor loss re-derives rather than failing)
-    stats = stats.persist()
-    try:
-        doc_stats = stats.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-        docs = doc_table(doc_stats)
-        n_docs = int(docs.doc_ids.size)
-        # an exact integer sum over the count: the value Spark's avg gives
-        # build_index for the same docs
-        avgdl = float(docs.dl.sum()) / n_docs if n_docs else 0.0
-        term_df = stats.groupBy("term").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf")
-        )
-        postings = build_postings(
-            stats, docs, avgdl=avgdl,
-            hot_terms=hot_terms(term_df, n_docs, meta.block_size),
-            k1=meta.k1, b=meta.b, block_size=meta.block_size,
-            salt_shards=meta.salt_shards, with_positions=meta.with_positions,
-        )
-        return publish_tables(
-            spark, index_dir,
-            {
-                "postings": postings,
-                "term_stats": stats,
-                "doc_stats": doc_stats,
-                "term_df": term_df,
-            },
-            replace(meta, n_docs=n_docs, avgdl=avgdl,
-                    posting_format=POSTING_FORMAT),
-        )
-    finally:
-        stats.unpersist()
-
-
 def compact(spark: SparkSession, index_dir: str) -> InvertedIndex:
     """Fold pending tombstones + upserts into a new index generation and
-    publish it atomically. Returns the fresh :class:`InvertedIndex`; no-op
-    (returns the current handle) when nothing is pending."""
+    publish it atomically (:func:`~..plans.index_build.publish_stats`).
+    Returns the fresh :class:`InvertedIndex`; no-op (returns the current
+    handle) when nothing is pending."""
     idx = InvertedIndex(spark, index_dir)
     pend = _pending_dir(index_dir)
     tomb = _read_optional(spark, os.path.join(pend, "tombstones"))
@@ -228,14 +177,15 @@ def compact(spark: SparkSession, index_dir: str) -> InvertedIndex:
         up_stats = ups.join(winners, ["doc_id", "gen"]).drop("gen")
         new_stats = new_stats.unionByName(up_stats.select(*old_stats.columns))
 
-    out = publish_stats(spark, index_dir, new_stats, idx.meta)
-    # the build-time checkpoint manifests describe the PRE-edit corpus;
-    # invalidate them so a later build_index over the same inputs re-runs
-    # instead of resuming outputs that no longer match the served index
-    for stage in ("term_stats", "doc_stats", "term_df", "postings"):
-        m = os.path.join(index_dir, f"{stage}.manifest.json")
-        if os.path.exists(m):
-            os.replace(m, m + f".consumed-{uuid.uuid4().hex[:8]}")
+    meta = idx.meta
+    out = publish_stats(
+        spark, index_dir, new_stats,
+        fingerprint("compact", meta.tables["term_stats"],
+                    sorted(os.listdir(os.path.join(pend, "ops")))),
+        meta.config, k1=meta.k1, b=meta.b,
+        block_size=meta.block_size, salt_shards=meta.salt_shards,
+        with_positions=meta.with_positions,
+    )
     # pending edits are folded in; retire them (rename, not delete, so a
     # crash between publish and retire only risks re-applying idempotent
     # edits, never losing them)

@@ -6,10 +6,10 @@ convenience (SURVEY.md §7): new corpus files landing in a directory are
 analyzed exactly once (Spark's file-source checkpoint keeps the offset log),
 each micro-batch appends a *generation* of per-doc term stats, and
 :func:`publish_compacted` folds all generations (last writer wins per doc)
-into a whole index — postings, term_stats, doc_stats and term_df, built
-and published by the same code the batch index's compaction uses — the
-log-structured-merge story (B5) applied across time instead of across
-salt shards.
+into a whole index — postings, term_stats, doc_stats and term_df, derived
+and published by :func:`~..plans.index_build.publish_stats`, the code the
+batch build and its compaction use — the log-structured-merge story (B5)
+applied across time instead of across salt shards.
 
 Exactly-once: the term-stats append and the offset commit are tied by
 foreachBatch's epoch id (re-delivered batches overwrite their own epoch
@@ -25,12 +25,12 @@ from pyspark.sql import functions as F
 
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
+from elasticsearch_analysis_combo_spark.operators.checkpoint import fingerprint
 from elasticsearch_analysis_combo_spark.plans.index_build import (
-    IndexMeta,
     InvertedIndex,
     _config_dict,
+    publish_stats,
 )
-from elasticsearch_analysis_combo_spark.plans.maintenance import publish_stats
 
 
 def stream_corpus(
@@ -93,10 +93,12 @@ def publish_compacted(
 ) -> InvertedIndex:
     """Fold every ingested generation into one servable index at
     ``index_dir`` and publish it atomically: the same four tables
-    build_index produces (postings, term_stats, doc_stats, term_df),
-    queried and maintained through the same InvertedIndex handle and
-    engine. Each table is written to a fresh versioned dir and the publish
-    is a single meta.json swap (:func:`~..plans.maintenance.publish_stats`),
+    build_index produces (postings, term_stats, doc_stats and term_df),
+    derived and published by
+    :func:`~..plans.index_build.publish_stats` and queried and maintained
+    through the same InvertedIndex handle and engine. The folded stats are
+    fingerprinted by the ``gen_stats`` file listing, so a rerun with no new
+    files publishes nothing new. The publish is a single meta.json swap,
     so readers holding the old handle keep their own generation. Returns
     the fresh InvertedIndex handle.
 
@@ -105,20 +107,20 @@ def publish_compacted(
     max-gen rows per doc_id survive, so df/cf are never inflated by
     superseded versions. (foreachBatch's epoch overwrite already guards
     same-epoch replays; this guards cross-epoch updates.)"""
-    stats = spark.read.parquet(os.path.join(index_dir, "gen_stats"))
+    gen_dir = os.path.join(index_dir, "gen_stats")
+    files = sorted(
+        os.path.relpath(os.path.join(root, f), gen_dir)
+        for root, _, names in os.walk(gen_dir) for f in names
+    )
+    stats = spark.read.parquet(gen_dir)
     w = Window.partitionBy("doc_id")
     stats = (
         stats.withColumn("_max_gen", F.max("gen").over(w))
         .filter(F.col("gen") == F.col("_max_gen"))
         .drop("_max_gen", "gen")
     )
-    old_tables = None
-    if os.path.exists(os.path.join(index_dir, "meta.json")):
-        old_tables = IndexMeta.load(index_dir).tables
-    # n_docs/avgdl are placeholders: publish_stats derives them from stats
-    meta = IndexMeta(
-        n_docs=0, avgdl=0.0, k1=k1, b=b, block_size=block_size,
-        salt_shards=salt_shards, config=_config_dict(config),
-        with_positions=with_positions, tables=old_tables,
+    return publish_stats(
+        spark, index_dir, stats, fingerprint("stream", files),
+        _config_dict(config), k1=k1, b=b, block_size=block_size,
+        salt_shards=salt_shards, with_positions=with_positions,
     )
-    return publish_stats(spark, index_dir, stats, meta)

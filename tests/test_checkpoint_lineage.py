@@ -8,6 +8,11 @@
   stage and equals a fresh build; an old-format manifest is a miss;
 * a crash inside the postings stage of a fresh build leaves no meta.json,
   and the next build resumes and equals a fresh build;
+* over an existing index, a rebuild of another corpus never changes what
+  a handle reads: one held across it keeps answering its own generation,
+  and after a crash at any stage or at the meta.json swap a freshly
+  opened handle equals a whole fresh build of the old corpus (of the new
+  one once the rebuild completes);
 * a checkpointed stage issues exactly the Spark jobs of a bare
   ``df.write.parquet`` of the same frame (no lineage re-scan passes);
 * a hot-term list over the InSet limit takes the broadcast-join path and
@@ -31,7 +36,11 @@ from elasticsearch_analysis_combo_spark.operators.postings import (
     doc_table,
 )
 from elasticsearch_analysis_combo_spark.plans import index_build as index_build_mod
-from elasticsearch_analysis_combo_spark.plans.index_build import build_index
+from elasticsearch_analysis_combo_spark.plans.index_build import (
+    InvertedIndex,
+    build_index,
+)
+from elasticsearch_analysis_combo_spark.query.wand import wand_topk
 from elasticsearch_analysis_combo_spark.sources.corpus import (
     generate_corpus,
     ingest,
@@ -46,6 +55,7 @@ CHECKSUM_COLS = {
     "postings": ["term", "df", "cf"],
 }
 BUILD = dict(salt_shards=4, block_size=64)
+QUERIES = [(0, "the public static"), (1, "return value"), (2, "merge segment")]
 
 
 @pytest.fixture(scope="module")
@@ -75,7 +85,95 @@ def _content(index) -> dict:
         "doc_stats": sorted(map(tuple, index.doc_stats().collect())),
         "n_docs": index.meta.n_docs,
         "avgdl": index.meta.avgdl,
+        "wand": [
+            (r["query_id"], r["rank"], r["doc_id"], r["score"])
+            for r in wand_topk(index.spark, index, QUERIES, CFG, k=10).collect()
+        ],
     }
+
+
+@pytest.fixture(scope="module")
+def generations(spark, tmp_path_factory):
+    """Two corpora and the content of a fresh build of each: the only
+    states a reader of an index rebuilt from the first to the second may
+    see."""
+    old = ingest(generate_corpus(spark, 40, seed=1)).cache()
+    new = ingest(generate_corpus(spark, 55, seed=2)).cache()
+    root = tmp_path_factory.mktemp("fresh")
+    yield old, new, *(
+        _content(build_index(spark, c, CFG, str(root / name), **BUILD))
+        for name, c in (("old", old), ("new", new))
+    )
+    old.unpersist()
+    new.unpersist()
+
+
+def test_held_handle_keeps_its_generation_across_a_rebuild(
+    spark, generations, tmp_path
+):
+    old, new, old_content, new_content = generations
+    idx = str(tmp_path / "idx")
+    held = build_index(spark, old, CFG, idx, **BUILD)
+    build_index(spark, new, CFG, idx, **BUILD)
+    assert _content(held) == old_content
+    assert _content(InvertedIndex(spark, idx)) == new_content
+
+
+def _crash_in_postings(monkeypatch):
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(index_build_mod, "build_postings", crash)
+
+
+def _crash_before_manifest(stage):
+    """Crash after ``stage``'s table landed, before its manifest."""
+    def inject(monkeypatch):
+        real_write = CheckpointManager._write_manifest
+
+        def write(path, man):
+            if man["stage"] == stage:
+                raise RuntimeError("injected crash")
+            real_write(path, man)
+
+        monkeypatch.setattr(
+            CheckpointManager, "_write_manifest", staticmethod(write)
+        )
+    return inject
+
+
+def _crash_at_meta_swap(monkeypatch):
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if os.path.basename(dst) == "meta.json":
+            raise RuntimeError("injected crash")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+@pytest.mark.parametrize("inject", [
+    _crash_in_postings,
+    *(_crash_before_manifest(s) for s in CHECKSUM_COLS),
+    _crash_at_meta_swap,
+], ids=["in_postings", *(f"{s}_landed" for s in CHECKSUM_COLS), "meta_swap"])
+def test_crash_in_a_rebuild_leaves_a_whole_generation(
+    spark, generations, tmp_path, monkeypatch, inject
+):
+    old, new, old_content, new_content = generations
+    idx = str(tmp_path / "idx")
+    held = build_index(spark, old, CFG, idx, **BUILD)
+    inject(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_index(spark, new, CFG, idx, **BUILD)
+    monkeypatch.undo()
+    assert _content(InvertedIndex(spark, idx)) == old_content
+    assert _content(held) == old_content
+
+    build_index(spark, new, CFG, idx, **BUILD)
+    assert _content(InvertedIndex(spark, idx)) == new_content
+    assert _content(held) == old_content
 
 
 def test_manifest_lineage_equals_rescan(spark, corpus, tmp_path):

@@ -154,7 +154,9 @@ def test_partitioned_equals_unpartitioned(built, spark, range_bits):
 def test_index_of_another_posting_format_is_refused(built, tmp_path):
     """An index published before doc ordinals (its meta.json records no
     posting format) cannot be opened: the handle raises instead of
-    decoding hash gaps as ordinals."""
+    decoding hash gaps as ordinals. Nor can one published before stage
+    dirs were fingerprinted (its meta.json names no table dirs, its
+    tables sit in bare-named dirs that a rebuild rewrote in place)."""
     import json
 
     from elasticsearch_analysis_combo_spark.plans.index_build import (
@@ -165,11 +167,16 @@ def test_index_of_another_posting_format_is_refused(built, tmp_path):
     with open(f"{idx_dir}/meta.json") as f:
         meta = json.load(f)
     assert meta["posting_format"] == "ordinal-gaps-1"
-    del meta["posting_format"]
-    with open(tmp_path / "meta.json", "w") as f:
-        json.dump(meta, f)
-    with pytest.raises(ValueError, match="posting format .* rebuild"):
-        InvertedIndex(index.spark, str(tmp_path))
+    no_format = {k: v for k, v in meta.items() if k != "posting_format"}
+    for other, error in (
+        (no_format, "posting format .* rebuild"),
+        ({**meta, "tables": None},
+         "names no table dirs; rebuild the index with build_index"),
+    ):
+        with open(tmp_path / "meta.json", "w") as f:
+            json.dump(other, f)
+        with pytest.raises(ValueError, match=error):
+            InvertedIndex(index.spark, str(tmp_path))
 
 
 def test_exhaustive_matches_oracle(built, spark):
@@ -226,7 +233,7 @@ def test_resume_from_checkpoint_equals_fresh(built, spark):
 
 def test_partial_resume_rebuilds_missing_stage(built, spark):
     index, docs, idx_dir, corpus = built
-    shutil.rmtree(f"{idx_dir}/postings")
+    shutil.rmtree(index.meta.table_dir(idx_dir, "postings"))
     import os
     os.remove(f"{idx_dir}/postings.manifest.json")
     index3 = build_index(spark, corpus, CFG, idx_dir, salt_shards=4, block_size=64)
@@ -363,6 +370,8 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
     term filter keeps exactly the row groups whose [min, max] term range
     covers a query term, and the handle's read returns those terms'
     rows."""
+    import os
+
     import pyarrow as pa
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
@@ -373,7 +382,7 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
     from elasticsearch_analysis_combo_spark.plans.index_build import (
         IndexMeta,
         InvertedIndex,
-        _write_meta,
+        publish_tables,
         term_filter,
     )
 
@@ -390,16 +399,19 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
         "df": list(range(1, 401)), "cf": [1] * 400,
         "max_impact": [0.5] * 400, "blocks": blocks,
     })
-    (tmp_path / "postings").mkdir()
-    pq.write_table(table, tmp_path / "postings" / "part-0.parquet",
-                   row_group_size=10)
-    _write_meta(str(tmp_path), IndexMeta(
+    meta = IndexMeta(
         n_docs=1, avgdl=1.0, k1=1.2, b=0.75, block_size=128, salt_shards=8,
-        config={}, with_positions=True, posting_format=POSTING_FORMAT,
-    ))
+        config={}, with_positions=True, tables={"postings": "postings-0"},
+        posting_format=POSTING_FORMAT,
+    )
+    postings_dir = meta.table_dir(str(tmp_path), "postings")
+    os.mkdir(postings_dir)
+    pq.write_table(table, os.path.join(postings_dir, "part-0.parquet"),
+                   row_group_size=10)
+    publish_tables(str(tmp_path), meta)
 
     query = ["t0005", "t0123", "t0399", "t9999"]
-    (part,) = pads.dataset(str(tmp_path / "postings")).get_fragments()
+    (part,) = pads.dataset(postings_dir).get_fragments()
     kept = [g.row_groups[0].id
             for g in part.split_by_row_group(term_filter(query))]
     md = part.metadata

@@ -188,21 +188,36 @@ def test_publish_keeps_old_reader_view(spark, tmp_path):
 
 
 def test_second_compact_gcs_oldest_generation(spark, tmp_path):
+    """GC keeps the newest and the previous generation: a build followed
+    by two compacts deletes the build's stage dirs, and the build's
+    manifests then read as resume misses."""
+    import json
     import os
+
+    from elasticsearch_analysis_combo_spark.operators.checkpoint import (
+        CheckpointManager,
+    )
 
     rows = _corpus(seed=13, n=24)
     idx = _build(spark, rows, tmp_path / "live")
+    ckpt = CheckpointManager(spark, idx.index_dir)
+    built = {s: ckpt.manifest(s) for s in idx.meta.tables}
     delete_docs(spark, idx.index_dir, [rows[0][0]])
-    compact(spark, idx.index_dir)
+    previous = compact(spark, idx.index_dir)
     delete_docs(spark, idx.index_dir, [rows[1][0]])
-    compact(spark, idx.index_dir)
-    gens = [e for e in os.listdir(idx.index_dir)
-            if e.startswith("postings-") and
-            os.path.isdir(os.path.join(idx.index_dir, e))]
-    # newest + immediately-previous kept, older GC'd
-    assert len(gens) <= 2
-    final = InvertedIndex(spark, idx.index_dir)
-    assert final.meta.n_docs == len(rows) - 2
+    final = compact(spark, idx.index_dir)
+    stage_dirs = {e for e in os.listdir(idx.index_dir)
+                  if e.split("-")[0] in idx.meta.tables and
+                  os.path.isdir(os.path.join(idx.index_dir, e))}
+    assert stage_dirs == {*previous.meta.tables.values(),
+                          *final.meta.tables.values()}
+    assert not stage_dirs & set(idx.meta.tables.values())
+    for stage, man in built.items():
+        with open(os.path.join(idx.index_dir, f"{stage}.manifest.json"),
+                  "w") as f:
+            json.dump(man, f)
+        assert not ckpt.has(stage, man["fingerprint"])
+    assert InvertedIndex(spark, idx.index_dir).meta.n_docs == len(rows) - 2
 
 
 def test_engine_auto_routes_partitioned(spark, tmp_path, monkeypatch):
@@ -316,38 +331,50 @@ def test_upsert_to_empty_content_blanks_doc(spark, tmp_path):
     ]
 
 
-def test_publish_keep_previous_two_generations(spark, tmp_path):
-    """keep_previous=N really protects N generations back (meta history
-    ledger), not just the immediately-previous one."""
-    import os
+def _generation(spark, idx):
+    """What a reader of a generation sees: its doc count and doc table,
+    every posting row and the WAND answers."""
+    return {
+        "n_docs": idx.meta.n_docs,
+        "docs": sorted(map(tuple, idx.doc_stats().collect())),
+        "postings": _posting_rows(idx),
+        "wand": _topk(spark, idx),
+    }
 
-    from elasticsearch_analysis_combo_spark.plans.index_build import (
-        IndexMeta,
-        publish_tables,
-        _config_dict,
-    )
 
-    rows = _corpus(seed=41, n=10)
-    idx = _build(spark, rows, tmp_path / "live")
-    meta = idx.meta
-    post = idx.postings()
-    for _ in range(3):
-        publish_tables(
-            spark, idx.index_dir, {"postings": post},
-            IndexMeta(**{**meta.__dict__}), keep_previous=2,
-        )
-        meta = IndexMeta.load(idx.index_dir)
-    gens = [e for e in os.listdir(idx.index_dir)
-            if e.startswith("postings-")
-            and os.path.isdir(os.path.join(idx.index_dir, e))]
-    # 3 published generations, keep_previous=2 -> all 3 still on disk
-    assert len(gens) == 3
-    # a 4th publish GCs the oldest
-    publish_tables(
-        spark, idx.index_dir, {"postings": post},
-        IndexMeta(**{**meta.__dict__}), keep_previous=2,
-    )
-    gens = [e for e in os.listdir(idx.index_dir)
-            if e.startswith("postings-")
-            and os.path.isdir(os.path.join(idx.index_dir, e))]
-    assert len(gens) == 3
+@pytest.mark.parametrize("published", [False, True])
+def test_crash_in_compact_leaves_a_whole_generation(
+    spark, tmp_path, monkeypatch, published
+):
+    """A compact that crashes just before or just after its meta.json
+    swap leaves a freshly opened handle equal to a fresh build of the
+    unedited or the edited corpus; a handle held across it keeps its
+    generation while GC keeps it (the newest and the previous one), and
+    the next compact publishes the edited corpus."""
+    from elasticsearch_analysis_combo_spark.plans import index_build
+
+    rows = _corpus(seed=17, n=30)
+    held = _build(spark, rows, tmp_path / "live")
+    dead = [rows[0][0], rows[5][0]]
+    edited = [r for r in rows if r[0] not in dead]
+    before = _generation(spark, _build(spark, rows, tmp_path / "before"))
+    after = _generation(spark, _build(spark, edited, tmp_path / "after"))
+    real_publish = index_build.publish_tables
+
+    def publish(index_dir, meta):
+        if published:
+            real_publish(index_dir, meta)
+        raise RuntimeError("injected crash")
+
+    delete_docs(spark, held.index_dir, dead)
+    monkeypatch.setattr(index_build, "publish_tables", publish)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact(spark, held.index_dir)
+    monkeypatch.undo()
+    opened = InvertedIndex(spark, held.index_dir)
+    assert _generation(spark, opened) == (after if published else before)
+    assert _generation(spark, held) == before
+
+    assert _generation(spark, compact(spark, held.index_dir)) == after
+    if not published:
+        assert _generation(spark, held) == before
