@@ -378,3 +378,39 @@ def test_crash_in_compact_leaves_a_whole_generation(
     assert _generation(spark, compact(spark, held.index_dir)) == after
     if not published:
         assert _generation(spark, held) == before
+
+
+def test_publish_keep_previous_two_generations(spark, tmp_path):
+    """Each publish keeps exactly two generations on disk: the one it
+    swaps in and the one it replaced. A handle on the replaced one stays
+    readable, the one before that is deleted, and republishing the
+    current generation deletes nothing."""
+    import os
+
+    from elasticsearch_analysis_combo_spark.plans.index_build import (
+        publish_tables,
+    )
+
+    def stage_dirs(d):
+        return {e for e in os.listdir(d)
+                if e.split("-")[0] in idx.meta.tables
+                and os.path.isdir(os.path.join(d, e))}
+
+    live = tmp_path / "live"
+    gens = []
+    for n in (10, 12, 14):
+        idx = _build(spark, _corpus(seed=41, n=n), live)
+        gens.append(idx)
+        expected = set(idx.meta.tables.values())
+        if len(gens) > 1:
+            expected |= set(gens[-2].meta.tables.values())
+        assert stage_dirs(live) == expected
+    first, previous, current = gens
+    assert not stage_dirs(live) & set(first.meta.tables.values())
+    assert previous.postings().count() > 0
+    assert previous.meta.n_docs == 12
+
+    publish_tables(current.index_dir, current.meta)
+    assert stage_dirs(live) == {*previous.meta.tables.values(),
+                                *current.meta.tables.values()}
+    assert InvertedIndex(spark, str(live)).meta.n_docs == 14
