@@ -34,6 +34,9 @@ from pyspark.sql import types as T
 # fn(cols, starts, ends) -> list of output rows (tuples)
 GroupFn = Callable[[dict, np.ndarray, np.ndarray], list]
 
+#: output rows accumulated before a record batch is emitted
+OUT_BATCH_ROWS = 1024
+
 
 def _bounds(cols: dict, group_keys: list[str], n: int) -> np.ndarray:
     """Start offsets of each contiguous group (keys pre-sorted)."""
@@ -51,8 +54,6 @@ def grouped_map_sorted(
     sort_keys: list[str],
     fn: GroupFn,
     schema: T.StructType,
-    num_partitions: int | None = None,
-    out_batch_rows: int = 1024,
 ) -> DataFrame:
     """Call ``fn(column_arrays, starts, ends) -> list of rows`` once per
     chunk of whole (group_keys) groups, rows inside each group sorted by
@@ -62,7 +63,7 @@ def grouped_map_sorted(
     input, but one shuffle + one streaming pass instead of per-group UDF
     dispatch (~1ms/group at vocabulary scale even with numpy bodies; an fn
     that vectorizes across the chunk's groups amortizes it away)."""
-    npart = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    npart = df.sparkSession.sparkContext.defaultParallelism
     parted = df.repartition(npart, *group_keys).sortWithinPartitions(
         *(group_keys + sort_keys)
     )
@@ -85,7 +86,7 @@ def grouped_map_sorted(
             starts = _bounds(cols, group_keys, n)
             ends = np.append(starts[1:], n)
             rows.extend(fn(cols, starts, ends))
-            if len(rows) >= out_batch_rows:
+            if len(rows) >= OUT_BATCH_ROWS:
                 yield from flush()
 
         for pdf in batches:

@@ -3,8 +3,10 @@
 corpus -> combo analysis + per-doc aggregation (one mapInPandas pass)
        -> doc-stats + corpus stats (N, avgdl)
        -> compressed posting table (hot terms range-salted)
-all stages checkpointed with lineage (B6), resumable mid-pipeline; each
-stage's lineage is observed on its own write job, never re-scanned.
+all stages checkpointed (B6): a stage whose ``<stage>-<fp>`` dir exists
+is resumed, so a rerun picks up mid-pipeline. Each stage's lineage is
+observed on its own write job, never re-scanned, and logged to
+``metrics.jsonl``.
 
 :func:`publish_stats` is the one way term stats become a published
 generation: :func:`build_index`, batch compaction (plans/maintenance.py)
@@ -58,6 +60,7 @@ from elasticsearch_analysis_combo_spark.operators.checkpoint import (
     CheckpointManager,
     fingerprint,
     remove_stage_dirs,
+    stage_dir,
 )
 from elasticsearch_analysis_combo_spark.operators.codec import POSTING_FORMAT
 from elasticsearch_analysis_combo_spark.operators.postings import (
@@ -140,10 +143,16 @@ def publish_tables(index_dir: str, meta: IndexMeta) -> None:
     remove_stage_dirs(index_dir, STAGES, keep)
 
 
-def hot_terms(term_df: DataFrame, n_docs: int, block_size: int) -> DataFrame:
+def hot_terms(
+    term_df: DataFrame, n_docs: int, block_size: int
+) -> DataFrame | None:
     """Skew defusal (B3): the terms whose posting list is long enough to
-    hurt a single task get salted; the hot list is tiny by construction."""
+    hurt a single task get salted; the hot list is tiny by construction.
+    None when no term can be hot (``df <= n_docs`` is under the
+    threshold), so the build collects no list."""
     threshold = max(4 * block_size, n_docs // 10)
+    if n_docs < threshold:
+        return None
     return term_df.filter(F.col("df") >= threshold).select("term")
 
 
@@ -315,41 +324,40 @@ def publish_stats(
     ``fp`` identifies ``term_stats`` (with the other arguments it
     fingerprints every stage, so a rerun resumes and runs no stage twice).
     The chain: the stats land as the ``term_stats`` stage; ``doc_stats``
-    (the doc table, whose observed manifest gives ``(n_docs, avgdl)``: a
-    resumed run issues no job for them) is read back with pyarrow;
-    ``term_df``; the hot list; one :func:`build_postings` pass. Then
-    :func:`publish_tables` swaps in a meta.json naming the four stage
-    dirs. A crash before the swap leaves the published generation as it
-    was."""
+    (the doc table) is read back with pyarrow, which gives ``(n_docs,
+    avgdl)`` with no Spark job; ``term_df``; the hot list; one
+    :func:`build_postings` pass. Then :func:`publish_tables` swaps in a
+    meta.json naming the four stage dirs. A crash before the swap leaves
+    the published generation as it was."""
     ckpt = CheckpointManager(spark, index_dir)
     # "statsfmt=2": term_stats positions became pre-packed pos_data binary;
     # the salt invalidates checkpoints of the old array-typed stage outputs
     base_fp = fingerprint(config, fp, k1, b, block_size, salt_shards,
                           with_positions, "statsfmt=2")
+    fps = {s: fingerprint(base_fp, s) for s in STAGES}
+    # the format salt: a checkpoint of another block layout re-runs
+    fps["postings"] = fingerprint(base_fp, "postings", POSTING_FORMAT)
+    tables = {s: stage_dir(s, f) for s, f in fps.items()}
 
     stats = ckpt.run(
-        "term_stats",
-        fingerprint(base_fp, "term_stats"),
-        lambda: term_stats,
+        "term_stats", fps["term_stats"], lambda: term_stats,
         checksum_cols=["doc_id", "term", "tf"],
     )
 
     ckpt.run(
-        "doc_stats",
-        fingerprint(base_fp, "doc_stats"),
+        "doc_stats", fps["doc_stats"],
         lambda: stats.groupBy("doc_id").agg(F.first("dl").alias("dl")),
         checksum_cols=["doc_id", "dl"],
-        observed={"avgdl": F.avg("dl")},
     )
-    ds = ckpt.manifest("doc_stats")
-    n_docs, avgdl = int(ds["rows"]), float(ds["avgdl"] or 0.0)
     docs = doc_table(pads.dataset(
-        ckpt.path("doc_stats"), format="parquet"
+        os.path.join(index_dir, tables["doc_stats"]), format="parquet"
     ).to_table(columns=["doc_id", "dl"]))
+    # the exact integer sum divided once: Spark's avg("dl") bit for bit
+    n_docs = int(docs.doc_ids.size)
+    avgdl = int(docs.dl.sum()) / n_docs if n_docs else 0.0
 
     term_df = ckpt.run(
-        "term_df",
-        fingerprint(base_fp, "term_df"),
+        "term_df", fps["term_df"],
         # (term, doc) unique after per-doc aggregation -> df = row count;
         # Catalyst does partial (map-side) aggregation automatically
         lambda: stats.groupBy("term").agg(
@@ -361,9 +369,7 @@ def publish_stats(
     hot = hot_terms(term_df, n_docs, block_size)
 
     ckpt.run(
-        "postings",
-        # the format salt: a checkpoint of another block layout re-runs
-        fingerprint(base_fp, "postings", POSTING_FORMAT),
+        "postings", fps["postings"],
         # build_postings output is term-hash-partitioned and sorted by
         # term within partitions (grouped_map_sorted), so each written
         # file is term-sorted with no extra shuffle; row-group min/max
@@ -379,8 +385,7 @@ def publish_stats(
     publish_tables(index_dir, IndexMeta(
         n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, block_size=block_size,
         salt_shards=salt_shards, config=config, with_positions=with_positions,
-        tables={s: os.path.basename(ckpt.path(s)) for s in STAGES},
-        posting_format=POSTING_FORMAT,
+        tables=tables, posting_format=POSTING_FORMAT,
     ))
     return InvertedIndex(spark, index_dir)
 

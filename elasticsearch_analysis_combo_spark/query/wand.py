@@ -350,7 +350,6 @@ def wand_topk(
     queries: list[tuple[int, str]],
     config: ComboConfig | None = None,
     k: int = 10,
-    dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
     """Block-max WAND over a built index, its posting rows read in process
     from the handle's generation (no Spark job)."""
@@ -360,7 +359,6 @@ def wand_topk(
     return wand_topk_from_postings(
         spark, index, queries, config,
         n_docs=meta.n_docs, avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
-        dense_max_postings=dense_max_postings,
     )
 
 
@@ -374,14 +372,13 @@ def wand_topk_from_postings(
     k1: float = 1.2,
     b: float = 0.75,
     k: int = 10,
-    dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
     """Block-max WAND over a published index or a ``PostingFrame``
     (materialized table or freshly-built pipeline output, with its doc
     table): the posting rows of the batch's distinct terms are fetched
     once and every query is scored in the calling process by
     :func:`wand_topk_single` (dense-dispatched below
-    ``dense_max_postings`` postings). An :class:`InvertedIndex` is read
+    ``DENSE_EVAL_MAX_POSTINGS`` postings). An :class:`InvertedIndex` is read
     with pyarrow and runs no Spark job; a ``PostingFrame`` is fetched with
     one. Returns a driver-held ``tinydf.LocalFrame``: collecting it builds
     no JVM plan."""
@@ -400,10 +397,7 @@ def wand_topk_from_postings(
         q_terms = {t: by_term[t] for t in terms_by_q[qid] if t in by_term}
         if not q_terms:
             continue
-        top = wand_topk_single(
-            q_terms, k, avgdl, k1, b, docs,
-            dense_max_postings=dense_max_postings,
-        )
+        top = wand_topk_single(q_terms, k, avgdl, k1, b, docs)
         rows.extend((qid, rank, d, s) for rank, (d, s) in enumerate(top, 1))
     return tiny_df(spark, rows, TOPK_SCHEMA)
 
@@ -419,7 +413,6 @@ def wand_topk_partitioned(
     b: float = 0.75,
     k: int = 10,
     range_bits: int = 4,
-    dense_max_postings: int = DENSE_EVAL_MAX_POSTINGS,
 ) -> DataFrame:
     """Range-partitioned block-max WAND: one task per (query, doc-range).
 
@@ -469,8 +462,7 @@ def wand_topk_partitioned(
             idf = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
             by_term[term] = (idf, blocks)
         top = wand_topk_single(by_term, k, avgdl, k1, b, docs,
-                               doc_range=(lo, hi_incl),
-                               dense_max_postings=dense_max_postings)
+                               doc_range=(lo, hi_incl))
         return pd.DataFrame(
             {
                 "query_id": np.full(len(top), qid, dtype="int32"),

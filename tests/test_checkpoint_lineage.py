@@ -1,11 +1,13 @@
-"""Stage lineage observed on the write job (operators/checkpoint.py).
+"""Stage checkpoints and lineage (operators/checkpoint.py).
 
-* every stage's manifest ``rows``/``checksum`` equal a re-scan of the
-  persisted parquet, and a fully resumed build writes the same corpus
-  stats into meta.json without re-running a stage;
-* a crash between the data swap and the manifest write never leaves a
-  manifest over data of another fingerprint: the next build re-runs the
-  stage and equals a fresh build; an old-format manifest is a miss;
+* every stage's ``built`` record in metrics.jsonl carries ``rows`` and
+  ``checksum`` equal to a re-scan of the persisted parquet, and a fully
+  resumed build writes the same corpus stats into meta.json without
+  re-running a stage;
+* a stage whose ``<stage>-<fp>`` dir exists is never built again: after a
+  crash right after a table landed, rerunning either corpus builds only
+  the stages whose dirs are missing, and a rebuild back to a kept
+  generation (A -> B -> A) builds nothing;
 * a crash inside the postings stage of a fresh build leaves no meta.json,
   and the next build resumes and equals a fresh build;
 * over an existing index, a rebuild of another corpus never changes what
@@ -13,14 +15,18 @@
   and after a crash at any stage or at the meta.json swap a freshly
   opened handle equals a whole fresh build of the old corpus (of the new
   one once the rebuild completes);
+* an interrupted GC never leaves a partial table under a stage name, and
+  a publish sweeps the temp copies crashed writes and GCs left;
 * a checkpointed stage issues exactly the Spark jobs of a bare
-  ``df.write.parquet`` of the same frame (no lineage re-scan passes);
+  ``df.write.parquet`` of the same frame (no lineage re-scan passes), and
+  a small north-star build issues no more jobs than it does today;
 * a hot-term list over the InSet limit takes the broadcast-join path and
   yields the same postings.
 """
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +43,7 @@ from elasticsearch_analysis_combo_spark.operators.postings import (
 )
 from elasticsearch_analysis_combo_spark.plans import index_build as index_build_mod
 from elasticsearch_analysis_combo_spark.plans.index_build import (
+    STAGES,
     InvertedIndex,
     build_index,
 )
@@ -65,10 +72,14 @@ def corpus(spark):
     df.unpersist()
 
 
-def _built(index_dir: str) -> list[str]:
+def _built_records(index_dir: str) -> list[dict]:
     with open(os.path.join(index_dir, "metrics.jsonl")) as f:
         recs = [json.loads(line) for line in f]
-    return [r["stage"] for r in recs if r["event"] == "built"]
+    return [r for r in recs if r["event"] == "built"]
+
+
+def _built(index_dir: str) -> list[str]:
+    return [r["stage"] for r in _built_records(index_dir)]
 
 
 def _meta(index_dir: str) -> dict:
@@ -126,19 +137,18 @@ def _crash_in_postings(monkeypatch):
     monkeypatch.setattr(index_build_mod, "build_postings", crash)
 
 
-def _crash_before_manifest(stage):
-    """Crash after ``stage``'s table landed, before its manifest."""
+def _crash_after_landing(stage):
+    """Crash right after ``stage``'s table was renamed into place."""
     def inject(monkeypatch):
-        real_write = CheckpointManager._write_manifest
+        real_rename = os.rename
 
-        def write(path, man):
-            if man["stage"] == stage:
+        def rename(src, dst):
+            real_rename(src, dst)
+            name = os.path.basename(dst)
+            if name.startswith(f"{stage}-") and ".tmp-" not in name:
                 raise RuntimeError("injected crash")
-            real_write(path, man)
 
-        monkeypatch.setattr(
-            CheckpointManager, "_write_manifest", staticmethod(write)
-        )
+        monkeypatch.setattr(os, "rename", rename)
     return inject
 
 
@@ -153,14 +163,17 @@ def _crash_at_meta_swap(monkeypatch):
     monkeypatch.setattr(os, "replace", replace)
 
 
-@pytest.mark.parametrize("inject", [
-    _crash_in_postings,
-    *(_crash_before_manifest(s) for s in CHECKSUM_COLS),
-    _crash_at_meta_swap,
-], ids=["in_postings", *(f"{s}_landed" for s in CHECKSUM_COLS), "meta_swap"])
+@pytest.mark.parametrize("inject, rebuilt", [
+    (_crash_in_postings, ["postings"]),
+    *((_crash_after_landing(s), list(STAGES[i + 1:]))
+      for i, s in enumerate(STAGES)),
+    (_crash_at_meta_swap, []),
+], ids=["in_postings", *(f"{s}_landed" for s in STAGES), "meta_swap"])
 def test_crash_in_a_rebuild_leaves_a_whole_generation(
-    spark, generations, tmp_path, monkeypatch, inject
+    spark, generations, tmp_path, monkeypatch, inject, rebuilt
 ):
+    """``rebuilt``: the stages whose tables had not landed at the crash,
+    the only ones a rerun of the crashed build runs."""
     old, new, old_content, new_content = generations
     idx = str(tmp_path / "idx")
     held = build_index(spark, old, CFG, idx, **BUILD)
@@ -171,32 +184,106 @@ def test_crash_in_a_rebuild_leaves_a_whole_generation(
     assert _content(InvertedIndex(spark, idx)) == old_content
     assert _content(held) == old_content
 
+    # rerunning the published corpus builds no stage
+    n_built = len(_built(idx))
+    build_index(spark, old, CFG, idx, **BUILD)
+    assert _built(idx)[n_built:] == []
+
     build_index(spark, new, CFG, idx, **BUILD)
+    assert _built(idx)[n_built:] == rebuilt
     assert _content(InvertedIndex(spark, idx)) == new_content
     assert _content(held) == old_content
 
 
-def test_manifest_lineage_equals_rescan(spark, corpus, tmp_path):
+def test_rebuild_back_to_a_kept_generation_builds_no_stage(
+    spark, generations, tmp_path
+):
+    """A -> B -> A into one dir: A's four dirs are the previous generation,
+    which GC keeps, so the third build resumes every stage and publishes
+    them."""
+    old, new, old_content, _ = generations
+    idx = str(tmp_path / "idx")
+    build_index(spark, old, CFG, idx, **BUILD)
+    tables = _meta(idx)["tables"]
+    build_index(spark, new, CFG, idx, **BUILD)
+    n_built = len(_built(idx))
+    index = build_index(spark, old, CFG, idx, **BUILD)
+    assert _built(idx)[n_built:] == []
+    assert _meta(idx)["tables"] == tables
+    assert _content(index) == old_content
+
+
+def test_interrupted_gc_leaves_no_partial_table(
+    spark, generations, corpus, tmp_path, monkeypatch
+):
+    """A GC interrupted halfway through deleting the first generation's
+    postings dir (a third build GCs it) leaves no partial table under the
+    dir's stage name: rebuilding the first corpus equals a fresh build,
+    and that publish sweeps the remains."""
+    old, new, old_content, _ = generations
+    idx = str(tmp_path / "idx")
+    build_index(spark, old, CFG, idx, **BUILD)
+    postings_dir = _meta(idx)["tables"]["postings"]
+    build_index(spark, new, CFG, idx, **BUILD)
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if os.path.basename(path).startswith(postings_dir):
+            parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+            for f in parts[::2]:
+                os.remove(os.path.join(path, f))
+            raise RuntimeError("injected crash")
+        real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_index(spark, corpus, CFG, idx, **BUILD)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(idx, postings_dir))
+
+    assert _content(build_index(spark, old, CFG, idx, **BUILD)) == old_content
+    assert _meta(idx)["tables"]["postings"] == postings_dir
+    assert not [e for e in os.listdir(idx) if ".tmp-" in e]
+
+
+def test_publish_sweeps_orphaned_temp_copies(spark, corpus, tmp_path):
+    idx = tmp_path / "idx"
+    stage_tmp = idx / f"postings-{'0' * 16}.tmp-deadbeef"
+    stage_tmp.mkdir(parents=True)
+    (stage_tmp / "part-00000.parquet").write_bytes(b"partial")
+    (idx / "meta.json.tmp-deadbeef").write_text("{")
+    build_index(spark, corpus, CFG, str(idx), **BUILD)
+    assert not stage_tmp.exists()
+    assert not (idx / "meta.json.tmp-deadbeef").exists()
+
+
+def test_built_lineage_equals_rescan(spark, corpus, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(spark, corpus, CFG, idx, **BUILD)
-    ckpt = CheckpointManager(spark, idx)
+    fresh = _meta(idx)
+    built = {r["stage"]: r for r in _built_records(idx)}
+
+    def table(stage):
+        return spark.read.parquet(os.path.join(idx, fresh["tables"][stage]))
+
     for stage, cols in CHECKSUM_COLS.items():
-        man = ckpt.manifest(stage)
+        rec = built[stage]
+        assert {"fingerprint", "rows", "checksum", "wall_sec",
+                "created_at"} <= rec.keys(), stage
+        assert fresh["tables"][stage] == f"{stage}-{rec['fingerprint']}"
         keys = ", ".join(f"`{c}`" for c in cols)
-        r = ckpt.load(stage).agg(
+        r = table(stage).agg(
             F.count("*").alias("n"),
             F.expr(f"bit_xor(xxhash64({keys}))").alias("x"),
         ).collect()[0]
-        assert man["rows"] == r["n"], stage
-        assert man["checksum"] == int(r["x"] or 0), stage
-        assert "partitions" not in man
-    dl = ckpt.load("doc_stats").agg(F.avg("dl")).collect()[0][0]
-    assert ckpt.manifest("doc_stats")["avgdl"] == dl
-    fresh = _meta(idx)
+        assert rec["rows"] == r["n"], stage
+        assert rec["checksum"] == int(r["x"] or 0), stage
+    # meta's avgdl is Spark's avg bit for bit
+    dl = table("doc_stats").agg(F.avg("dl")).collect()[0][0]
     assert (fresh["n_docs"], fresh["avgdl"]) == (60, dl)
 
     # full resume: no stage re-runs, and the corpus stats come back from
-    # the doc_stats manifest unchanged
+    # the doc table unchanged
     os.remove(os.path.join(idx, "meta.json"))
     n_built = len(_built(idx))
     build_index(spark, corpus, CFG, idx, **BUILD)
@@ -207,33 +294,24 @@ def test_manifest_lineage_equals_rescan(spark, corpus, tmp_path):
     )
 
 
-def test_crash_between_swap_and_manifest_reruns_stage(
+def test_crash_after_a_stage_landed_resumes_the_first_corpus(
     spark, corpus, tmp_path, monkeypatch
 ):
+    """Another corpus' build crashes right after its doc_stats table
+    landed: the first corpus' dirs are all still there, so rebuilding it
+    runs no stage and equals a fresh build."""
     idx = str(tmp_path / "idx")
     build_index(spark, corpus, CFG, idx, **BUILD)
     other = ingest(generate_corpus(spark, 40, seed=8))
 
-    real_write = CheckpointManager._write_manifest
-
-    def crash_on_doc_stats(path, man):
-        if man["stage"] == "doc_stats":
-            raise RuntimeError("crash after the data swap")
-        real_write(path, man)
-
-    monkeypatch.setattr(
-        CheckpointManager, "_write_manifest", staticmethod(crash_on_doc_stats)
-    )
-    with pytest.raises(RuntimeError, match="crash after the data swap"):
+    _crash_after_landing("doc_stats")(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected crash"):
         build_index(spark, other, CFG, idx, **BUILD)
     monkeypatch.undo()
-    # the other corpus' doc_stats data is in place, its manifest is not,
-    # and the first corpus' stale manifest is gone with the old data
-    assert not os.path.exists(os.path.join(idx, "doc_stats.manifest.json"))
 
     n_built = len(_built(idx))
     resumed = build_index(spark, corpus, CFG, idx, **BUILD)
-    assert "doc_stats" in _built(idx)[n_built:]
+    assert _built(idx)[n_built:] == []
     fresh = build_index(spark, corpus, CFG, str(tmp_path / "fresh"), **BUILD)
     assert _content(resumed) == _content(fresh)
 
@@ -278,27 +356,6 @@ def test_posting_format_salts_the_postings_fingerprint(
     assert _meta(idx)["posting_format"] == "another-layout"
 
 
-def test_old_format_manifest_is_a_miss(spark, corpus, tmp_path):
-    idx = str(tmp_path / "idx")
-    build_index(spark, corpus, CFG, idx, **BUILD)
-    path = os.path.join(idx, "doc_stats.manifest.json")
-    with open(path) as f:
-        man = json.load(f)
-    # the format before lineage was observed: per-partition counts, no
-    # corpus stats
-    del man["avgdl"]
-    man["partitions"] = {"0": man["rows"]}
-    with open(path, "w") as f:
-        json.dump(man, f)
-    n_built = len(_built(idx))
-    index = build_index(spark, corpus, CFG, idx, **BUILD)
-    assert _built(idx)[n_built:] == ["doc_stats"]
-    assert index.meta.n_docs == 60
-    with open(path, "w") as f:
-        f.write("{not json")
-    assert not CheckpointManager(spark, idx).has("doc_stats", man["fingerprint"])
-
-
 def _jobs(spark, group: str, action) -> int:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -319,14 +376,37 @@ def test_stage_issues_no_jobs_beyond_its_write(spark, tmp_path):
     ckpt = CheckpointManager(spark, str(tmp_path / "ckpt"))
     staged = _jobs(spark, "lineage-stage", lambda: ckpt.run(
         "s", "fp", lambda: df, checksum_cols=["k", "n"],
-        observed={"avg_n": F.avg("n")},
     ))
     bare = _jobs(spark, "lineage-bare",
                  lambda: df.write.parquet(str(tmp_path / "bare")))
     assert bare > 0
     assert staged == bare
-    man = ckpt.manifest("s")
-    assert (man["rows"], man["avg_n"]) == (97, 5000 / 97)
+    assert [r["rows"] for r in _built_records(ckpt.base_dir)] == [97]
+
+
+#: Spark jobs of one build_index of a small north-star corpus, as measured
+#: once fewer docs than the hot threshold's floor stopped collecting a hot
+#: list (10 before)
+SMALL_BUILD_MAX_JOBS = 9
+
+
+def test_small_build_issues_no_extra_jobs(spark, tmp_path):
+    """A guard on the build's job count: a pass added to the build, or a
+    removed one coming back, shows here."""
+    config = ComboConfig(["standard", "identifier", "lang"],
+                         deduplication=True)
+    block_size = 128
+    counted = None
+    for name, seed in (("warm", 11), ("counted", 12)):
+        path = str(tmp_path / f"{name}-corpus")
+        generate_corpus(spark, 120, seed=seed).write.parquet(path)
+        corpus = ingest(spark.read.parquet(path))
+        assert corpus.count() < 4 * block_size
+        counted = _jobs(spark, f"small-build-{name}", lambda: build_index(
+            spark, corpus, config, str(tmp_path / name),
+            lang_col="lang", block_size=block_size,
+        ))
+    assert 0 < counted <= SMALL_BUILD_MAX_JOBS
 
 
 def test_hot_list_over_inset_limit_takes_join_path(spark, monkeypatch):

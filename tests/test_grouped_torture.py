@@ -9,12 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from elasticsearch_analysis_combo_spark.operators import grouped as grouped_mod
 from elasticsearch_analysis_combo_spark.operators.grouped import grouped_map_sorted
 
 
-def test_grouped_map_batched_mode_tiny_arrow_batches(spark):
+def test_grouped_map_batched_mode_tiny_arrow_batches(spark, monkeypatch):
     """fn(cols, starts, ends) is called once per chunk; group results must
-    still equal a plain groupBy under constant batch-boundary straddling."""
+    still equal a plain groupBy under constant batch-boundary straddling
+    and 3-row output batches."""
+    monkeypatch.setattr(grouped_mod, "OUT_BATCH_ROWS", 3)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
     try:
@@ -41,10 +44,7 @@ def test_grouped_map_batched_mode_tiny_arrow_batches(spark):
 
         got = {
             r["key"]: (r["n"], r["vsum"], r["vfirst"])
-            for r in grouped_map_sorted(
-                df, ["key"], ["v"], fn, schema, num_partitions=5,
-                out_batch_rows=3,
-            ).collect()
+            for r in grouped_map_sorted(df, ["key"], ["v"], fn, schema).collect()
         }
         exp = {
             r["key"]: (r["n"], r["vsum"], r["vmin"])

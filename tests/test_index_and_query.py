@@ -234,8 +234,6 @@ def test_resume_from_checkpoint_equals_fresh(built, spark):
 def test_partial_resume_rebuilds_missing_stage(built, spark):
     index, docs, idx_dir, corpus = built
     shutil.rmtree(index.meta.table_dir(idx_dir, "postings"))
-    import os
-    os.remove(f"{idx_dir}/postings.manifest.json")
     index3 = build_index(spark, corpus, CFG, idx_dir, salt_shards=4, block_size=64)
     assert index3.postings().select("term").distinct().count() == len(
         build_oracle_index(docs, CFG)[0]

@@ -189,19 +189,11 @@ def test_publish_keeps_old_reader_view(spark, tmp_path):
 
 def test_second_compact_gcs_oldest_generation(spark, tmp_path):
     """GC keeps the newest and the previous generation: a build followed
-    by two compacts deletes the build's stage dirs, and the build's
-    manifests then read as resume misses."""
-    import json
+    by two compacts deletes the build's stage dirs."""
     import os
-
-    from elasticsearch_analysis_combo_spark.operators.checkpoint import (
-        CheckpointManager,
-    )
 
     rows = _corpus(seed=13, n=24)
     idx = _build(spark, rows, tmp_path / "live")
-    ckpt = CheckpointManager(spark, idx.index_dir)
-    built = {s: ckpt.manifest(s) for s in idx.meta.tables}
     delete_docs(spark, idx.index_dir, [rows[0][0]])
     previous = compact(spark, idx.index_dir)
     delete_docs(spark, idx.index_dir, [rows[1][0]])
@@ -212,11 +204,6 @@ def test_second_compact_gcs_oldest_generation(spark, tmp_path):
     assert stage_dirs == {*previous.meta.tables.values(),
                           *final.meta.tables.values()}
     assert not stage_dirs & set(idx.meta.tables.values())
-    for stage, man in built.items():
-        with open(os.path.join(idx.index_dir, f"{stage}.manifest.json"),
-                  "w") as f:
-            json.dump(man, f)
-        assert not ckpt.has(stage, man["fingerprint"])
     assert InvertedIndex(spark, idx.index_dir).meta.n_docs == len(rows) - 2
 
 
