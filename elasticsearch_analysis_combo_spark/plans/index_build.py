@@ -31,21 +31,23 @@ Physical-plan shape (local[N] or a real cluster — identical):
     salt — whose runs are renumbered in doc order, never merged
   * docstats/termdf are partial-aggregated map-side by Catalyst
 The posting table is hash-partitioned by term and sorted by term within
-each partition, so every part file is term-sorted. Row-group min/max
-statistics prune a term lookup only where a file holds several row
-groups: a small index's part files are one row group each, spanning
-nearly the whole vocabulary, so a lookup reads every file.
+each partition, so every part file is term-sorted. A small index's part
+files are one row group each, spanning nearly the whole vocabulary, so
+row-group min/max statistics would prune nothing. A lookup goes through
+the handle's terms index instead (:class:`PostingPart`, Lucene's
+``.tip``): each part file's ``term`` column, held in memory for the life
+of the handle (about 9 bytes per posting row), names the files and row
+groups that hold the query terms, and only those are read.
 """
 
 from __future__ import annotations
 
-import functools
 import json
-import operator
 import os
 import uuid
 from dataclasses import asdict, dataclass
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
@@ -127,7 +129,12 @@ def publish_tables(index_dir: str, meta: IndexMeta) -> None:
     deletes every other stage dir. Republishing the current generation
     changes nothing. This is meta.json's only writer. On a real deployment
     index_dir is shared storage and the same swap applies (object stores:
-    write new prefixes + swap a pointer object)."""
+    write new prefixes + swap a pointer object).
+
+    One writer per index dir is assumed, as for the pending-op sequence
+    (``maintenance._alloc_seq``): the GC also sweeps every temp copy
+    (``<stage>-<fp>.tmp-*``), which would include a concurrent builder's
+    in-flight stage write."""
     path = os.path.join(index_dir, "meta.json")
     keep = set(meta.tables.values())
     if os.path.exists(path):
@@ -184,15 +191,6 @@ def _config_dict(config: ComboConfig) -> dict:
     return out
 
 
-def term_filter(terms) -> pc.Expression:
-    """``term == t1 or term == t2 ...``: the posting lookup's predicate.
-    pyarrow (16.1) prunes row groups by their term min/max statistics for
-    this OR form, but keeps every row group for ``is_in``."""
-    return functools.reduce(
-        operator.or_, (pc.field("term") == t for t in sorted(terms))
-    )
-
-
 def posting_read_columns(positions: bool) -> list[str]:
     """The parquet columns of a posting lookup: the row keys, the block
     headers and the ordinal/tf stream, plus ``pos_data`` only for a
@@ -205,21 +203,65 @@ def posting_read_columns(positions: bool) -> list[str]:
     ]
 
 
+@dataclass(frozen=True)
+class PostingPart:
+    """One postings part file in a handle's terms index: its parquet
+    footer, its ``term`` column as one array, and the row at which each
+    row group starts (the file's row count last)."""
+
+    path: str
+    metadata: pq.FileMetaData
+    terms: pa.Array
+    starts: np.ndarray
+
+    @staticmethod
+    def open(path: str) -> "PostingPart":
+        with pq.ParquetFile(path) as f:
+            metadata = f.metadata
+            terms = f.read(columns=["term"], use_threads=False).column("term")
+        sizes = [metadata.row_group(g).num_rows
+                 for g in range(metadata.num_row_groups)]
+        return PostingPart(path, metadata, terms.combine_chunks(),
+                           np.cumsum([0] + sizes))
+
+    def read(self, value_set: pa.Array, columns: list[str]) -> pa.Table | None:
+        """The rows whose term is in ``value_set``, decoded from only the
+        row groups that hold them. None, without opening the file, when
+        no row does."""
+        rows = pc.indices_nonzero(
+            pc.is_in(self.terms, value_set=value_set)
+        ).to_numpy().astype(np.int64)
+        if not rows.size:
+            return None
+        group_of = np.searchsorted(self.starts, rows, side="right") - 1
+        groups, slot = np.unique(group_of, return_inverse=True)
+        sizes = self.starts[groups + 1] - self.starts[groups]
+        # where each read group's rows begin in the read table
+        offsets = np.cumsum(sizes) - sizes
+        with pq.ParquetFile(self.path, metadata=self.metadata) as f:
+            table = f.read_row_groups(
+                groups.tolist(), columns=columns, use_threads=False
+            )
+        return table.take(rows - self.starts[group_of] + offsets[slot])
+
+
 class InvertedIndex:
     """Handle over a built index directory. Each table's parquet schema is
     read once per handle (keyed by the resolved table dir) and given to
     later reads, which then skip the footer-inference job. The handle
     reads the generation its ``meta.json`` named when it was opened, also
     after a later publish, for as long as GC keeps that generation (the
-    newest and the previous one). An index :meth:`IndexMeta.load` refuses
-    cannot be opened: rebuild it."""
+    newest and the previous one). The first :meth:`term_blocks` builds the
+    postings terms index, which the handle holds for its life: every part
+    file's footer and ``term`` column, about 9 bytes per posting row. An
+    index :meth:`IndexMeta.load` refuses cannot be opened: rebuild it."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = IndexMeta.load(index_dir)
         self._schemas: dict[str, T.StructType] = {}
-        self._posting_files: list | None = None
+        self._posting_parts: list[PostingPart] | None = None
         self._docs: DocTable | None = None
         self._term_dfs: list[tuple[str, int]] | None = None
         self._vocabulary: list[str] | None = None
@@ -254,25 +296,26 @@ class InvertedIndex:
         self, terms, positions: bool = False
     ) -> dict[str, tuple[float, list]]:
         """term -> (df, doc-sorted blocks) for ``terms``' posting rows,
-        read in this process with pyarrow: no Spark job. Row groups whose
-        term min/max cannot hold a query term are skipped, and only the
-        leaves of :func:`posting_read_columns` are read, so a scoring read
-        (``positions=False``) never touches ``pos_data``. Unknown terms
-        are absent from the result."""
+        read in this process with pyarrow: no Spark job. The first lookup
+        builds the handle's terms index (a :class:`PostingPart` per part
+        file, whose ``term`` column the handle then holds), so a lookup
+        opens only the files, and decodes only the row groups, that hold
+        a query term. Only the leaves of :func:`posting_read_columns` are
+        read, so a scoring read (``positions=False``) never touches
+        ``pos_data``. Unknown terms are absent from the result."""
         if not terms:
             return {}
-        if self._posting_files is None:
-            self._posting_files = list(self._dataset("postings").get_fragments())
-        where = term_filter(terms)
+        if self._posting_parts is None:
+            self._posting_parts = [
+                PostingPart.open(path)
+                for path in self._dataset("postings").files
+            ]
+        value_set = pa.array(list(set(terms)), pa.string())
         columns = posting_read_columns(positions)
-        tables = []
-        for part in self._posting_files:
-            groups = [rg.id for rg in part.subset(where).row_groups]
-            if groups:
-                with pq.ParquetFile(part.path, metadata=part.metadata) as f:
-                    tables.append(f.read_row_groups(
-                        groups, columns=columns, use_threads=False
-                    ).filter(where))
+        tables = [
+            table for part in self._posting_parts
+            if (table := part.read(value_set, columns)) is not None
+        ]
         if not tables:
             return {}
         rows = pa.concat_tables(tables)
@@ -372,8 +415,9 @@ def publish_stats(
         "postings", fps["postings"],
         # build_postings output is term-hash-partitioned and sorted by
         # term within partitions (grouped_map_sorted), so each written
-        # file is term-sorted with no extra shuffle; row-group min/max
-        # stats prune a lookup only in files of several row groups
+        # file is term-sorted with no extra shuffle; a handle's lookup
+        # finds its rows through the terms index (PostingPart), not
+        # row-group statistics
         lambda: build_postings(
             stats, docs, avgdl=avgdl, hot_terms=hot, k1=k1, b=b,
             block_size=block_size, salt_shards=salt_shards,

@@ -363,15 +363,17 @@ def test_unknown_terms_answer_empty_without_a_job(built, spark):
         assert out[name] == [], name
 
 
-def test_posting_lookup_prunes_row_groups(spark, tmp_path):
-    """On a term-sorted posting file of many row groups, the handle's
-    term filter keeps exactly the row groups whose [min, max] term range
-    covers a query term, and the handle's read returns those terms'
-    rows."""
+def test_posting_lookup_reads_only_row_groups_holding_its_terms(
+    spark, tmp_path, monkeypatch
+):
+    """The handle's terms index sends a lookup to exactly the row groups
+    that hold a query term: of a term-sorted part file of 40 row groups
+    only row groups [0, 12, 39] are read, a second part file that holds
+    no query term is never read (although its term min/max spans them),
+    and the lookup returns those terms' rows."""
     import os
 
     import pyarrow as pa
-    import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
     from elasticsearch_analysis_combo_spark.operators.codec import (
@@ -381,7 +383,6 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
         IndexMeta,
         InvertedIndex,
         publish_tables,
-        term_filter,
     )
 
     terms = [f"t{i:04d}" for i in range(400)]
@@ -404,24 +405,141 @@ def test_posting_lookup_prunes_row_groups(spark, tmp_path):
     )
     postings_dir = meta.table_dir(str(tmp_path), "postings")
     os.mkdir(postings_dir)
-    pq.write_table(table, os.path.join(postings_dir, "part-0.parquet"),
-                   row_group_size=10)
+    first = os.path.join(postings_dir, "part-0.parquet")
+    pq.write_table(table, first, row_group_size=10)
+    # 100 terms no query names, whose [min, max] spans most query terms
+    pq.write_table(
+        table.slice(0, 100).set_column(
+            0, "term", pa.array([f"t{i:04d}x" for i in range(0, 400, 4)])),
+        os.path.join(postings_dir, "part-1.parquet"),
+    )
     publish_tables(str(tmp_path), meta)
 
     query = ["t0005", "t0123", "t0399", "t9999"]
-    (part,) = pads.dataset(postings_dir).get_fragments()
-    kept = [g.row_groups[0].id
-            for g in part.split_by_row_group(term_filter(query))]
-    md = part.metadata
+    md = pq.ParquetFile(first).metadata
     assert md.num_row_groups == 40
     covering = [
         rg for rg in range(md.num_row_groups)
         if any(md.row_group(rg).column(0).statistics.min <= t
                <= md.row_group(rg).column(0).statistics.max for t in query)
     ]
-    assert kept == covering == [0, 12, 39]
+    assert covering == [0, 12, 39]
 
+    reads = []
+    read_row_groups = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *args, **kwargs):
+        # the two files are told apart by their row counts
+        reads.append((self.metadata.num_rows, list(row_groups)))
+        return read_row_groups(self, row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
     got = InvertedIndex(spark, str(tmp_path)).term_blocks(query)
+    assert reads == [(400, [0, 12, 39])]
     assert sorted(got) == ["t0005", "t0123", "t0399"]
     assert got["t0123"] == (124.0, [{k: v for k, v in block.items()
                                      if k != "pos_data"}])
+
+
+def _oracle_term_blocks(postings_dir, terms, positions):
+    """term -> (df, blocks) from the whole postings table read at once and
+    filtered in Python: a term's runs concatenated in run_idx order, and
+    ``pos_data`` dropped from a scoring read's blocks."""
+    import pyarrow.parquet as pq
+
+    runs = {}
+    for row in pq.read_table(postings_dir).to_pylist():
+        if row["term"] in terms:
+            runs.setdefault(row["term"], []).append(row)
+    out = {}
+    for term, rows in runs.items():
+        rows.sort(key=lambda r: r["run_idx"])
+        out[term] = (float(rows[0]["df"]), [
+            bl if positions
+            else {k: v for k, v in bl.items() if k != "pos_data"}
+            for r in rows for bl in r["blocks"]
+        ])
+    return out
+
+
+def test_term_blocks_equal_a_whole_table_scan(spark, tmp_path):
+    """``InvertedIndex.term_blocks`` equals a scan of the whole postings
+    table, for random term draws with unknown and repeated terms, with and
+    without positions, over positional and non-positional indexes whose
+    salted hot terms run over several part files, and for handles held
+    across a compact, which keep answering from their own generation."""
+    import os
+    import random
+
+    import pyarrow.parquet as pq
+
+    from elasticsearch_analysis_combo_spark.plans.index_build import (
+        InvertedIndex,
+    )
+    from elasticsearch_analysis_combo_spark.plans.maintenance import (
+        compact,
+        delete_docs,
+        upsert_docs,
+    )
+
+    rng = random.Random(16)
+    words = [f"w{chr(97 + i % 26)}{chr(97 + i // 26)}" for i in range(40)]
+    weights = [1 / (i + 1) for i in range(len(words))]
+    rows = [(i * 7919 + 3, " ".join(rng.choices(
+        words, weights=weights, k=rng.randint(4, 30)))) for i in range(80)]
+    corpus = spark.createDataFrame(rows, "doc_id long, content string")
+
+    def postings_dir(idx):
+        return idx.meta.table_dir(idx.index_dir, "postings")
+
+    def draws(idx, n):
+        vocab = idx.vocabulary()
+        out = [set(), {"zzznope"}]
+        for _ in range(n):
+            picked = rng.choices(vocab, k=rng.randint(1, 6))
+            out.append(picked + picked[:1] + ["zzznope"] * rng.randint(0, 1))
+        return out
+
+    def check(idx, queries, pdir=None):
+        pdir = pdir or postings_dir(idx)
+        for terms in queries:
+            for positions in (False, True):
+                assert idx.term_blocks(terms, positions) == \
+                    _oracle_term_blocks(pdir, set(terms), positions), terms
+
+    indexes = {
+        with_positions: build_index(
+            spark, corpus, CFG, str(tmp_path / f"pos-{with_positions}"),
+            block_size=4, salt_shards=4, with_positions=with_positions,
+        )
+        for with_positions in (True, False)
+    }
+    for idx in indexes.values():
+        # hot terms are salted into runs that land in several part files
+        files_of = {}
+        for name in os.listdir(postings_dir(idx)):
+            if name.endswith(".parquet"):
+                for term in set(pq.read_table(
+                        os.path.join(postings_dir(idx), name),
+                        columns=["term"]).column("term").to_pylist()):
+                    files_of.setdefault(term, set()).add(name)
+        assert max(len(f) for f in files_of.values()) > 1
+        check(idx, draws(idx, 40))
+
+    live = indexes[True]
+    read_before = InvertedIndex(spark, live.index_dir)
+    check(read_before, draws(read_before, 5))
+    first_read_after = InvertedIndex(spark, live.index_dir)
+    old_dir = postings_dir(live)
+    marker = "zebracrossing"
+    delete_docs(spark, live.index_dir, [rows[1][0]])
+    upsert_docs(spark, live.index_dir, spark.createDataFrame(
+        [(rows[0][0], f"{marker} {words[0]}")], "doc_id long, content string"))
+    opened_after = compact(spark, live.index_dir)
+    assert postings_dir(opened_after) != old_dir
+
+    for held in (read_before, first_read_after):
+        check(held, draws(held, 20) + [[marker, words[0]]], old_dir)
+        assert marker not in held.term_blocks([marker, words[0]])
+    check(opened_after, draws(opened_after, 20) + [[marker, words[0]]])
+    assert marker in opened_after.term_blocks([marker])

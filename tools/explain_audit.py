@@ -936,6 +936,46 @@ def main() -> None:
     print(f"{'OK ' if ok else 'FAIL'} handle WAND read requests no "
           f"pos_data leaf")
     failures += not ok
+    # ...and its terms index decodes row groups only of the part files
+    # that hold a query term (a fresh handle, so the index is built too)
+    import pyarrow.parquet as pq
+
+    from elasticsearch_analysis_combo_spark.plans.index_build import (
+        InvertedIndex,
+    )
+
+    postings_dir = idx.meta.table_dir(idx.index_dir, "postings")
+    parts = [n for n in os.listdir(postings_dir) if n.endswith(".parquet")]
+    holding = sorted(
+        n for n in parts
+        if wand_terms & set(pq.read_table(
+            os.path.join(postings_dir, n), columns=["term"]
+        ).column("term").to_pylist())
+    )
+    read_files = []
+    init, read_row_groups = (
+        pq.ParquetFile.__init__, pq.ParquetFile.read_row_groups
+    )
+
+    def spy_init(self, source, *args, **kwargs):
+        self.audit_source = source
+        init(self, source, *args, **kwargs)
+
+    def spy_read(self, row_groups, *args, **kwargs):
+        read_files.append(os.path.basename(self.audit_source))
+        return read_row_groups(self, row_groups, *args, **kwargs)
+
+    pq.ParquetFile.__init__ = spy_init
+    pq.ParquetFile.read_row_groups = spy_read
+    try:
+        InvertedIndex(spark, idx.index_dir).term_blocks(wand_terms)
+    finally:
+        pq.ParquetFile.__init__ = init
+        pq.ParquetFile.read_row_groups = read_row_groups
+    ok = bool(holding) and sorted(read_files) == holding
+    print(f"{'OK ' if ok else 'FAIL'} handle WAND read decodes only the "
+          f"{len(holding)} of {len(parts)} part files holding its terms")
+    failures += not ok
 
     # 48. (r6 opt) tiny query dims are LocalTableScan, not Python-RDD
     # scans: the exhaustive plan must carry no RDD scan / Python eval
